@@ -24,8 +24,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 # different warmup discipline), so they are excluded from every history scan
 # by ROUND NUMBER, not just by shape — a pre-r8 record must never feed the
 # sentinel floor or a trailing median even if a future re-serialization gives
-# it the modern fields. Files whose name doesn't parse as BENCH_r{N}.json are
-# kept (tests feed arbitrary fixture names through ``here=``).
+# it the modern fields. Files whose name doesn't parse as BENCH_r{N}.json
+# (e.g. the matched-core leg BENCH_r14_c8.json) are skipped: they record a
+# different machine shape and must not feed same-sf history.
 _HISTORY_MIN_ROUND = 8
 
 
@@ -36,7 +37,7 @@ def _history_files(here: str):
     out = []
     for path in sorted(glob.glob(os.path.join(here, "BENCH_r*.json"))):
         m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if m and int(m.group(1)) < _HISTORY_MIN_ROUND:
+        if not m or int(m.group(1)) < _HISTORY_MIN_ROUND:
             continue
         out.append(path)
     return out

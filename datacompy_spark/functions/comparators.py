@@ -49,6 +49,21 @@ def _is_temporal(dt: T.DataType) -> bool:
     return isinstance(dt, _TEMPORAL_TYPES)
 
 
+#: every string Spark's TRY cast parses as a double holds an ASCII digit,
+#: or spells inf/infinity/nan
+_MAYBE_DOUBLE = "(?i)[0-9]|inf|nan"
+
+
+def try_double(col: Column, dt: T.DataType) -> Column:
+    """``TRY_CAST(col AS DOUBLE)`` for a column of type ``dt``. A string
+    cast is attempted only when it can succeed: a failed parse costs a
+    thrown exception per row, while the regex gate is a cheap scan, and
+    the gated strings would all have cast to NULL anyway."""
+    if _is_string(dt):
+        return F.when(col.rlike(_MAYBE_DOUBLE), col.try_cast("double"))
+    return col.try_cast("double")
+
+
 class BaseComparator:
     """Strategy contract (ref ``comparator/base.py:22-50``).
 

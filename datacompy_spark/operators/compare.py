@@ -4,22 +4,26 @@ Semantics parity target: capitalone/datacompy ``spark.py`` (SparkSQLCompare).
 Architecture is deliberately NOT a port:
 
 * The null-safe full outer join (ref ``spark.py:450-466``, built as a SQL
-  string over temp views) is a pure DataFrame-API join on ``eqNullSafe``
-  conditions — Catalyst still plans it as a sort-merge join (null-safe
-  equality is an equi-join key) and AQE may convert to broadcast.
+  string over temp views) is a pure DataFrame-API join — Catalyst plans it
+  as a sort-merge join and AQE may convert to broadcast. Duplicate-key
+  compares materialize the null-safe key as ``coalesce(k, default)`` and
+  ``isnull(k)`` columns that both the pairing window and the join use, so
+  each side is shuffled once.
 * ALL statistics — left/right/both row classes, per-column match counts,
   null diffs, max diffs, all-match row count (ref ``spark.py:573-636``, which
-  runs 2N+1 separate actions) — fold into ONE aggregate over the joined frame:
-  one shuffle + one action computes the entire comparison. At 100 TB this is
-  the difference between one pass over the data and dozens.
-* Statistics are computed lazily on first access and memoized; the derived
-  frames (``intersect_rows``/``df1_unq_rows``/``df2_unq_rows``) stay lazy
+  runs 2N+1 separate actions) — fold into ONE set of aggregates observed on
+  the action that populates the exceptions cache: one pass over the join
+  computes the entire comparison. At 100 TB this is the difference between
+  one pass over the data and dozens.
+* Statistics are computed on first access and memoized; any statistics read
+  persists the diff (release it with ``uncache()``). The derived frames
+  (``intersect_rows``/``df1_unq_rows``/``df2_unq_rows``) stay lazy
   DataFrames (never collected unless the caller asks for samples).
 
 Scale design notes (local[32] test, 1000-executor target):
 * single full-outer shuffle on the join keys; AQE handles skew/broadcast;
-* stats aggregation is a partial (map-side) aggregate → single-row result:
-  driver memory is O(columns), never O(rows);
+* the observed statistics are partial (map-side) aggregates → single-row
+  result: driver memory is O(columns), never O(rows);
 * report samples are ``limit``-bounded before any ``toPandas``.
 """
 
@@ -36,8 +40,10 @@ from pyspark.sql import types as T
 from datacompy_spark.functions.comparators import (
     BaseComparator,
     columns_equal,
+    try_double,
     _NUMERIC_TYPES,
     _STRING_TYPES,
+    _TEMPORAL_TYPES,
 )
 
 LOG = logging.getLogger(__name__)
@@ -108,6 +114,23 @@ class ColumnStat(TypedDict):
 
 
 Tolerance = Union[int, float, Mapping[str, float]]
+
+
+def _null_key_default(dt: T.DataType) -> Optional[Column]:
+    """A non-null literal of ``dt`` for the lowered null-safe join key
+    ``coalesce(k, default)``; None for key types without one here, which
+    keep ``eqNullSafe``. Any value of the type works: ``isnull(k)`` rides
+    next to it, so a NULL key never pairs with a real key equal to the
+    default."""
+    if isinstance(dt, _NUMERIC_TYPES):
+        return F.lit(0).cast(dt)
+    if isinstance(dt, _STRING_TYPES):
+        return F.lit("")
+    if isinstance(dt, T.BooleanType):
+        return F.lit(False)
+    if isinstance(dt, _TEMPORAL_TYPES):
+        return F.lit("1970-01-01").cast(dt)
+    return None
 
 
 def _ordered_unique(items: Sequence[str]) -> List[str]:
@@ -315,16 +338,29 @@ class SparkCompare:
                 "present_rhs": f"__present{tag}_rhs",
                 "merge": f"_merge{tag}",
                 "ord": f"__dc{tag}_ord",
+                "key": f"__dc{tag}_key",
             }
-            # candidates include the ordinal's join-suffixed forms — a join
-            # column named `__dc_ordinal__lhs` would otherwise collide
-            candidates = set(names.values()) | {
-                f"{names['ordinal']}__lhs",
-                f"{names['ordinal']}__rhs",
-            }
+            # candidates include the join-suffixed forms of the ordinal and
+            # the lowered keys — a join column named `__dc_ordinal__lhs`
+            # would otherwise collide
+            suffixable = [names["ordinal"], *self._lowered_key_names(names)]
+            candidates = (
+                set(names.values())
+                | set(suffixable)
+                | {f"{c}__{t}" for c in suffixable for t in ("lhs", "rhs")}
+            )
             if not cols & candidates:
                 return names
             t += 1
+
+    def _lowered_key_names(self, names: Dict[str, str]) -> List[str]:
+        """Names of the materialized null-safe join keys: one
+        ``coalesce(k, default)`` and one ``isnull(k)`` column per join key."""
+        return [
+            f"{names['key']}{part}{i}"
+            for i in range(len(self.join_columns))
+            for part in ("c", "n")
+        ]
 
     @property
     def _intersect_columns(self) -> List[str]:
@@ -349,22 +385,48 @@ class SparkCompare:
 
     # ---------------------------------------------------------------- the plan
 
-    def _with_ordinal(self, df: DataFrame) -> DataFrame:
+    def _key_value(self, col: Column, dt: T.DataType) -> Column:
+        """The join-key value that both the pairing window and the join
+        compare: string keys are trimmed under ``ignore_spaces`` but never
+        case-folded (ref ``spark.py:416-427``). The trim is decided per side,
+        by that side's own dtype — the two frames may declare different
+        dtypes for the same key."""
+        if self.ignore_spaces and isinstance(dt, _STRING_TYPES):
+            return F.trim(col)
+        return col
+
+    def _with_ordinal(self, df: DataFrame, lowered: Sequence[str]) -> DataFrame:
         """Attach a 0-based per-key ordinal so the k-th duplicate on the left
         pairs with the k-th on the right (ref ``spark.py:386-412,1114-1170``).
+
+        The window partitions by the key values the join compares (trimmed
+        under ``ignore_spaces``), so rows the join treats as one key share
+        one ordinal sequence. With ``lowered`` names, each null-safe key is
+        first materialized as ``coalesce(k, default)`` and ``isnull(k)``
+        columns: the window partitions by those and the join equates them,
+        so the join reuses the window's partitioning and ordering.
 
         The reference string-casts keys and substitutes a ``'DATACOMPY_NULL'``
         sentinel for NULLs before grouping (``spark.py:1136-1147``); Spark
         windows already treat NULL as an ordinary partition value, so no
         sentinel (and no sentinel-collision probe) is needed here.
         """
+        dtypes = [df.schema[c].dataType for c in self.join_columns]
+        keys = [self._key_value(F.col(c), dt) for c, dt in zip(self.join_columns, dtypes)]
+        if lowered:
+            parts = {}
+            for i, (k, dt) in enumerate(zip(keys, dtypes)):
+                parts[lowered[2 * i]] = F.coalesce(k, _null_key_default(dt))
+                parts[lowered[2 * i + 1]] = k.isNull()
+            df = df.withColumns(parts)
+            keys = [F.col(n) for n in lowered]
         idx, ordinal = self._n["idx"], self._n["ordinal"]
         if self._dup_order_by:
             order = [F.col(c) for c in self._dup_order_by]
         else:
             df = df.withColumn(idx, F.monotonically_increasing_id())
             order = [F.col(idx)]
-        w = Window.partitionBy(*[F.col(c) for c in self.join_columns]).orderBy(*order)
+        w = Window.partitionBy(*keys).orderBy(*order)
         df = df.withColumn(ordinal, F.row_number().over(w) - 1)
         return df.drop(idx)
 
@@ -376,23 +438,55 @@ class SparkCompare:
         driver barriers) and only then decides whether to attach pairing
         ordinals. Here the ordinal is ALWAYS attached — for unique keys it is
         0 everywhere and the join is unchanged — and duplicate presence falls
-        out of the single statistics aggregate. Crucially the ordinal enters
+        out of the single statistics pass. Crucially the ordinal enters
         the join as a range-pair condition (``o1 <= o2 AND o1 >= o2``) rather
-        than an equality, which keeps it OUT of the hash-partitioning keys:
-        the sort-merge join reuses the window's key-partitioning instead of
-        re-shuffling on (keys, ordinal). Net cost of dup-safety: one
-        in-partition sort, zero extra shuffles, zero extra actions.
-        ``assume_unique=True`` skips the ordinal entirely (caller guarantees
-        key uniqueness)."""
+        than an equality, which keeps it OUT of the hash-partitioning keys,
+        and the window partitions by exactly the join's keys (for nullable
+        keys: the materialized ``coalesce(k, default)``/``isnull(k)``
+        columns the join equates): the sort-merge join reuses the window's
+        partitioning and ordering instead of re-shuffling. Net cost of
+        dup-safety: one in-partition sort, zero extra shuffles, zero extra
+        actions. ``assume_unique=True`` skips the ordinal entirely (caller
+        guarantees key uniqueness)."""
         df1, df2 = self.df1, self.df2
         n1, n2 = self.df1_name, self.df2_name
         ordinal = self._n["ordinal"]
         present = {"lhs": self._n["present_lhs"], "rhs": self._n["present_rhs"]}
 
+        # Null-safe equality is the reference semantic (null keys pair
+        # with null keys, spark.py:429-448) but its physical form —
+        # (coalesce(k, 0), isnull(k)) join keys — disqualifies bucketed
+        # scans. With null_safe_join=False the caller asserts keys are never
+        # null; and when EVERY join key is declared non-nullable on BOTH
+        # schemas the two predicates are provably equivalent, so the
+        # lowering is auto-selected — same results, cheaper plan.
+        keys_provably_non_null = all(
+            (not self.df1.schema[c].nullable) and (not self.df2.schema[c].nullable)
+            for c in self.join_columns
+        )
+        use_null_safe = self.null_safe_join and not keys_provably_non_null
+
         paired = not self.assume_unique
+        # A paired null-safe compare lowers the null-safe keys itself, below
+        # the ordinal window, so the window and the join share one key
+        # partitioning (one exchange and one sort per side, not two of
+        # each). Only when both sides declare the same key dtypes: mixed
+        # dtypes keep eqNullSafe and its implicit coercion.
+        lowered: List[str] = []
+        if (
+            paired
+            and use_null_safe
+            and all(
+                self.df1.schema[c].dataType == self.df2.schema[c].dataType
+                and _null_key_default(self.df1.schema[c].dataType) is not None
+                for c in self.join_columns
+            )
+        ):
+            lowered = self._lowered_key_names(self._n)
         if paired:
-            df1 = self._with_ordinal(df1)
-            df2 = self._with_ordinal(df2)
+            df1 = self._with_ordinal(df1, lowered)
+            df2 = self._with_ordinal(df2, lowered)
+        engine_keys = {*self.join_columns, ordinal, *lowered}
 
         # Internal rename: join keys get engine-private suffixes, value columns
         # get the public {col}_{df_name} suffixes (ref ``spark.py:429-448``).
@@ -405,7 +499,7 @@ class SparkCompare:
             # reference's pandas-merge suffixing: v -> v_df1,
             # v_df1 -> v_df1_df1).
             def new_name(c: str) -> str:
-                if c in self.join_columns or c == ordinal:
+                if c in engine_keys:
                     return f"{c}__{tag}"
                 return f"{c}_{public}"
 
@@ -416,43 +510,20 @@ class SparkCompare:
         left = suffixed(df1, "lhs", n1)
         right = suffixed(df2, "rhs", n2)
 
-        def key_expr(side: DataFrame, c: str, tag: str) -> Column:
-            col = side[f"{c}__{tag}"]
-            # trim decision is per-side: each frame may declare a different
-            # dtype for the same join key (ref spark.py:416-427 trims each
-            # side by its own schema)
-            owner = self.df1 if tag == "lhs" else self.df2
-            dt = owner.schema[c].dataType
-            if self.ignore_spaces and isinstance(dt, _STRING_TYPES):
-                # join keys are trimmed but never case-folded (ref spark.py:416-427)
-                return F.trim(col)
-            return col
+        if lowered:
+            conds = [left[f"{n}__lhs"] == right[f"{n}__rhs"] for n in lowered]
+        else:
+            def key_eq(lc: Column, rc: Column) -> Column:
+                return lc.eqNullSafe(rc) if use_null_safe else lc == rc
 
-        # Null-safe equality is the reference semantic (null keys pair
-        # with null keys, spark.py:429-448) but its physical form —
-        # (coalesce(k, 0), isnull(k)) join keys — disqualifies bucketed
-        # scans AND stops the outer join from reusing the ordinal window's
-        # plain-key partitioning (extra exchanges). With
-        # null_safe_join=False the caller asserts keys are never null; and
-        # when EVERY join key is declared non-nullable on BOTH schemas the
-        # two predicates are provably equivalent, so the lowering is
-        # auto-selected — same results, cheaper plan.
-        keys_provably_non_null = all(
-            (not self.df1.schema[c].nullable) and (not self.df2.schema[c].nullable)
-            for c in self.join_columns
-        )
-        use_null_safe = self.null_safe_join and not keys_provably_non_null
-
-        def key_eq(lc: Column, rc: Column) -> Column:
-            return lc.eqNullSafe(rc) if use_null_safe else lc == rc
-
-        cond = reduce(
-            lambda a, b: a & b,
-            [
-                key_eq(key_expr(left, c, "lhs"), key_expr(right, c, "rhs"))
+            conds = [
+                key_eq(
+                    self._key_value(left[f"{c}__lhs"], self.df1.schema[c].dataType),
+                    self._key_value(right[f"{c}__rhs"], self.df2.schema[c].dataType),
+                )
                 for c in self.join_columns
-            ],
-        )
+            ]
+        cond = reduce(lambda a, b: a & b, conds)
         if paired:
             ol, orr = left[f"{ordinal}__lhs"], right[f"{ordinal}__rhs"]
             if self.dup_join_on_ordinal:
@@ -478,9 +549,7 @@ class SparkCompare:
             for c in self.join_columns
         ]
         internal = {
-            f"{k}__{t}"
-            for k in list(self.join_columns) + [ordinal]
-            for t in ("lhs", "rhs")
+            f"{k}__{t}" for k in engine_keys for t in ("lhs", "rhs")
         } | set(present.values())
         value_cols = [c for c in outer.columns if c not in internal]
         extras = []
@@ -527,56 +596,47 @@ class SparkCompare:
             self._outer_persisted = False
         self._outer = outer
 
-    @cached_property
-    def _exceptions(self) -> DataFrame:
-        """The cached *diff*: rows that are unique to one side or have at
-        least one mismatching column. Report sampling and mismatch extraction
-        make several passes — but only ever over these rows, so this is what
-        gets persisted. At scale the diff is normally a tiny fraction of the
-        join (the reference caches the full intersect frame instead,
-        ``spark.py:532-537``)."""
-        from pyspark import StorageLevel
-
-        pred = (F.col(self._n["merge"]) != "both") | self._any_mismatch_pred()
-        return self._outer.filter(pred).persist(StorageLevel.MEMORY_AND_DISK)
-
     def _ensure_cached(self) -> None:
-        """Materialize the exceptions cache — and, when the statistics have
-        not been computed yet either (the report flow), ride BOTH on one
-        pass over the outer join: the statistics aggregate attaches to the
-        cache-populate action as ``DataFrame.observe`` metrics instead of
-        running as its own full-join aggregate (guide §2.4 — two ops over
-        the same frame share one pass; r15). Every outer-join row flows
-        through the CollectMetrics node on its way into the exceptions
-        filter, so the observed aggregates see exactly the rows
-        ``_stats``'s standalone aggregate would — identical values, one
-        scan+join instead of two. Standalone stats reads (``matches()``
-        with no report) keep the plain aggregate: it lets Catalyst prune
-        columns the exceptions cache would have to materialize."""
+        """Materialize the exceptions cache, ``self._exceptions``: the
+        persisted *diff*, rows that are unique to one side or have at least
+        one mismatching column. Report sampling and mismatch extraction make
+        several passes — but only ever over these rows, so this is what gets
+        persisted. At scale the diff is normally a tiny fraction of the join
+        (the reference caches the full intersect frame instead,
+        ``spark.py:532-537``).
+
+        The statistics ride the same pass: when they are not known yet,
+        their aggregates attach to the cache-populate action as
+        ``DataFrame.observe`` metrics (SURVEY §2.4 — two ops over the same
+        frame share one pass). Every outer-join row flows through the
+        CollectMetrics node on its way into the exceptions filter, so the
+        observed aggregates see every row of the join. Any statistics read
+        therefore persists the diff; :meth:`uncache` releases it.
+
+        Both memos are set only after the populate action succeeds; on
+        failure the half-populated cache is released and the error
+        propagates."""
         if "_exceptions" in self.__dict__:
             return
-        if "_stats" not in self.__dict__:
-            try:
-                from pyspark.sql import Observation
-            except ImportError:  # pragma: no cover — very old pyspark
-                Observation = None
-            if Observation is not None:
-                from pyspark import StorageLevel
+        from pyspark import StorageLevel
+        from pyspark.sql import Observation
 
-                obs = Observation()
-                observed = self._outer.observe(obs, *self._stat_aggs())
-                pred = (
-                    F.col(self._n["merge"]) != "both"
-                ) | self._any_mismatch_pred()
-                exc = observed.filter(pred).persist(StorageLevel.MEMORY_AND_DISK)
-                self.__dict__["_exceptions"] = exc
-                exc.count()  # populate the cache; metrics collect in-flight
-                stats = {k: (0 if v is None else v) for k, v in obs.get.items()}
-                self._warn_if_hot_key(stats)
-                self.__dict__["_stats"] = stats
-                self._drop_unq_row_memos()
-                return
-        self._exceptions  # noqa: B018 — building the property persists it
+        src, obs = self._outer, None
+        if "_stats" not in self.__dict__:
+            obs = Observation()
+            src = src.observe(obs, *self._stat_aggs())
+        pred = (F.col(self._n["merge"]) != "both") | self._any_mismatch_pred()
+        exc = src.filter(pred).persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            exc.count()  # populate the cache; metrics collect in-flight
+        except BaseException:
+            exc.unpersist(blocking=True)
+            raise
+        if obs is not None:
+            stats = {k: (0 if v is None else v) for k, v in obs.get.items()}
+            self._warn_if_hot_key(stats)
+            self.__dict__["_stats"] = stats
+        self._exceptions = exc
         self._drop_unq_row_memos()
 
     def _drop_unq_row_memos(self) -> None:
@@ -603,7 +663,6 @@ class SparkCompare:
             self._outer_persisted = True
         self._outer.count()
         self._ensure_cached()
-        self._exceptions.count()
         return self
 
     def explain(self, mode: str = "formatted") -> str:
@@ -629,8 +688,9 @@ class SparkCompare:
         return buf.getvalue()
 
     def uncache(self) -> None:
-        """Release everything :meth:`cache_result` (or
-        ``cache_intermediates``) pinned."""
+        """Release everything the compare persisted: the diff that the first
+        statistics read, report or mismatch pull populated, and whatever
+        :meth:`cache_result` (or ``cache_intermediates``) pinned."""
         if self._outer_persisted:
             self._outer.unpersist()
             self._outer_persisted = False
@@ -710,11 +770,7 @@ class SparkCompare:
         # filters on the merge indicator alone — reading the raw outer join
         # instead lets Catalyst PRUNE all match expressions from the plan
         # (r14; measured via the cmp_unique_rows A/B).
-        src_df = (
-            self._exceptions
-            if "_exceptions" in self.__dict__
-            else self._outer
-        )
+        src_df = self.__dict__.get("_exceptions", self._outer)
         return src_df.filter(F.col(self._n["merge"]) == tag).select(*sel)
 
     @cached_property
@@ -735,11 +791,8 @@ class SparkCompare:
         return isinstance(dt1, ok) and isinstance(dt2, ok)
 
     def _stat_aggs(self) -> List[Column]:
-        """The statistics aggregate expressions — consumed either as ONE
-        standalone aggregate action (:attr:`_stats`) or as ``observe``
-        metrics piggybacked on the exceptions-populate pass
-        (:meth:`_ensure_cached`); both see every outer-join row, so the
-        values are identical by construction."""
+        """The statistics aggregate expressions, consumed as ``observe``
+        metrics on the exceptions-populate pass (:meth:`_ensure_cached`)."""
         both = F.col(self._n["merge"]) == "both"
         n1, n2 = self.df1_name, self.df2_name
         aggs = [
@@ -767,7 +820,8 @@ class SparkCompare:
                 ).alias(f"__nulldiff__{c}")
             )
             if self._maxdiff_capable(c):
-                d1, d2 = c1.try_cast("double"), c2.try_cast("double")
+                d1 = try_double(c1, self.df1.schema[c].dataType)
+                d2 = try_double(c2, self.df2.schema[c].dataType)
                 diff = F.abs(d1 - d2)
                 # exclude NaN rows from max_diff (ref ``spark.py:1058-1060``)
                 guarded = F.when(
@@ -777,19 +831,17 @@ class SparkCompare:
                 aggs.append(F.max(guarded).alias(f"__maxdiff__{c}"))
         return aggs
 
-    @cached_property
+    @property
     def _stats(self) -> Dict[str, Any]:
-        """THE single statistics action: one aggregate over the joined frame
-        computes row classes, matching-row count, and per-column
+        """THE single statistics pass: one set of aggregates over the joined
+        frame computes row classes, matching-row count, and per-column
         match/null-diff/max-diff — replacing the reference's per-column action
-        loop (``spark.py:594-636``, A1+A3+A4 in SURVEY §2.4). In the report
-        flow the same expressions arrive as ``observe`` metrics on the
-        exceptions-populate pass instead (:meth:`_ensure_cached`), so this
-        aggregate never runs there."""
-        row = self._outer.agg(*self._stat_aggs()).collect()[0].asDict()
-        stats = {k: (0 if v is None else v) for k, v in row.items()}
-        self._warn_if_hot_key(stats)
-        return stats
+        loop (``spark.py:594-636``, A1+A3+A4 in SURVEY §2.4). They arrive as
+        ``observe`` metrics on the exceptions-populate pass
+        (:meth:`_ensure_cached`) and are memoized for the compare's life."""
+        if "_stats" not in self.__dict__:
+            self._ensure_cached()
+        return self.__dict__["_stats"]
 
     def _warn_if_hot_key(self, stats: Dict[str, Any]) -> None:
         """Hot-join-key advisory (r13 verdict item 3): the pairing ordinal
@@ -982,6 +1034,7 @@ class SparkCompare:
         if column in self.join_columns:
             raise ValueError(f"{column} is a join column; cannot sample mismatches")
         n1, n2 = self.df1_name, self.df2_name
+        self._ensure_cached()
         out = (
             self._exceptions.filter(
                 (F.col(self._n["merge"]) == "both") & ~F.col(f"{column}_match")
@@ -1009,6 +1062,7 @@ class SparkCompare:
         cols = list(self.join_columns)
         for c in keep:
             cols += [f"{c}_{n1}", f"{c}_{n2}"]
+        self._ensure_cached()
         return self._exceptions.filter(
             (F.col(self._n["merge"]) == "both") & self._any_mismatch_pred()
         ).select(*cols)
@@ -1025,8 +1079,8 @@ class SparkCompare:
         bad = [c for c in cols if c in self.join_columns]
         if bad:
             raise ValueError(f"cannot mask join columns: {bad}")
-        # force stats before masking so counts reflect real values
-        _ = self._stats
+        # stats before masking so counts reflect real values
+        self._ensure_cached()
 
         def mask(df: DataFrame, suffixes: Sequence[str]) -> DataFrame:
             targets = set()
@@ -1045,18 +1099,14 @@ class SparkCompare:
         if self._outer_persisted:
             self._outer.unpersist()
             self._outer_persisted = False
-        exc = self.__dict__.get("_exceptions")
-        if exc is not None:
-            exc.unpersist()
-        else:
-            exc = self._exceptions  # build lazily so we can mask it below
-            exc.unpersist()
+        exc = self._exceptions
+        exc.unpersist()
         # sample_mismatch/all_mismatch/report() all read _exceptions — mask it
         # too or sensitive values leak through those paths (ref
         # ``spark.py:720-791`` reads the masked intersect frame).
         from pyspark import StorageLevel
 
-        self.__dict__["_exceptions"] = mask(
+        self._exceptions = mask(
             exc, [self.df1_name, self.df2_name]
         ).persist(StorageLevel.MEMORY_AND_DISK)
         self.__dict__["intersect_rows"] = mask(

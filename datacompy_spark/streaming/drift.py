@@ -375,7 +375,8 @@ def validate_to_sink(
     batch rewrites exactly its own partition instead of double-appending.
 
     Scale notes: the reference should be broadcast-sized or bucketed; each
-    micro-batch pays one join + one stats aggregate over the batch only.
+    micro-batch pays one pass over the batch's join, which persists the
+    batch's diff; it is released after the batch's write.
     Returns the started ``StreamingQuery`` — callers own termination."""
     from datacompy_spark.operators.compare import SparkCompare
 
@@ -396,14 +397,17 @@ def validate_to_sink(
             rel_tol=rel_tol,
             abs_tol=abs_tol,
         )
-        bad = cmp_.all_mismatch().withColumn("__kind", F.lit("mismatch"))
-        missing = cmp_.df1_unq_rows.select(*keys).withColumn(
-            "__kind", F.lit("missing_in_ref")
-        )
-        out = bad.unionByName(missing, allowMissingColumns=True).withColumn(
-            "batch_id", F.lit(batch_id)
-        )
-        _write_batch_idempotent(out, mismatch_path)
+        try:
+            bad = cmp_.all_mismatch().withColumn("__kind", F.lit("mismatch"))
+            missing = cmp_.df1_unq_rows.select(*keys).withColumn(
+                "__kind", F.lit("missing_in_ref")
+            )
+            out = bad.unionByName(missing, allowMissingColumns=True).withColumn(
+                "batch_id", F.lit(batch_id)
+            )
+            _write_batch_idempotent(out, mismatch_path)
+        finally:
+            cmp_.uncache()  # release the batch's persisted diff
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

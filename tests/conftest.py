@@ -7,10 +7,14 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
-def spark():
+def spark(tmp_path_factory):
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
+    # a per-session warehouse: managed-table locations left behind by an
+    # aborted earlier run must not collide with this run's tables
+    warehouse = tmp_path_factory.mktemp("spark-warehouse")
     s = (
         SparkSession.builder.master(f"local[{cpus}]")
+        .config("spark.sql.warehouse.dir", str(warehouse))
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

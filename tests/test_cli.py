@@ -630,15 +630,19 @@ class TestDedupCommand:
             out1 = str(tmp_path / "v1.parquet")
             rc = main(["dedup", "--input", b1, "--ledger", "cli_ledger_t",
                        "--method", "exact", "--verdict", out1])
-            s1 = _json.loads(capsys.readouterr().out)
-            assert rc == 0 and s1["mode"] == "incremental-ledger"
+            captured = capsys.readouterr()
+            assert rc == 0, captured.err
+            s1 = _json.loads(captured.out)
+            assert s1["mode"] == "incremental-ledger"
             assert s1["n_new"] == 2
 
             out2 = str(tmp_path / "v2.parquet")
             rc = main(["dedup", "--input", b2, "--ledger", "cli_ledger_t",
                        "--method", "exact", "--verdict", out2])
-            s2 = _json.loads(capsys.readouterr().out)
-            assert rc == 0 and s2["n_dup_corpus"] == 1 and s2["n_new"] == 1
+            captured = capsys.readouterr()
+            assert rc == 0, captured.err
+            s2 = _json.loads(captured.out)
+            assert s2["n_dup_corpus"] == 1 and s2["n_new"] == 1
             v = {r["doc_id"]: (r["verdict"], r["match_id"])
                  for r in spark.read.parquet(out2).collect()}
             assert v[10] == ("dup_corpus", 1) and v[11] == ("new", None)
@@ -664,14 +668,18 @@ class TestDedupCommand:
 
             rc = main(["dedup", "--input", b1, "--ledger", "cli_mhl",
                        "--method", "minhash", "--verdict", str(tmp_path / "v1.parquet")])
-            s1 = _json.loads(capsys.readouterr().out)
-            assert rc == 0 and s1["n_new"] == 2
+            captured = capsys.readouterr()
+            assert rc == 0, captured.err
+            s1 = _json.loads(captured.out)
+            assert s1["n_new"] == 2
 
             out2 = str(tmp_path / "v2.parquet")
             rc = main(["dedup", "--input", b2, "--ledger", "cli_mhl",
                        "--method", "minhash", "--verdict", out2])
-            s2 = _json.loads(capsys.readouterr().out)
-            assert rc == 0 and s2["n_dup_corpus"] == 1 and s2["n_new"] == 1
+            captured = capsys.readouterr()
+            assert rc == 0, captured.err
+            s2 = _json.loads(captured.out)
+            assert s2["n_dup_corpus"] == 1 and s2["n_new"] == 1
             v = {r["doc_id"]: (r["verdict"], r["match_id"])
                  for r in spark.read.parquet(out2).collect()}
             assert v[10] == ("dup_corpus", 1) and v[11] == ("new", None)

@@ -360,6 +360,18 @@ class TestSuffixCollision:
         # row_classes still exposes the public name regardless of probing
         assert c.row_classes().columns == ["id", "row_class"]
 
+    def test_reserved_lowered_key_names_compare_as_data(self, spark):
+        # the materialized null-safe key columns of a paired compare are
+        # probed like every other internal name
+        schema = "id bigint, __dc_keyc0 bigint, __dc_keyn0 boolean"
+        df1 = spark.createDataFrame([(1, 5, True), (None, 7, False)], schema)
+        df2 = spark.createDataFrame([(1, 6, True), (None, 7, False)], schema)
+        c = SparkCompare(spark, df1, df2, join_columns="id")
+        stats = {s["column"]: s["unequal_cnt"] for s in c.column_stats}
+        assert stats == {"id": 0, "__dc_keyc0": 1, "__dc_keyn0": 0}
+        assert c.intersect_rows_count == 2
+        c.uncache()
+
     def test_reserved_name_differs_only_by_case(self, spark):
         # Spark's default resolver is case-insensitive, so `_Merge` would
         # collide with the `_merge` indicator alias exactly like an exact
@@ -456,6 +468,49 @@ class TestKeyExprPerSide:
         c = SparkCompare(spark, df1, df2, join_columns="id", ignore_spaces=True)
         assert c.intersect_rows_count == 2
         assert c.count_matching_rows() == 2
+
+
+class TestIgnoreSpacesDuplicatePairing:
+    def test_trimmed_duplicate_keys_share_one_ordinal(self, spark):
+        # "a" and "a " are one key under ignore_spaces, so the pairing
+        # window must number them as one key group: a window on the raw
+        # key gave both ordinal 0 and paired a third row into df2
+        df1 = spark.createDataFrame([("a", 1), ("a ", 2)], "k string, v int")
+        df2 = spark.createDataFrame([("a", 1), ("a", 2)], "k string, v int")
+        c = SparkCompare(
+            spark, df1, df2, join_columns="k", ignore_spaces=True, dup_order_by=["v"]
+        )
+        assert c.df1_row_count == 2 and c.df2_row_count == 2
+        assert c.intersect_rows_count == 2
+        assert c.matches()
+        c.uncache()
+
+
+class TestPopulateFailure:
+    def test_failed_populate_memoizes_nothing_and_releases_cache(self, spark):
+        # a populate action that fails must leave neither memo behind (a
+        # retry would otherwise read a half-built cache) and must release
+        # whatever blocks it cached before the failure
+        from datacompy_spark.functions.comparators import BaseComparator
+
+        class Boom(BaseComparator):
+            def compare(self, df, col1, col2, **kwargs):
+                return F.raise_error(F.lit("comparator boom")).cast("boolean")
+
+        def cached_ids():
+            infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+            return {i.id() for i in infos if i.numCachedPartitions() > 0}
+
+        df = spark.range(0, 200).select(F.col("id").alias("k"), F.col("id").alias("v"))
+        spark.catalog.clearCache()
+        before = cached_ids()
+        c = SparkCompare(spark, df, df, join_columns="k", custom_comparators=[Boom()])
+        for entry in (c.report, c.matches):
+            with pytest.raises(Exception, match="comparator boom"):
+                entry()
+            assert "_exceptions" not in c.__dict__
+            assert "_stats" not in c.__dict__
+            assert not (cached_ids() - before)
 
 
 class TestPlainEquiJoin:

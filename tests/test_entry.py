@@ -248,8 +248,7 @@ def test_bench_history_cutoff_excludes_pre_r8_rounds(tmp_path):
     machinery (different query set, no noise arrays, different warmup
     discipline) — they must be excluded from EVERY history scan by round
     number, so a future re-serialization that gives an old record modern
-    fields can never skew the sentinel floor or a trailing median. Files
-    whose names don't parse as BENCH_r{N}.json stay eligible (fixtures)."""
+    fields can never skew the sentinel floor or a trailing median."""
     import json as _json
 
     import bench
@@ -269,6 +268,25 @@ def test_bench_history_cutoff_excludes_pre_r8_rounds(tmp_path):
     assert gmed == {"knn_recall": 7.0}
     assert bench._healthy_sentinel_floor(here=str(tmp_path)) == pytest.approx(0.15)
     assert bench._HISTORY_MIN_ROUND == 8
+
+
+def test_bench_history_skips_non_round_names(tmp_path):
+    """Only BENCH_r<NN>.json names are history: a matched-core leg such as
+    BENCH_r14_c8.json records another machine shape at the same sf and
+    must feed neither the trailing medians nor the sentinel floor."""
+    import json as _json
+
+    import bench
+
+    leg = {"metric": "compare_report_sec", "value": 9.0, "sf": 0.1,
+           "cpus": 8, "queries": {"qx": 9.0}, "noise": [0.05]}
+    rec = {"metric": "compare_report_sec", "value": 3.0, "sf": 0.1,
+           "cpus": 32, "queries": {"qx": 3.0}, "noise": [0.15]}
+    (tmp_path / "BENCH_r14_c8.json").write_text(_json.dumps(leg))
+    (tmp_path / "BENCH_r14.json").write_text(_json.dumps(rec))
+    assert bench._history_files(str(tmp_path)) == [str(tmp_path / "BENCH_r14.json")]
+    assert bench._trailing_medians(0.1, here=str(tmp_path)) == {"qx": 3.0}
+    assert bench._healthy_sentinel_floor(here=str(tmp_path)) == pytest.approx(0.15)
 
 
 def test_bench_gate_instruments_in_record():

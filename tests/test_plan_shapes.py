@@ -154,10 +154,27 @@ class TestCompareTopology:
 
     def test_nullable_keys_keep_null_safe_join(self, spark, li_pair):
         # parquet schemas are nullable → the reference's null-safe pairing
-        # semantic must survive the auto-lowering optimization
+        # semantic must survive the auto-lowering optimization. A paired
+        # compare materializes the null-safe key below the ordinal window
+        # on each side, and the join equates those columns
         c = SparkCompare(spark, *li_pair, join_columns=["l_orderkey"])
         p = plan_of(c._outer)
-        assert "isnull(l_orderkey__" in p or "coalesce(l_orderkey__" in p, p[:800]
+        assert p.count("coalesce(l_orderkey#") == 2, p[:800]
+        assert p.count("isnull(l_orderkey#") == 2, p[:800]
+        m = re.search(r"SortMergeJoin \[([^\]]*)\]", p)
+        assert m and "__dc_keyc0__lhs" in m.group(1), p[:800]
+        assert "__dc_keyn0__lhs" in m.group(1), p[:800]
+
+    def test_paired_nullable_keys_one_exchange_per_side(self, spark, li_pair):
+        # the ordinal window partitions by the materialized null-safe keys
+        # the join equates, so the join reuses the window's exchange and
+        # sort: one of each per side (a window on the raw key plus a join
+        # on (coalesce(k, 0), isnull(k)) planned two of each)
+        c = SparkCompare(spark, *li_pair, join_columns=KEYS)
+        p = plan_of(c._outer)
+        assert p.count("Exchange hashpartitioning") == 2, p
+        assert p.count("Sort [") == 2, p
+        assert p.count("SortMergeJoin") == 1, p
 
     def test_dup_join_on_ordinal_modes(self, spark, li_pair):
         # default: ordinal rides as a residual range-pair → NOT in the SMJ
@@ -193,22 +210,37 @@ class TestCompareTopology:
 
 
 class TestOnePassReportStats:
-    """r15: the report flow computes the statistics aggregate as
-    ``DataFrame.observe`` metrics ON the exceptions-populate action — one
-    full-join pass instead of two. These pin (a) value equality with the
-    standalone aggregate, (b) that the stats really ride the populate
-    action (no second full-join job), and (c) the r14-advice cache-binding
-    fixes around ``_unq_rows``/``uncache``."""
+    """Every flow computes the statistics as ``DataFrame.observe`` metrics
+    ON the exceptions-populate action — one full-join pass. These pin (a)
+    value equality with a plain aggregate of the same expressions, (b) that
+    the stats really ride the populate action (no second full-join job) in
+    the report and the check flow, and (c) the cache-binding rules around
+    ``_unq_rows``/``uncache``."""
 
     def test_observed_stats_equal_plain_aggregate(self, spark, li_pair):
-        c_obs = SparkCompare(spark, *li_pair, join_columns=KEYS)
-        c_obs._ensure_cached()  # report flow entry: observe path
-        assert "_stats" in c_obs.__dict__, (
+        c = SparkCompare(spark, *li_pair, join_columns=KEYS)
+        c._ensure_cached()  # report flow entry: observe path
+        assert "_stats" in c.__dict__, (
             "stats did not ride the exceptions-populate action"
         )
-        c_agg = SparkCompare(spark, *li_pair, join_columns=KEYS)
-        assert c_obs._stats == c_agg._stats  # plain aggregate path
-        c_obs.uncache()
+        # oracle: the same expressions as one plain aggregate over the join
+        row = c._outer.agg(*c._stat_aggs()).collect()[0].asDict()
+        assert c._stats == {k: (0 if v is None else v) for k, v in row.items()}
+        c.uncache()
+
+    def test_check_flow_is_one_populate_pass(self, spark, li_pair):
+        # matches() + column_stats + all_mismatch().count() on a fresh
+        # compare: the statistics read populates the exceptions cache and
+        # the mismatch count reads it back — no second pass over the join
+        c = SparkCompare(spark, *li_pair, join_columns=KEYS)
+        tracker = spark.sparkContext.statusTracker()
+        before = set(tracker.getJobIdsForGroup(None) or [])
+        c.matches()
+        _ = c.column_stats
+        c.all_mismatch().count()
+        new_jobs = len(set(tracker.getJobIdsForGroup(None) or []) - before)
+        assert new_jobs <= 8, f"check flow ran {new_jobs} jobs"
+        c.uncache()
 
     def test_populate_also_fills_exceptions_cache(self, spark, li_pair):
         spark.catalog.clearCache()
@@ -226,8 +258,8 @@ class TestOnePassReportStats:
 
     def test_stats_then_report_still_works_two_pass(self, spark, li_pair):
         # a user who reads stats FIRST (matches()) then reports: the stats
-        # came from the plain aggregate, the cache populates lazily — both
-        # orders must agree on every number and the rendered report
+        # read populated the cache, the report reuses it — both orders
+        # must agree on every number and the rendered report
         c1 = SparkCompare(spark, *li_pair, join_columns=KEYS)
         _ = c1.matches()
         rep1 = c1.report(sample_count=5)

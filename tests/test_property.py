@@ -887,3 +887,54 @@ class TestQuantileInterpolationProperty:
         )
         want = float(np.quantile(np.array(svals), p, method="linear"))
         assert got == pytest.approx(want, rel=1e-12, abs=1e-6)
+
+
+class TestGatedDoubleParse:
+    """``try_double`` skips the parse of strings that hold no ASCII digit
+    and no inf/nan; on every string it must equal a plain
+    ``TRY_CAST(s AS DOUBLE)``, NaN equal to NaN."""
+
+    _edge = [
+        "  Infinity ", "Infinity", "-Infinity", "+inf", "INF", "infinity",
+        "\x0binf", "\tNaN\n", "nan", "-nan", "1d", "1D", "1f", "0x1p3",
+        "1e999", "-1e999", "\uff11\uff12", "\u0661\u0662", "\u221e", ".5",
+        "5.", "1e", "e5", "", " ", "1,000", "1_000", "+", "-", "0x10",
+    ]
+
+    @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
+    @given(
+        texts=st.lists(
+            st.one_of(
+                st.none(),
+                st.text(
+                    alphabet=st.characters(blacklist_categories=("Cs",)), max_size=12
+                ),
+                floats.map(repr),
+                st.integers().map(str),
+                st.sampled_from(_edge),
+            ),
+            min_size=1,
+            max_size=40,
+        )
+    )
+    def test_gate_equals_plain_try_cast(self, spark, texts):
+        from pyspark.sql import functions as F
+        from pyspark.sql import types as T
+
+        from datacompy_spark.functions.comparators import try_double
+
+        df = spark.createDataFrame(
+            list(enumerate(texts + self._edge)), "i int, s string"
+        )
+        rows = df.select(
+            try_double(F.col("s"), T.StringType()).alias("gated"),
+            F.col("s").try_cast("double").alias("plain"),
+        ).collect()
+        for r in rows:
+            g, p = r["gated"], r["plain"]
+            if g is None or p is None:
+                assert g is None and p is None, (g, p)
+            elif math.isnan(p):
+                assert math.isnan(g)
+            else:
+                assert g == p

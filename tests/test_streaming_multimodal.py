@@ -303,10 +303,18 @@ class TestValidateToSink:
         stream = spark.readStream.schema(ev.schema).parquet(events_dir)
         sink = str(tmp_path / "mismatches")
         ckpt = str(tmp_path / "ckpt")
+
+        def cached_ids():
+            infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+            return {i.id() for i in infos if i.numCachedPartitions() > 0}
+
+        before = cached_ids()
         q = SD.validate_to_sink(
             stream, ref, ["event_id"], sink, ckpt, compare_columns=["value"]
         )
         assert q.awaitTermination(120)
+        # each micro-batch releases the diff its compare persisted
+        assert not (cached_ids() - before)
         got = spark.read.parquet(sink)
         n = ev.count()
         want_missing = ev.filter(F.col("event_id") % 7 == 0).count()
