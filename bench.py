@@ -1,12 +1,17 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS].
 
 Prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {"q1": sec, ...}, "sf": ...}
+  {"metric": "...", "value": N, "unit": "sec", "queries": {"q1": sec, ...},
+   "gates": {...}, "noise": [...], "sf": ...}
 
 The headline metric mirrors the reference's published benchmark unit of work —
 one full compare + report (BASELINE.md: compare+report seconds) — on the
 lineitem comparison scenario. Individual driver-contract queries are timed
-separately in "queries".
+separately in "queries". Timings are raw best-of-N wall clocks; "noise" holds
+the raw samples of a fixed CPU-bound sentinel job taken through the run.
+Warm timings, errors and each timed name's status-store counters (jobs,
+stages, tasks, bytes, executor time) go to BENCH_DETAIL.json. Gain claims are
+judged by the paired runs of ``perfbench/run.py``, not by this line.
 """
 
 from __future__ import annotations
@@ -19,136 +24,38 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# History cutoff (r13 verdict item 7): BENCH_r01..r07 predate the sentinel /
-# creep / gate-replay machinery (no noise arrays, different query set, a
-# different warmup discipline), so they are excluded from every history scan
-# by ROUND NUMBER, not just by shape — a pre-r8 record must never feed the
-# sentinel floor or a trailing median even if a future re-serialization gives
-# it the modern fields. Files whose name doesn't parse as BENCH_r{N}.json
-# (e.g. the matched-core leg BENCH_r14_c8.json) are skipped: they record a
-# different machine shape and must not feed same-sf history.
-_HISTORY_MIN_ROUND = 8
+HEADLINE = "compare_report"
+
+#: the driver parses the bench line out of the last ~2,000 characters of
+#: stdout (a ~2,800-character line once made it record parsed=null at rc=0)
+LINE_LIMIT = 1900
 
 
-def _history_files(here: str):
-    """The BENCH_r*.json paths eligible for history scans, sorted by name."""
-    import glob
+def one_line(record: dict) -> str:
+    """``record`` as one compact JSON line of at most LINE_LIMIT characters.
 
-    out = []
-    for path in sorted(glob.glob(os.path.join(here, "BENCH_r*.json"))):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if not m or int(m.group(1)) < _HISTORY_MIN_ROUND:
-            continue
-        out.append(path)
-    return out
-
-
-def _trailing_values(sf, here=None, key="queries") -> dict:
-    """Per-query timing SERIES (round order, oldest first) over the last 3
-    rounds' driver-recorded bench files AT THE SAME SCALE FACTOR — timings
-    from a different SF would make every query look like an outlier, or
-    hide real ones. ``here`` overrides the BENCH_r*.json directory (tests
-    feed a fixture dir); ``key`` selects which timing dict to read
-    ("queries" or "gates" — the gate replay pass needs its own history,
-    round-10 lesson: the knn_recall gate recorded 21.94 s in a VM-pressure
-    window with no in-record exoneration because the replay pass covered
-    only "queries"). Pre-r8 rounds are excluded (_HISTORY_MIN_ROUND)."""
-    hist: dict = {}
-    if here is None:
-        here = os.path.dirname(os.path.abspath(__file__))
-    candidates = []
-    for path in _history_files(here):
-        try:
-            with open(path) as fh:
-                data = json.load(fh)
-        except Exception:  # noqa: BLE001
-            continue
-        if data.get("sf") == sf:
-            candidates.append(data)
-    for data in candidates[-3:]:
-        # driver-written BENCH_r*.json nests the bench line under "parsed"
-        # ({"n":…,"rc":…,"sf":…,"parsed":{"queries":…}}); a bare bench.py
-        # line has "queries" at the top level — accept both (round-9
-        # lesson: reading only the top level made medians always {} and
-        # the replay pass dead code)
-        q = data.get(key) or (data.get("parsed") or {}).get(key) or {}
-        for k, v in q.items():
-            if isinstance(v, (int, float)):
-                hist.setdefault(k, []).append(float(v))
-    return hist
-
-
-def _trailing_medians(sf, here=None, key="queries") -> dict:
-    """Median of :func:`_trailing_values` per query — the reference point
-    for the outlier-replay pass."""
-    import statistics
-
-    return {
-        k: statistics.median(v) for k, v in _trailing_values(sf, here, key).items()
-    }
-
-
-def _is_creeping(best, med, series) -> bool:
-    """Sub-2× creep detection (r11 verdict item 2). The reference point is
-    the trailing-window MINIMUM, not the median: a steady ~15-20%/round
-    drift drags the median along with it, so "best > 1.3× median" never
-    fires on exactly the dedup_ngram_jaccard 2.18→3.58 s pattern this
-    probe exists for (each round is only ~1.2× its own trailing median).
-    Flag when cumulative drift over the window exceeds 30% AND the prior
-    round was already elevated (trend, not a one-round spike) AND this
-    round is still holding (not already recovered). Above 2× the median
-    the outlier-replay pass owns the case — its absolute floor is the
-    SAME 0.5 s as this probe's jitter floor, so the defer below never
-    strands a query in a dead band where neither pass replays it (r12
-    review finding: with the outlier floor at 1.0 s, a regressed query
-    with best in (0.5, 1.0] and >2× median got no replay at all). At/
-    below 0.5 s absolute it is all jitter. A false positive costs one
-    extra sample (min kept), a false negative costs another round of
-    silent drift — tuned cheap."""
-    if best is None or not series or best <= 0.5:
-        return False
-    if med is not None and best > 2.0 * med:
-        return False  # the 2× outlier pass replays these (same 0.5 s floor)
-    lo = min(series)
-    return (
-        best > 1.3 * lo  # ≥30% cumulative drift across the window
-        and best >= 0.95 * series[-1]  # still holding/rising, not recovered
-        and series[-1] > 1.15 * lo  # prior round elevated too — a trend
+    ``record["queries"]`` is cut to fit: the headline always stays, then the
+    slowest timings of this run are added while the line fits, ties broken
+    by name. Failed (None) timings are left out; every timing and error is
+    in BENCH_DETAIL.json."""
+    timings = record["queries"]
+    ranked = sorted(
+        (k for k, v in timings.items() if v is not None and k != HEADLINE),
+        key=lambda k: (-timings[k], k),
     )
+    kept = {HEADLINE: timings.get(HEADLINE)}
 
+    def dump(queries: dict) -> str:
+        return json.dumps({**record, "queries": queries}, separators=(",", ":"))
 
-def _healthy_sentinel_floor(here=None):
-    """This machine's noise-sentinel FLOOR: the minimum sample across every
-    trailing driver-recorded bench round's ``noise`` array (the sentinel is
-    a fixed CPU-bound job, so its floor is scale-factor-independent — all
-    rounds count, not just same-sf ones). A calm window shows up in almost
-    every record eventually (r12's pressure-window record still ends on a
-    0.114 s sample), so min-over-history tracks the true quiet-machine
-    band rather than drifting with the weather the way a median would.
-    Returns None with no usable history (the gate then degrades to
-    ratio=1.0 / no wait — a fresh clone must not stall the sweep).
-    Pre-r8 rounds are excluded (_HISTORY_MIN_ROUND)."""
-    if here is None:
-        here = os.path.dirname(os.path.abspath(__file__))
-    samples = []
-    for path in _history_files(here):
-        try:
-            with open(path) as fh:
-                data = json.load(fh)
-        except Exception:  # noqa: BLE001
-            continue
-        noise = data.get("noise") or (data.get("parsed") or {}).get("noise") or []
-        # plausibility clamp: the sentinel is a fixed 50M-row hash-sum on
-        # 32 threads — nothing real lands below ~0.03 s or above ~2 s on
-        # any machine this runs on. One glitched sample in one record
-        # (a serialization bug, a truncated file) must not become the
-        # floor forever, silently arming the gate on every future sweep.
-        samples.extend(
-            v
-            for v in noise
-            if isinstance(v, (int, float)) and 0.03 < v < 2.0
-        )
-    return min(samples) if samples else None
+    line = dump(kept)
+    for k in ranked:
+        trial = dump({**kept, k: timings[k]})
+        if len(trial) > LINE_LIMIT:
+            break
+        kept[k] = timings[k]
+        line = trial
+    return line
 
 
 def main() -> None:
@@ -159,12 +66,10 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    # the engine-recommended session settings (r15, moved out of this
-    # harness per the r14 verdict: the dataFrameDebugging=false driver
-    # speedup belongs to the PRODUCT's documented session surface —
-    # datacompy_spark.session has the measurements and trade-offs; the
-    # bench consumes the same recommendation users get). Correctness
-    # paths (check_oracles) deliberately keep the PySpark defaults.
+    # the engine-recommended session settings — the bench consumes the same
+    # recommendation users get (datacompy_spark.session has the measurements
+    # and trade-offs). Correctness paths (check_oracles) deliberately keep
+    # the PySpark defaults.
     from datacompy_spark.session import apply_recommended_conf
 
     spark = (
@@ -183,6 +88,7 @@ def main() -> None:
 
     from datacompy_spark.operators.compare import SparkCompare
     from datacompy_spark.queries import QUERIES, _li_compare
+    from perfbench.trace import StatusStore, spark_metrics
 
     # warm up JVM/codegen through the same code path on a tiny table so the
     # headline measures the engine, not first-call compilation
@@ -190,21 +96,30 @@ def main() -> None:
     SparkCompare(spark, nation, nation.select(*nation.columns), join_columns="n_nationkey").report()
 
     sc = spark.sparkContext
+    store = StatusStore(spark)
+    # status-store deltas of each timed name's LAST run (the one whose wall
+    # clock lands in "queries_warm") → BENCH_DETAIL.json "counters"
+    counters: dict = {}
+
+    def timed(name: str, action) -> float:
+        """Wall seconds of one ``action()`` under job group ``name``. The
+        status-store reads sit outside the timed region: ``mark()`` drains
+        the listener bus, which must not land in the number."""
+        sc.setJobGroup(name, name)
+        start = store.mark()
+        t0 = time.perf_counter()
+        action()
+        elapsed = time.perf_counter() - t0
+        counters[name] = spark_metrics(store.since(start), elapsed, int(cpus))
+        sc.setJobGroup("bench-overhead", "between timed sections")
+        return elapsed
 
     # VM-noise sentinel: a FIXED CPU-bound job (no I/O, no shuffle, no
-    # cache) timed BEFORE the headline / after the headline sections /
-    # every 40 queries / sweep end. On a healthy machine every sample
-    # lands in the same narrow band; in a shared-VM pressure window the
-    # sentinel inflates with everything else. Carried in the driver-
-    # recorded line ("noise": [...]) so a slow number co-occurring with
-    # an inflated sentinel is attributable INSIDE the driver artifact —
-    # r9/r10 attributed noise via cross-round medians and quiet-machine
-    # re-runs; this is the in-record instrument. The pre-headline sample
-    # exists because the headline is the single most-graded number and a
-    # pressure burst confined to the headline section would otherwise be
-    # invisible to every sample (observed live in an r13 synthetic-burner
-    # probe: burner died before the first post-headline sample, headline
-    # 4.3 s vs a 2.2-2.6 band, record carried no attribution).
+    # cache) timed before the headline, after the headline sections, every
+    # 40 queries and at sweep end. On a healthy machine every sample lands
+    # in the same narrow band; in a shared-VM pressure window the sentinel
+    # inflates with everything else, so a slow number next to an inflated
+    # sample is attributable inside the record.
     def _noise_probe() -> float:
         sc.setJobGroup("noise-probe", "VM pressure sentinel")
         t0 = time.perf_counter()
@@ -212,71 +127,41 @@ def main() -> None:
             "sum(hash(id)) AS h"
         ).collect()
         elapsed = round(time.perf_counter() - t0, 3)
-        # restore a neutral label (r13 review): the probe now runs BEFORE
-        # the headline, so leaving 'noise-probe' set would mis-attribute
-        # every headline stage to the sentinel in the UI/status store —
-        # exactly the attribution the sentinel exists to keep clean
+        # restore a neutral label so headline stages are not attributed to
+        # the sentinel in the status store
         sc.setJobGroup("bench-overhead", "between timed sections")
         return elapsed
 
     _noise_probe()  # unrecorded: first call pays this expression's codegen (~3 s)
-    # noise_pos tracks WHERE each sample was taken: -1 = before the
-    # headline sections, 0 = after them (= sweep start), qi = mid-sweep,
-    # len(QUERIES) = end. The normalization below uses the samples
-    # BRACKETING each timing's position — pressure that arrives mid-sweep
-    # must not retro-attribute onto the headline, nor vice versa.
     noise = [_noise_probe()]
-    noise_pos = [-1]
-
-    # start-of-run sentinel GATE (r12 verdict item 2): a VM pressure
-    # window at run start inflated the whole r12 driver record (+28%
-    # headline, sentinel 0.197-0.437 vs the healthy 0.13-0.15 band) and
-    # could only be exonerated after the fact. If the opening sentinel
-    # exceeds 2x this machine's recorded floor, wait once for the window
-    # to pass and re-probe; BOTH samples stay in "noise" so the record
-    # shows the gate fired. One retry only — an all-evening pressure
-    # window must not stall the driver, it gets attributed via the
-    # normalized twins instead. The gate sits BEFORE the headline: the
-    # headline is the number the gate exists to protect.
-    sentinel_floor = _healthy_sentinel_floor()
-    if sentinel_floor and noise[0] > 2.0 * sentinel_floor:
-        time.sleep(float(os.environ.get("SPARK_GRAFT_SENTINEL_WAIT", "60")))
-        noise.append(_noise_probe())
-        noise_pos.append(-1)
 
     timings = {}
     # steady-state (warm) companions: the LAST run of each query, after JVM/
     # codegen warmup — best-of-N damps shared-VM noise spikes but can hide a
-    # real regression behind one lucky run; warm-vs-warm across rounds is the
-    # comparison that distinguishes noise from regressions
+    # real regression behind one lucky run
     warm = {}
-
-    # headline: full compare + report, the reference's benchmark unit of work.
-    # best-of-2 — first iteration can absorb residual JVM/codegen compilation.
-    def headline_once() -> float:
-        sc.setJobGroup("headline:compare_report", "headline compare+report")
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        cmp_ = _li_compare(spark, sf_dir)
-        cmp_.report(sample_count=10)
-        return time.perf_counter() - t0
-
     errors = {}
+
+    # headline: full compare + report, the reference's benchmark unit of work
+    def headline_once() -> float:
+        spark.catalog.clearCache()
+        return timed(HEADLINE, lambda: _li_compare(spark, sf_dir).report(sample_count=10))
+
     try:
         # best-of-3: the first run can still carry residual codegen/JIT work
         # past the nation warmup (measured: run0 18 s, run1 4.4 s, run2 4.3 s
         # in one session), so two samples aren't enough for a stable floor
         headline_runs = [headline_once(), headline_once(), headline_once()]
-        # shared-VM noise windows inflate whole minutes at a time; when the
-        # runs disagree badly the min is still suspect — buy one more sample
+        # when the warm runs disagree badly the min is still suspect — buy
+        # one more sample
         if max(headline_runs[1:]) > 1.25 * min(headline_runs[1:]):
             headline_runs.append(headline_once())
-        timings["compare_report"] = round(min(headline_runs), 4)
-        warm["compare_report"] = round(headline_runs[-1], 4)
+        timings[HEADLINE] = round(min(headline_runs), 4)
+        warm[HEADLINE] = round(headline_runs[-1], 4)
     except Exception as exc:  # noqa: BLE001 — a failed headline must not kill the run
-        errors["compare_report"] = f"{type(exc).__name__}: {exc}"[:300]
-        timings["compare_report"] = None
-        warm["compare_report"] = None
+        errors[HEADLINE] = f"{type(exc).__name__}: {exc}"[:300]
+        timings[HEADLINE] = None
+        warm[HEADLINE] = None
 
     # second headline: the RECURRING-compare fast path. Both sides written
     # once as bucketed+sorted catalog tables on the 4-col join key (the
@@ -285,20 +170,19 @@ def main() -> None:
     # needs no Exchange and no Sort per side (zero-shuffle plan, pinned by
     # tests/test_plan_shapes.py). The bucketing write is setup, not metric.
     def bucketed_once() -> float:
-        sc.setJobGroup("headline:compare_report_bucketed", "bucketed headline")
         spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        cmp_ = SparkCompare(
-            spark,
-            spark.table("bench_cmp_left"),
-            spark.table("bench_cmp_right"),
-            join_columns=_B_KEYS,
-            abs_tol=_B_TOL,
-            assume_unique=True,
-            null_safe_join=False,
+        return timed(
+            "compare_report_bucketed",
+            lambda: SparkCompare(
+                spark,
+                spark.table("bench_cmp_left"),
+                spark.table("bench_cmp_right"),
+                join_columns=_B_KEYS,
+                abs_tol=_B_TOL,
+                assume_unique=True,
+                null_safe_join=False,
+            ).report(sample_count=10),
         )
-        cmp_.report(sample_count=10)
-        return time.perf_counter() - t0
 
     try:
         from datacompy_spark.queries import _LI_ABS_TOL as _B_TOL
@@ -326,44 +210,17 @@ def main() -> None:
     # diagnostic gates: composite approximation-quality checks (e.g.
     # knn_recall runs brute force + three approx paths + grading as ONE
     # job). They guard correctness, not user-visible operator speed, so
-    # they are timed once and reported under "gates" — outside the
-    # per-query comparison set, keeping bench wall-time and the
-    # round-over-round comparison focused on operators users run.
+    # they are reported under "gates" — outside the per-query comparison set.
     GATE_QUERIES = {"knn_recall"}
 
     gates = {}
     spark.catalog.clearCache()
-
-    # post-headline / sweep-start sentinel sample: closes the bracket
-    # around the headline sections and opens the sweep's
-    noise.append(_noise_probe())
-    noise_pos.append(0)
-    stage_counts: dict = {}  # per-query stage totals → BENCH_DETAIL, so a
-    # stall window in a 3000+-stage shared session is attributable to the
-    # query that actually ran the stages (r9: Stage 3289 by sweep end, and
-    # no way to tell which outlier paid the accumulated GC/catalog pressure)
-
-    def _stages_for_group(group: str) -> int:
-        try:
-            tr = sc.statusTracker()
-            return sum(
-                len(info.stageIds)
-                for jid in tr.getJobIdsForGroup(group)
-                for info in [tr.getJobInfo(jid)]
-                if info is not None
-            )
-        except Exception:  # noqa: BLE001 — diagnostics must not fail the bench
-            return -1
-
-    # position per timed name; the two headline sections ran between the
-    # pre-headline sample (pos -1) and the sweep-start sample (pos 0), so
-    # their norm brackets with exactly those two
-    qpos = {"compare_report": -1, "compare_report_bucketed": -1}
+    noise.append(_noise_probe())  # closes the headline sections, opens the sweep
 
     for qi, (name, fn) in enumerate(QUERIES.items()):
         # accumulated JVM garbage from earlier queries is the prime suspect
-        # for r9's uniform 1.2–1.3× late-sweep inflation; a periodic explicit
-        # GC hint lets collection happen between timings instead of inside one
+        # for late-sweep inflation; a periodic explicit GC hint lets
+        # collection happen between timings instead of inside one
         if qi and qi % 20 == 0:
             try:
                 sc._jvm.System.gc()
@@ -371,17 +228,13 @@ def main() -> None:
                 pass
         if qi and qi % 40 == 0:
             noise.append(_noise_probe())
-            noise_pos.append(qi)
-        qpos[name] = qi
 
         def once() -> float:
-            sc.setJobGroup(name, name)
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).count()
-            elapsed = time.perf_counter() - t0
-            sc.setJobGroup("bench-overhead", "cache-clear etc.")
-            spark.catalog.clearCache()  # drop per-query exception caches
-            return elapsed
+            try:
+                return timed(name, lambda: fn(spark, sf_dir).count())
+            finally:
+                spark.catalog.clearCache()  # drop per-query exception caches
+
         # a single failing query must not zero the whole bench (round-4
         # lesson: query #23 threw and the driver recorded rc=1, no numbers)
         try:
@@ -389,23 +242,19 @@ def main() -> None:
                 # gates: best-of-2 at the SAME sf. A tiny-SF pre-warm does
                 # NOT transfer (AQE finalizes different physical plans at
                 # different sizes, so the generated code differs); the
-                # first same-SF run pays compilation + any sweep-session
-                # noise (r7: 14.3 s at sweep position 3 vs ~6 s warm;
-                # r9: 15.96 s mid-sweep vs 8.8 s isolated), the second is
-                # the honest steady-state number.
+                # first same-SF run pays compilation, the second is the
+                # honest steady-state number.
                 gates[name] = round(min(once(), once()), 4)
                 continue
             runs = [once()]
-            # single-run numbers on a shared VM carry multi-second noise spikes;
-            # re-run anything slow enough for a spike to distort and keep the min
-            # (measured: an untouched 0.9 s query recorded 6.3 s in one sweep —
-            # the 1 s threshold buys a second sample for everything where a
-            # spike would be indistinguishable from a regression)
+            # single-run numbers on a shared VM carry multi-second noise
+            # spikes; re-run anything slow enough for a spike to distort and
+            # keep the min (measured: an untouched 0.9 s query recorded
+            # 6.3 s in one sweep)
             if runs[0] > 1.0:
                 runs.append(once())
             timings[name] = round(min(runs), 4)
             warm[name] = round(runs[-1], 4)
-            stage_counts[name] = _stages_for_group(name)
         except Exception as exc:  # noqa: BLE001
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
             if name in GATE_QUERIES:
@@ -413,300 +262,40 @@ def main() -> None:
             else:
                 timings[name] = None
                 warm[name] = None
-            spark.catalog.clearCache()
 
-    # end-of-sweep sentinel sample — taken BEFORE the replay passes (r14):
-    # it closes the bracket around the sweep proper, and the gate-replay
-    # trigger below is pressure-sensitive, so it needs the full bracket to
-    # compute position-local ratios. Replays run after it and keep their
-    # original sweep position (documented conservative).
-    noise.append(_noise_probe())
-    noise_pos.append(len(QUERIES))
+    noise.append(_noise_probe())  # end of sweep
 
-    # sentinel-normalized twin machinery (r12 verdict item 2; extended to
-    # gates in r14). The sentinel is a fixed CPU-bound job, so
-    # sample/healthy-band-top estimates how much shared-VM pressure
-    # inflated the wall clocks taken NEAR that sample; dividing the raw
-    # numbers out gives a calm-window ESTIMATE the judge can read next to
-    # the raw record instead of reconstructing it from cross-round medians
-    # (the r9/r10/r12 adjudication pattern). Each timing is normalized by
-    # the mean of the two sentinel samples BRACKETING its sweep position —
-    # pressure that arrives mid-sweep must not retro-attribute onto the
-    # headline (r12: opening sentinel 0.197, mid-sweep 0.437; a sweep-wide
-    # median would over-correct the early queries and under-correct the
-    # late ones). Band top = 1.3x the historical floor — matches the
-    # observed healthy 0.13-0.15 s band over a 0.114 s floor, so a calm
-    # sweep normalizes to ratio 1.0 exactly (never scales honest numbers
-    # down). Raw numbers stay the record of truth; the twin is
-    # attribution, not measurement.
-    def _ratio_at(pos: int) -> float:
-        if not sentinel_floor or not noise:
-            return 1.0
-        band_top = 1.3 * sentinel_floor
-        before = [s for s, p in zip(noise, noise_pos) if p <= pos]
-        after = [s for s, p in zip(noise, noise_pos) if p > pos]
-        b = before[-1] if before else after[0]
-        a = after[0] if after else b
-        return max(1.0, round((a + b) / 2.0 / band_top, 3))
-
-    # outlier-replay pass: a single JVM stall has twice produced a false
-    # slow number that survived BOTH samples of one query (json_key_profile
-    # 7.14 s ×2 vs a 0.8 s replay; cmp_unique_rows r7). Any query whose
-    # best-of exceeds 2× its trailing-round median gets one more fresh
-    # sample at the end of the sweep, when the stall window has passed;
-    # the replayed names are reported so a surviving slow number is a real
-    # regression, not suspicion.
-    import statistics as _stats
-
-    def _replay_once(name):
-        """One fresh end-of-sweep sample of a registry query; None if it
-        throws. Cache-clear is in finally (not after count()): a throwing
-        replay must still clear caches, or leftovers pollute the next
-        replay and the end-of-sweep noise sentinel. Shared by all three
-        replay passes — the clearCache-placement fix had to be applied
-        three times before this existed."""
-        try:
-            t0 = time.perf_counter()
-            QUERIES[name](spark, sf_dir).count()
-            return time.perf_counter() - t0
-        except Exception:  # noqa: BLE001 — keep the original number
-            return None
-        finally:
-            spark.catalog.clearCache()
-
-    # one history read serves both the outlier pass (medians) and the
-    # creep pass (series) — _trailing_medians is just median-of-series
-    history = _trailing_values(sf)
-    medians = {k: _stats.median(v) for k, v in history.items()}
-    # first-appearance fallback reference (r14 verdict item 4): a name with
-    # no trailing cross-round median had NO outlier protection, and
-    # cmp_string_timestamp_cast entered the record at 18.6 s (real ~1 s)
-    # when a stall hit both its samples — and that 18.6 s then poisons the
-    # r15 medians. The same-run sweep median is the weaker but always-
-    # available reference: a first-appearance best > 4x it gets one replay.
-    _sweep_vals = sorted(
-        v for k, v in timings.items() if v is not None and k in QUERIES
-    )
-    sweep_med = _sweep_vals[len(_sweep_vals) // 2] if _sweep_vals else None
-    replayed = []
-    for name, best in sorted(timings.items()):
-        med = medians.get(name)
-        if best is None or name not in QUERIES:
-            continue
-        if med is None:
-            # no cross-round history: fall back to the same-run sweep median
-            if sweep_med is None or not (best > 4.0 * sweep_med and best > 1.0):
-                continue
-            again = _replay_once(name)
-            if again is None:
-                continue
-            replayed.append(name)
-            timings[name] = round(min(timings[name], again), 4)
-            warm[name] = round(again, 4)
-            continue
-        # 0.5 s floor, matching _is_creeping's jitter floor — a higher
-        # floor here left a (0.5, 1.0] dead band with no replay (r12 review)
-        if best > 2.0 * med and best > 0.5:
-            again = _replay_once(name)
-            if again is None:
-                continue
-            replayed.append(name)
-            timings[name] = round(min(timings[name], again), 4)
-            warm[name] = round(again, 4)
-
-    # sub-2× creep probe (r11 verdict item 2): dedup_ngram_jaccard drifted
-    # 2.18→3.58 s across four driver records without ever tripping the 2×
-    # replay trigger — see _is_creeping for the window-minimum trend rule.
-    # Flagged names replay once at sweep end and land under "creep" so a
-    # surviving elevated number reads as real drift inside the driver
-    # artifact.
-    creep = []
-    for name, best in sorted(timings.items()):
-        if name not in QUERIES or name in replayed:
-            continue
-        if _is_creeping(best, medians.get(name), history.get(name) or []):
-            again = _replay_once(name)
-            if again is None:
-                continue
-            creep.append(name)
-            timings[name] = round(min(timings[name], again), 4)
-            warm[name] = round(again, 4)
-
-    # gate-replay pass (round-10 verdict; r13 verdict item 2 made it
-    # pressure-sensitive): gates run at their sweep position, so a
-    # VM-pressure window can inflate BOTH best-of-2 samples (r10:
-    # knn_recall recorded 21.94 s vs a 6.76/9.17 s history, plan
-    # unchanged, quiet-machine 7.5-8.0 s) and — unlike queries — the
-    # record carried no exonerating replay. Same mechanics as the queries
-    # pass, with one addition: when the sentinels bracketing the gate's
-    # sweep position are elevated (position-local ratio > 1.2, i.e. the
-    # bracket mean sits >20% above the healthy band top), the replay
-    # trigger drops from 2× to 1.5× the trailing median — pressure is
-    # exactly when a replay-min is most informative (r13: knn_recall
-    # 14.91 s at sentinel_ratio 2.618 sat just under 2×7.89 and got no
-    # replay, making the number unfalsifiable from the record alone).
-    gate_medians = _trailing_medians(sf, key="gates")
-    for name, best in sorted(gates.items()):
-        med = gate_medians.get(name)
-        if best is None or med is None or name not in QUERIES:
-            continue
-        trigger = 1.5 if _ratio_at(qpos.get(name, 0)) > 1.2 else 2.0
-        if best > trigger * med and best > 0.5:
-            again = _replay_once(name)
-            if again is None:
-                continue
-            replayed.append(name)
-            gates[name] = round(min(gates[name], again), 4)
-
-    # sweep-wide weather summary for the one-line record; per-name ratios
-    # (position-local) drive the actual normalized twins. (Replayed names
-    # keep their original position: the min may come from the end-of-sweep
-    # replay, making their norm conservative.)
-    sentinel_ratio = 1.0
-    if sentinel_floor and noise:
-        sentinel_ratio = max(
-            1.0, round(_stats.median(noise) / (1.3 * sentinel_floor), 3)
-        )
-    norm = {
-        k: (round(v / _ratio_at(qpos.get(k, 0)), 4) if v is not None else None)
-        for k, v in timings.items()
-    }
-    # r13 verdict item 2: gates get the SAME weather instrument queries
-    # have — without this twin, a pressured gate reading has to be
-    # exonerated from SCALING.md instead of from the record itself
-    gates_norm = {
-        k: (round(v / _ratio_at(qpos.get(k, 0)), 4) if v is not None else None)
-        for k, v in gates.items()
-    }
-
-    # The driver captures only the last ~2000 chars of stdout and parses the
-    # JSON line out of that tail (r3 lesson: a ~2800-char line with the warm
-    # timings inlined made the driver record parsed=null even at rc=0).
-    # Print a compact line — best-of timings only, 2-decimal rounds, no
-    # spaces — and write the full detail (warm runs, errors) to a sidecar.
-    compact = {k: (round(v, 2) if v is not None else None) for k, v in timings.items()}
-    _hl = compact["compare_report"]
-    # normalized by the mean of the two sentinel samples BRACKETING the
-    # headline sections (the pre-headline pos -1 sample and the
-    # sweep-start pos 0 sample), not the sweep-wide ratio
-    value_norm = (
-        round(norm["compare_report"], 2)
-        if norm.get("compare_report") is not None
-        else None
-    )
-    _gates_2dp = {k: (round(v, 2) if v is not None else None) for k, v in gates.items()}
-    _gates_norm_2dp = {
-        k: (round(v, 2) if v is not None else None) for k, v in gates_norm.items()
-    }
-    line = json.dumps(
-        {
-            "metric": "compare_report_sec",
-            "value": _hl,
-            "value_norm": value_norm,
-            "sentinel_ratio": sentinel_ratio,
-            "unit": "sec",
-            "queries": compact,
-            "gates": _gates_2dp,
-            "gates_norm": _gates_norm_2dp,
-            "replayed": replayed,
-            "creep": creep,
-            "noise": noise,
-            # r13 verdict item 4: positions aligned with "noise", so the
-            # gate's firing and the headline bracketing are verifiable
-            # from the driver artifact alone (was sidecar-only)
-            "noise_pos": noise_pos,
-            "sf": sf,
-        },
-        separators=(",", ":"),
-    )
     detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json")
     with open(detail_path, "w") as fh:
         json.dump(
             {"queries": timings, "queries_warm": warm, "gates": gates,
-             "queries_norm": norm, "gates_norm": gates_norm,
-             "sentinel_ratio": sentinel_ratio,
-             "sentinel_floor": sentinel_floor,
-             "errors": errors, "replayed": replayed, "creep": creep,
-             "noise_probe": noise, "noise_pos": noise_pos,
+             "errors": errors, "noise_probe": noise,
              # sweep order, so noise_probe samples (taken at positions
              # 0 / 40 / 80 / end) correlate to the queries that ran
              # between them
              "sweep_order": list(QUERIES),
-             "sf": sf, "stage_counts": stage_counts,
-             "medians": {k: round(v, 3) for k, v in medians.items()}},
+             "sf": sf, "counters": counters},
             fh,
             indent=1,
         )
-    def _shrunk(q: dict) -> str:
-        # space-tight fallback: creep drops to a COUNT (names are always in
-        # BENCH_DETAIL.json) — noise_pos/gates_norm stay, they are the
-        # fields the record exists to carry (r13 verdict items 2+4)
-        return json.dumps(
+
+    def _2dp(d: dict) -> dict:
+        return {k: (round(v, 2) if v is not None else None) for k, v in d.items()}
+
+    queries = _2dp(timings)
+    print(
+        one_line(
             {
                 "metric": "compare_report_sec",
-                "value": _hl,
-                "value_norm": value_norm,
-                "sentinel_ratio": sentinel_ratio,
+                "value": queries[HEADLINE],
                 "unit": "sec",
-                "queries": q,
-                "gates": _gates_2dp,
-                "gates_norm": _gates_norm_2dp,
-                "replayed": replayed,
-                "creep": len(creep),
+                "queries": queries,
+                "gates": _2dp(gates),
                 "noise": noise,
-                "noise_pos": noise_pos,
                 "sf": sf,
-            },
-            separators=(",", ":"),
+            }
         )
-
-    if len(line) > 1900:  # belt-and-braces: never exceed the driver's tail
-        # STABLE selection (r14 verdict item 5 — the old slowest-60 cut
-        # churned the printed set every round: 6 fast names "dropped", 6
-        # admitted, and each new entrant arrived with no history median).
-        # Sticky rule: every name printed in the LAST same-sf round's line
-        # stays (that set IS the round-over-round comparison set), then
-        # remaining space fills with the slowest not-yet-printed names —
-        # so the set only grows toward a stable fixed point and a name
-        # leaves only when the line physically cannot hold it (fastest
-        # sticky names shed first). Full timings always in BENCH_DETAIL.
-        prev_names = set()
-        for p in _history_files(os.path.dirname(os.path.abspath(__file__))):
-            try:
-                with open(p) as fh:
-                    d = json.load(fh)
-            except Exception:  # noqa: BLE001 — history damage must not kill the record
-                continue
-            if (d.get("sf") or (d.get("parsed") or {}).get("sf")) != sf:
-                continue
-            q = d.get("queries") or (d.get("parsed") or {}).get("queries") or {}
-            if q:  # newest same-sf record wins (files sort by round)
-                prev_names = set(q)
-        errs = {k: v for k, v in compact.items() if v is None}
-        live = {k: v for k, v in compact.items() if v is not None}
-        sticky = sorted(
-            (k for k in live if k in prev_names or k == "compare_report"),
-            key=lambda k: -live[k],
-        )
-        fill = sorted(
-            (k for k in live if k not in prev_names and k != "compare_report"),
-            key=lambda k: -live[k],
-        )
-        chosen: dict = dict(errs)
-        chosen.update({k: live[k] for k in sticky})
-        line = _shrunk(chosen)
-        while len(line) > 1900 and sticky:
-            # shed the FASTEST sticky name — deterministic, minimal churn
-            chosen.pop(sticky.pop(), None)
-            line = _shrunk(chosen)
-        for k in fill:
-            trial = dict(chosen)
-            trial[k] = live[k]
-            trial_line = _shrunk(trial)
-            if len(trial_line) > 1900:
-                break
-            chosen, line = trial, trial_line
-    print(line)
+    )
     spark.stop()
 
 

@@ -605,8 +605,9 @@ def ngram_jaccard_pairs(
     cheap codegen compare before any set intersection is paid. Must be a
     pure function of the two id values; it narrows the OUTPUT pair set,
     never the per-document gram stats."""
-    base = _ngram_base(df, id_col, text_col, block_col, n).persist()
-    # without the persist the gram hashing re-runs per joined pair
+    # without the persist the gram hashing re-runs per joined pair; the
+    # returned plan stays lazy, so release_caches() owns the release
+    base = tracked_persist(_ngram_base(df, id_col, text_col, block_col, n))
     sizes = base.groupBy("block").agg(F.count(F.lit(1)).alias("__bn"))
     # driver-side routing probe — one tiny action over the cached base (the
     # AQE philosophy: pick the physical strategy from runtime statistics).
@@ -1702,6 +1703,35 @@ def ledger_probe(
     )
 
 
+class LedgerLocationError(RuntimeError):
+    """A ledger table is missing from the catalog while its managed-table
+    directory exists — typically left behind by a session whose catalog
+    died with it (the default in-memory catalog)."""
+
+    def __init__(self, table: str, location: str):
+        self.table, self.location = table, location
+        super().__init__(
+            f"ledger table {table!r} is not in the catalog, but its directory "
+            f"{location} already exists (an orphaned ledger location). Remove "
+            "the directory to start an empty ledger, or register a table over "
+            f"it (CREATE TABLE {table} ... LOCATION '{location}') to keep its rows."
+        )
+
+
+def _save_ledger(writer, table: str) -> None:
+    """``writer.saveAsTable(table)``, with Spark's LOCATION_ALREADY_EXISTS
+    raised as :class:`LedgerLocationError`."""
+    from pyspark.errors import PySparkException
+
+    try:
+        writer.saveAsTable(table)
+    except PySparkException as exc:
+        if exc.getCondition() != "LOCATION_ALREADY_EXISTS":
+            raise
+        location = (exc.getMessageParameters() or {}).get("location", "?")
+        raise LedgerLocationError(table, location.strip("'")) from exc
+
+
 def incremental_dedup_with_ledger(
     spark,
     batch: DataFrame,
@@ -1772,11 +1802,9 @@ def incremental_dedup_with_ledger(
     additions = out.filter(F.col("verdict") == "new").select(
         "chash", F.col("doc_id").alias("corpus_id")
     )
-    (
-        additions.write.mode("append")
-        .bucketBy(num_buckets, "chash")
-        .sortBy("chash")
-        .saveAsTable(ledger_table)
+    _save_ledger(
+        additions.write.mode("append").bucketBy(num_buckets, "chash").sortBy("chash"),
+        ledger_table,
     )
     return out.drop("chash")
 
@@ -1954,21 +1982,21 @@ def incremental_minhash_ledger(
     # come straight from the cached batch sketch pass
     out = lineage_barrier(out, None, eager=True)
     new_ids = out.filter(F.col("verdict") == "new").select("doc_id")
-    (
+    _save_ledger(
         bband.join(F.broadcast(new_ids), "doc_id")
         .select("bkey", "band", "doc_id")
         .write.mode("append")
         .bucketBy(num_buckets, "bkey")
-        .sortBy("bkey")
-        .saveAsTable(bands_table)
+        .sortBy("bkey"),
+        bands_table,
     )
-    (
+    _save_ledger(
         bbase.join(F.broadcast(new_ids), "doc_id")
         .select("doc_id", "shash")
         .write.mode("append")
         .bucketBy(num_buckets, "doc_id")
-        .sortBy("doc_id")
-        .saveAsTable(shingles_table)
+        .sortBy("doc_id"),
+        shingles_table,
     )
     return out
 

@@ -1418,8 +1418,10 @@ def semantic_decontaminate(
     precedent). Only (id, vector) enter the Python boundary; ZERO
     shuffles, no groupBy state, so the operator stays legal on an
     unbounded stream in append mode. Fixed-length vectors only
-    (embeddings); for very large eval sets, prefilter candidates with the
-    int8 route (:func:`knn_int8_rerank`) before the exact pass."""
+    (embeddings): an eval or corpus vector of another length, or with a
+    null element, raises ``ValueError``. For very large eval sets,
+    prefilter candidates with the int8 route (:func:`knn_int8_rerank`)
+    before the exact pass."""
     evc = eval_vec_col or vec_col
     ev_rows = (
         eval_df.filter(F.col(evc).isNotNull()).select(F.col(evc)).collect()
@@ -1436,10 +1438,19 @@ def semantic_decontaminate(
 
     import numpy as np
 
-    E = np.array([list(r[0]) for r in ev_rows], dtype=np.float64)
+    ev = [list(r[0]) for r in ev_rows]
+    dim = len(ev[0])
+    if any(len(v) != dim or None in v for v in ev):
+        raise ValueError(
+            "semantic_decontaminate: eval vectors must share one length and "
+            f"hold no null elements; found lengths {sorted({len(v) for v in ev})}, "
+            f"{sum(None in v for v in ev)} vector(s) with null elements"
+        )
+    E = np.array(ev, dtype=np.float64)
 
     def score_batches(it):
         import pyarrow as pa
+        import pyarrow.compute as pc
 
         # eval norms once per task, engine fold order (column-at-a-time:
         # each eval's norm accumulates its squared dims in index order)
@@ -1448,8 +1459,19 @@ def semantic_decontaminate(
             en_acc += E[:, j] * E[:, j]
         en = np.sqrt(en_acc)
         for batch in it:
-            ids = batch.column(0)
-            va = batch.column(1).to_numpy(zero_copy_only=False)
+            ids, vecs = batch.column(0), batch.column(1)
+            # a ragged vector or a null element would fail inside np.stack
+            # (or read as NaN); name the rows instead
+            bad = pc.fill_null(pc.list_value_length(vecs), dim).to_numpy() != dim
+            if vecs.flatten().null_count:
+                bad |= np.array([v is not None and None in v for v in vecs.to_pylist()])
+            if bad.any():
+                raise ValueError(
+                    f"semantic_decontaminate: corpus vectors must have {dim} "
+                    f"non-null elements (the eval dimension); first offending "
+                    f"{id_col} values: {ids.filter(pa.array(bad)).to_pylist()[:5]}"
+                )
+            va = vecs.to_numpy(zero_copy_only=False)
             n = len(va)
             vals = np.full(n, np.nan, dtype=np.float64)
             isnull = np.ones(n, dtype=bool)

@@ -170,9 +170,10 @@ class TestOutputs:
     def test_json_format(self, pair, capsys):
         rc = main(["compare", "--left", pair[0], "--right", pair[1], "--on", "id",
                    "--format", "json"])
-        data = json.loads(capsys.readouterr().out)
+        captured = capsys.readouterr()
+        assert rc == 1, captured.err
+        data = json.loads(captured.out)
         assert data["row_summary"]["common_rows"] == 2
-        assert rc == 1
 
     def test_html_to_file_quiet(self, pair, tmp_path, capsys):
         out = tmp_path / "report.html"
@@ -348,8 +349,9 @@ class TestProfileCommand:
                    "--format", "json"])
         import json as _json
 
-        rows = {r["col_name"]: r for r in _json.loads(capsys.readouterr().out)}
-        assert rc in (0, 1)
+        captured = capsys.readouterr()
+        assert rc in (0, 1), captured.err
+        rows = {r["col_name"]: r for r in _json.loads(captured.out)}
         # x shifted +5 over a 0-9 support: half the mass moves past 4.x
         assert rows["x"]["ks_stat"] == pytest.approx(0.5)
         # string column: no KS
@@ -384,8 +386,10 @@ class TestProfileCommand:
         rc = main(["profile", "--input", p, "--columns", "v", "--exact-distinct", "--format", "json"])
         import json as _json
 
-        rows = _json.loads(capsys.readouterr().out)
-        assert rc == 0 and len(rows) == 1
+        captured = capsys.readouterr()
+        assert rc == 0, captured.err
+        rows = _json.loads(captured.out)
+        assert len(rows) == 1
         assert rows[0]["col_name"] == "v" and rows[0]["n_distinct"] == 3
 
 
@@ -402,8 +406,9 @@ class TestDedupCommand:
         rc = main(["dedup", "--input", p, "--method", "exact", "--verdict", out])
         import json as _json
 
-        summary = _json.loads(capsys.readouterr().out)
-        assert rc == 0
+        captured = capsys.readouterr()
+        assert rc == 0, captured.err
+        summary = _json.loads(captured.out)
         assert summary["n_docs"] == 3 and summary["n_survivors"] == 2
         v = {r["doc_id"]: r for r in spark.read.parquet(out).collect()}
         assert v[1]["is_survivor"] and not v[2]["is_survivor"]
@@ -421,8 +426,9 @@ class TestDedupCommand:
         rc = main(["dedup", "--input", p, "--method", "spans", "--verdict", out])
         import json as _json
 
-        summary = _json.loads(capsys.readouterr().out)
-        assert rc == 0
+        captured = capsys.readouterr()
+        assert rc == 0, captured.err
+        summary = _json.loads(captured.out)
         assert summary["method"] == "spans"
         assert summary["n_tokens"] == 17 and summary["n_tokens_removed"] == 5
         got = {r["doc_id"]: r["text"] for r in spark.read.parquet(out).collect()}
@@ -439,8 +445,9 @@ class TestDedupCommand:
         rc = main(["dedup", "--input", p, "--method", "lines", "--verdict", out])
         import json as _json
 
-        summary = _json.loads(capsys.readouterr().out)
-        assert rc == 0
+        captured = capsys.readouterr()
+        assert rc == 0, captured.err
+        summary = _json.loads(captured.out)
         assert summary["n_lines"] == 4 and summary["n_lines_removed"] == 1
         got = {r["doc_id"]: r["text"] for r in spark.read.parquet(out).collect()}
         assert got[2] == "unique two"
@@ -552,8 +559,9 @@ class TestDedupCommand:
         ])
         import json as _json
 
-        summary = _json.loads(capsys.readouterr().out)
-        assert rc == 0
+        captured = capsys.readouterr()
+        assert rc == 0, captured.err
+        summary = _json.loads(captured.out)
         assert summary["n_docs"] == 3 and summary["n_survivors"] == 2
         got_pairs = {(r["id_a"], r["id_b"]) for r in spark.read.parquet(pairs).collect()}
         assert got_pairs == {(1, 2)}
@@ -602,8 +610,10 @@ class TestDedupCommand:
         ])
         import json as _json
 
-        summary = _json.loads(capsys.readouterr().out)
-        assert rc == 0 and summary["mode"] == "incremental"
+        captured = capsys.readouterr()
+        assert rc == 0, captured.err
+        summary = _json.loads(captured.out)
+        assert summary["mode"] == "incremental"
         assert summary["n_batch"] == 3 and summary["n_new"] == 1
         assert summary["n_dup_corpus"] == 1 and summary["n_dup_batch"] == 1
         v = {r["doc_id"]: (r["verdict"], r["match_id"])
@@ -687,6 +697,29 @@ class TestDedupCommand:
             for t in ("cli_mhl_bands", "cli_mhl_shingles"):
                 spark.sql(f"DROP TABLE IF EXISTS {t}")
 
+    def test_orphaned_ledger_location_exits_2_with_named_error(
+        self, tmp_path, capsys, spark
+    ):
+        import os
+        import shutil
+
+        warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+        orphan = os.path.join(warehouse, "cli_orphan_ledger")
+        os.makedirs(orphan)
+        open(os.path.join(orphan, "part-00000"), "w").close()
+        p = str(tmp_path / "b.parquet")
+        spark.createDataFrame(
+            [(1, "orphan ledger doc")], "doc_id bigint, text string"
+        ).write.parquet(p)
+        try:
+            rc = main(["dedup", "--input", p, "--ledger", "cli_orphan_ledger",
+                       "--method", "exact", "--verdict", str(tmp_path / "v.parquet")])
+        finally:
+            shutil.rmtree(orphan)
+        err = capsys.readouterr().err
+        assert rc == 2, err
+        assert "orphaned ledger location" in err and orphan in err
+
     def test_ledger_rejects_simhash_and_against_combo(self, tmp_path, capsys, spark):
         p = str(tmp_path / "d.parquet")
         spark.createDataFrame([(1, "x")], "doc_id bigint, text string").write.parquet(p)
@@ -742,8 +775,10 @@ class TestProfileFiles:
             "profile", "--input", f"{sf_dir}/lineitem.parquet",
             "--files", "--format", "json",
         ])
-        out = _json.loads(capsys.readouterr().out)
-        assert rc == 0 and len(out) == 1
+        captured = capsys.readouterr()
+        assert rc == 0, captured.err
+        out = _json.loads(captured.out)
+        assert len(out) == 1
         row = out[0]
         assert row["n_files"] == 1 and row["total_bytes"] > 0
         assert row["n_small_files"] == 1  # test file < 128 MB
@@ -768,8 +803,9 @@ class TestCompactCommand:
             "id", "repeat('z', 64) AS pad"
         ).repartition(20).write.parquet(src)
         rc = main(["compact", "--input", src, "--output", dst, "--target-mb", "1"])
-        s = _json.loads(capsys.readouterr().out)
-        assert rc == 0
+        captured = capsys.readouterr()
+        assert rc == 0, captured.err
+        s = _json.loads(captured.out)
         assert s["files_before"] == 20
         assert s["files_written"] == s["files_planned"] >= 1
         assert spark.read.parquet(dst).count() == 5_000
@@ -805,8 +841,9 @@ class TestAnomalyCommand:
             "anomaly", "--input", feed, "--by", "event_type",
             "--threshold", "3", "--fail-on-anomaly",
         ])
-        out = _json.loads(capsys.readouterr().out)
-        assert rc == 1
+        captured = capsys.readouterr()
+        assert rc == 1, captured.err
+        out = _json.loads(captured.out)
         assert out["n_anomalies"] == 1
         assert out["max_abs_zscore"] == pytest.approx(10.0)
 
@@ -818,8 +855,10 @@ class TestAnomalyCommand:
             "anomaly", "--input", feed, "--by", "event_type",
             "--threshold", "11", "--fail-on-anomaly", "--export", exp,
         ])
-        out = _json.loads(capsys.readouterr().out)
-        assert rc == 0 and out["n_anomalies"] == 0
+        captured = capsys.readouterr()
+        assert rc == 0, captured.err
+        out = _json.loads(captured.out)
+        assert out["n_anomalies"] == 0
         import os
 
         assert os.path.isdir(exp)
@@ -856,10 +895,11 @@ class TestAnomalyCommand:
             "--drift-lo", "0", "--drift-hi", "100", "--max-psi", "0.2",
             "--fail-on-anomaly", "--threshold", "100",
         ])
-        out = _json.loads(capsys.readouterr().out)
+        captured = capsys.readouterr()
         # volume is flat (threshold 100 never fires); the DISTRIBUTION gate
         # alone must flip the exit code on day 3
-        assert rc == 1
+        assert rc == 1, captured.err
+        out = _json.loads(captured.out)
         assert out["n_anomalies"] == 0
         assert out["drift"]["n_periods"] == 2
         assert out["drift"]["n_drifted"] == 1
@@ -938,8 +978,9 @@ class TestCheckCommand:
         )
         rc = main(["check", "--input", dataset, "--input-format", "parquet",
                    "--rules", rules, "--fail-on-violation"])
-        s = json.loads(capsys.readouterr().out)
-        assert rc == 0
+        captured = capsys.readouterr()
+        assert rc == 0, captured.err
+        s = json.loads(captured.out)
         assert s["n_rules"] == 1 and s["n_failed"] == 0 and s["total_rows"] == 3
 
     def test_violations_gate_and_export(self, tmp_path, capsys, dataset, spark):
@@ -951,8 +992,9 @@ class TestCheckCommand:
         out = str(tmp_path / "verdicts")
         rc = main(["check", "--input", dataset, "--input-format", "parquet",
                    "--rules", rules, "--fail-on-violation", "--export", out])
-        s = json.loads(capsys.readouterr().out)
-        assert rc == 1
+        captured = capsys.readouterr()
+        assert rc == 1, captured.err
+        s = json.loads(captured.out)
         assert s["n_failed"] == 3
         assert s["failures"]["unique(id)"] == 1
         back = {r["rule"]: r for r in spark.read.parquet(out).collect()}
@@ -974,13 +1016,17 @@ class TestCheckCommand:
         # contained: child ids {1,2} ⊆ {1,2,3} → pass
         rc = main(["check", "--input", dataset, "--input-format", "parquet",
                    "--fk", f"id={parent_ok}:pk", "--fail-on-violation"])
-        s = json.loads(capsys.readouterr().out)
-        assert rc == 0 and s["n_rules"] == 1 and s["n_failed"] == 0
+        captured = capsys.readouterr()
+        assert rc == 0, captured.err
+        s = json.loads(captured.out)
+        assert s["n_rules"] == 1 and s["n_failed"] == 0
         # id=2 missing from parent_bad → violation, gate fires
         rc = main(["check", "--input", dataset, "--input-format", "parquet",
                    "--fk", f"id={parent_bad}:pk", "--fail-on-violation"])
-        s = json.loads(capsys.readouterr().out)
-        assert rc == 1 and s["n_failed"] == 1
+        captured = capsys.readouterr()
+        assert rc == 1, captured.err
+        s = json.loads(captured.out)
+        assert s["n_failed"] == 1
         assert list(s["failures"].values()) == [1]
 
     def test_fk_combines_with_rules_and_threshold(
@@ -992,9 +1038,11 @@ class TestCheckCommand:
         rc = main(["check", "--input", dataset, "--input-format", "parquet",
                    "--rules", rules, "--fk", f"id={parent_bad}:pk",
                    "--fk-min-containment", "0.5", "--fail-on-violation"])
-        s = json.loads(capsys.readouterr().out)
+        captured = capsys.readouterr()
         # containment 1/2 = 0.5 >= 0.5: passes even with 1 unresolved key
-        assert rc == 0 and s["n_rules"] == 2 and s["n_failed"] == 0
+        assert rc == 0, captured.err
+        s = json.loads(captured.out)
+        assert s["n_rules"] == 2 and s["n_failed"] == 0
 
     def test_fk_malformed_spec_and_empty_invocation(self, tmp_path, capsys, dataset):
         rc = main(["check", "--input", dataset, "--input-format", "parquet",

@@ -324,8 +324,10 @@ class TestCliAnn:
         idx = str(tmp_path / "idx")
         assert main(["ann", "--index", idx, "--build", a]) == 0
         capsys.readouterr()
-        assert main(["ann", "--index", idx, "--append", b]) == 0
-        summary = json.loads(capsys.readouterr().out.strip())
+        rc = main(["ann", "--index", idx, "--append", b])
+        captured = capsys.readouterr()
+        assert rc == 0, captured.err
+        summary = json.loads(captured.out.strip())
         assert summary["appended"] == emb.count() - emb.filter(F.col("vec_id") % 2 == 0).count()
         total = spark.read.parquet(f"{idx}/cells").count()
         assert total == emb.count()
@@ -340,8 +342,10 @@ class TestCliAnn:
         assert main(["ann", "--index", idx, "--build", a]) == 0
         assert main(["ann", "--index", idx, "--append", b]) == 0
         capsys.readouterr()
-        assert main(["ann", "--index", idx, "--compact"]) == 0
-        summary = json.loads(capsys.readouterr().out.strip())
+        rc = main(["ann", "--index", idx, "--compact"])
+        captured = capsys.readouterr()
+        assert rc == 0, captured.err
+        summary = json.loads(captured.out.strip())
         assert summary["n_rows"] == emb.count()
         cells = spark.read.parquet(f"{idx}/cells")
         assert {r["ingest"] for r in cells.select("ingest").distinct().collect()} == {0}

@@ -203,244 +203,40 @@ def test_entry_flagship_runs(spark):
     assert df.count() >= 0
 
 
-def test_bench_trailing_medians_reads_driver_shaped_files(tmp_path):
-    """The bench outlier-replay pass must see per-query history in BOTH
-    file shapes: bare bench.py output ({"queries": …} at top level) and
-    driver-recorded rounds, which nest the parsed line under "parsed"
-    ({"n":…,"rc":…,"sf":…,"parsed":{"queries":…}}). Round-9 post-mortem:
-    reading only the top level made medians always {} so the 2×-median
-    replay trigger never fired and an 8.6 s noise spike survived as the
-    query's recorded number."""
+def test_bench_one_line_keeps_headline_then_slowest():
+    """The driver parses the bench line out of the tail of stdout, so
+    ``bench.one_line`` cuts ``queries`` to fit: the headline always stays
+    (even when fast or failed), then this run's slowest timings while the
+    line fits, ties broken by name. It reads nothing but its argument."""
     import json as _json
 
     import bench
 
-    driver_shaped = {
-        "n": 9, "rc": 0, "cpus": 32, "sf": 0.1,
-        "parsed": {"metric": "compare_report_sec", "value": 3.4, "sf": 0.1,
-                   "queries": {"compare_report": 3.4, "qx": 1.8},
-                   "gates": {"knn_recall": 6.8}},
-    }
-    bare_shaped = {"metric": "compare_report_sec", "value": 3.6, "sf": 0.1,
-                   "queries": {"compare_report": 3.6, "qx": 2.0},
-                   "gates": {"knn_recall": 9.2}}
-    (tmp_path / "BENCH_r11.json").write_text(_json.dumps(driver_shaped))
-    (tmp_path / "BENCH_r12.json").write_text(_json.dumps(bare_shaped))
-    med = bench._trailing_medians(0.1, here=str(tmp_path))
-    assert med.get("qx") == pytest.approx(1.9)
-    assert med.get("compare_report") == pytest.approx(3.5)
-    # gate history reads through the same dual-shape path (round-10
-    # lesson: the gate replay pass is dead without its own medians)
-    gmed = bench._trailing_medians(0.1, here=str(tmp_path), key="gates")
-    assert gmed.get("knn_recall") == pytest.approx(8.0)
-    # a different SF must contribute nothing
-    assert bench._trailing_medians(0.01, here=str(tmp_path)) == {}
-    # the creep probe reads the SERIES in round order — the [-1] element
-    # must be the NEWEST round's number (r11 verdict item 2: two
-    # consecutive elevated rounds is trend, one is weather)
-    series = bench._trailing_values(0.1, here=str(tmp_path))
-    assert series.get("qx") == [1.8, 2.0]
-    assert series.get("compare_report") == [3.4, 3.6]
-
-
-def test_bench_history_cutoff_excludes_pre_r8_rounds(tmp_path):
-    """r13 verdict item 7: BENCH_r01..r07 predate the sentinel/creep/gate
-    machinery (different query set, no noise arrays, different warmup
-    discipline) — they must be excluded from EVERY history scan by round
-    number, so a future re-serialization that gives an old record modern
-    fields can never skew the sentinel floor or a trailing median."""
-    import json as _json
-
-    import bench
-
-    old = {"metric": "compare_report_sec", "value": 9.9, "sf": 0.1,
-           "queries": {"qx": 9.9}, "gates": {"knn_recall": 30.0},
-           "noise": [0.04]}
-    new = {"metric": "compare_report_sec", "value": 3.0, "sf": 0.1,
-           "queries": {"qx": 3.0}, "gates": {"knn_recall": 7.0},
-           "noise": [0.15]}
-    (tmp_path / "BENCH_r07.json").write_text(_json.dumps(old))
-    (tmp_path / "BENCH_r08.json").write_text(_json.dumps(new))
-    # r07's 9.9 would drag the median to 6.45 and its glitch-plausible
-    # 0.04 s sample would become the floor — both must be invisible
-    assert bench._trailing_medians(0.1, here=str(tmp_path)) == {"qx": 3.0}
-    gmed = bench._trailing_medians(0.1, here=str(tmp_path), key="gates")
-    assert gmed == {"knn_recall": 7.0}
-    assert bench._healthy_sentinel_floor(here=str(tmp_path)) == pytest.approx(0.15)
-    assert bench._HISTORY_MIN_ROUND == 8
-
-
-def test_bench_history_skips_non_round_names(tmp_path):
-    """Only BENCH_r<NN>.json names are history: a matched-core leg such as
-    BENCH_r14_c8.json records another machine shape at the same sf and
-    must feed neither the trailing medians nor the sentinel floor."""
-    import json as _json
-
-    import bench
-
-    leg = {"metric": "compare_report_sec", "value": 9.0, "sf": 0.1,
-           "cpus": 8, "queries": {"qx": 9.0}, "noise": [0.05]}
-    rec = {"metric": "compare_report_sec", "value": 3.0, "sf": 0.1,
-           "cpus": 32, "queries": {"qx": 3.0}, "noise": [0.15]}
-    (tmp_path / "BENCH_r14_c8.json").write_text(_json.dumps(leg))
-    (tmp_path / "BENCH_r14.json").write_text(_json.dumps(rec))
-    assert bench._history_files(str(tmp_path)) == [str(tmp_path / "BENCH_r14.json")]
-    assert bench._trailing_medians(0.1, here=str(tmp_path)) == {"qx": 3.0}
-    assert bench._healthy_sentinel_floor(here=str(tmp_path)) == pytest.approx(0.15)
-
-
-def test_bench_gate_instruments_in_record():
-    """r13 verdict items 2+4: the one-line driver record must carry (a)
-    gates_norm — the sentinel-normalized twin of every gate timing, (b)
-    noise_pos aligned with noise, and (c) a pressure-sensitive gate
-    replay trigger (1.5× trailing median when the bracketing sentinels
-    are elevated, 2.0× when calm). The r13 driver record's knn_recall
-    14.91 s (sentinel_ratio 2.618) sat just under 2×7.89 with no replay
-    and no normalized twin — unfalsifiable from the record alone. Greps
-    the live source so the instruments cannot silently regress."""
-    import inspect
-
-    import bench
-
-    src = inspect.getsource(bench.main)
-    assert '"gates_norm": _gates_norm_2dp' in src, (
-        "gates_norm missing from the one-line record — gate timings lost "
-        "their weather instrument"
-    )
-    assert src.count('"noise_pos": noise_pos') >= 2, (
-        "noise_pos must be in BOTH the primary line and the _shrunk "
-        "fallback — the gate's firing must be verifiable from the driver "
-        "artifact alone"
-    )
-    assert "trigger = 1.5 if _ratio_at(qpos.get(name, 0)) > 1.2 else 2.0" in src, (
-        "gate replay trigger is no longer pressure-sensitive"
-    )
-    # the end-of-sweep sentinel must be appended BEFORE the replay passes
-    # (the pressure-sensitive trigger needs the full bracket)
-    assert src.index("noise_pos.append(len(QUERIES))") < src.index(
-        "gate_medians = _trailing_medians"
-    )
-
-
-def test_bench_healthy_sentinel_floor(tmp_path):
-    """The start-of-sweep sentinel gate (r12 verdict item 2) keys off this
-    machine's recorded noise floor. The floor must read the ``noise``
-    array from BOTH file shapes, across ALL scale factors (the sentinel
-    is a fixed CPU job — sf-independent), take the minimum, and degrade
-    to None on no history so a fresh clone never stalls the sweep."""
-    import json as _json
-
-    import bench
-
-    driver_shaped = {
-        "n": 11, "rc": 0, "sf": 0.1,
-        "parsed": {"metric": "compare_report_sec", "value": 3.6, "sf": 0.1,
-                   "queries": {}, "noise": [0.15, 0.403, 0.362, 0.256]},
-    }
-    bare_shaped = {"metric": "compare_report_sec", "value": 4.6, "sf": 0.01,
-                   "queries": {}, "noise": [0.197, 0.437, 0.114]}
-    (tmp_path / "BENCH_r11.json").write_text(_json.dumps(driver_shaped))
-    (tmp_path / "BENCH_r12.json").write_text(_json.dumps(bare_shaped))
-    # min across every sample of every round, regardless of sf
-    assert bench._healthy_sentinel_floor(here=str(tmp_path)) == pytest.approx(0.114)
-    # a glitched sample (0.001 s — impossible for the fixed 50M-row job)
-    # must not become the floor forever and arm the gate on every sweep
-    (tmp_path / "BENCH_r13.json").write_text(
-        _json.dumps({"metric": "compare_report_sec", "value": 4.0, "sf": 0.1,
-                     "queries": {}, "noise": [0.001, 0.15]})
-    )
-    assert bench._healthy_sentinel_floor(here=str(tmp_path)) == pytest.approx(0.114)
-    # no history → None (gate off, ratio 1.0), never a crash
-    empty = tmp_path / "empty"
-    empty.mkdir()
-    assert bench._healthy_sentinel_floor(here=str(empty)) is None
-    # a noise-free old record (pre-r11 shape) contributes nothing but
-    # must not poison the scan
-    (empty / "BENCH_r10.json").write_text(
-        _json.dumps({"parsed": {"queries": {"q": 1.0}, "sf": 0.1}})
-    )
-    assert bench._healthy_sentinel_floor(here=str(empty)) is None
-
-
-def test_bench_floor_nonempty_on_real_history():
-    """With the repo's actual BENCH_r*.json (r11+ records carry noise
-    arrays), the sentinel floor must resolve — the live guarantee that
-    the start-of-sweep gate and the sentinel_ratio twin are armed."""
-    import bench
-
-    floor = bench._healthy_sentinel_floor()
-    assert floor is not None and 0.03 < floor < 0.3, (
-        f"sentinel floor {floor!r} outside any plausible quiet-machine "
-        "band — the sweep gate would misfire"
-    )
-
-
-def test_bench_outlier_floor_has_no_dead_band_with_creep_probe():
-    """r12 review finding: the outlier replay required best > 1.0 s while
-    _is_creeping deferred every >2x-median case to it, so a regressed
-    query with best in (0.5, 1.0] got NO replay from either pass. The
-    fix pins the outlier pass's absolute floor to the same 0.5 s as the
-    creep probe's jitter floor; this test greps the live source so the
-    two floors cannot silently diverge again."""
-    import inspect
-
-    import bench
-
-    src = inspect.getsource(bench.main)
-    assert "best > 2.0 * med and best > 0.5" in src, (
-        "outlier replay floor drifted from the creep probe's 0.5 s "
-        "jitter floor — the (0.5, 1.0] dead band is back"
-    )
-    assert "best > 2.0 * med and best > 1.0" not in src
-
-
-def test_bench_first_appearance_outlier_fallback():
-    """r14 verdict item 4: a name with NO trailing cross-round median had
-    no outlier protection — cmp_string_timestamp_cast recorded 18.6 s
-    (real ~1 s) on its first appearance and that number entered the r15
-    history medians. The fallback replays a first-appearance best > 4x
-    the SAME-RUN sweep median; greps the live source so it cannot
-    silently regress."""
-    import inspect
-
-    import bench
-
-    src = inspect.getsource(bench.main)
-    assert "best > 4.0 * sweep_med" in src, (
-        "first-appearance outlier fallback missing — a no-history name "
-        "has no replay protection again"
-    )
-
-
-def test_bench_one_line_selection_is_sticky():
-    """r14 verdict item 5: the slowest-60 truncation churned the printed
-    query set every round (6 names 'dropped', 6 admitted, each entrant
-    with no median). Selection is now sticky: names printed in the last
-    same-sf round's line stay; remaining space fills with the slowest
-    new names; a name leaves only when the line physically cannot hold
-    it (fastest first, deterministic)."""
-    import inspect
-
-    import bench
-
-    src = inspect.getsource(bench.main)
-    assert "prev_names" in src, "sticky one-line selection removed"
-    assert "[:60]" not in src, "the churning slowest-60 cut is back"
-
-
-def test_bench_medians_nonempty_on_real_history():
-    """With the actual driver-written BENCH_r*.json in the repo, the
-    sf0.1 medians must be non-empty — the live guarantee that the replay
-    pass is armed for the per-round bench run."""
-    import bench
-
-    med = bench._trailing_medians(0.1)
-    assert med, "trailing medians empty — replay pass is dead again"
-    assert "compare_report" in med
-    gmed = bench._trailing_medians(0.1, key="gates")
-    assert "knn_recall" in gmed, (
-        "gate medians empty — the gate replay pass is dead (r10 lesson)"
-    )
+    queries = {f"q{i:03d}": round(0.01 * i, 2) for i in range(300)}
+    queries.update({"compare_report": 0.01, "tie_b": 9.0, "tie_a": 9.0, "failed": None})
+    record = {"metric": "compare_report_sec", "value": 0.01, "unit": "sec",
+              "queries": queries, "gates": {"knn_recall": 1.0},
+              "noise": [0.2, 0.3], "sf": 0.001}
+    line = bench.one_line(record)
+    assert len(line) <= bench.LINE_LIMIT
+    parsed = _json.loads(line)
+    assert list(parsed) == ["metric", "value", "unit", "queries", "gates", "noise", "sf"]
+    kept = list(parsed["queries"])
+    assert kept[:4] == ["compare_report", "tie_a", "tie_b", "q299"]
+    # a prefix of the slowest-first ranking: nothing kept is faster than
+    # anything dropped
+    ranked = sorted((k for k, v in queries.items() if v is not None and k != "compare_report"),
+                    key=lambda k: (-queries[k], k))
+    assert kept[1:] == ranked[: len(kept) - 1]
+    assert len(kept) < len(ranked) and "failed" not in kept
+    # the next name would not have fit
+    over = _json.dumps({**record, "queries": {**parsed["queries"], ranked[len(kept) - 1]: 0.0}},
+                       separators=(",", ":"))
+    assert len(over) > bench.LINE_LIMIT
+    # a short record is printed whole; a failed headline stays as null
+    small = dict(record, queries={"compare_report": None, "qa": 1.5, "qb": 2.5})
+    assert _json.loads(bench.one_line(small))["queries"] == {
+        "compare_report": None, "qb": 2.5, "qa": 1.5}
 
 
 def test_coverage_md_header_matches_registry(registry):
@@ -463,33 +259,3 @@ def test_coverage_md_header_matches_registry(registry):
     assert not dupes, f"duplicated COVERAGE.md rows: {sorted(dupes)[:3]}"
 
 
-def test_bench_creep_detector_semantics():
-    """The sub-2× creep probe (r11 verdict item 2): the detector must fire
-    on the MOTIVATING monotone drift — dedup_ngram_jaccard's real
-    2.18→2.62→3.07→3.58 s driver records — which a median-relative test
-    provably cannot catch (each round is only ~1.2× its own trailing
-    median; r12 review finding). med is always median(series) in
-    production, so every case here uses that honest pairing."""
-    import statistics
-
-    import bench
-
-    def creeping(best, series):
-        return bench._is_creeping(best, statistics.median(series), series)
-
-    # the motivating drift, replayed round by round as bench would see it
-    assert creeping(3.58, [2.18, 2.62, 3.07])   # r11's sweep: flag
-    assert creeping(3.07, [2.18, 2.62])          # fires a round earlier too
-    # a step change flags on its SECOND elevated round, not the first
-    assert not creeping(3.0, [2.0, 2.0, 2.0])    # first elevation: weather
-    assert creeping(3.0, [2.0, 2.0, 3.0])        # second: trend
-    # recovered after a bad patch: no flag
-    assert not creeping(2.3, [3.0, 3.5, 2.2])
-    # stable (flat band): no flag
-    assert not creeping(3.1, [3.0, 3.0, 3.0])
-    # >2× the median belongs to the outlier-replay pass
-    assert not creeping(7.0, [2.0, 2.0, 3.0])
-    # guards
-    assert not bench._is_creeping(3.0, 2.0, [])        # no history: no trend
-    assert not bench._is_creeping(None, 2.0, [2.9])    # errored query
-    assert not creeping(0.45, [0.3, 0.3, 0.4])          # sub-0.5 s jitter

@@ -89,6 +89,17 @@ class TestNgramJaccard:
         direct, prefix = run(10**9), run(1)
         assert direct == prefix and len(direct) > 0
 
+    def test_gram_base_released_by_release_caches(self, spark, sf_dir):
+        # the gram base persist has an owner: release_caches() frees it
+        from datacompy_spark import release_caches
+        from datacompy_spark.queries import QUERIES
+
+        spark.catalog.clearCache()
+        release_caches()
+        QUERIES["dedup_ngram_jaccard"](spark, sf_dir).collect()
+        release_caches()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
 
 class TestConnectedComponents:
     def test_multi_hop_chain(self, spark):
@@ -1513,6 +1524,40 @@ class TestIncrementalMinhashLedger:
         finally:
             spark.sql("DROP TABLE IF EXISTS dedup_ledger_t2")
 
+    @pytest.mark.parametrize("method", ["exact", "minhash"])
+    def test_orphaned_location_raises_named_error(self, spark, method):
+        """A ledger directory left in the warehouse without its catalog
+        entry (an in-memory catalog died with its session) is reported by
+        name, with the directory and the fix, not as a bare Spark error."""
+        import os
+        import shutil
+
+        table = f"orphan_ledger_{method}"
+        written = table if method == "exact" else f"{table}_bands"
+        warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+        orphan = os.path.join(warehouse, written)
+        os.makedirs(orphan)
+        open(os.path.join(orphan, "part-00000"), "w").close()
+        batch = spark.createDataFrame(
+            [(1, "a document body for an orphaned ledger")],
+            "doc_id bigint, text string",
+        )
+        op = (
+            D.incremental_dedup_with_ledger
+            if method == "exact"
+            else D.incremental_minhash_ledger
+        )
+        try:
+            with pytest.raises(D.LedgerLocationError) as err:
+                op(spark, batch, table, "doc_id", "text", num_buckets=4)
+        finally:
+            shutil.rmtree(orphan)
+            spark.sql(f"DROP TABLE IF EXISTS {table}_shingles")
+        assert err.value.table == written
+        msg = str(err.value)
+        assert written in msg and orphan in msg
+        assert "Remove the directory" in msg and "register a table" in msg
+
 
 class TestWeightedSample:
     def test_deterministic_across_layouts(self, spark):
@@ -1697,6 +1742,43 @@ class TestSemanticDecontaminate:
         # cos to (0,1) = 0.8, to (1,0) = 0.6; NULL eval vec is skipped
         assert r["max_eval_cosine"] == pytest.approx(0.8)
         assert r["contaminated"]
+
+    @pytest.mark.parametrize(
+        "bad", [[1.0, 0.0, 0.0], [1.0, None]], ids=["ragged", "null_element"]
+    )
+    def test_bad_eval_vector_raises_on_driver(self, spark, bad):
+        from datacompy_spark.operators.similarity import semantic_decontaminate
+
+        corpus = spark.createDataFrame(
+            [(1, [3.0, 4.0])], "vec_id bigint, embedding array<double>"
+        )
+        eval_df = spark.createDataFrame(
+            [(1, [0.0, 1.0]), (2, bad)], "eid bigint, embedding array<double>"
+        )
+        # raised while the plan is built, before any corpus task runs
+        with pytest.raises(ValueError, match="eval vectors must share one length"):
+            semantic_decontaminate(corpus, "vec_id", "embedding", eval_df)
+
+    @pytest.mark.parametrize(
+        "bad", [[1.0, 0.0, 0.0], [1.0, None]], ids=["ragged", "null_element"]
+    )
+    def test_bad_corpus_vector_names_ids_and_dimension(self, spark, bad):
+        from datacompy_spark.operators.similarity import semantic_decontaminate
+
+        corpus = spark.createDataFrame(
+            [(1, [3.0, 4.0]), (7, bad), (2, None), (8, [0.0, 1.0])],
+            "vec_id bigint, embedding array<double>",
+        ).coalesce(1)
+        eval_df = spark.createDataFrame(
+            [(1, [0.0, 1.0])], "eid bigint, embedding array<double>"
+        )
+        out = semantic_decontaminate(corpus, "vec_id", "embedding", eval_df)
+        with pytest.raises(Exception) as err:
+            out.collect()
+        msg = str(err.value)
+        assert "ValueError" in msg
+        assert "must have 2 non-null elements" in msg
+        assert "first offending vec_id values: [7]" in msg
 
 
 class TestRemoveDupSpans:

@@ -50,6 +50,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     from datacompy_spark.queries import QUERIES
+    from perfbench.trace import StatusStore
 
     plans_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -58,25 +59,9 @@ def main() -> int:
     )
     os.makedirs(plans_dir, exist_ok=True)
 
-    def _jobs_tasks(group: str):
-        """(jobs, tasks) attributed to a job group via statusTracker — the
-        pressure-proof A/B proxy (shared-VM wall clocks lie; task counts
-        cannot)."""
-        try:
-            tr = spark.sparkContext.statusTracker()
-            jids = tr.getJobIdsForGroup(group)
-            tasks = 0
-            for jid in jids:
-                info = tr.getJobInfo(jid)
-                if info is None:
-                    continue
-                for sid in info.stageIds:
-                    sinfo = tr.getStageInfo(sid)
-                    if sinfo is not None:
-                        tasks += sinfo.numCompletedTasks
-            return len(jids), tasks
-        except Exception:  # noqa: BLE001 — diagnostics only
-            return -1, -1
+    # status-store deltas over the LAST run — the pressure-proof A/B proxy
+    # (shared-VM wall clocks lie; job and task counts cannot)
+    store = StatusStore(spark)
 
     for name in args.queries:
         if name not in QUERIES:
@@ -112,16 +97,16 @@ def main() -> int:
             continue
         runs = []
         for i in range(args.runs):
-            group = f"{name}#r{i}"
-            spark.sparkContext.setJobGroup(group, name)
+            spark.sparkContext.setJobGroup(f"{name}#r{i}", name)
+            start = store.mark()
             t0 = time.perf_counter()
             fn(spark, args.sf).count()
             runs.append(round(time.perf_counter() - t0, 3))
+            last = store.since(start)
             spark.catalog.clearCache()
-        jobs, tasks = _jobs_tasks(f"{name}#r{args.runs - 1}")
         print(
             f"{name}: runs={runs} min={min(runs)} last={runs[-1]} "
-            f"jobs={jobs} tasks={tasks}",
+            f"jobs={last['jobs']} tasks={last['tasks']} evicted={last['evicted']}",
             flush=True,
         )
 

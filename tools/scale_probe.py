@@ -29,40 +29,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _shuffle_write_bytes(sc):
-    """``(total shuffle-write bytes, min retained stage id)`` across all
-    retained stages (AppStatusStore).
-
-    Deltas around a run give that run's shuffle volume — the number that
-    predicts 100 TB network cost where wall-clock on a 32-core VM cannot.
-    The min stage id is the eviction witness: the status store retains the
-    NEWEST ``spark.ui.retainedStages`` stages, so if the minimum retained
-    id ROSE between two reads, pre-snapshot stages were evicted and the
-    delta is an undercount even when it comes out positive (r12 review
-    finding: the old negative-delta-only guard missed exactly that case).
-    py4j cannot fill Scala default args, so every stageList parameter is
-    passed explicitly. Returns (-1, -1) if the internal API moved."""
-    try:
-        store = sc._jsc.sc().statusStore()
-        stages = store.stageList(
-            sc._jvm.java.util.ArrayList(),  # statuses: all
-            False,                          # details
-            False,                          # withSummaries
-            sc._gateway.new_array(sc._jvm.double, 0),  # unsortedQuantiles
-            sc._jvm.java.util.ArrayList(),  # taskStatus
-        )
-        total, min_id = 0, -1
-        for i in range(stages.size()):
-            info = stages.apply(i)
-            total += info.shuffleWriteBytes()
-            sid = info.stageId()
-            if min_id < 0 or sid < min_id:
-                min_id = sid
-        return total, min_id
-    except Exception:  # noqa: BLE001 — diagnostics must not fail the probe
-        return -1, -1
-
-
 def main() -> int:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
@@ -117,9 +83,9 @@ def main() -> int:
         # shuffle-byte deltas — A/B measured 47.0 s vs 34.8 s on the x16
         # compare leg (~35% tax) with retainedStages=20000, the status
         # store's tracking cost scaling with retention. Stage eviction at
-        # the 1000 default is instead DETECTED below (negative delta OR a
-        # risen min retained stage id — the window visibly rolled), which
-        # reports -1 (unknown) rather than an undercount.
+        # the 1000 default is instead DETECTED below (StatusStore.since
+        # reports it as "evicted"), which reports -1 (unknown) rather than
+        # an undercount.
         .appName("datacompy-spark-scale-probe")
         .getOrCreate()
     )
@@ -127,6 +93,16 @@ def main() -> int:
 
     from datacompy_spark.operators.compare import SparkCompare
     from datacompy_spark.queries import LI_COLS, LI_KEYS, _LI_ABS_TOL
+    from perfbench.trace import StatusStore
+
+    store = StatusStore(spark)
+
+    def shuffle_write_mb(start: dict) -> float:
+        """Shuffle-write MB since ``start`` (a ``store.mark()``) — the number
+        that predicts 100 TB network cost where wall-clock on a 32-core VM
+        cannot; -1 (unknown) when the store evicted stages in between."""
+        delta = store.since(start)
+        return -1 if delta["evicted"] else delta["shuffle_write_bytes"] / 1e6
 
     base = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(*LI_COLS)
 
@@ -173,24 +149,14 @@ def main() -> int:
         df1 = at_scale(mult)
         df2 = perturb(df1)
         n = df1.count()
-        sb0, minid0 = _shuffle_write_bytes(spark.sparkContext)
+        start = store.mark()
         t0 = time.perf_counter()
         cmp_ = SparkCompare(
             spark, df1, df2, join_columns=LI_KEYS, abs_tol=_LI_ABS_TOL
         )
         cmp_.report(sample_count=10)
         el = time.perf_counter() - t0
-        sb1, minid1 = _shuffle_write_bytes(spark.sparkContext)
-        # eviction makes the delta an undercount: either it drove sb1 below
-        # sb0 (negative delta) or — the subtler case — the retained window
-        # visibly rolled (min retained stage id rose) while the delta stayed
-        # positive. Report -1 (unknown) in both rather than a wrong number.
-        window_rolled = minid0 >= 0 and minid1 > minid0
-        shuffle_mb = (
-            (sb1 - sb0) / 1e6
-            if 0 <= sb0 <= sb1 and not window_rolled
-            else -1
-        )
+        shuffle_mb = shuffle_write_mb(start)
         if t1 is None:
             t1 = el
         print(
@@ -584,7 +550,7 @@ def main() -> int:
         write_bucketed(right, "sp_right", agg_keys, num_buckets=int(cpus))
         t_bucket = time.perf_counter() - t0
         try:
-            sb0, minid0 = _shuffle_write_bytes(spark.sparkContext)
+            start = store.mark()
             t0 = time.perf_counter()
             cmp_b = SparkCompare(
                 spark,
@@ -596,11 +562,7 @@ def main() -> int:
             )
             cmp_b.report(sample_count=10)
             t_bucketed = time.perf_counter() - t0
-            sb1, minid1 = _shuffle_write_bytes(spark.sparkContext)
-            rolled = minid0 >= 0 and minid1 > minid0
-            b_mb = (
-                (sb1 - sb0) / 1e6 if 0 <= sb0 <= sb1 and not rolled else -1
-            )
+            b_mb = shuffle_write_mb(start)
             print(
                 f"bucketed rows={n:>10,d}  plain={t_plain:6.2f}s  "
                 f"bucket_once={t_bucket:6.2f}s  bucketed_cmp={t_bucketed:6.2f}s  "

@@ -9,7 +9,9 @@
 #   5. the same sweep on 2 cores — task-serialization / low-parallelism
 #      invariance
 #   6. plan audit (unexpected nested-loop joins fail it) + PLANS.md regen
-#   7. benchmark (one JSON line)
+#   7. benchmark: one JSON line of raw best-of-N timings plus sentinel
+#      samples; per-query status-store counters in BENCH_DETAIL.json.
+#      Gain claims go through perfbench/run.py's paired runs instead.
 #   8. (opt-in: SPARK_GRAFT_TRANSPORT=1) the sf0.01 sweep under
 #      local-cluster[2,8,8192] — a real multi-JVM serializer/network
 #      boundary. Catches JVM/Python-sharing assumptions (e.g. a pandas
