@@ -965,6 +965,11 @@ def run_compare(args) -> int:
         except (ValueError, TypeError) as ex:
             raise CLIError(str(ex)) from ex
 
+        if args.export_mismatches or args.export_unique:
+            # a report alone persists nothing; the exports re-read the diff,
+            # so populate it first and let the report read it too — one
+            # join pass for all three
+            cmp_._ensure_cached()
         data = cmp_.build_report_data(
             sample_count=args.sample_count, column_count=args.column_count
         )

@@ -12,26 +12,30 @@ Architecture is deliberately NOT a port:
 * ALL statistics — left/right/both row classes, per-column match counts,
   null diffs, max diffs, all-match row count (ref ``spark.py:573-636``, which
   runs 2N+1 separate actions) — fold into ONE set of aggregates observed on
-  the action that populates the exceptions cache: one pass over the join
-  computes the entire comparison. At 100 TB this is the difference between
+  one pass over the join: the report's sample action, or the action that
+  populates the exceptions cache. At 100 TB this is the difference between
   one pass over the data and dozens.
-* Statistics are computed on first access and memoized; any statistics read
-  persists the diff (release it with ``uncache()``). The derived frames
-  (``intersect_rows``/``df1_unq_rows``/``df2_unq_rows``) stay lazy
-  DataFrames (never collected unless the caller asks for samples).
+* A report is ONE Spark action: the statistics ride it as ``observe``
+  metrics and every sample (each mismatching column's, each side's unique
+  rows) comes out of one per-slot top-n window. It persists nothing.
+* Statistics are computed on first access and memoized; a statistics read
+  outside a report persists the diff (release it with ``uncache()``). The
+  derived frames (``intersect_rows``/``df1_unq_rows``/``df2_unq_rows``)
+  stay lazy DataFrames (never collected unless the caller asks).
 
 Scale design notes (local[32] test, 1000-executor target):
 * single full-outer shuffle on the join keys; AQE handles skew/broadcast;
 * the observed statistics are partial (map-side) aggregates → single-row
   result: driver memory is O(columns), never O(rows);
-* report samples are ``limit``-bounded before any ``toPandas``.
+* report samples are bounded per slot by a partial window top-n ahead of
+  one small exchange, before anything reaches the driver.
 """
 
 from __future__ import annotations
 
 import logging
 from functools import cached_property, reduce
-from typing import Any, Dict, List, Mapping, Optional, Sequence, TypedDict, Union
+from typing import Any, Dict, List, Mapping, Optional, Sequence, Tuple, TypedDict, Union
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -167,6 +171,105 @@ def normalize_tolerance(tol: Tolerance, columns: Sequence[str], lower: bool) -> 
         raise ValueError(f"tolerance dict names unknown columns: {unknown}")
     default = folded.get("default", 0.0)
     return {c: folded.get(c, default) for c in columns}
+
+
+#: a sample slot's layout: (source column, display name) pairs
+SlotLayout = List[Tuple[str, str]]
+
+
+def _to_pandas_by_slot(
+    df: DataFrame, slot: str, rank: str, layouts: Sequence[SlotLayout]
+) -> List[Any]:
+    """Collect ``df`` in ONE action and split it on the driver: frame ``i``
+    is exactly what ``toPandas()`` returns for ``df.filter(slot == i)``
+    ordered by ``rank``, projected to layout ``i`` and renamed to its
+    display names. Each frame is converted on its own, the way ``toPandas``
+    converts (Arrow or row path per the session's Arrow setting; Spark
+    Connect always Arrow), so every column's pandas dtype is inferred from
+    that slot's rows alone: an int column with nulls only in another slot's
+    rows still converts as int. The Arrow route falls back to rows as a
+    whole when any collected column has no Arrow type and fallback is on."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import _create_converter_to_pandas, to_arrow_schema
+
+    fields = {f.name: f for f in df.schema.fields}
+    conf = df.sparkSession.conf
+    timezone = conf.get("spark.sql.session.timeZone")
+    struct_mode = conf.get("spark.sql.execution.pandas.structHandlingMode", "legacy")
+    connect = not hasattr(df, "_jdf")
+    use_arrow = connect or df.sparkSession._jconf.arrowPySparkEnabled()
+    if use_arrow and not connect:
+        jconf = df.sparkSession._jconf
+        try:
+            to_arrow_schema(df.schema, prefers_large_types=jconf.arrowUseLargeVarTypes())
+        except Exception:
+            if not jconf.arrowPySparkFallbackEnabled():
+                raise
+            use_arrow = False
+
+    def convert(pdf, layout: SlotLayout, **kw):
+        if len(pdf.columns) == 0:
+            return pdf
+        return pd.concat(
+            [
+                _create_converter_to_pandas(
+                    fields[src].dataType, fields[src].nullable, timezone=timezone, **kw
+                )(pser)
+                for (_, pser), (src, _) in zip(pdf.items(), layout)
+            ],
+            axis="columns",
+        )
+
+    out = []
+    if use_arrow:
+        legacy = struct_mode == "legacy"
+        kw = dict(
+            struct_in_pandas="dict" if legacy else struct_mode,
+            error_on_duplicated_field_names=legacy,
+        )
+        if connect:
+            table = df.toArrow()
+            options = {"coerce_temporal_nanoseconds": True}
+        else:
+            batches = df._collect_as_arrow()
+            table = pa.Table.from_batches(batches) if batches else None
+            options = {"date_as_object": True, "coerce_temporal_nanoseconds": True}
+        for i, layout in enumerate(layouts):
+            names = [d for _, d in layout]
+            part = None
+            if table is not None and table.num_rows:
+                part = table.filter(pc.equal(table[slot], i))
+            if part is None or part.num_rows == 0:
+                pdf = pd.DataFrame(columns=names)  # toPandas' own empty result
+            else:
+                part = part.sort_by(rank).select([s for s, _ in layout])
+                pdf = part.rename_columns(
+                    [f"col_{j}" for j in range(part.num_columns)]
+                ).to_pandas(**options)
+                pdf.columns = names
+            out.append(convert(pdf, layout, **kw))
+        return out
+
+    rows_by_slot: Dict[int, list] = {}
+    for r in df.collect():
+        rows_by_slot.setdefault(r[slot], []).append(r)
+    kw = dict(
+        struct_in_pandas="row" if struct_mode == "legacy" else struct_mode,
+        error_on_duplicated_field_names=False,
+        timestamp_utc_localized=False,
+    )
+    for i, layout in enumerate(layouts):
+        names = [d for _, d in layout]
+        rows = sorted(rows_by_slot.get(i, []), key=lambda r: r[rank])
+        if rows:
+            records = [tuple(r[s] for s, _ in layout) for r in rows]
+            pdf = pd.DataFrame.from_records(records, index=range(len(rows)), columns=names)
+        else:
+            pdf = pd.DataFrame(columns=names)
+        out.append(convert(pdf, layout, **kw))
+    return out
 
 
 class SparkCompare:
@@ -339,6 +442,8 @@ class SparkCompare:
                 "merge": f"_merge{tag}",
                 "ord": f"__dc{tag}_ord",
                 "key": f"__dc{tag}_key",
+                "slot": f"__dc{tag}_slot",
+                "rank": f"__dc{tag}_rank",
             }
             # candidates include the join-suffixed forms of the ordinal and
             # the lowered keys — a join column named `__dc_ordinal__lhs`
@@ -599,11 +704,12 @@ class SparkCompare:
     def _ensure_cached(self) -> None:
         """Materialize the exceptions cache, ``self._exceptions``: the
         persisted *diff*, rows that are unique to one side or have at least
-        one mismatching column. Report sampling and mismatch extraction make
-        several passes — but only ever over these rows, so this is what gets
-        persisted. At scale the diff is normally a tiny fraction of the join
-        (the reference caches the full intersect frame instead,
-        ``spark.py:532-537``).
+        one mismatching column. Mismatch extraction and repeated derived-frame
+        reads make several passes — but only ever over these rows, so this
+        is what gets persisted. At scale the diff is normally a tiny fraction
+        of the join (the reference caches the full intersect frame instead,
+        ``spark.py:532-537``). A report alone never calls this: it takes
+        its statistics and samples in one pass (:meth:`_report_samples`).
 
         The statistics ride the same pass: when they are not known yet,
         their aggregates attach to the cache-populate action as
@@ -689,7 +795,7 @@ class SparkCompare:
 
     def uncache(self) -> None:
         """Release everything the compare persisted: the diff that the first
-        statistics read, report or mismatch pull populated, and whatever
+        statistics read or mismatch pull populated, and whatever
         :meth:`cache_result` (or ``cache_intermediates``) pinned."""
         if self._outer_persisted:
             self._outer.unpersist()
@@ -763,8 +869,8 @@ class SparkCompare:
                 F.col(c if c in self.join_columns else f"{c}_{name}").alias(c)
             )
         # unique rows are by definition exceptions → serve from the small
-        # cache WHEN IT ALREADY EXISTS (report flow: _ensure_cached ran, the
-        # persisted diff answers every sample). A standalone unique-rows
+        # cache WHEN IT ALREADY EXISTS (a statistics read or mismatch pull
+        # populated it). A standalone unique-rows
         # read should NOT build that cache: its populate pass evaluates
         # every {col}_match expression just to persist rows this query
         # filters on the merge indicator alone — reading the raw outer join
@@ -1128,6 +1234,85 @@ class SparkCompare:
 
     # ---------------------------------------------------------------- report
 
+    def _report_samples(
+        self, sample_count: int, column_count: int
+    ) -> Tuple[Dict[str, Any], Dict[str, Any]]:
+        """Every report sample — and the statistics, when they are not known
+        yet — from ONE Spark action (ref ``spark.py:571-580`` runs each stat
+        query and sample pull as its own action on a thread pool).
+
+        The source is the exceptions cache when it exists (populated
+        earlier, or masked); otherwise the outer join filtered by the
+        exceptions predicate, with the statistics attached as ``observe``
+        metrics when unknown. Nothing is persisted. Each diff row is tagged
+        with every sample slot it belongs to — one per compared column
+        (``both`` and not ``{c}_match``), one per side's unique rows — and
+        ``row_number() over (partition by slot order by keys, ord) <= n``
+        keeps the first ``sample_count`` of each: Spark plans a partial
+        ``WindowGroupLimit`` ahead of one small exchange.
+
+        Returns ``({column: frame}, {"df1": frame, "df2": frame})``, pandas
+        frames with the report's display columns, in join-key order. With
+        known statistics, slots that cannot hold rows are left out; with
+        ``sample_count <= 0`` both dicts are empty."""
+        n1, n2 = self.df1_name, self.df2_name
+        keys = list(self.join_columns)
+        merge = F.col(self._n["merge"])
+        known = self.__dict__.get("_stats")
+        slots: List[Tuple[str, str, Column, SlotLayout]] = []
+        for c in self._compare_columns:
+            if known is None or int(known[f"__match__{c}"]) < int(known["__both"]):
+                layout = [(k, k) for k in keys]
+                layout += [(f"{c}_{n1}", f"{c} ({n1})"), (f"{c}_{n2}", f"{c} ({n2})")]
+                slots.append(("mismatch", c, (merge == "both") & ~F.col(f"{c}_match"), layout))
+        for side, tag, name, src in (
+            ("df1", "left_only", n1, self.df1),
+            ("df2", "right_only", n2, self.df2),
+        ):
+            if known is None or int(known[f"__{tag}"]) > 0:
+                layout = [
+                    (c if c in keys else f"{c}_{name}", c) for c in src.columns[:column_count]
+                ]
+                slots.append(("unique", side, merge == tag, layout))
+        if known is not None and (sample_count <= 0 or not slots):
+            return {}, {}
+
+        obs = None
+        src_df = self.__dict__.get("_exceptions")
+        if src_df is None:
+            src_df = self._outer
+            if known is None:
+                from pyspark.sql import Observation
+
+                obs = Observation()
+                src_df = src_df.observe(obs, *self._stat_aggs())
+            src_df = src_df.filter((merge != "both") | self._any_mismatch_pred())
+        slot, rank = self._n["slot"], self._n["rank"]
+        order = [*keys, self._n["ord"]]
+        cols = _ordered_unique([*order, *(s for *_, lay in slots for s, _ in lay)])
+        tags = [F.when(pred, F.lit(i)) for i, (_, _, pred, _) in enumerate(slots)]
+        top = (
+            src_df.select(*cols, F.explode(F.array_compact(F.array(*tags))).alias(slot))
+            .withColumn(
+                rank, F.row_number().over(Window.partitionBy(slot).orderBy(*order))
+            )
+            # n >= 1 even for sample_count 0: Catalyst folds a rank filter
+            # of 0 into an empty relation, which would drop the observed
+            # statistics along with the rows
+            .filter(F.col(rank) <= max(sample_count, 1))
+        )
+        frames = _to_pandas_by_slot(top, slot, rank, [lay for *_, lay in slots])
+        if obs is not None:
+            stats = {k: (0 if v is None else v) for k, v in obs.get.items()}
+            self._warn_if_hot_key(stats)
+            self.__dict__["_stats"] = stats
+        mismatch: Dict[str, Any] = {}
+        unique: Dict[str, Any] = {}
+        if sample_count > 0:
+            for (kind, label, _, _), frame in zip(slots, frames):
+                (unique if kind == "unique" else mismatch)[label] = frame
+        return mismatch, unique
+
     def build_report_data(self, sample_count: int = 10, column_count: int = 10):
         from datacompy_spark.plans.report import build_report_data
 
@@ -1141,7 +1326,10 @@ class SparkCompare:
         template_path: Optional[str] = None,
     ) -> str:
         """Render the human-readable comparison report (ref ``base.py:405-443``);
-        ``template_path`` selects a custom Jinja2 template (ref ``base.py:493-533``)."""
+        ``template_path`` selects a custom Jinja2 template (ref ``base.py:493-533``).
+        One Spark action serves it — statistics and every sample — and
+        nothing is persisted (:meth:`_report_samples`). Samples are each
+        slot's first ``sample_count`` rows by join key."""
         data = self.build_report_data(sample_count=sample_count, column_count=column_count)
         text = data.render(template_path=template_path)
         if html_file:

@@ -105,7 +105,7 @@ def collapse_exact_content(df: DataFrame, id_col: str, text_col: str, eager: boo
     staged = fan_out(
         df.select(F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("toks"))
     ).select("doc_id", "toks", F.md5(F.concat_ws("\x1f", "toks")).alias("chash"))
-    staged = staged.persist()
+    staged = tracked_persist(staged)
     # eager=False (r14): callers whose FIRST action is a single-lineage
     # descendant of this cache (minhash: banded.count(); simhash:
     # sigs.count()) populate it as part of that action — an eager count
@@ -166,21 +166,19 @@ def minhash_lsh_pairs(
     # expressions per JOINED ROW in self-joins, so without materialization the
     # shingling/minhash work would run once per candidate pair instead of
     # once per document.
-    base = (
+    base = tracked_persist(
         reps.select(
             "doc_id",
             "chash",
             F.array_distinct(word_shingles(F.col("toks"), shingle_k)).alias(
                 "shingles"
             ),
-        )
-        .select(
+        ).select(
             "doc_id",
             "chash",
             "shingles",
             shingle_hashes(F.col("shingles")).alias("shash"),
         )
-        .persist()
     )
     # no count() here (r14): `banded` below is a single-lineage descendant —
     # its count() computes through this cache and populates it on the way,
@@ -193,17 +191,19 @@ def minhash_lsh_pairs(
     keys = lsh_band_keys(F.col("signature"), bands, rows_per_band)
     # band rows carry only (doc_id, band, bkey) — shingle arrays never enter
     # the bucket shuffle
-    banded = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), k.alias("bkey"))
-                    for b, k in enumerate(keys)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.bkey").persist()
+    banded = tracked_persist(
+        sig.select(
+            "doc_id",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(F.lit(b).alias("band"), k.alias("bkey"))
+                        for b, k in enumerate(keys)
+                    ]
+                )
+            ).alias("bk"),
+        ).select("doc_id", "bk.band", "bk.bkey")
+    )
     banded.count()
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
@@ -344,10 +344,12 @@ def simhash_near_dups(
     # collapse cache and populates it in the same action (r14 — was two)
     members, reps = collapse_exact_content(df, id_col, text_col, eager=False)
     # members is a narrow projection of collapse's cache — no extra persist
-    sigs = _simhash_by_vote(
-        reps.select("doc_id", "chash", token_hashes(F.col("toks")).alias("thash")),
-        ["doc_id", "chash"],
-    ).persist()
+    sigs = tracked_persist(
+        _simhash_by_vote(
+            reps.select("doc_id", "chash", token_hashes(F.col("toks")).alias("thash")),
+            ["doc_id", "chash"],
+        )
+    )
     sigs.count()  # materialize before the self-join (see minhash note)
     banded = sigs.select(
         "doc_id",
@@ -1732,6 +1734,24 @@ def _save_ledger(writer, table: str) -> None:
         raise LedgerLocationError(table, location.strip("'")) from exc
 
 
+def _check_ledger_locations(spark, *tables: str) -> None:
+    """Raise :class:`LedgerLocationError` for the first table that is not in
+    the catalog while its managed-table directory exists and is non-empty
+    (the condition Spark's ``saveAsTable`` fails on) — checked for every
+    table of a ledger before any of them is written, so an orphan under one
+    table cannot leave a half-written ledger behind."""
+    sc = spark.sparkContext
+    for table in tables:
+        if spark.catalog.tableExists(table):
+            continue
+        db, _, name = table.rpartition(".")
+        db_uri = spark.catalog.getDatabase(db or spark.catalog.currentDatabase()).locationUri
+        path = sc._jvm.org.apache.hadoop.fs.Path(f"{db_uri.rstrip('/')}/{name.lower()}")
+        fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
+        if fs.exists(path) and len(fs.listStatus(path)) > 0:
+            raise LedgerLocationError(table, path.toString())
+
+
 def incremental_dedup_with_ledger(
     spark,
     batch: DataFrame,
@@ -1858,6 +1878,10 @@ def incremental_minhash_ledger(
     maybe_bcast = F.broadcast if broadcast_batch else (lambda df: df)
     bands_table = f"{ledger_prefix}_bands"
     shingles_table = f"{ledger_prefix}_shingles"
+    if update_ledger:
+        # both locations before either append: the bands table must never
+        # be written when the shingles table cannot be
+        _check_ledger_locations(spark, bands_table, shingles_table)
 
     # batch side: exact-content collapse first (hot-bucket guard), then one
     # persisted sketch pass over the representatives — it feeds candidate
@@ -1867,7 +1891,7 @@ def incremental_minhash_ledger(
         F.col("doc_id").alias(id_col),
         F.concat_ws(" ", "toks").alias(text_col),
     )
-    bbase = _shingle_base(rep_docs, id_col, text_col, shingle_k).persist()
+    bbase = tracked_persist(_shingle_base(rep_docs, id_col, text_col, shingle_k))
     bbase.count()
     bband = _band_key_rows(bbase, num_hashes, bands)
 

@@ -1407,7 +1407,8 @@ def semantic_decontaminate(
     are thousands of vectors, the corpus is billions), so it is collected
     to the driver ONCE at build time (bounded exactly like the previous
     broadcast-row form — same 100-200M-vector practical ceiling) and
-    shipped to tasks inside a ``mapInArrow`` closure. Each corpus batch
+    shipped to executors once as a broadcast matrix that every
+    ``mapInArrow`` task reads. Each corpus batch
     scores against the whole eval matrix in numpy with the engine's exact
     sequential fold order (guide §4.2 — the interpreted |eval|×dim HOF
     fold per row was the dominant cost of this operator: every add is now
@@ -1446,12 +1447,13 @@ def semantic_decontaminate(
             f"hold no null elements; found lengths {sorted({len(v) for v in ev})}, "
             f"{sum(None in v for v in ev)} vector(s) with null elements"
         )
-    E = np.array(ev, dtype=np.float64)
+    bE = corpus.sparkSession.sparkContext.broadcast(np.array(ev, dtype=np.float64))
 
     def score_batches(it):
         import pyarrow as pa
         import pyarrow.compute as pc
 
+        E = bE.value
         # eval norms once per task, engine fold order (column-at-a-time:
         # each eval's norm accumulates its squared dims in index order)
         en_acc = np.zeros(E.shape[0], dtype=np.float64)

@@ -10,10 +10,12 @@ format (``datacompy/templates/report_template.j2:1-97``) so rendered output
 is line-comparable with real datacompy reports; ``fixed_width_table`` here is
 an independent implementation of the same layout contract.
 
-All rendering is pure driver-side Python; the only executor work is the
-``limit(n)`` sample pulls. Samples are sorted by join key before display so
-output is deterministic under AQE (deliberate deviation from the reference's
-unsorted ``limit`` noted in SURVEY §7.4).
+All rendering is pure driver-side Python; the only executor work is ONE
+Spark action (``SparkCompare._report_samples``) that observes the statistics
+when they are not known yet and takes every sample through one per-slot
+top-n window. Samples are the first rows by join key, so output is
+deterministic under AQE (deliberate deviation from the reference's unsorted
+``limit`` noted in SURVEY §7.4).
 """
 
 from __future__ import annotations
@@ -230,23 +232,14 @@ class ReportData:
 # ------------------------------------------------------------------ builders
 
 
-def _df_to_str(df, sample_count: int, sort_cols: List[str]) -> str:
-    """Display boundary: deterministic bounded sample → pandas ``to_string()``
-    (ref ``base.py:693-734`` Spark path). Sorting before limit keeps
-    snapshots stable under AQE (deviation noted in SURVEY §7.4)."""
-    present = [c for c in sort_cols if c in df.columns]
-    if present:
-        df = df.orderBy(*present)
-    return df.limit(sample_count).toPandas().to_string()
-
-
 def build_report_data(
     cmp: "SparkCompare", sample_count: int = 10, column_count: int = 10
 ) -> ReportData:
     """Assemble the full report tree from a finished comparison
-    (ref ``base.py:259-403``). All counts come from the engine's single-agg
-    statistics pass — no extra count actions here."""
-    cmp._ensure_cached()  # sampling below makes several passes over the join
+    (ref ``base.py:259-403``). One Spark action serves the whole report:
+    the statistics (observed on it unless already known) and every sample;
+    nothing is persisted."""
+    mismatch_samples, unique_samples = cmp._report_samples(sample_count, column_count)
     n_both = cmp.intersect_rows_count
     matched = cmp.count_matching_rows()
     col_stats = cmp.column_stats
@@ -284,7 +277,7 @@ def build_report_data(
     )
 
     stat_list: List[MismatchStat] = []
-    sample_cols: List[str] = []
+    samples: List[str] = []
     for c in col_stats:
         if not c["all_match"]:
             stat_list.append(
@@ -300,38 +293,15 @@ def build_report_data(
                 )
             )
             if c["unequal_cnt"] > 0 and sample_count > 0:
-                sample_cols.append(c["column"])
-    # per-column sample pulls and the two unique-row samples are independent
-    # limit-actions over the (small, persisted) exceptions cache — run them
-    # ALL concurrently so report latency is one action's wall-clock, not
-    # N columns' + 2 tables' worth (the reference runs its stat queries on
-    # an async thread pool the same way, spark.py:571-580)
-    from concurrent.futures import ThreadPoolExecutor
+                samples.append(mismatch_samples[c["column"]].to_string())
 
-    def pull(col: str) -> str:
-        return _df_to_str(
-            cmp.sample_mismatch(col, sample_count, for_display=True),
-            sample_count,
-            join_cols,
-        )
-
-    def pull_unique(df, unq_count: int) -> UniqueRowsData:
-        n = min(sample_count, unq_count)
-        if n <= 0:
+    def unique_rows(side: str, unq_count: int) -> UniqueRowsData:
+        if min(sample_count, unq_count) <= 0:
             return UniqueRowsData(has_rows=False)
-        shown = df.columns[: min(column_count, len(df.columns))]
-        return UniqueRowsData(
-            has_rows=True, rows=_df_to_str(df.select(*shown), n, join_cols)
-        )
+        return UniqueRowsData(has_rows=True, rows=unique_samples[side].to_string())
 
-    samples: List[str] = []
-    with ThreadPoolExecutor(max_workers=min(8, len(sample_cols) + 2)) as pool:
-        f_u1 = pool.submit(pull_unique, cmp.df1_unq_rows, cmp.df1_unq_rows_count)
-        f_u2 = pool.submit(pull_unique, cmp.df2_unq_rows, cmp.df2_unq_rows_count)
-        if sample_cols:
-            samples = list(pool.map(pull, sample_cols))
-        df1_unique_rows = f_u1.result()
-        df2_unique_rows = f_u2.result()
+    df1_unique_rows = unique_rows("df1", cmp.df1_unq_rows_count)
+    df2_unique_rows = unique_rows("df2", cmp.df2_unq_rows_count)
     if stat_list:
         mismatch_stats = MismatchStats(
             has_mismatches=True,

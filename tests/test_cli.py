@@ -192,6 +192,65 @@ class TestOutputs:
         uq = spark.read.parquet(up)
         assert sorted((r["side"], r["id"]) for r in uq.collect()) == [("left", 3), ("right", 4)]
 
+    def test_export_mismatches_shares_the_report_pass(
+        self, tmp_path, capsys, spark, lineitem, monkeypatch
+    ):
+        # a report alone persists nothing, so the CLI populates the diff
+        # before it builds the report: the report reads the populated diff
+        # and the export reuses it. Job budget: the two loads, a populate, a
+        # report and the export write.
+        from pyspark.sql import functions as F
+
+        from datacompy_spark import SparkCompare
+
+        lp, rp = str(tmp_path / "l.parquet"), str(tmp_path / "r.parquet")
+        lineitem.write.parquet(lp)
+        tax = F.col("l_tax")
+        lineitem.withColumn(
+            "l_tax", F.when(F.col("l_orderkey") % 7 == 0, tax + 0.01).otherwise(tax)
+        ).write.parquet(rp)
+        keys = ["l_orderkey", "l_linenumber"]
+        tracker = spark.sparkContext.statusTracker()
+
+        def jobs(fn):
+            before = set(tracker.getJobIdsForGroup(None) or [])
+            fn()
+            return len(set(tracker.getJobIdsForGroup(None) or []) - before)
+
+        built = []
+
+        def build():
+            built.append(SparkCompare(
+                spark, spark.read.parquet(lp), spark.read.parquet(rp), join_columns=keys
+            ))
+
+        budget = jobs(build)
+        populated, reported = built[0], built
+        build()
+        budget += (
+            jobs(populated._ensure_cached)
+            + jobs(reported[1].build_report_data)
+            + jobs(lambda: populated.all_mismatch().write.parquet(str(tmp_path / "ref")))
+        )
+        n_mismatch = populated.all_mismatch().count()
+        populated.uncache()
+
+        saw_diff = []
+        real = SparkCompare._report_samples
+
+        def spy(self, *a, **kw):
+            saw_diff.append("_exceptions" in self.__dict__)
+            return real(self, *a, **kw)
+
+        monkeypatch.setattr(SparkCompare, "_report_samples", spy)
+        mp = str(tmp_path / "mm")
+        args = ["compare", "--left", lp, "--right", rp, "--on", ",".join(keys),
+                "--quiet", "--export-mismatches", mp]
+        n = jobs(lambda: main(args))
+        assert saw_diff == [True], "the CLI report ran before the diff was populated"
+        assert n <= budget, f"CLI ran {n} jobs, budget {budget}"
+        assert n_mismatch > 0 and spark.read.parquet(mp).count() == n_mismatch
+
     def test_csv_inputs(self, tmp_path, capsys):
         lp, rp = tmp_path / "l.csv", tmp_path / "r.csv"
         lp.write_text("id,v\n1,a\n2,b\n")

@@ -1416,8 +1416,33 @@ class TestIncrementalDedupLedger:
             out.unpersist()
 
 
+class TestSimhashNearDups:
+    def test_persists_released_by_release_caches(self, spark, documents):
+        # every frame the operator persists has an owner: release_caches()
+        # frees them all
+        from datacompy_spark import release_caches
+
+        spark.catalog.clearCache()
+        release_caches()
+        D.simhash_near_dups(documents, "doc_id", "text").collect()
+        release_caches()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 class TestIncrementalMinhashLedger:
     """Near-dup state tables: consecutive ingests, idempotent replay."""
+
+    def test_persists_released_by_release_caches(self, spark, documents):
+        from datacompy_spark import release_caches
+
+        spark.catalog.clearCache()
+        release_caches()
+        D.incremental_minhash_ledger(
+            spark, documents, "mh_ledger_release", "doc_id", "text",
+            num_buckets=4, update_ledger=False,
+        ).collect()
+        release_caches()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     def test_near_dup_ingests_and_replay(self, spark):
         for t in ("mh_ledger_t1_bands", "mh_ledger_t1_shingles"):
@@ -1557,6 +1582,33 @@ class TestIncrementalMinhashLedger:
         msg = str(err.value)
         assert written in msg and orphan in msg
         assert "Remove the directory" in msg and "register a table" in msg
+
+    def test_orphaned_shingles_location_blocks_bands_write(self, spark):
+        """An orphan under the shingles table alone is caught before the
+        bands table is written: no half-written ledger is left behind."""
+        import os
+        import shutil
+
+        prefix = "orphan_ledger_shingles_only"
+        warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+        orphan = os.path.join(warehouse, f"{prefix}_shingles")
+        os.makedirs(orphan)
+        open(os.path.join(orphan, "part-00000"), "w").close()
+        batch = spark.createDataFrame(
+            [(1, "a document body for an orphaned shingles ledger")],
+            "doc_id bigint, text string",
+        )
+        try:
+            with pytest.raises(D.LedgerLocationError) as err:
+                D.incremental_minhash_ledger(
+                    spark, batch, prefix, "doc_id", "text", num_buckets=4
+                )
+            assert err.value.table == f"{prefix}_shingles"
+            assert orphan in str(err.value)
+            assert not spark.catalog.tableExists(f"{prefix}_bands")
+        finally:
+            shutil.rmtree(orphan)
+            spark.sql(f"DROP TABLE IF EXISTS {prefix}_bands")
 
 
 class TestWeightedSample:
@@ -1742,6 +1794,33 @@ class TestSemanticDecontaminate:
         # cos to (0,1) = 0.8, to (1,0) = 0.6; NULL eval vec is skipped
         assert r["max_eval_cosine"] == pytest.approx(0.8)
         assert r["contaminated"]
+
+    def test_eval_matrix_shipped_as_one_broadcast(self, spark, monkeypatch):
+        import numpy as np
+        from pyspark import SparkContext
+
+        from datacompy_spark.operators.similarity import semantic_decontaminate
+
+        shipped = []
+        real = SparkContext.broadcast
+
+        def recording(sc, value):
+            shipped.append(value)
+            return real(sc, value)
+
+        monkeypatch.setattr(SparkContext, "broadcast", recording)
+        corpus = spark.createDataFrame(
+            [(i, [float(i), 1.0, 0.0]) for i in range(6)],
+            "vec_id bigint, embedding array<double>",
+        ).repartition(3)
+        eval_df = spark.createDataFrame(
+            [(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0])],
+            "eid bigint, embedding array<double>",
+        )
+        out = semantic_decontaminate(corpus, "vec_id", "embedding", eval_df).collect()
+        assert len(out) == 6
+        assert len(shipped) == 1
+        assert isinstance(shipped[0], np.ndarray) and shipped[0].shape == (2, 3)
 
     @pytest.mark.parametrize(
         "bad", [[1.0, 0.0, 0.0], [1.0, None]], ids=["ragged", "null_element"]

@@ -279,9 +279,34 @@ class TestOnePassReportStats:
         assert "InMemoryTableScan" in p or "TableCacheQueryStage" in p, p[:500]
         c.uncache()
 
+    def test_report_is_one_action_and_persists_nothing(self, spark, li_pair):
+        # the report runs one action (AQE splits it into a few jobs: one per
+        # shuffle map stage plus the result); the statistics are observed
+        # on it and memoized, and no diff is persisted
+        def cached_ids():
+            infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+            return {i.id() for i in infos if i.numCachedPartitions() > 0}
+
+        df1, df2 = li_pair
+        tax = F.col("l_tax")
+        df2 = df2.withColumn(
+            "l_tax", F.when(F.col("l_orderkey") % 7 == 0, tax + 0.01).otherwise(tax)
+        )
+        c = SparkCompare(spark, df1, df2, join_columns=KEYS)
+        tracker = spark.sparkContext.statusTracker()
+        cached_before = cached_ids()
+        before = set(tracker.getJobIdsForGroup(None) or [])
+        data = c.build_report_data(sample_count=10)
+        new_jobs = len(set(tracker.getJobIdsForGroup(None) or []) - before)
+        assert new_jobs <= 4, f"report ran {new_jobs} jobs"
+        assert "_stats" in c.__dict__
+        assert "_exceptions" not in c.__dict__
+        assert cached_ids() <= cached_before
+        assert data.mismatch_stats.has_samples and data.df1_unique_rows.has_rows
+
     def test_uncache_forgets_exceptions_binding(self, spark, li_pair):
         c = SparkCompare(spark, *li_pair, join_columns=KEYS)
-        c.report(sample_count=3)
+        c.all_mismatch()  # populates the diff (a report persists nothing)
         assert "_exceptions" in c.__dict__
         c.uncache()
         assert "_exceptions" not in c.__dict__, (
@@ -290,6 +315,96 @@ class TestOnePassReportStats:
         )
         # and a fresh unique-rows read plans from the raw join again
         assert "InMemoryTableScan" not in plan_of(c.df1_unq_rows)
+
+
+class TestReportSampleParity:
+    """Every report sample equals its slot's own query, converted by its own
+    ``toPandas()``: the first ``n`` rows by (join keys, pairing ordinal).
+    The fixture varies dtypes, holds nulls in the join key and in an int
+    column only within OTHER slots' rows, and duplicates a join key."""
+
+    SCHEMA = (
+        "id bigint, n_int int, dec decimal(10,2), dbl double, d date, "
+        "ts timestamp, flag boolean, s string"
+    )
+
+    def _frames(self, spark):
+        import datetime as dt
+        from decimal import Decimal
+
+        day = dt.date(2024, 1, 1)
+        t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
+        nan = float("nan")
+
+        def row(i, n_int, dec, dbl, dd, ts_s, flag, s):
+            return (i, n_int, Decimal(dec), dbl, day + dt.timedelta(days=dd),
+                    t0 + dt.timedelta(seconds=ts_s), flag, s)
+
+        left = [
+            row(1, 10, "1.00", 1.0, 0, 0, True, "a"),
+            row(1, 11, "1.10", 1.5, 1, 1, False, "a2"),
+            row(2, 20, "2.00", nan, 2, 2, None, "b"),
+            row(3, 30, "3.00", 3.0, 3, 3, True, "c"),
+            row(4, None, "4.00", 4.0, 4, 4, False, "d"),
+            row(5, 50, "5.00", 5.0, 5, 5, True, "e"),
+            row(None, None, "9.99", 9.0, 9, 9, None, "left null key"),
+            row(7, None, "7.00", 7.0, 7, 7, True, "left only"),
+        ]
+        right = [
+            row(1, 10, "1.00", 1.0, 0, 0, True, "a"),
+            row(1, 12, "1.10", 1.5, 1, 1, False, "a2"),
+            row(2, 20, "2.50", nan, 2, 2, True, "b"),
+            row(3, 31, "3.00", nan, 33, 3, True, "c"),
+            row(4, None, "4.00", 4.0, 4, 4, False, "dd"),
+            row(5, 50, "5.00", 5.0, 5, 6, False, "ee"),
+            row(8, 80, "8.00", 8.0, 8, 8, None, "right only"),
+            row(9, None, "9.00", 9.5, 9, 9, False, "right only 2"),
+        ]
+        return (
+            spark.createDataFrame(left, self.SCHEMA),
+            spark.createDataFrame(right, self.SCHEMA),
+        )
+
+    @pytest.mark.parametrize("arrow", [True, False], ids=["arrow", "rows"])
+    @pytest.mark.parametrize("n", [1, 10])
+    def test_samples_equal_per_slot_oracle(self, spark, arrow, n):
+        key = "spark.sql.execution.arrow.pyspark.enabled"
+        saved = spark.conf.get(key)
+        spark.conf.set(key, str(arrow).lower())
+        try:
+            c = SparkCompare(spark, *self._frames(spark), join_columns="id")
+            data = c.build_report_data(sample_count=n, column_count=5)
+            merge, order = F.col(c._n["merge"]), ["id", c._n["ord"]]
+
+            def oracle(pred, cols, names):
+                return (
+                    c._outer.filter(pred).orderBy(*order).limit(n)
+                    .select(*cols).toDF(*names).toPandas().to_string()
+                )
+
+            mismatched = c.columns_with_mismatches
+            assert len(mismatched) == 7, mismatched
+            want = [
+                oracle(
+                    (merge == "both") & ~F.col(f"{col}_match"),
+                    ["id", f"{col}_df1", f"{col}_df2"],
+                    ["id", f"{col} (df1)", f"{col} (df2)"],
+                )
+                for col in mismatched
+            ]
+            assert list(data.mismatch_stats.samples) == want
+            for side, tag, rows in (
+                ("df1", "left_only", data.df1_unique_rows.rows),
+                ("df2", "right_only", data.df2_unique_rows.rows),
+            ):
+                shown = c.df1.columns[:5]
+                cols = [x if x == "id" else f"{x}_{side}" for x in shown]
+                assert rows == oracle(merge == tag, cols, shown)
+            # the null join key and the int column's nulls sit in other
+            # slots: the int-typed samples must still print as ints
+            assert "12" in want[0] and "12.0" not in want[0]
+        finally:
+            spark.conf.set(key, saved)
 
 
 class TestSingleLineageMaterialization:
