@@ -21,9 +21,9 @@ from datacompy_spark.functions.comparators import (
 )
 from datacompy_spark.plans.report import ReportData, build_report_data
 from datacompy_spark.plans.cache import (
-    checkpoint_ledger_mark,
     release_caches,
     release_checkpoints,
+    scope,
 )
 from datacompy_spark.session import apply_recommended_conf, recommended_spark_conf
 
@@ -32,7 +32,7 @@ __all__ = [
     "SparkCompare",
     "release_caches",
     "release_checkpoints",
-    "checkpoint_ledger_mark",
+    "scope",
     "ColumnStat",
     "BaseComparator",
     "ArrayComparator",

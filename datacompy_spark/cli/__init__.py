@@ -965,31 +965,41 @@ def run_compare(args) -> int:
         except (ValueError, TypeError) as ex:
             raise CLIError(str(ex)) from ex
 
-        if args.export_mismatches or args.export_unique:
-            # a report alone persists nothing; the exports re-read the diff,
-            # so populate it first and let the report read it too — one
-            # join pass for all three
-            cmp_._ensure_cached()
-        data = cmp_.build_report_data(
-            sample_count=args.sample_count, column_count=args.column_count
-        )
-        if args.export_mismatches:
-            cmp_.all_mismatch().write.mode("overwrite").parquet(args.export_mismatches)
-        if args.export_unique:
-            from pyspark.sql import functions as F
-
-            cols = cmp_.df1.columns
-            (
-                cmp_.df1_unq_rows.select(F.lit(args.left_name).alias("side"), *cols)
-                .unionByName(
-                    cmp_.df2_unq_rows.select(
-                        F.lit(args.right_name).alias("side"), *cmp_.df2.columns
-                    ),
-                    allowMissingColumns=True,
-                )
-                .write.mode("overwrite")
-                .parquet(args.export_unique)
+        # the diff (and, with --cache-intermediates, the outer join) is
+        # persisted in a session that may outlive this command; the report
+        # and the exports are all that read it
+        try:
+            if args.export_mismatches or args.export_unique:
+                # a report alone persists nothing; the exports re-read the
+                # diff, so populate it first and let the report read it
+                # too — one join pass for all three
+                cmp_._ensure_cached()
+            data = cmp_.build_report_data(
+                sample_count=args.sample_count, column_count=args.column_count
             )
+            if args.export_mismatches:
+                cmp_.all_mismatch().write.mode("overwrite").parquet(
+                    args.export_mismatches
+                )
+            if args.export_unique:
+                from pyspark.sql import functions as F
+
+                cols = cmp_.df1.columns
+                (
+                    cmp_.df1_unq_rows.select(
+                        F.lit(args.left_name).alias("side"), *cols
+                    )
+                    .unionByName(
+                        cmp_.df2_unq_rows.select(
+                            F.lit(args.right_name).alias("side"), *cmp_.df2.columns
+                        ),
+                        allowMissingColumns=True,
+                    )
+                    .write.mode("overwrite")
+                    .parquet(args.export_unique)
+                )
+        finally:
+            cmp_.uncache()
         try:
             rendered = {
                 "text": lambda: data.render(template_path=args.template),
@@ -2242,30 +2252,17 @@ def run_curate(args) -> int:
             n_dsir = None
             if args.dsir:
                 from datacompy_spark.operators.textops import dsir_weights
-                from datacompy_spark.plans.cache import (
-                    checkpoint_ledger_mark,
-                    release_caches,
-                    release_checkpoints,
-                )
+                from datacompy_spark.plans.cache import scope
 
-                ckpt_lo = checkpoint_ledger_mark()
-                weights = dsir_weights(
-                    df, ev, args.id_col, args.text_col,
-                    alpha=args.dsir_alpha,
-                )
-                ckpt_hi = checkpoint_ledger_mark()
-                weights.write.mode("overwrite").parquet(args.dsir)
-                # everything is on disk now; in a borrowed long-lived
-                # session drop BOTH the tracked persists and the
-                # lineage_barrier localCheckpoint blocks this dsir call
-                # registered (release_caches alone never reached the
-                # latter — r11 ADVICE). Span-scoped [lo, hi): a wider
-                # release could kill frames unrelated consumers in the
-                # borrowed session registered before OR after this call.
-                # The count below re-reads from parquet, not the dead
-                # frames.
-                release_caches()
-                release_checkpoints(ckpt_lo, ckpt_hi)
+                # the scope releases the persists and localCheckpoint
+                # blocks this dsir call created, and nothing a neighbour
+                # in the borrowed session owns, once the weights are on
+                # disk; the count below re-reads from parquet
+                with scope():
+                    dsir_weights(
+                        df, ev, args.id_col, args.text_col,
+                        alpha=args.dsir_alpha,
+                    ).write.mode("overwrite").parquet(args.dsir)
                 n_dsir = spark.read.parquet(args.dsir).count()
         except CLIError:
             raise

@@ -1107,7 +1107,8 @@ def embedding_near_dups(
             .alias(bcols[j])
             for j in range(m)
         ],
-    ).persist()
+    )
+    base = tracked_persist(base)
     # No eager count (r15): the feared unpopulated-cache race (both
     # self-join sides recomputing the projection concurrently) was
     # measured NOT to manifest — on local[32] AND on a real multi-JVM
@@ -1229,7 +1230,7 @@ def semantic_dedup(
     # sf0.1 without it — the branches' column pruning is narrower than
     # the count's). Deterministic expressions ⇒ a race could only
     # duplicate work, never diverge values.
-    assign = ivf_assign(df, pivots, id_col, vec_col).persist()
+    assign = tracked_persist(ivf_assign(df, pivots, id_col, vec_col))
     a = assign.alias("a")
     b = assign.alias("b")
     lower_max = (
@@ -1494,9 +1495,9 @@ def incremental_dedup(
     members, reps = collapse_exact_content(batch, id_col, text_col)
     # members is a narrow projection of collapse's eager cache — no extra persist
     rep_docs = reps.select("doc_id", F.concat_ws(" ", "toks").alias("__text"))
-    bbase = _shingle_table(
+    bbase = tracked_persist(_shingle_table(
         rep_docs.select(F.col("doc_id").alias(id_col), F.col("__text").alias(text_col))
-    ).persist()
+    ))
     bbase.count()  # materialize before the joins: sketches compute once
     bband = _band_keys_of(bbase)
 

@@ -20,6 +20,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from datacompy_spark.plans.cache import tracked_persist
+
 RANK_SCALE = 1_000_000_000
 
 
@@ -73,18 +75,17 @@ def pagerank(
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), w.alias("w")
     )
-    nodes = (
+    nodes = tracked_persist(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .persist()
     )
     out_w = e.groupBy("src").agg(F.sum("w").alias("out_w"))
     # loop-INVARIANT: the per-edge (w, out_w) pairing never changes across
     # iterations — join it once and persist, so each iteration pays ONE
     # rank-frontier join instead of re-pairing every edge with its source's
     # out-weight every round
-    e_out = e.join(out_w, "src").persist()
+    e_out = tracked_persist(e.join(out_w, "src"))
     # n is ONE scalar: take it on the driver (r14 optimization). The former
     # form — a 1-row count aggregate crossJoin(broadcast(...))ed into the
     # rank frontier and into every iteration's damping step — re-planned and

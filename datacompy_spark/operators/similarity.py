@@ -1244,9 +1244,9 @@ def kmeans_lloyd(
     # iteration + once for seeding, and lloyd's final assign re-derived it
     # again — at scale each evaluation is a full corpus scan + quantize.
     # tracked (r15): the RETURNED assignment consumes this cache lazily, so
-    # this function cannot unpersist it — registering it with the cache
-    # ledger lets datacompy_spark.release_caches() reclaim the corpus-width
-    # frame once the caller has materialized (the r14 leak: a bare persist
+    # this function cannot unpersist it — its owner (a scope() exit or
+    # datacompy_spark.release_caches()) reclaims the corpus-width frame
+    # once the caller has materialized (the r14 leak: a bare persist
     # pinned it for the session lifetime).
     from datacompy_spark.plans.cache import tracked_persist
 

@@ -21,6 +21,7 @@ from datacompy_spark.functions.text import (
     tokens,
     whitespace_token_count,
 )
+from datacompy_spark.plans.cache import tracked_persist
 
 
 def _shuffle_partition_count(spark, default: int = 200) -> int:
@@ -2160,18 +2161,17 @@ def bm25_search(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size("__toks").cast("long")).alias("sum_dl"),
     )
-    pairs = (
+    # persisted because BOTH the df_t aggregate and the scoring join
+    # consume it; column pruning makes the two subtrees canonically
+    # different, so Spark will NOT reuse the exchange and would otherwise
+    # tokenize the whole corpus twice. Post-filter the frame is tiny: one
+    # row per (document, matched query term).
+    pairs = tracked_persist(
         fan_out(toks)
         .select("doc_id", F.size("__toks").cast("long").alias("dl"), F.explode("__toks").alias("term"))
         .filter(F.col("term").isin(terms))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"), F.min("dl").alias("dl"))
-        # persisted because BOTH the df_t aggregate and the scoring join
-        # consume it; column pruning makes the two subtrees canonically
-        # different, so Spark will NOT reuse the exchange and would
-        # otherwise tokenize the whole corpus twice. Post-filter the frame
-        # is tiny: one row per (document, matched query term).
-        .persist()
     )
     df_t = pairs.groupBy("term").agg(F.count(F.lit(1)).alias("dft"))
     avgdl = F.col("sum_dl").cast("double") / F.col("n_docs").cast("double")
@@ -2277,13 +2277,12 @@ def lm_score(
     """
     from datacompy_spark.plans.partitioning import fan_out
 
-    pairs = (
+    pairs = tracked_persist(
         fan_out(df.select(F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("__toks")))
         .select("doc_id", F.explode("__toks").alias("term"))
         .filter(F.col("term") != "")
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
     )
     vocab = pairs.groupBy("term").agg(F.sum("tf").alias("ct"))
     total = vocab.agg(F.sum("ct").alias("total"))

@@ -55,11 +55,11 @@ def lineage_barrier(
     if checkpoint_dir is None:
         from datacompy_spark.plans.cache import register_checkpoint
 
-        # registered by internal-RDD id so long-lived sessions can reclaim
-        # the executor-local blocks explicitly via release_checkpoints()
-        # even after every Python wrapper is gone (derived plans pin the
-        # blocks JVM-side); reliable checkpoint() below writes files, not
-        # block-manager blocks, so only this branch registers
+        # owned by internal-RDD id by the current owner (a scope() exit or
+        # release_checkpoints() frees the executor-local blocks even after
+        # every Python wrapper is gone: derived plans pin them JVM-side);
+        # reliable checkpoint() below writes files, not block-manager
+        # blocks, so only this branch registers
         return register_checkpoint(df.localCheckpoint(eager=eager))
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() != checkpoint_dir:

@@ -1,114 +1,176 @@
-"""Tracked persist ledger: bounded-lifecycle caching for operator internals.
+"""Ownership of operator-internal caches and localCheckpoints.
 
 Several operators persist an internal frame that multiple branches of the
 RETURNED lazy plan consume (e.g. the normalized key frame in the
 edit-distance join family feeds the index, the probe, and the exact
-verify). The persist is load-bearing — without it Spark re-executes the
-full upstream scan per consumer — but the returned plan is lazy, so the
-function cannot know when its caller is done and the cache can drop.
+verify), and iterative operators truncate lineage with
+``lineage_barrier``'s localCheckpoint. Both are load-bearing, but the
+returned plan is lazy, so the operator cannot know when its caller is
+done with them.
 
-In a short-lived session (CLI run, driver sweep) the leak is harmless:
-the session ends, the block manager goes with it. In a long-lived
-session calling such operators repeatedly (a notebook, a service), the
-entries accumulate. :func:`tracked_persist` registers every such frame
-in a module ledger; callers drain it explicitly:
+Every such persist (:func:`tracked_persist`) and checkpoint
+(:func:`register_checkpoint`) is owned by the CURRENT :class:`Owner`: the
+process owner, unless a :func:`scope` is open. A caller that is done with
+a result releases what its calls created by bracketing them:
 
-    from datacompy_spark import release_caches
-    pairs = edit_distance_pairs(docs, "doc_id", "text", max_dist=2)
-    pairs.write.parquet(out)      # plan materialized — caches now idle
-    release_caches()              # drop every operator-internal cache
+    from datacompy_spark import scope
+    with scope():
+        pairs = edit_distance_pairs(docs, "doc_id", "text", max_dist=2)
+        pairs.write.parquet(out)   # plan materialized: caches now idle
+    # exit: this scope's caches and checkpoints are released
 
-``spark.catalog.clearCache()`` is the blunt alternative (it also drops
-caches the USER created); ``release_caches`` frees exactly the frames
-this library persisted and nothing else.
+Without a scope, ``release_caches()`` and ``release_checkpoints()`` drain
+the process owner. In a short-lived session (a CLI run, a batch job) none
+of this matters: the block manager goes with the session. In a long-lived
+one (a notebook, a service) it keeps entries from accumulating.
+``spark.catalog.clearCache()`` is the blunt alternative; it also drops
+caches the USER created.
 """
 
 from __future__ import annotations
 
+import contextlib
+import contextvars
 import threading
-from typing import List
+from typing import Iterator, List
 
 from pyspark.sql import DataFrame
 
-_TRACKED: List[DataFrame] = []
 
-#: guards _CHECKPOINT_SEQ and _TRACKED_CHECKPOINTS: the docstrings advertise
-#: multi-consumer borrowed sessions, where concurrent register calls could
-#: otherwise interleave seq increment and append and hand two checkpoints
-#: the same seq — making one caller's [lo, hi) span release a neighbor's
-#: blocks, the exact hazard the span API exists to prevent (r12 review).
-_LEDGER_LOCK = threading.Lock()
+class Owner:
+    """The frames persisted and the localCheckpoint RDD ids registered
+    while this owner was current.
 
-#: ``(seq, internal-RDD id)`` pairs for frames returned by
-#: ``lineage_barrier``'s localCheckpoint branch. Ids, not DataFrame
-#: references: a strong ref would pin the JVM Dataset and block
-#: ContextCleaner's own cleanup, and a WEAK ref is dead at every real
-#: call site — operators drop the Python wrapper as soon as they return a
-#: derived frame, while the checkpoint blocks stay pinned by the derived
-#: plan's LogicalRDD (probed: wrapper GC does NOT free the blocks;
-#: unpersisting by id from ``getPersistentRDDs`` does, even after the
-#: wrapper is gone). RDD ids are monotonic per context and never reused,
-#: so a stale id simply misses in the persistent-RDD map. The seq is a
-#: MONOTONIC registration counter — marks are seqs, not list positions,
-#: so trimming the ledger can never shift an outstanding mark onto
-#: someone else's entries (r12 review finding).
-_TRACKED_CHECKPOINTS: List[tuple] = []
+    Checkpoints are held as internal-RDD ids, not DataFrame references: a
+    strong ref would pin the JVM Dataset and block ContextCleaner, and a
+    weak ref is dead at every real call site (operators drop the wrapper
+    as soon as they return a derived frame, while the derived plan's
+    LogicalRDD keeps the blocks pinned). Unpersisting by id from
+    ``getPersistentRDDs`` frees them even after the wrapper is gone; ids
+    are never reused, so a stale id simply misses.
+    """
 
-#: next registration seq; monotone for the life of the process
-_CHECKPOINT_SEQ = 0
+    def __init__(self) -> None:
+        self.lock = threading.Lock()
+        self.frames: List[DataFrame] = []
+        self.checkpoints: List[int] = []
 
-#: soft cap: entries are two ints, but a service that calls barrier-using
-#: operators forever without ever releasing shouldn't grow this unbounded.
-#: Trimmed entries' blocks become unreleasable through this ledger (the
-#: JVM GC + ContextCleaner path still applies) — the cap trades complete
-#: coverage for a bounded footprint.
-_CHECKPOINT_LEDGER_CAP = 100_000
+    def release_caches(self) -> int:
+        """Unpersist every owned frame, newest first; returns the count."""
+        with self.lock:
+            frames, self.frames = self.frames, []
+        released = 0
+        for df in reversed(frames):
+            try:
+                df.unpersist()
+                released += 1
+            except Exception:  # noqa: BLE001 — a dead session must not raise here
+                pass
+        return released
+
+    def release_checkpoints(self) -> int:
+        """Free the blocks of every owned checkpoint; returns the count.
+
+        The JVM handle is taken FIRST: with no context visible from this
+        thread, or a failing ``getPersistentRDDs``, the ids stay owned and
+        a later call releases them. Only then is the id list swapped out
+        under the lock, so concurrent releases never claim an id twice.
+        Ids ContextCleaner already reclaimed are skipped. Never raises.
+        """
+        from pyspark import SparkContext
+
+        # the blocks live on the CONTEXT (getActiveSession is thread-local
+        # and may be None for a borrowed session touched from another thread)
+        sc = SparkContext._active_spark_context
+        if sc is None:
+            return 0
+        try:
+            persistent = sc._jsc.getPersistentRDDs()
+        except Exception:  # noqa: BLE001 — transient failure: retry later
+            return 0
+        with self.lock:
+            ids, self.checkpoints = self.checkpoints, []
+        released = 0
+        for rid in ids:
+            try:
+                jrdd = persistent.get(rid)
+                if jrdd is None:  # ContextCleaner beat us to it
+                    continue
+                jrdd.unpersist(False)
+                released += 1
+            except Exception:  # noqa: BLE001
+                pass
+        return released
+
+
+_PROCESS = Owner()
+_CURRENT: contextvars.ContextVar[Owner] = contextvars.ContextVar(
+    "datacompy_spark_owner", default=_PROCESS
+)
+
+
+@contextlib.contextmanager
+def scope() -> Iterator[Owner]:
+    """Own every cache and checkpoint the enclosed calls create; release
+    them on exit, caches first, then checkpoints.
+
+    Only what is registered inside the scope, on this thread (or in a
+    context copied from it), is released. What was registered before or
+    after it, or on another thread while it was open (a new thread starts
+    with the default context), stays with the process owner. Checkpoints
+    the exit could not release (no visible SparkContext) pass to the
+    enclosing owner, so a later release still reaches them.
+
+    Exiting is DESTRUCTIVE for checkpoints: a localCheckpoint truncated
+    its frame's lineage, so any plan built over it fails once its blocks
+    are gone. Exit only after every result is fully materialized (e.g.
+    written to parquet). Operators must never open a scope internally,
+    because the lazy plans they return depend on those blocks.
+    """
+    owner = Owner()
+    token = _CURRENT.set(owner)
+    try:
+        yield owner
+    finally:
+        _CURRENT.reset(token)
+        owner.release_caches()
+        owner.release_checkpoints()
+        if owner.checkpoints:
+            outer = _CURRENT.get()
+            with outer.lock:
+                outer.checkpoints.extend(owner.checkpoints)
 
 
 def tracked_persist(df: DataFrame) -> DataFrame:
-    """``df.persist()`` + register in the ledger for :func:`release_caches`.
+    """``df.persist()``, owned by the current owner.
 
     Returns the persisted frame. Materialization stays lazy — the first
     action populates the cache, exactly as with a bare ``persist()``.
     """
     df = df.persist()
-    _TRACKED.append(df)
+    owner = _CURRENT.get()
+    with owner.lock:
+        owner.frames.append(df)
     return df
 
 
 def register_checkpoint(df: DataFrame) -> DataFrame:
-    """Record a localCheckpoint-ed frame's internal-RDD id for
-    :func:`release_checkpoints`. Lazy (eager=False) checkpoints register
-    too — localCheckpoint marks the RDD persisted immediately, so the id
-    is already in the persistent-RDD map before materialization."""
-    global _CHECKPOINT_SEQ
+    """Record a localCheckpoint-ed frame's internal-RDD id with the current
+    owner. Lazy (eager=False) checkpoints register too — localCheckpoint
+    marks the RDD persisted immediately, so the id is already in the
+    persistent-RDD map before materialization."""
     try:
         rdd_id = df._jdf.queryExecution().analyzed().rdd().id()
-    except Exception:  # noqa: BLE001 — ledger bookkeeping must never break the op
+    except Exception:  # noqa: BLE001 — bookkeeping must never break the op
         return df
-    with _LEDGER_LOCK:
-        _TRACKED_CHECKPOINTS.append((_CHECKPOINT_SEQ, rdd_id))
-        _CHECKPOINT_SEQ += 1
-        if len(_TRACKED_CHECKPOINTS) > _CHECKPOINT_LEDGER_CAP:
-            # drop the OLDEST entries; seqs are absolute, so outstanding
-            # marks stay valid (they simply match fewer remaining entries)
-            del _TRACKED_CHECKPOINTS[: _CHECKPOINT_LEDGER_CAP // 2]
+    owner = _CURRENT.get()
+    with owner.lock:
+        owner.checkpoints.append(rdd_id)
     return df
 
 
-def checkpoint_ledger_mark() -> int:
-    """Current registration seq — pass to :func:`release_checkpoints` to
-    release only checkpoints registered AT or AFTER this point (scoping a
-    destructive release to one operator call instead of the whole
-    process; a global release could kill checkpointed frames that
-    unrelated consumers in a borrowed session still need). For interleaved
-    consumers, bracket the span: take a mark before the call and one
-    after, and pass both (``release_checkpoints(m0, m1)``)."""
-    return _CHECKPOINT_SEQ
-
-
 def release_caches() -> int:
-    """Unpersist every ledger entry; returns how many frames were released.
+    """Unpersist every frame the process owner holds; returns the count.
 
     Safe to call at any time: a plan whose cache is dropped early is
     recomputed from lineage on its next action (slower, never wrong).
@@ -116,84 +178,16 @@ def release_caches() -> int:
     destructive (see :func:`release_checkpoints`), so it stays a separate,
     explicit call.
     """
-    released = 0
-    while _TRACKED:
-        df = _TRACKED.pop()
-        try:
-            df.unpersist()
-            released += 1
-        except Exception:  # noqa: BLE001 — a dead session must not raise here
-            pass
-    return released
+    return _PROCESS.release_caches()
 
 
-def release_checkpoints(mark: int = 0, until: int = None) -> int:
-    """Free the executor-local blocks of registered localCheckpoints.
+def release_checkpoints() -> int:
+    """Free the executor-local blocks of the process owner's checkpoints.
 
     UNLIKE :func:`release_caches` this is destructive: a localCheckpoint
     TRUNCATED its frame's lineage, so once the blocks are dropped the frame
     cannot be recomputed — any later action on any plan built over it
-    fails. Call it only when every consumer has fully materialized (e.g.
-    after writing the results to parquet), in long-lived/borrowed sessions
-    where waiting for the JVM GC + ContextCleaner to reclaim the blocks is
-    not acceptable.
-
-    ``mark``/``until`` are seqs from :func:`checkpoint_ledger_mark`:
-    entries with ``mark <= seq < until`` are released (``until=None``
-    means "to the end"). A consumer that may interleave with others must
-    bracket its own span — take one mark before its operator calls and
-    one after — so its release cannot touch checkpoints a later consumer
-    registered (r12 review finding: a bare suffix release is only safe
-    under strictly LIFO usage).
-
-    Blocks Spark's ContextCleaner already reclaimed are skipped (their id
-    is gone from the persistent-RDD map). Ledger entries are removed only
-    AFTER ``getPersistentRDDs`` succeeds: on the early-return paths (no
-    active context seen from this thread, or a transient JVM failure) the
-    span stays in the ledger, so a later release call can still free the
-    blocks — deleting first would make them permanently unreleasable
-    through the ledger (r12 review finding). Snapshot and retire happen in
-    ONE locked section keyed on the entries actually removed, so two
-    concurrent releases with overlapping spans can never both claim (and
-    both count) the same checkpoint — unpersist is idempotent, but the
-    returned counts must partition the work (r13 review finding). Never
-    raises either way.
+    fails. Call it only when every consumer has fully materialized; to
+    release only what your own calls created, use :func:`scope`.
     """
-    from pyspark import SparkContext
-
-    with _LEDGER_LOCK:  # cheap empty-span fast path; mutates nothing
-        hi = _CHECKPOINT_SEQ if until is None else until
-        if not any(mark <= seq < hi for seq, _ in _TRACKED_CHECKPOINTS):
-            return 0
-    # the blocks live on the CONTEXT (getActiveSession is thread-local and
-    # may be None for a borrowed session touched from another thread)
-    sc = SparkContext._active_spark_context
-    if sc is None:  # no context visible from here — keep the span queued
-        return 0
-    try:
-        persistent = sc._jsc.getPersistentRDDs()
-    except Exception:  # noqa: BLE001 — a dying context must not raise here
-        return 0  # transient failure — keep the span queued for retry
-    # JVM handle obtained — NOW it is safe to retire the span's entries.
-    # Snapshot + retire atomically: ids = exactly the entries THIS caller
-    # removed, so a concurrent overlapping release sees them already gone
-    # and cannot double-count.
-    with _LEDGER_LOCK:
-        hi = _CHECKPOINT_SEQ if until is None else until
-        ids = [rid for seq, rid in _TRACKED_CHECKPOINTS if mark <= seq < hi]
-        _TRACKED_CHECKPOINTS[:] = [
-            (seq, rid)
-            for seq, rid in _TRACKED_CHECKPOINTS
-            if not (mark <= seq < hi)
-        ]
-    released = 0
-    for rid in ids:
-        try:
-            jrdd = persistent.get(rid)
-            if jrdd is None:  # ContextCleaner beat us to it
-                continue
-            jrdd.unpersist(False)
-            released += 1
-        except Exception:  # noqa: BLE001
-            pass
-    return released
+    return _PROCESS.release_checkpoints()

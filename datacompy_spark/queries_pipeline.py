@@ -22,6 +22,7 @@ from datacompy_spark.operators import dedup as D
 from datacompy_spark.operators import profile as PR
 from datacompy_spark.operators import similarity as S
 from datacompy_spark.operators import textops as TO
+from datacompy_spark.plans.cache import tracked_persist
 from datacompy_spark.sources.loaders import load_table
 
 
@@ -3082,13 +3083,12 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
-    g = (
+    # both union branches read this aggregate; persist so the big
+    # orders⋈lineitem join runs once, not twice
+    g = tracked_persist(
         orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
         .groupBy("o_custkey", "l_suppkey")
         .agg(F.count(F.lit(1)).cast("long").alias("w"))
-        # both union branches read this aggregate; persist so the big
-        # orders⋈lineitem join runs once, not twice
-        .persist()
     )
     # r14 (guide §2.3, narrower shuffle keys): the walk runs on LONG node
     # ids — customer c → 2c, supplier s → 2s+1, a bijection onto the

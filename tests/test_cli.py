@@ -251,6 +251,19 @@ class TestOutputs:
         assert n <= budget, f"CLI ran {n} jobs, budget {budget}"
         assert n_mismatch > 0 and spark.read.parquet(mp).count() == n_mismatch
 
+    def test_compare_leaves_nothing_cached(self, pair, tmp_path, capsys, spark):
+        # the session is borrowed and outlives the command: neither the
+        # outer join (--cache-intermediates is on by default) nor the
+        # exported diff may stay cached after it returns
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        base = ["compare", "--left", pair[0], "--right", pair[1], "--on", "id",
+                "--quiet"]
+        for extra in ([], ["--export-mismatches", str(tmp_path / "mm")]):
+            spark.catalog.clearCache()
+            rc = main(base + extra)
+            assert rc == 1, capsys.readouterr().err
+            assert cache.isEmpty(), f"compare {extra} left a cache behind"
+
     def test_csv_inputs(self, tmp_path, capsys):
         lp, rp = tmp_path / "l.csv", tmp_path / "r.csv"
         lp.write_text("id,v\n1,a\n2,b\n")

@@ -74,9 +74,9 @@ class TestEditDistancePairs:
 
     def test_release_caches_drops_internal_persists(self, spark):
         """Operator-internal persisted frames (the normalized key frame
-        here) are registered in the tracked-cache ledger; release_caches()
-        unpersists them so long-lived sessions don't accumulate cache
-        entries across repeated calls."""
+        here) are owned by the process owner; release_caches() unpersists
+        them so long-lived sessions don't accumulate cache entries across
+        repeated calls."""
         from datacompy_spark import release_caches
         from datacompy_spark.plans import cache as cache_mod
 
@@ -85,20 +85,20 @@ class TestEditDistancePairs:
             [(1, "hello world"), (2, "hello worlds")], "doc_id long, text string"
         )
         pairs = edit_distance_pairs(df, "doc_id", "text", 2)
-        assert len(cache_mod._TRACKED) == 1
-        tracked = cache_mod._TRACKED[0]
+        assert len(cache_mod._PROCESS.frames) == 1
+        tracked = cache_mod._PROCESS.frames[0]
         pairs.count()  # materialize: cache is now populated and idle
         assert tracked.storageLevel.useMemory
         assert release_caches() == 1
         assert not tracked.storageLevel.useMemory
-        assert release_caches() == 0  # ledger drained
+        assert release_caches() == 0  # owner drained
         # the returned plan stays correct after the drop (recompute path)
         assert pairs.count() == 1
 
     def test_release_checkpoints_frees_blocks_after_wrapper_gc(self, spark):
         """The real call-site shape (r12 review finding): every operator
         drops its localCheckpoint WRAPPER immediately, returning a derived
-        frame whose JVM plan pins the blocks — so the ledger must hold
+        frame whose JVM plan pins the blocks — so the owner must hold
         internal-RDD ids, not (weak) DataFrame references, for
         release_checkpoints() to reclaim anything in a borrowed long-lived
         session (r11 ADVICE: release_caches never reached these blocks)."""
@@ -121,7 +121,7 @@ class TestEditDistancePairs:
 
         before = cached_blocks()
         barred = lineage_barrier(spark.range(1000), None, eager=True)
-        assert len(cache_mod._TRACKED_CHECKPOINTS) == 1
+        assert len(cache_mod._PROCESS.checkpoints) == 1
         derived = barred.agg(F.count(F.lit(1)).alias("n"))  # pins blocks JVM-side
         assert derived.collect()[0]["n"] == 1000
         del barred  # the wrapper dies at every real call site
@@ -129,41 +129,51 @@ class TestEditDistancePairs:
         assert cached_blocks() > before  # wrapper GC does NOT free the blocks
         assert release_checkpoints() == 1  # id-based release DOES
         assert cached_blocks() == before
-        assert release_checkpoints() == 0  # ledger drained
+        assert release_checkpoints() == 0  # owner drained
 
-    def test_release_checkpoints_mark_scopes_the_release(self, spark):
-        """release_checkpoints(mark, until) must release exactly the
-        [mark, until) span — a wider release could kill frames unrelated
-        consumers in a borrowed session registered before OR after the
-        caller's own span (the CLI --dsir path brackets its span this
-        way). Marks are registration seqs, not list positions, so they
-        survive ledger trims (r12 review finding)."""
-        from datacompy_spark import checkpoint_ledger_mark, release_checkpoints
+    def test_scope_releases_exactly_its_own_checkpoints(self, spark):
+        """A scope releases exactly what was registered inside it: a wider
+        release could kill frames unrelated consumers in a borrowed session
+        registered before it, or on another thread while it was open (the
+        CLI --dsir path brackets its call this way). Those neighbours stay
+        owed to the process owner."""
+        import threading
+
+        from datacompy_spark import release_checkpoints, scope
         from datacompy_spark.plans.barrier import lineage_barrier
 
         release_checkpoints()
         earlier = lineage_barrier(spark.range(500), None, eager=True)
         earlier.count()
-        lo = checkpoint_ledger_mark()
-        mine = lineage_barrier(spark.range(200), None, eager=True)
-        mine.count()
-        hi = checkpoint_ledger_mark()
-        # an interleaving consumer registers AFTER my span but BEFORE my
-        # release — non-LIFO order, the case a suffix release destroys
-        interleaved = lineage_barrier(spark.range(300), None, eager=True)
-        interleaved.count()
-        assert release_checkpoints(lo, hi) == 1  # exactly my span
-        # both neighbours survived the scoped release and still read
+        box = []
+        with scope() as owner:
+            mine = lineage_barrier(spark.range(200), None, eager=True)
+            mine.count()
+            # an interleaving consumer registers on another thread while
+            # the scope is open (a new thread starts with the default
+            # context, so it registers with the process owner)
+            t = threading.Thread(
+                target=lambda: box.append(
+                    lineage_barrier(spark.range(300), None, eager=True)
+                )
+            )
+            t.start()
+            t.join()
+            box[0].count()
+            (rid,) = owner.checkpoints  # only mine is owned by the scope
+        persistent = spark.sparkContext._jsc.getPersistentRDDs()
+        assert persistent.get(rid) is None  # released on exit
+        # both neighbours survived the scope and still read
         assert earlier.count() == 500
-        assert interleaved.count() == 300
+        assert box[0].count() == 300
         assert release_checkpoints() == 2  # the neighbours are still owed
 
     def test_release_keeps_span_queued_on_transient_failure(self, spark):
         """r12 review finding: release_checkpoints used to delete the
-        [mark, until) ledger entries BEFORE touching the JVM, so a
-        transiently-invisible context (borrowed session touched from an
-        odd thread state) made those blocks permanently unreleasable.
-        The span must survive the early return and release on retry."""
+        owned ids BEFORE touching the JVM, so a transiently-invisible
+        context (borrowed session touched from an odd thread state) made
+        those blocks permanently unreleasable. The ids must survive the
+        early return and release on retry."""
         import pyspark
 
         from datacompy_spark import release_checkpoints
@@ -173,26 +183,25 @@ class TestEditDistancePairs:
         release_checkpoints()  # drain other tests' leftovers
         barred = lineage_barrier(spark.range(400), None, eager=True)
         assert barred.count() == 400
-        assert len(cache_mod._TRACKED_CHECKPOINTS) == 1
+        assert len(cache_mod._PROCESS.checkpoints) == 1
         real_sc = pyspark.SparkContext._active_spark_context
         pyspark.SparkContext._active_spark_context = None
         try:
             assert release_checkpoints() == 0  # nothing released...
             # ...and — the fix — nothing forgotten either
-            assert len(cache_mod._TRACKED_CHECKPOINTS) == 1
+            assert len(cache_mod._PROCESS.checkpoints) == 1
         finally:
             pyspark.SparkContext._active_spark_context = real_sc
         assert release_checkpoints() == 1  # retry succeeds
-        assert len(cache_mod._TRACKED_CHECKPOINTS) == 0
+        assert len(cache_mod._PROCESS.checkpoints) == 0
 
     def test_concurrent_releases_partition_the_count(self, spark):
-        """r13 review finding: release_checkpoints dropped _LEDGER_LOCK
-        between snapshotting ids and retiring entries, so two concurrent
-        releases with overlapping spans could both snapshot the same ids
-        and both count the same checkpoint (unpersist is idempotent, so
-        only the COUNT was wrong). Snapshot + retire are now one locked
-        section keyed on the entries actually removed — the counts across
-        concurrent full-span releases must sum to exactly the number of
+        """release_checkpoints once dropped its lock between
+        snapshotting ids and retiring them, so two concurrent
+        releases could both snapshot the same ids and both count the same
+        checkpoint (unpersist is idempotent, so only the COUNT was wrong).
+        The id list is now swapped out under the owner's lock — the counts
+        across concurrent releases must sum to exactly the number of
         registered checkpoints."""
         import threading
 
@@ -223,14 +232,13 @@ class TestEditDistancePairs:
             f"concurrent releases double-counted: {counts} (sum "
             f"{sum(counts)}, expected {n})"
         )
-        assert release_checkpoints() == 0  # ledger drained exactly once
+        assert release_checkpoints() == 0  # owner drained exactly once
 
-    def test_register_checkpoint_seqs_unique_under_threads(self, spark):
-        """r12 review finding: the seq increment + ledger append were not
-        atomic, so concurrent register_checkpoint calls (the borrowed-
-        session multi-consumer story) could mint duplicate seqs — making
-        one caller's [lo, hi) span release a neighbor's checkpoint. The
-        module lock must keep seqs unique under real thread interleaving."""
+    def test_no_registration_lost_under_threads(self, spark):
+        """Concurrent register_checkpoint calls (the borrowed-session
+        multi-consumer story) append under the owner's lock: no
+        registration may be lost under real thread interleaving."""
+        import sys
         import threading
 
         from datacompy_spark import release_checkpoints
@@ -245,17 +253,38 @@ class TestEditDistancePairs:
                 cache_mod.register_checkpoint(df)
 
         threads = [threading.Thread(target=register_many) for _ in range(n_threads)]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
         try:
-            seqs = [seq for seq, _ in cache_mod._TRACKED_CHECKPOINTS]
-            assert len(seqs) == n_threads * per_thread
-            assert len(set(seqs)) == len(seqs), "duplicate seqs minted"
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=120)
+            assert not any(t.is_alive() for t in threads)
+            assert len(cache_mod._PROCESS.checkpoints) == n_threads * per_thread
         finally:
+            sys.setswitchinterval(interval)
             release_checkpoints()
             df.unpersist()
+
+    def test_scope_exit_failure_leaves_checkpoints_owed(self, spark):
+        """A scope whose exit cannot see a SparkContext must not forget its
+        checkpoints: they pass to the enclosing (process) owner, and a
+        later release frees them."""
+        import pyspark
+
+        from datacompy_spark import release_checkpoints, scope
+        from datacompy_spark.plans.barrier import lineage_barrier
+
+        release_checkpoints()
+        real_sc = pyspark.SparkContext._active_spark_context
+        try:
+            with scope():
+                lineage_barrier(spark.range(400), None, eager=True).count()
+                pyspark.SparkContext._active_spark_context = None
+        finally:
+            pyspark.SparkContext._active_spark_context = real_sc
+        assert release_checkpoints() == 1
 
 
 class TestRollingDrift:
