@@ -220,13 +220,6 @@ def build_parser() -> argparse.ArgumentParser:
         metavar="NAME",
         help="Spark application name (ref cli/parser.py --spark-app-name)",
     )
-    c.add_argument(
-        "--cache-intermediates",
-        action=argparse.BooleanOptionalAction,
-        default=True,
-        help="cache intermediate DataFrames (default: enabled); pass "
-        "--no-cache-intermediates where executor caching is unavailable",
-    )
     c.add_argument("--input-format", choices=["csv", "parquet", "json", "jsonl"])
     c.add_argument("--delimiter", default=",", help="CSV delimiter")
     c.add_argument("--assume-unique", action="store_true",
@@ -960,14 +953,12 @@ def run_compare(args) -> int:
                 assume_unique=args.assume_unique,
                 null_safe_join=not args.assume_no_null_keys,
                 dup_join_on_ordinal=args.dup_join_on_ordinal,
-                cache_intermediates=args.cache_intermediates,
             )
         except (ValueError, TypeError) as ex:
             raise CLIError(str(ex)) from ex
 
-        # the diff (and, with --cache-intermediates, the outer join) is
-        # persisted in a session that may outlive this command; the report
-        # and the exports are all that read it
+        # an export persists the diff in a session that may outlive this
+        # command; the report and the exports are all that read it
         try:
             if args.export_mismatches or args.export_unique:
                 # a report alone persists nothing; the exports re-read the
@@ -1470,8 +1461,8 @@ def _run_dedup_rewrite(spark, df, args) -> int:
 def _run_dedup_incremental(spark, batch, args) -> int:
     """`dedup --against CORPUS` / `dedup --ledger TABLE`: incremental
     batch-vs-corpus dedup (stateless corpus scan, or persistent hash
-    ledger). The caller owns the session lifecycle (this runs inside
-    run_dedup's try/finally)."""
+    ledger). The caller owns the session lifecycle and the ownership
+    scope (this runs inside run_dedup's ``with scope()``)."""
     import json
 
     from pyspark.sql import functions as F
@@ -1569,6 +1560,7 @@ def run_dedup(args) -> int:
     from pyspark.sql import functions as F
 
     from datacompy_spark.operators import dedup as D
+    from datacompy_spark.plans.cache import scope
     from datacompy_spark.sources.loaders import load
 
     # hive=--ledger: a persistent dedup ledger needs the derby
@@ -1595,70 +1587,74 @@ def run_dedup(args) -> int:
                 "--against/--ledger do not apply to the rewrite methods "
                 "(lines, spans)"
             )
-        if args.against or args.ledger:
-            return _run_dedup_incremental(spark, df, args)
-        if args.method in ("lines", "spans"):
-            return _run_dedup_rewrite(spark, df, args)
-        try:
-            if args.method == "exact":
-                members, _ = D.collapse_exact_content(df, args.id_col, args.text_col)
-                comp = (
-                    members.groupBy("chash")
-                    .agg(F.min("doc_id").alias("component"))
-                    .join(members, "chash")
-                    .select("doc_id", "component")
-                )
-                pairs = None
-            else:
-                if args.method == "minhash":
-                    pairs = D.minhash_lsh_pairs(
-                        df, args.id_col, args.text_col, threshold=args.threshold
+        # the scope releases the persists and localCheckpoint blocks the
+        # operator calls create, and nothing a neighbour in the borrowed
+        # session owns, once the verdict (and the pairs) are on disk
+        with scope():
+            if args.against or args.ledger:
+                return _run_dedup_incremental(spark, df, args)
+            if args.method in ("lines", "spans"):
+                return _run_dedup_rewrite(spark, df, args)
+            try:
+                if args.method == "exact":
+                    members, _ = D.collapse_exact_content(df, args.id_col, args.text_col)
+                    comp = (
+                        members.groupBy("chash")
+                        .agg(F.min("doc_id").alias("component"))
+                        .join(members, "chash")
+                        .select("doc_id", "component")
                     )
-                elif args.method == "simhash":
-                    pairs = D.simhash_near_dups(
-                        df, args.id_col, args.text_col, max_hamming=args.max_hamming
-                    )
-                elif args.method == "editdist":
-                    # pairs keep the dist column for --export-pairs, like
-                    # minhash keeps jaccard (connected_components only
-                    # reads id_a/id_b)
-                    pairs = D.edit_distance_pairs(
-                        df, args.id_col, args.text_col,
-                        max_dist=args.max_dist, prefix_len=args.prefix_len,
-                    )
-                else:  # embedding
-                    src, block = df, args.block_col
-                    if block is None:
-                        # single-block run: probe a constant column name
-                        # that cannot clash with caller data (same
-                        # case-insensitive discipline as the operators)
-                        block, t = "__dedup_block", 0
-                        lower = {c.lower() for c in df.columns}
-                        while block.lower() in lower:
-                            t += 1
-                            block = f"__dedup_block{t}"
-                        src = df.withColumn(block, F.lit(0))
-                    pairs = D.embedding_near_dups(
-                        src, args.id_col, args.vec_col, block,
-                        threshold=args.min_cosine,
-                    )
-                comp = D.assign_components(df, args.id_col, pairs)
-            verdict = D.dedup_verdict(comp)
-            verdict.write.mode("overwrite").parquet(args.verdict)
-            if args.export_pairs:
-                if pairs is None:
-                    raise CLIError(
-                        "--export-pairs does not apply to --method exact "
-                        "(exact dedup emits no pair list)"
-                    )
-                pairs.write.mode("overwrite").parquet(args.export_pairs)
-            written = spark.read.parquet(args.verdict)
-            n_docs = written.count()
-            n_survivors = written.filter(F.col("is_survivor")).count()
-        except CLIError:
-            raise
-        except Exception as ex:
-            raise CLIError(str(ex)) from ex
+                    pairs = None
+                else:
+                    if args.method == "minhash":
+                        pairs = D.minhash_lsh_pairs(
+                            df, args.id_col, args.text_col, threshold=args.threshold
+                        )
+                    elif args.method == "simhash":
+                        pairs = D.simhash_near_dups(
+                            df, args.id_col, args.text_col, max_hamming=args.max_hamming
+                        )
+                    elif args.method == "editdist":
+                        # pairs keep the dist column for --export-pairs, like
+                        # minhash keeps jaccard (connected_components only
+                        # reads id_a/id_b)
+                        pairs = D.edit_distance_pairs(
+                            df, args.id_col, args.text_col,
+                            max_dist=args.max_dist, prefix_len=args.prefix_len,
+                        )
+                    else:  # embedding
+                        src, block = df, args.block_col
+                        if block is None:
+                            # single-block run: probe a constant column name
+                            # that cannot clash with caller data (same
+                            # case-insensitive discipline as the operators)
+                            block, t = "__dedup_block", 0
+                            lower = {c.lower() for c in df.columns}
+                            while block.lower() in lower:
+                                t += 1
+                                block = f"__dedup_block{t}"
+                            src = df.withColumn(block, F.lit(0))
+                        pairs = D.embedding_near_dups(
+                            src, args.id_col, args.vec_col, block,
+                            threshold=args.min_cosine,
+                        )
+                    comp = D.assign_components(df, args.id_col, pairs)
+                verdict = D.dedup_verdict(comp)
+                verdict.write.mode("overwrite").parquet(args.verdict)
+                if args.export_pairs:
+                    if pairs is None:
+                        raise CLIError(
+                            "--export-pairs does not apply to --method exact "
+                            "(exact dedup emits no pair list)"
+                        )
+                    pairs.write.mode("overwrite").parquet(args.export_pairs)
+                written = spark.read.parquet(args.verdict)
+                n_docs = written.count()
+                n_survivors = written.filter(F.col("is_survivor")).count()
+            except CLIError:
+                raise
+            except Exception as ex:
+                raise CLIError(str(ex)) from ex
         if not args.quiet:
             print(
                 json.dumps(

@@ -799,7 +799,6 @@ def ks_drift(
     new: DataFrame,
     value_col: str,
     num_partitions: Optional[int] = None,
-    checkpoint_dir: Optional[str] = None,
 ) -> DataFrame:
     """EXACT two-sample Kolmogorov–Smirnov statistic between two snapshots
     of a numeric column — the classic distribution-drift test to sit next
@@ -849,7 +848,6 @@ def ks_drift(
         order_cols=["v"],
         sum_cols=["ca", "cb"],
         num_partitions=num_partitions,
-        checkpoint_dir=checkpoint_dir,
     )
     cum = cum.select(F.col("ca_cum").alias("cum_a"), F.col("cb_cum").alias("cum_b"))
     # totals from the BARRIERED ranged frame (r14): aggregating the cumsum

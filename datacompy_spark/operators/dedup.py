@@ -140,7 +140,6 @@ def minhash_lsh_pairs(
     bands: int = 4,
     shingle_k: int = 3,
     threshold: float = 0.5,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash + LSH banding, Jaccard-verified.
 
@@ -232,9 +231,8 @@ def minhash_lsh_pairs(
     # lineage barrier: without it Catalyst pushes the threshold filter
     # into the join condition and the set intersection evaluates TWICE
     # per pair (condition + projection). Rows here are 4 ints — cheap to
-    # materialize at any scale. checkpoint_dir upgrades to a reliable
-    # checkpoint (node-loss-safe on a real cluster).
-    scored = lineage_barrier(scored, checkpoint_dir, eager=False)
+    # materialize at any scale.
+    scored = lineage_barrier(scored, eager=False)
     rep_pairs = scored.select(
         "id_a",
         "id_b",
@@ -575,7 +573,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     direct_block_cap: int = 1000,
-    checkpoint_dir: str | None = None,
     pair_pred=None,
 ) -> DataFrame:
     """Exact character-n-gram Jaccard pairs (≥ ``threshold``) within a
@@ -676,10 +673,12 @@ def ngram_jaccard_pairs(
         scored = direct.unionAll(filtered)
 
     return (
-        # lineage barrier (see minhash note): keeps the threshold filter from
-        # being pushed into the joins, which would re-run array_intersect per
-        # pair in the join condition
-        lineage_barrier(scored, checkpoint_dir, eager=False)
+        # lineage barrier: without it Catalyst pushes the jaccard filter
+        # below this projection, and the intersect pandas UDF plans twice per
+        # route (one ArrowEvalPython under the Filter, one above it for the
+        # projection): a second Python-worker pass over every candidate pair.
+        # Deleting it needs the threshold applied inside the scorer itself.
+        lineage_barrier(scored, eager=False)
         .select(
             "id_a",
             "id_b",
@@ -700,7 +699,6 @@ def fuzzy_key_match(
     n: int = 3,
     threshold: float = 0.6,
     direct_block_cap: int = 1000,
-    checkpoint_dir: str | None = None,
     method: str = "ngram",
     max_dist: int = 2,
     prefix_len: int = 64,
@@ -763,14 +761,13 @@ def fuzzy_key_match(
     if method == "editdist":
         pairs = edit_distance_pairs(
             tagged, "__kid", "__fk", max_dist=max_dist, prefix_len=prefix_len,
-            checkpoint_dir=checkpoint_dir, pair_pred=cross_side,
+            pair_pred=cross_side,
         )
         score = "dist"
     else:
         pairs = ngram_jaccard_pairs(
             tagged, "__kid", "__fk", "__blk", n=n, threshold=threshold,
-            direct_block_cap=direct_block_cap, checkpoint_dir=checkpoint_dir,
-            pair_pred=cross_side,
+            direct_block_cap=direct_block_cap, pair_pred=cross_side,
         )
         score = "jaccard"
     return pairs.filter(
@@ -819,7 +816,6 @@ def _driver_union_find(spark, edge_rows, dtype) -> DataFrame:
 def connected_components(
     pairs: DataFrame,
     max_iter: int = 15,
-    checkpoint_dir: str | None = None,
     driver_cap: int = 1_000_000,
     stats_out: dict | None = None,
 ) -> DataFrame:
@@ -852,11 +848,8 @@ def connected_components(
       transitive closure, so an unconverged return would silently
       diverge).
 
-    Both routes return identical labels. ``checkpoint_dir`` upgrades the
-    doubling-round barriers from ``localCheckpoint`` to reliable
-    ``checkpoint`` (a lost executor then costs a re-read, not the whole
-    iterative job). Output: (node, component) where component is the
-    cluster's minimum id.
+    Both routes return identical labels. Output: (node, component) where
+    component is the cluster's minimum id.
 
     ``stats_out`` (observability hook, used by ``tools/scale_probe.py``):
     when a dict is passed, it is filled with ``route`` (driver|distributed),
@@ -927,7 +920,7 @@ def connected_components(
             # doubling step references `stepped` twice, so without a barrier
             # the logical plan doubles every iteration (exponential analysis
             # cost)
-            stepped = lineage_barrier(stepped, checkpoint_dir)
+            stepped = lineage_barrier(stepped)
             # pointer doubling: replace each label with its label's label, so
             # long chains collapse in O(log diameter) rounds, not O(diameter)
             lab_of_lab = stepped.select(
@@ -995,7 +988,6 @@ def assign_components(
     id_col: str,
     pairs: DataFrame,
     max_iter: int = 15,
-    checkpoint_dir: str | None = None,
     driver_cap: int = 1_000_000,
 ) -> DataFrame:
     """Component id for EVERY row of ``df``: near-dup cluster minimum for
@@ -1004,7 +996,6 @@ def assign_components(
     cc = connected_components(
         pairs,
         max_iter=max_iter,
-        checkpoint_dir=checkpoint_dir,
         driver_cap=driver_cap,
     )
     return (
@@ -1041,7 +1032,6 @@ def embedding_near_dups(
     block_col: str,
     threshold: float = 0.99,
     n_projections: int = 1,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Cosine near-duplicate pairs (≥ ``threshold``) among embeddings,
     blocked by ``block_col`` and SUB-bucketed by ``n_projections`` quantized
@@ -1162,7 +1152,7 @@ def embedding_near_dups(
     )
     # barrier: otherwise the threshold filter is pushed into the join and the
     # dot product evaluates twice per pair
-    return lineage_barrier(scored, checkpoint_dir, eager=False).filter(
+    return lineage_barrier(scored, eager=False).filter(
         F.col("cos_sim") >= F.lit(threshold)
     )
 
@@ -1346,7 +1336,6 @@ def incremental_dedup(
     shingle_k: int = 3,
     threshold: float = 0.5,
     broadcast_batch: bool = True,
-    checkpoint_dir: str | None = None,
     max_dist: int = 2,
     prefix_len: int = 64,
 ) -> DataFrame:
@@ -1445,7 +1434,6 @@ def incremental_dedup(
             edit_distance_cross(
                 batch, corpus, id_col, text_col,
                 max_dist=max_dist, prefix_len=prefix_len,
-                checkpoint_dir=checkpoint_dir,
                 broadcast_left=broadcast_batch,
                 _left_keys=bkeys,
             )
@@ -1454,7 +1442,7 @@ def incremental_dedup(
         )
         pairs = edit_distance_pairs(
             batch, id_col, text_col, max_dist=max_dist, prefix_len=prefix_len,
-            checkpoint_dir=checkpoint_dir, _keys=bkeys,
+            _keys=bkeys,
         )
         dup_ids = rep_hits.select(F.col("doc_id").alias("id_a"))
         clean_pairs = pairs.join(dup_ids, "id_a", "left_anti").join(
@@ -1466,7 +1454,6 @@ def incremental_dedup(
             ),
             "doc_id",
             clean_pairs,
-            checkpoint_dir=checkpoint_dir,
         )
         clean = comp.select(
             "doc_id",
@@ -1514,7 +1501,7 @@ def incremental_dedup(
             ["band", "bkey"],
         )
     ).select("b_id", "c_id").dropDuplicates(["b_id", "c_id"])
-    cand = lineage_barrier(cand, checkpoint_dir, eager=False)
+    cand = lineage_barrier(cand, eager=False)
     sh_b = bbase.select(F.col("doc_id").alias("b_id"), "shingles")
     # corpus pass 2 (verification) computes shingles ONLY for candidate
     # docs: semi-join the raw corpus down to the candidate id set FIRST,
@@ -1536,7 +1523,7 @@ def incremental_dedup(
             (F.size("shingles") + F.size("c_shingles")).alias("n_total"),
         )
     )
-    scored = lineage_barrier(scored, checkpoint_dir, eager=False)
+    scored = lineage_barrier(scored, eager=False)
     rep_hits = (
         scored.select(
             "b_id",
@@ -1569,7 +1556,6 @@ def incremental_dedup(
         bands=bands,
         shingle_k=shingle_k,
         threshold=threshold,
-        checkpoint_dir=checkpoint_dir,
     )
     dup_ids = member_hits.select(F.col("doc_id").alias("id_a"))
     clean_pairs = pairs.join(dup_ids, "id_a", "left_anti").join(
@@ -1581,7 +1567,6 @@ def incremental_dedup(
         ),
         "doc_id",
         clean_pairs,
-        checkpoint_dir=checkpoint_dir,
     )
     clean = comp.select(
         "doc_id",
@@ -1817,9 +1802,9 @@ def incremental_dedup_with_ledger(
     # table refreshes/invalidates every cached plan that READS that table,
     # so a persisted-but-lineage-bearing verdict frame would silently
     # recompute against the grown ledger on the caller's first action and
-    # flip its own 'new' rows to 'dup_corpus'. localCheckpoint severs the
+    # flip its own 'new' rows to 'dup_corpus'. The barrier severs the
     # table reference entirely — the verdicts are fixed before the append.
-    out = lineage_barrier(out, None, eager=True)
+    out = lineage_barrier(out, eager=True)
     additions = out.filter(F.col("verdict") == "new").select(
         "chash", F.col("doc_id").alias("corpus_id")
     )
@@ -1843,7 +1828,6 @@ def incremental_minhash_ledger(
     num_buckets: int = 64,
     update_ledger: bool = True,
     broadcast_batch: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """NEAR-duplicate incremental dedup against PERSISTENT MinHash state —
     the stateful completion of :func:`incremental_dedup`'s minhash mode,
@@ -1908,7 +1892,7 @@ def incremental_minhash_ledger(
             .select("b_id", "c_id")
             .dropDuplicates(["b_id", "c_id"])
         )
-        cand = lineage_barrier(cand, checkpoint_dir, eager=False)
+        cand = lineage_barrier(cand, eager=False)
         # verification reads ONLY candidate sketches from the ledger: the
         # candidate id set is batch-driven and small, so it broadcasts and
         # the sketch table streams past it unshuffled
@@ -1970,7 +1954,6 @@ def incremental_minhash_ledger(
         bands=bands,
         shingle_k=shingle_k,
         threshold=threshold,
-        checkpoint_dir=checkpoint_dir,
     )
     dup_ids = member_hits.select(F.col("doc_id").alias("id_a"))
     clean_pairs = pairs.join(dup_ids, "id_a", "left_anti").join(
@@ -1982,7 +1965,6 @@ def incremental_minhash_ledger(
         ),
         "doc_id",
         clean_pairs,
-        checkpoint_dir=checkpoint_dir,
     )
     clean = comp.select(
         "doc_id",
@@ -2005,7 +1987,7 @@ def incremental_minhash_ledger(
     # verdicts fixed BEFORE either append (see docstring); survivors are
     # always exact-content representatives, so their band and sketch rows
     # come straight from the cached batch sketch pass
-    out = lineage_barrier(out, None, eager=True)
+    out = lineage_barrier(out, eager=True)
     new_ids = out.filter(F.col("verdict") == "new").select("doc_id")
     _save_ledger(
         bband.join(F.broadcast(new_ids), "doc_id")
@@ -2120,7 +2102,6 @@ def edit_distance_cross(
     text_col: str,
     max_dist: int = 2,
     prefix_len: int = 64,
-    checkpoint_dir: str | None = None,
     broadcast_left: bool = False,
     _left_keys: DataFrame | None = None,
 ) -> DataFrame:
@@ -2225,7 +2206,7 @@ def edit_distance_cross(
         )
     )
     return (
-        lineage_barrier(verified, checkpoint_dir, eager=False)
+        lineage_barrier(verified, eager=False)
         .filter(F.col("dist") >= 0)
         .select("id_l", "id_r", "dist")
     )
@@ -2237,7 +2218,6 @@ def edit_distance_pairs(
     text_col: str,
     max_dist: int = 2,
     prefix_len: int = 64,
-    checkpoint_dir: str | None = None,
     pair_pred=None,
     _keys: DataFrame | None = None,
 ) -> DataFrame:
@@ -2364,7 +2344,7 @@ def edit_distance_pairs(
         )
     )
     return (
-        lineage_barrier(verified, checkpoint_dir, eager=False)
+        lineage_barrier(verified, eager=False)
         .filter(F.col("dist") >= 0)
         .select("id_a", "id_b", "dist")
     )
@@ -2379,7 +2359,6 @@ def knn_jaccard_graph(
     n: int = 3,
     threshold: float = 0.2,
     direct_block_cap: int = 1000,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Document kNN graph by exact character-n-gram Jaccard: each
     document's top-``k`` most similar neighbors among the ≥ ``threshold``
@@ -2413,7 +2392,6 @@ def knn_jaccard_graph(
         n=n,
         threshold=threshold,
         direct_block_cap=direct_block_cap,
-        checkpoint_dir=checkpoint_dir,
     )
     sym = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst"), "jaccard"

@@ -32,7 +32,6 @@ def pagerank(
     weight_col: str | None = None,
     iterations: int = 3,
     damping_pct: int = 85,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Weighted PageRank over a directed edge list, unrolled for a fixed
     number of iterations. Returns ``(node, rank_q)`` with ranks on the
@@ -58,8 +57,7 @@ def pagerank(
     set is persisted once, and each iteration's rank frontier passes
     through a :func:`lineage_barrier` — without that, unrolled iteration
     ``i`` physically re-derives iterations ``0..i-1`` from the raw scans
-    (the static plan grows multiplicatively). Pass ``checkpoint_dir`` on
-    long runs on real clusters for fault-tolerant barriers.
+    (the static plan grows multiplicatively).
 
     ``damping_pct`` is an integer percentage (default 85 ≈ the classic
     0.85) so the damping step stays in exact integer arithmetic.
@@ -137,7 +135,7 @@ def pagerank(
                 ).alias("rank_q"),
             )
         )
-        ranks = lineage_barrier(ranks, checkpoint_dir, eager=False)
+        ranks = lineage_barrier(ranks, eager=False)
     return ranks
 
 

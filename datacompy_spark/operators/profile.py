@@ -695,7 +695,6 @@ def exact_quantiles_distributed(
     value_col: str,
     probs: Sequence[float],
     num_partitions: Optional[int] = None,
-    checkpoint_dir: Optional[str] = None,
 ) -> DataFrame:
     """EXACT linear-interpolated quantiles of a numeric column with NO
     per-partition value buffering — the 100 TB-safe exact path that
@@ -736,7 +735,6 @@ def exact_quantiles_distributed(
         order_cols=["v"],
         sum_cols=["c"],
         num_partitions=num_partitions,
-        checkpoint_dir=checkpoint_dir,
     )
     # total from the BARRIERED ranged frame (r14): an agg over `cum` would
     # re-run the offsets join + per-partition sort/window machinery just to
@@ -835,7 +833,6 @@ def group_quantiles_distributed(
     value_col: str,
     probs: Sequence[float],
     num_partitions: Optional[int] = None,
-    checkpoint_dir: Optional[str] = None,
 ) -> DataFrame:
     """Per-group :func:`exact_quantiles_distributed`: exact interpolated
     quantiles of ``value_col`` within every ``group_cols`` combination —
@@ -872,7 +869,6 @@ def group_quantiles_distributed(
         sum_cols=["c"],
         group_cols=groups,
         num_partitions=num_partitions,
-        checkpoint_dir=checkpoint_dir,
     )
     # per-group totals from the barriered ranged frame (r14; see
     # exact_quantiles_distributed — same reasoning, grouped)
@@ -1033,7 +1029,6 @@ def mad_outlier_summary(
         df.select(
             *groups, F.col(value_col).cast("double").alias("__v")
         ).filter(F.col("__v").isNotNull()),
-        checkpoint_dir=None,
         eager=False,
     )
     med = group_quantiles_distributed(
@@ -1052,7 +1047,6 @@ def mad_outlier_summary(
             "__med",
             F.abs(F.col("__v") - F.col("__med")).alias("__d"),
         ),
-        checkpoint_dir=None,
         eager=False,
     )
     mad = group_quantiles_distributed(

@@ -590,7 +590,6 @@ def pack_sequences(
     group_col: str,
     token_budget: int = 512,
     num_partitions: int | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Streaming sequence packing: documents fill fixed token-budget bins in
     id order within each group (e.g. source shard) — ``bin_id`` is the bin
@@ -617,8 +616,7 @@ def pack_sequences(
     The range-partitioned frame passes through a lineage barrier because it
     is referenced by both the subtotal aggregate and the final projection:
     range bounds are sampled and ``spark_partition_id`` is physical, so the
-    two branches must read the SAME materialized partitioning.
-    ``checkpoint_dir`` upgrades the barrier to a reliable checkpoint."""
+    two branches must read the SAME materialized partitioning."""
     from datacompy_spark.plans.partitioning import distributed_prefix_sum
 
     n_tok = whitespace_token_count(F.col(text_col)).cast("long")
@@ -633,7 +631,6 @@ def pack_sequences(
         sum_cols=["n_tokens"],
         group_cols=["grp"],
         num_partitions=num_partitions,
-        checkpoint_dir=checkpoint_dir,
     ).result
     return cum.select(
         "doc_id",
@@ -1827,7 +1824,6 @@ def tfidf_top_terms(
         .filter(F.col("term") != "")
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf")),
-        checkpoint_dir=None,
         eager=False,
     )
     n_docs = df.select(F.countDistinct(F.col(id_col)).alias("n_docs"))
@@ -2353,7 +2349,6 @@ def decontaminate_editdist(
     eval_text_col: str | None = None,
     max_dist: int = 2,
     prefix_len: int = 64,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Typo-level benchmark decontamination: one verdict row per training
     document — ``(doc_id, contaminated, eval_match, dist)`` — flagging
@@ -2378,8 +2373,7 @@ def decontaminate_editdist(
     )
     pairs = edit_distance_cross(
         eval_sel, train, id_col, text_col,
-        max_dist=max_dist, prefix_len=prefix_len,
-        checkpoint_dir=checkpoint_dir, broadcast_left=True,
+        max_dist=max_dist, prefix_len=prefix_len, broadcast_left=True,
     )
     best = (
         pairs.groupBy(F.col("id_r").alias("doc_id"))
@@ -2450,7 +2444,6 @@ def npmi_collocations(
         .filter(F.col("w") != "")
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cu")),
-        checkpoint_dir=None,
         eager=False,
     )
     n_u = uni.agg(F.sum("cu").alias("n_u"))
@@ -2661,7 +2654,6 @@ def dsir_weights(
             F.coalesce("ct", F.lit(0)).cast("long").alias("ct"),
             F.coalesce("cs", F.lit(0)).cast("long").alias("cs"),
         ),
-        checkpoint_dir=None,
         eager=False,
     )
     totals = vocab.agg(

@@ -111,7 +111,6 @@ def distributed_prefix_sum(
     sum_cols,
     group_cols=(),
     num_partitions: int | None = None,
-    checkpoint_dir: str | None = None,
 ) -> "PrefixSum":
     """Inclusive running sums of ``sum_cols`` ordered by ``order_cols``
     (within ``group_cols``) as a DISTRIBUTED two-phase prefix sum — the
@@ -152,7 +151,6 @@ def distributed_prefix_sum(
         df.repartitionByRange(n_parts, *group_cols, *order_cols).withColumn(
             "__psum_pid", F.spark_partition_id()
         ),
-        checkpoint_dir,
         eager=False,
     )
     w_prior = (

@@ -27,6 +27,29 @@ def pair(tmp_path_factory, spark):
     return lp, rp
 
 
+@pytest.fixture()
+def li_files(tmp_path, lineitem):
+    """Two lineitem parquet files, every 7th order's tax shifted; returns
+    (left path, right path, join keys)."""
+    from pyspark.sql import functions as F
+
+    lp, rp = str(tmp_path / "l.parquet"), str(tmp_path / "r.parquet")
+    lineitem.write.parquet(lp)
+    tax = F.col("l_tax")
+    lineitem.withColumn(
+        "l_tax", F.when(F.col("l_orderkey") % 7 == 0, tax + 0.01).otherwise(tax)
+    ).write.parquet(rp)
+    return lp, rp, ["l_orderkey", "l_linenumber"]
+
+
+def _jobs(spark, fn):
+    """The number of Spark jobs ``fn()`` ran, from the status tracker."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None) or [])
+    fn()
+    return len(set(tracker.getJobIdsForGroup(None) or []) - before)
+
+
 class TestExitCodes:
     def test_differ_exits_1(self, pair, capsys):
         rc = main(["compare", "--left", pair[0], "--right", pair[1], "--on", "id"])
@@ -102,10 +125,15 @@ class TestExitCodes:
     def test_cache_and_app_name_flags(self, pair, capsys):
         rc = main(
             ["compare", "--left", pair[0], "--right", pair[0], "--on", "id",
-             "--no-cache-intermediates", "--spark-app-name", "my-compare",
-             "--quiet"]
+             "--spark-app-name", "my-compare", "--quiet"]
         )
         assert rc == 0
+        # the compare never persists the outer join, so there is no flag
+        # to switch it off
+        with pytest.raises(SystemExit) as exc:
+            main(["compare", "--left", pair[0], "--right", pair[0], "--on", "id",
+                  "--no-cache-intermediates", "--quiet"])
+        assert exc.value.code == 2
 
     def test_ignore_unique_rows_excludes_uniques(self, pair, capsys):
         rc = main(
@@ -193,29 +221,15 @@ class TestOutputs:
         assert sorted((r["side"], r["id"]) for r in uq.collect()) == [("left", 3), ("right", 4)]
 
     def test_export_mismatches_shares_the_report_pass(
-        self, tmp_path, capsys, spark, lineitem, monkeypatch
+        self, tmp_path, capsys, spark, li_files, monkeypatch
     ):
         # a report alone persists nothing, so the CLI populates the diff
         # before it builds the report: the report reads the populated diff
         # and the export reuses it. Job budget: the two loads, a populate, a
         # report and the export write.
-        from pyspark.sql import functions as F
-
         from datacompy_spark import SparkCompare
 
-        lp, rp = str(tmp_path / "l.parquet"), str(tmp_path / "r.parquet")
-        lineitem.write.parquet(lp)
-        tax = F.col("l_tax")
-        lineitem.withColumn(
-            "l_tax", F.when(F.col("l_orderkey") % 7 == 0, tax + 0.01).otherwise(tax)
-        ).write.parquet(rp)
-        keys = ["l_orderkey", "l_linenumber"]
-        tracker = spark.sparkContext.statusTracker()
-
-        def jobs(fn):
-            before = set(tracker.getJobIdsForGroup(None) or [])
-            fn()
-            return len(set(tracker.getJobIdsForGroup(None) or []) - before)
+        lp, rp, keys = li_files
 
         built = []
 
@@ -224,13 +238,13 @@ class TestOutputs:
                 spark, spark.read.parquet(lp), spark.read.parquet(rp), join_columns=keys
             ))
 
-        budget = jobs(build)
+        budget = _jobs(spark, build)
         populated, reported = built[0], built
         build()
         budget += (
-            jobs(populated._ensure_cached)
-            + jobs(reported[1].build_report_data)
-            + jobs(lambda: populated.all_mismatch().write.parquet(str(tmp_path / "ref")))
+            _jobs(spark, populated._ensure_cached)
+            + _jobs(spark, reported[1].build_report_data)
+            + _jobs(spark, lambda: populated.all_mismatch().write.parquet(str(tmp_path / "ref")))
         )
         n_mismatch = populated.all_mismatch().count()
         populated.uncache()
@@ -246,15 +260,29 @@ class TestOutputs:
         mp = str(tmp_path / "mm")
         args = ["compare", "--left", lp, "--right", rp, "--on", ",".join(keys),
                 "--quiet", "--export-mismatches", mp]
-        n = jobs(lambda: main(args))
+        n = _jobs(spark, lambda: main(args))
         assert saw_diff == [True], "the CLI report ran before the diff was populated"
         assert n <= budget, f"CLI ran {n} jobs, budget {budget}"
         assert n_mismatch > 0 and spark.read.parquet(mp).count() == n_mismatch
 
+    def test_compare_runs_the_report_jobs_only(self, spark, li_files):
+        # without exports the CLI compare is the two loads plus the
+        # one-action report, exactly what the API's default constructor
+        # runs: persisting the outer join would add a job nothing reads
+        from datacompy_spark import SparkCompare
+
+        lp, rp, keys = li_files
+        budget = _jobs(spark, lambda: SparkCompare(
+            spark, spark.read.parquet(lp), spark.read.parquet(rp),
+            join_columns=keys,
+        ).build_report_data())
+        args = ["compare", "--left", lp, "--right", rp, "--on", ",".join(keys),
+                "--quiet"]
+        assert [_jobs(spark, lambda: main(args)) for _ in range(2)] == [budget] * 2
+
     def test_compare_leaves_nothing_cached(self, pair, tmp_path, capsys, spark):
-        # the session is borrowed and outlives the command: neither the
-        # outer join (--cache-intermediates is on by default) nor the
-        # exported diff may stay cached after it returns
+        # the session is borrowed and outlives the command: the exported
+        # diff may not stay cached after it returns
         cache = spark._jsparkSession.sharedState().cacheManager()
         base = ["compare", "--left", pair[0], "--right", pair[1], "--on", "id",
                 "--quiet"]
@@ -293,7 +321,9 @@ class TestParserConstructorDrift:
         "ignore_case": "ignore_case",
         "cast_column_names_lower": "no_lowercase_columns",
         "custom_comparators": None,  # Python-API-only extension hook
-        "cache_intermediates": "cache_intermediates",
+        # the report and the exports read only the diff, so persisting
+        # the outer join never pays in a CLI run; Python API only
+        "cache_intermediates": None,
         "dup_order_by": None,        # niche; Python API only for now
         "assume_unique": "assume_unique",
         "null_safe_join": "assume_no_null_keys",  # CLI flag is the negation
@@ -486,6 +516,26 @@ class TestDedupCommand:
         assert v[1]["is_survivor"] and not v[2]["is_survivor"]
         assert v[1]["component"] == v[2]["component"] == 1
         assert v[3]["is_survivor"] and v[3]["n_docs"] == 1
+
+    def test_dedup_leaves_nothing_cached(self, documents, tmp_path, capsys, spark):
+        # the session is borrowed and outlives the command: no operator
+        # cache or localCheckpoint a dedup method made may stay behind.
+        # The test's own scope catches anything leaked to the enclosing
+        # owner, and frees it on exit.
+        from datacompy_spark import scope
+
+        p = str(tmp_path / "docs.parquet")
+        documents.orderBy("doc_id").limit(200).select("doc_id", "text").write.parquet(p)
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        for method in ("exact", "minhash", "simhash"):
+            spark.catalog.clearCache()
+            with scope() as mine:
+                rc = main(["dedup", "--input", p, "--method", method,
+                           "--verdict", str(tmp_path / method), "--quiet"])
+                assert rc == 0, capsys.readouterr().err
+                assert cache.isEmpty(), f"dedup --method {method} left a cache"
+                assert len(mine.frames) == 0, method
+                assert mine.release_checkpoints() == 0, method
 
     def test_spans_rewrite_mode(self, tmp_path, capsys, spark):
         p = str(tmp_path / "docs.parquet")

@@ -120,7 +120,7 @@ class TestEditDistancePairs:
             )
 
         before = cached_blocks()
-        barred = lineage_barrier(spark.range(1000), None, eager=True)
+        barred = lineage_barrier(spark.range(1000), eager=True)
         assert len(cache_mod._PROCESS.checkpoints) == 1
         derived = barred.agg(F.count(F.lit(1)).alias("n"))  # pins blocks JVM-side
         assert derived.collect()[0]["n"] == 1000
@@ -143,18 +143,18 @@ class TestEditDistancePairs:
         from datacompy_spark.plans.barrier import lineage_barrier
 
         release_checkpoints()
-        earlier = lineage_barrier(spark.range(500), None, eager=True)
+        earlier = lineage_barrier(spark.range(500), eager=True)
         earlier.count()
         box = []
         with scope() as owner:
-            mine = lineage_barrier(spark.range(200), None, eager=True)
+            mine = lineage_barrier(spark.range(200), eager=True)
             mine.count()
             # an interleaving consumer registers on another thread while
             # the scope is open (a new thread starts with the default
             # context, so it registers with the process owner)
             t = threading.Thread(
                 target=lambda: box.append(
-                    lineage_barrier(spark.range(300), None, eager=True)
+                    lineage_barrier(spark.range(300), eager=True)
                 )
             )
             t.start()
@@ -181,7 +181,7 @@ class TestEditDistancePairs:
         from datacompy_spark.plans.barrier import lineage_barrier
 
         release_checkpoints()  # drain other tests' leftovers
-        barred = lineage_barrier(spark.range(400), None, eager=True)
+        barred = lineage_barrier(spark.range(400), eager=True)
         assert barred.count() == 400
         assert len(cache_mod._PROCESS.checkpoints) == 1
         real_sc = pyspark.SparkContext._active_spark_context
@@ -211,7 +211,7 @@ class TestEditDistancePairs:
         release_checkpoints()  # drain other tests' leftovers
         n = 6
         frames = [
-            lineage_barrier(spark.range(100 + i), None, eager=True)
+            lineage_barrier(spark.range(100 + i), eager=True)
             for i in range(n)
         ]
         for f in frames:
@@ -280,7 +280,7 @@ class TestEditDistancePairs:
         real_sc = pyspark.SparkContext._active_spark_context
         try:
             with scope():
-                lineage_barrier(spark.range(400), None, eager=True).count()
+                lineage_barrier(spark.range(400), eager=True).count()
                 pyspark.SparkContext._active_spark_context = None
         finally:
             pyspark.SparkContext._active_spark_context = real_sc

@@ -448,20 +448,32 @@ class TestTextOps:
         assert cc == {i: 1 for i in range(1, 9)}
 
     def test_reliable_checkpoint_dir(self, spark, tmp_path):
-        # a long chain forces the doubling rounds; with checkpoint_dir the
-        # barrier must be a RELIABLE checkpoint (files on disk), not
-        # executor-local blocks
+        # a session checkpoint directory turns every barrier into a
+        # RELIABLE checkpoint (files on disk, not executor-local blocks).
+        # A long chain forces the doubling rounds; all of them write under
+        # the one <dir>/<uuid> subdirectory Spark made for the context.
+        import os
+
         ckpt = str(tmp_path / "ckpt")
         pairs = spark.createDataFrame(
             [(i, i + 1, 0.9) for i in range(1, 40)],
             "id_a bigint, id_b bigint, jaccard double",
         )
-        cc = {r["node"]: r["component"]
-              for r in D.connected_components(
-                  pairs, checkpoint_dir=ckpt, driver_cap=0).collect()}
+        sc = spark.sparkContext
+        sc.setCheckpointDir(ckpt)
+        try:
+            stats = {}
+            cc = {r["node"]: r["component"]
+                  for r in D.connected_components(
+                      pairs, driver_cap=0, stats_out=stats).collect()}
+        finally:
+            # the session is shared: a directory left set would turn every
+            # later barrier in the run into a reliable checkpoint
+            sc.setCheckpointDir(None)
+        assert sc.getCheckpointDir() is None
         assert set(cc.values()) == {1} and len(cc) == 40
-        import os
-
+        assert stats["route"] == "distributed" and stats["rounds"] > 1
+        assert len(os.listdir(ckpt)) == 1, os.listdir(ckpt)
         written = [
             os.path.join(root, f)
             for root, _, files in os.walk(ckpt)

@@ -562,6 +562,48 @@ class TestDedupScaleShapes:
             assert abs(got[k] - want[k]) < 1e-9
             assert abs(got_prefix[k] - want[k]) < 1e-9
 
+    def test_ngram_barrier_keeps_one_intersect_pass_per_route(
+        self, spark, monkeypatch
+    ):
+        # without the barrier Catalyst pushes the jaccard threshold filter
+        # below the scoring projection, and the intersect pandas UDF then
+        # plans twice per route: one ArrowEvalPython under the Filter, one
+        # above it for the projection — a second Python-worker pass over
+        # every candidate pair
+        from datacompy_spark import scope
+        from datacompy_spark.operators import dedup as D
+        from datacompy_spark.plans import barrier as B
+
+        rows = [
+            (i, f"the quick brown fox {i % 5} jumps over {i % 3}", i % 2)
+            for i in range(40)
+        ]
+        df = spark.createDataFrame(rows, "doc_id bigint, text string, blk int")
+
+        def n_intersect(qe):
+            return qe.optimizedPlan().toString().count(
+                "ArrowEvalPython [_sorted_intersect_batch"
+            )
+
+        def pairs(cap):
+            return D.ngram_jaccard_pairs(
+                df, "doc_id", "text", "blk", threshold=0.5, direct_block_cap=cap
+            )
+
+        with scope():
+            # cap 1000: direct route only; cap 10: both routes, unioned
+            for cap, routes in ((1000, 1), (10, 2)):
+                monkeypatch.setattr(B, "PLAN_AUDIT_SINK", [])
+                out = pairs(cap)
+                (fenced,) = B.PLAN_AUDIT_SINK
+                monkeypatch.setattr(B, "PLAN_AUDIT_SINK", None)
+                assert n_intersect(fenced) == routes, cap
+                assert n_intersect(out._jdf.queryExecution()) == 0, cap
+                monkeypatch.setattr(D, "lineage_barrier", lambda d, *a, **k: d)
+                unfenced = pairs(cap)
+                monkeypatch.undo()
+                assert n_intersect(unfenced._jdf.queryExecution()) == 2 * routes, cap
+
     def test_ngram_candidates_pruned_within_block(self, spark):
         # 120 documents share ONE block but have pairwise-disjoint gram sets:
         # the prefix-filter join must emit ZERO candidates where a naive
@@ -841,7 +883,7 @@ class TestPlanAuditBarrierVisibility:
         B.PLAN_AUDIT_SINK = sink = []
         try:
             pre = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
-            barred = B.lineage_barrier(pre, None, eager=True)
+            barred = B.lineage_barrier(pre, eager=True)
             out = barred.agg(F.sum("count").alias("s"))
         finally:
             B.PLAN_AUDIT_SINK = None
@@ -860,7 +902,7 @@ class TestPlanAuditBarrierVisibility:
         from datacompy_spark.plans import barrier as B
 
         assert B.PLAN_AUDIT_SINK is None
-        df = B.lineage_barrier(spark.range(10), None, eager=True)
+        df = B.lineage_barrier(spark.range(10), eager=True)
         assert df.count() == 10
 
     def test_cached_build_counted_once_across_fragments(self, spark):
@@ -879,10 +921,10 @@ class TestPlanAuditBarrierVisibility:
         B.PLAN_AUDIT_SINK = sink = []
         try:
             a = B.lineage_barrier(
-                shared.filter(F.col("k") < 3), None, eager=True
+                shared.filter(F.col("k") < 3), eager=True
             )
             b = B.lineage_barrier(
-                shared.filter(F.col("k") >= 3), None, eager=True
+                shared.filter(F.col("k") >= 3), eager=True
             )
             a.count(), b.count()
         finally:

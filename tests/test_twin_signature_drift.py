@@ -27,11 +27,6 @@ TWIN_MODULES = [
 #: Spark-only defaulted params that are INTERFACE shape, not result-shaping
 #: knobs. Every entry needs a reason; anything not listed fails the test.
 ALLOWED_SPARK_ONLY = {
-    "pagerank": {
-        # execution-plan knob (fault-tolerant lineage barriers), not a
-        # result-shaping parameter — the oracle has no notion of it
-        "checkpoint_dir",
-    },
     "decontaminate": {
         # the SQL twin expresses the eval set as a predicate over ONE
         # table, so a separate eval-side column name cannot exist there;
