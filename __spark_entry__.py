@@ -5,8 +5,9 @@
     comparison core (``cmp_*``) plus the LLM-data-pipeline extensions
     (dedup/ANN/text/corpus/drift/CDC/graph/multimodal/streaming
     families). Ordering matters: the driver sweep samples the FIRST 50
-    names per round (rotation in ``datacompy_spark/queries.py::
-    _SWEEP_FIRST``).
+    names per round, so the registry is ordered oldest driver evidence
+    first, computed at import from the ``CORRECTNESS_r*.json`` history
+    (``datacompy_spark/queries.py::_sweep_order``).
 ``oracle_sql()`` — DuckDB-equivalent ANSI SQL for each query (121/121).
 
 Implementations live in ``datacompy_spark/queries.py`` and

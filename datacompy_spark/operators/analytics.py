@@ -798,7 +798,6 @@ def ks_drift(
     old: DataFrame,
     new: DataFrame,
     value_col: str,
-    num_partitions: Optional[int] = None,
 ) -> DataFrame:
     """EXACT two-sample Kolmogorov–Smirnov statistic between two snapshots
     of a numeric column — the classic distribution-drift test to sit next
@@ -844,10 +843,7 @@ def ks_drift(
         )
     )
     cum, ranged = distributed_prefix_sum(
-        pooled,
-        order_cols=["v"],
-        sum_cols=["ca", "cb"],
-        num_partitions=num_partitions,
+        pooled, order_cols=["v"], sum_cols=["ca", "cb"]
     )
     cum = cum.select(F.col("ca_cum").alias("cum_a"), F.col("cb_cum").alias("cum_b"))
     # totals from the BARRIERED ranged frame (r14): aggregating the cumsum

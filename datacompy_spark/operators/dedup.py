@@ -1335,7 +1335,6 @@ def incremental_dedup(
     bands: int = 4,
     shingle_k: int = 3,
     threshold: float = 0.5,
-    broadcast_batch: bool = True,
     max_dist: int = 2,
     prefix_len: int = 64,
 ) -> DataFrame:
@@ -1357,13 +1356,11 @@ def incremental_dedup(
 
     ``method='exact'`` (normalized-content hash):
       the batch collapses to its distinct hashes FIRST (a batch-sized
-      aggregate), and when ``broadcast_batch`` (default) that distinct-hash
-      set is broadcast against the corpus scan — the 100 TB corpus is
-      STREAMED past a hash set, never shuffled; only matching corpus rows
-      survive into a batch-sized min-aggregate that is broadcast back.
-      Zero wide dependencies on the corpus. With ``broadcast_batch=False``
-      (a batch too big for the broadcast threshold) the same plan runs as
-      shuffle joins and AQE picks the strategy.
+      aggregate), and that distinct-hash set is broadcast against the
+      corpus scan — the 100 TB corpus is STREAMED past a hash set, never
+      shuffled; only matching corpus rows survive into a batch-sized
+      min-aggregate that is broadcast back. Zero wide dependencies on the
+      corpus.
 
     ``method='minhash'`` (near-duplicate semantics, MinHash+LSH banding):
       batch representatives (exact-content collapse first, the hot-bucket
@@ -1381,13 +1378,12 @@ def incremental_dedup(
       on the normalized ``prefix_len``-char key):
       batch↔corpus pairs via :func:`edit_distance_cross` — the corpus
       contributes two narrow streams (segment index + probe substrings)
-      joined against the batch side (broadcast when ``broadcast_batch``)
-      and never self-pairs; batch-internal dups among corpus-clean docs
-      via the self-join + connected components, exactly the minhash tail.
+      joined against the broadcast batch side and never self-pairs;
+      batch-internal dups among corpus-clean docs via the self-join +
+      connected components, exactly the minhash tail.
     """
     if method not in ("exact", "minhash", "editdist"):
         raise ValueError(f"unknown incremental-dedup method: {method!r}")
-    maybe_bcast = F.broadcast if broadcast_batch else (lambda df: df)
 
     if method == "exact":
         # NULL-text rows hash to the sentinel, not NULL: an inner equi-join
@@ -1406,12 +1402,12 @@ def incremental_dedup(
         # corpus scan → broadcast semi-join on the batch's distinct hashes →
         # min per hash: the only corpus-wide stage, and it is narrow
         matches = (
-            corpus_hashed.join(maybe_bcast(bk.select("chash")), "chash")
+            corpus_hashed.join(F.broadcast(bk.select("chash")), "chash")
             .groupBy("chash")
             .agg(F.min("corpus_id").alias("corpus_match"))
         )
-        out = bh.join(maybe_bcast(matches), "chash", "left").join(
-            maybe_bcast(bk), "chash"
+        out = bh.join(F.broadcast(matches), "chash", "left").join(
+            F.broadcast(bk), "chash"
         )
         return out.select(
             "doc_id",
@@ -1434,7 +1430,7 @@ def incremental_dedup(
             edit_distance_cross(
                 batch, corpus, id_col, text_col,
                 max_dist=max_dist, prefix_len=prefix_len,
-                broadcast_left=broadcast_batch,
+                broadcast_left=True,
                 _left_keys=bkeys,
             )
             .groupBy(F.col("id_l").alias("doc_id"))
@@ -1646,7 +1642,6 @@ def ledger_probe(
     ledger: DataFrame,
     id_col: str,
     text_col: str,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """PURE verdict core of the exact-hash ledger: probe a ``(chash,
     corpus_id)`` ledger frame with a batch and return one row per batch
@@ -1659,24 +1654,23 @@ def ledger_probe(
     it directly with staged frames so the verdict/replay contract earns a
     DuckDB-oracle row without needing catalog state.
 
-    Plan shape: the batch collapses to its distinct hashes first, and
-    with ``broadcast_batch`` (default) the ledger scan streams past a
-    broadcast of that hash set — the standing state is never shuffled.
+    Plan shape: the batch collapses to its distinct hashes first, and the
+    ledger scan streams past a broadcast of that hash set — the standing
+    state is never shuffled.
     """
-    maybe_bcast = F.broadcast if broadcast_batch else (lambda df: df)
     bh = batch.select(
         F.col(id_col).alias("doc_id"),
         _content_hash(F.col(text_col)).alias("chash"),
     )
     bk = bh.groupBy("chash").agg(F.min("doc_id").alias("batch_keep"))
     matches = (
-        ledger.join(maybe_bcast(bk.select("chash")), "chash")
+        ledger.join(F.broadcast(bk.select("chash")), "chash")
         .groupBy("chash")
         .agg(F.min("corpus_id").alias("corpus_match"))
     )
     return (
-        bh.join(maybe_bcast(matches), "chash", "left")
-        .join(maybe_bcast(bk), "chash")
+        bh.join(F.broadcast(matches), "chash", "left")
+        .join(F.broadcast(bk), "chash")
         .select(
             "doc_id",
             "chash",
@@ -1746,7 +1740,6 @@ def incremental_dedup_with_ledger(
     text_col: str,
     num_buckets: int = 64,
     update_ledger: bool = True,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """Exact incremental dedup against a PERSISTENT content-hash ledger —
     the stateful completion of :func:`incremental_dedup`: instead of
@@ -1767,10 +1760,8 @@ def incremental_dedup_with_ledger(
     idempotence a replayed ingest job needs.
 
     Bucketing on ``chash`` means the probe join never shuffles the ledger:
-    with ``broadcast_batch`` (default) the batch's distinct hashes
-    broadcast against the ledger scan; with it off, only the batch side
-    shuffles to the ledger's bucketing. Appends preserve the bucket layout
-    (``bucketBy`` + ``saveAsTable`` append).
+    the batch's distinct hashes broadcast against the ledger scan. Appends
+    preserve the bucket layout (``bucketBy`` + ``saveAsTable`` append).
 
     A minhash-semantics ledger would store ``(band, bkey, doc_id)`` rows
     instead — same pattern, kept out of scope here because near-dup state
@@ -1792,9 +1783,7 @@ def incremental_dedup_with_ledger(
             ),
         )
 
-    out = ledger_probe(
-        batch, ledger, id_col, text_col, broadcast_batch=broadcast_batch
-    )
+    out = ledger_probe(batch, ledger, id_col, text_col)
     if not update_ledger:
         return out.drop("chash")
 
@@ -1827,7 +1816,6 @@ def incremental_minhash_ledger(
     threshold: float = 0.5,
     num_buckets: int = 64,
     update_ledger: bool = True,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """NEAR-duplicate incremental dedup against PERSISTENT MinHash state —
     the stateful completion of :func:`incremental_dedup`'s minhash mode,
@@ -1837,7 +1825,7 @@ def incremental_minhash_ledger(
     * ``{prefix}_bands``    — (bkey, band, doc_id), bucketed on ``bkey``:
       the LSH candidate index. An ingest probes it with the batch's band
       keys; bucketing means the probe streams the index without shuffling
-      it (batch side broadcasts by default).
+      it (the batch side broadcasts).
     * ``{prefix}_shingles`` — (doc_id, shash), bucketed on ``doc_id``: the
       verification sketches (hashed-shingle sets, not raw shingle strings —
       candidate Jaccard over 60-bit md5 hashes equals shingle Jaccard up to
@@ -1860,7 +1848,6 @@ def incremental_minhash_ledger(
     ``new`` rows to ``dup_corpus`` (same hazard as the exact ledger).
     Replaying an ingest is then idempotent: every doc reports dup_corpus.
     """
-    maybe_bcast = F.broadcast if broadcast_batch else (lambda df: df)
     bands_table = f"{ledger_prefix}_bands"
     shingles_table = f"{ledger_prefix}_shingles"
     if update_ledger:
@@ -1882,7 +1869,7 @@ def incremental_minhash_ledger(
 
     if spark.catalog.tableExists(bands_table):
         cand = (
-            maybe_bcast(bband.select(F.col("doc_id").alias("b_id"), "band", "bkey"))
+            F.broadcast(bband.select(F.col("doc_id").alias("b_id"), "band", "bkey"))
             .join(
                 spark.table(bands_table).select(
                     F.col("doc_id").alias("c_id"), "band", "bkey"
@@ -1897,14 +1884,14 @@ def incremental_minhash_ledger(
         # candidate id set is batch-driven and small, so it broadcasts and
         # the sketch table streams past it unshuffled
         sh_c = spark.table(shingles_table).join(
-            maybe_bcast(cand.select(F.col("c_id").alias("doc_id")).dropDuplicates()),
+            F.broadcast(cand.select(F.col("c_id").alias("doc_id")).dropDuplicates()),
             "doc_id",
             "left_semi",
         ).select(F.col("doc_id").alias("c_id"), F.col("shash").alias("c_shash"))
         sh_b = bbase.select(F.col("doc_id").alias("b_id"), "shash")
         inter = F.size(F.array_intersect(F.col("shash"), F.col("c_shash")))
         rep_hits = (
-            cand.join(maybe_bcast(sh_b), "b_id")
+            cand.join(F.broadcast(sh_b), "b_id")
             .join(sh_c, "c_id")
             .select(
                 "b_id",

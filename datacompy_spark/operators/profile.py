@@ -694,7 +694,6 @@ def exact_quantiles_distributed(
     df: DataFrame,
     value_col: str,
     probs: Sequence[float],
-    num_partitions: Optional[int] = None,
 ) -> DataFrame:
     """EXACT linear-interpolated quantiles of a numeric column with NO
     per-partition value buffering — the 100 TB-safe exact path that
@@ -730,12 +729,7 @@ def exact_quantiles_distributed(
         .groupBy("v")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    cum, ranged = distributed_prefix_sum(
-        counts,
-        order_cols=["v"],
-        sum_cols=["c"],
-        num_partitions=num_partitions,
-    )
+    cum, ranged = distributed_prefix_sum(counts, order_cols=["v"], sum_cols=["c"])
     # total from the BARRIERED ranged frame (r14): an agg over `cum` would
     # re-run the offsets join + per-partition sort/window machinery just to
     # sum a column the barrier already holds; an agg over `counts` would
@@ -793,7 +787,6 @@ def winsorize(
     p_lo: float = 0.01,
     p_hi: float = 0.99,
     out_col: Optional[str] = None,
-    num_partitions: Optional[int] = None,
 ) -> DataFrame:
     """Clamp a numeric column to its exact ``[p_lo, p_hi]`` quantiles —
     the outlier-capping cleanup step before scaling/featurizing — using
@@ -805,9 +798,7 @@ def winsorize(
     if not 0.0 <= p_lo < p_hi <= 1.0:
         raise ValueError("winsorize needs 0 <= p_lo < p_hi <= 1")
     out_col = out_col or f"{value_col}_w"
-    q = exact_quantiles_distributed(
-        df, value_col, [p_lo, p_hi], num_partitions=num_partitions
-    )
+    q = exact_quantiles_distributed(df, value_col, [p_lo, p_hi])
     bounds = q.agg(
         F.max(F.when(F.col("prob") == p_lo, F.col("quantile"))).alias("__q_lo"),
         F.max(F.when(F.col("prob") == p_hi, F.col("quantile"))).alias("__q_hi"),
@@ -832,7 +823,6 @@ def group_quantiles_distributed(
     group_cols: Sequence[str],
     value_col: str,
     probs: Sequence[float],
-    num_partitions: Optional[int] = None,
 ) -> DataFrame:
     """Per-group :func:`exact_quantiles_distributed`: exact interpolated
     quantiles of ``value_col`` within every ``group_cols`` combination —
@@ -868,7 +858,6 @@ def group_quantiles_distributed(
         order_cols=["v"],
         sum_cols=["c"],
         group_cols=groups,
-        num_partitions=num_partitions,
     )
     # per-group totals from the barriered ranged frame (r14; see
     # exact_quantiles_distributed — same reasoning, grouped)
@@ -940,7 +929,6 @@ def winsorize_by_group(
     p_lo: float = 0.01,
     p_hi: float = 0.99,
     out_col: Optional[str] = None,
-    num_partitions: Optional[int] = None,
 ) -> DataFrame:
     """:func:`winsorize` with per-group bounds from
     :func:`group_quantiles_distributed` — the per-source outlier caps a
@@ -953,9 +941,7 @@ def winsorize_by_group(
         raise ValueError("winsorize_by_group needs 0 <= p_lo < p_hi <= 1")
     groups = list(group_cols)
     out_col = out_col or f"{value_col}_w"
-    q = group_quantiles_distributed(
-        df, groups, value_col, [p_lo, p_hi], num_partitions=num_partitions
-    )
+    q = group_quantiles_distributed(df, groups, value_col, [p_lo, p_hi])
     bounds = q.groupBy(*groups).agg(
         F.max(F.when(F.col("prob") == p_lo, F.col("quantile"))).alias("__q_lo"),
         F.max(F.when(F.col("prob") == p_hi, F.col("quantile"))).alias("__q_hi"),
@@ -991,7 +977,6 @@ def mad_outlier_summary(
     group_cols: Sequence[str],
     value_col: str,
     k: float = 3.0,
-    num_partitions: Optional[int] = None,
 ) -> DataFrame:
     """Per-group robust-outlier summary via median absolute deviation:
     ``(group…, n, median, mad, n_outliers)`` where a value is an outlier
@@ -1031,9 +1016,7 @@ def mad_outlier_summary(
         ).filter(F.col("__v").isNotNull()),
         eager=False,
     )
-    med = group_quantiles_distributed(
-        vals, groups, "__v", [0.5], num_partitions=num_partitions
-    ).select(
+    med = group_quantiles_distributed(vals, groups, "__v", [0.5]).select(
         *[F.col(g).alias(f"__mg_{g}") for g in groups],
         F.col("quantile").alias("__med"),
     )
@@ -1049,9 +1032,7 @@ def mad_outlier_summary(
         ),
         eager=False,
     )
-    mad = group_quantiles_distributed(
-        dev, groups, "__d", [0.5], num_partitions=num_partitions
-    ).select(
+    mad = group_quantiles_distributed(dev, groups, "__d", [0.5]).select(
         *[F.col(g).alias(f"__ag_{g}") for g in groups],
         F.col("quantile").alias("__mad"),
     )

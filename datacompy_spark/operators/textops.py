@@ -24,18 +24,6 @@ from datacompy_spark.functions.text import (
 from datacompy_spark.plans.cache import tracked_persist
 
 
-def _shuffle_partition_count(spark, default: int = 200) -> int:
-    """``spark.sql.shuffle.partitions`` as an int, tolerating the ``'auto'``
-    value some AQE-managed platforms report (this build rejects setting it,
-    but the engine must not crash where it is legal) — fall back to the
-    cluster's default parallelism."""
-    raw = spark.conf.get("spark.sql.shuffle.partitions", str(default))
-    try:
-        return int(raw)
-    except (TypeError, ValueError):
-        return spark.sparkContext.defaultParallelism
-
-
 def text_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-document quality statistics (length, lexical diversity,
     punctuation, stopword hits)."""
@@ -589,7 +577,6 @@ def pack_sequences(
     text_col: str,
     group_col: str,
     token_budget: int = 512,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Streaming sequence packing: documents fill fixed token-budget bins in
     id order within each group (e.g. source shard) — ``bin_id`` is the bin
@@ -630,7 +617,6 @@ def pack_sequences(
         order_cols=["doc_id"],
         sum_cols=["n_tokens"],
         group_cols=["grp"],
-        num_partitions=num_partitions,
     ).result
     return cum.select(
         "doc_id",

@@ -16,21 +16,30 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame
 
 
-def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def shuffle_partition_count(spark) -> int:
+    """``spark.sql.shuffle.partitions`` as an int, tolerating the ``'auto'``
+    value some AQE-managed platforms report (this build rejects setting it,
+    but the engine must not crash where it is legal) — fall back to the
+    cluster's default parallelism."""
+    raw = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        return int(raw)
+    except (TypeError, ValueError):
+        return spark.sparkContext.defaultParallelism
+
+
+def fan_out(df: DataFrame) -> DataFrame:
     """Repartition ``df`` round-robin ONLY if its current partition count is
-    below ``min_parts`` (default: the session's default parallelism, i.e.
-    the core count in local mode). Safe before any partitioning-insensitive
-    stage (per-row maps, blocked self-joins that shuffle on their own keys
-    anyway)."""
+    below the session's default parallelism (the core count in local
+    mode). Safe before any partitioning-insensitive stage (per-row maps,
+    blocked self-joins that shuffle on their own keys anyway)."""
     if not hasattr(df, "_jdf"):
         # Spark Connect exposes neither sparkContext nor .rdd, so the
-        # partition-count probe is impossible there. An EXPLICIT min_parts
-        # is still honored (repartition needs no probe); the default-guard
-        # case is skipped rather than injecting a blind shuffle into every
-        # plan. No exception swallowing: classic-Spark probe errors surface.
-        return df.repartition(min_parts) if min_parts else df
-    spark = df.sparkSession
-    target = min_parts or spark.sparkContext.defaultParallelism
+        # partition-count probe is impossible there: the guard is skipped
+        # rather than injecting a blind shuffle into every plan. No
+        # exception swallowing: classic-Spark probe errors surface.
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
     # getNumPartitions builds the physical RDD plan but launches no job
     if df.rdd.getNumPartitions() >= target:
         return df
@@ -110,14 +119,14 @@ def distributed_prefix_sum(
     order_cols,
     sum_cols,
     group_cols=(),
-    num_partitions: int | None = None,
 ) -> "PrefixSum":
     """Inclusive running sums of ``sum_cols`` ordered by ``order_cols``
     (within ``group_cols``) as a DISTRIBUTED two-phase prefix sum — the
     shared machinery under ``pack_sequences`` (token budgets) and
     ``ks_drift`` (ECDFs). Returns :class:`PrefixSum` — ``result`` carries
     one ``<col>_cum`` column per sum col; ``ranged`` is the materialized
-    middle frame for order-independent totals.
+    middle frame for order-independent totals. The range partition count
+    is the session's ``spark.sql.shuffle.partitions``.
 
     Why not a plain window: ``ORDER BY`` with no partition key (or one hot
     group) sorts EVERYTHING into one task. Here: range partition by
@@ -142,11 +151,7 @@ def distributed_prefix_sum(
     group_cols = list(group_cols)
     order_cols = list(order_cols)
     sum_cols = list(sum_cols)
-    n_parts = num_partitions
-    if n_parts is None:
-        from datacompy_spark.operators.textops import _shuffle_partition_count
-
-        n_parts = _shuffle_partition_count(df.sparkSession)
+    n_parts = shuffle_partition_count(df.sparkSession)
     ranged = lineage_barrier(
         df.repartitionByRange(n_parts, *group_cols, *order_cols).withColumn(
             "__psum_pid", F.spark_partition_id()

@@ -23,7 +23,10 @@ ordinal path explicitly with a total-order tiebreak.
 
 from __future__ import annotations
 
+import json
+import re
 from functools import reduce
+from pathlib import Path
 from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession
@@ -635,113 +638,46 @@ FROM s"""
 
 from datacompy_spark.queries_pipeline import PIPELINE_ORACLES, PIPELINE_QUERIES  # noqa: E402
 
-# Rebuilt each round (VERDICT r7/r8 rule): the driver's CORRECTNESS sweep
-# samples exactly the FIRST 50 registry names once per round, so the prefix
-# rotates: never-driver-green names lead, then names whose most-recent
-# driver-green row is OLDEST. The registry holds 121 names and the window
-# 50, so a full rotation takes 3 rounds (the contract is stated in
-# COVERAGE.md; tests/test_entry.py enforces oldest-first against the
-# recorded CORRECTNESS_r*.json history).
-#
-# Round-15 window (r14 sweep was all-green — sixth consecutive — so ages
-# are exactly 21 names @ r12, 50 @ r13, 50 @ r14; no new registrations).
-# Order: the 21 r12-age names deferred by the r14 window lead (their r12
-# evidence is the registry's oldest), then the first 29 of the 50
-# r13-age names in registry order fill the window to 50. The remaining
-# 21 r13-age names (tail below, position 51+) defer to r16 and MUST lead
-# _SWEEP_FIRST then; every deferred name still gets a fresh in-round
-# local oracle pass via check_oracles --unswept. Registry holds at 121
-# names, so a full rotation remains 3 rounds (50+50+21) — COVERAGE.md
-# contract unchanged. This window also driver-re-checks several
-# r14-changed paths (cmp_unique_rows, quantiles_distributed, winsorize*,
-# group_quantiles, dedup_minhash_pairs, tfidf_top_terms, editdist family)
-# whose r14 green was builder-local only (r14 verdict item 10).
-_SWEEP_FIRST = [
-    # newest driver evidence r12 — the 21 names deferred by the r14 window
-    "events_retention",
-    "top_parts_per_supplier",
-    "drift_histogram",
-    "tfidf_top_terms",
-    "chunk_documents",
-    "embedding_quantize",
-    "events_multi_rollup",
-    "events_missing_periods",
-    "knn_int8",
-    "ledger_replay",
-    "minhash_index",
-    "gopher_quality",
-    "dup_rate_by_source",
-    "dedup_editdist",
-    "rolling_drift",
-    "quantiles_distributed",
-    "winsorize",
-    "fuzzy_key_editdist",
-    "group_quantiles",
-    "winsorize_by_group",
-    "decontaminate_editdist",
-    # newest driver evidence r13 — first 29 of the 50 r13-age names in
-    # registry order fill the window to 50
-    "cmp_column_stats",
-    "cmp_unique_rows",
-    "cmp_all_mismatch",
-    "cmp_matches_summary",
-    "cmp_dupes_by_ordinal",
-    "cmp_string_timestamp_cast",
-    "cmp_bool_numeric",
-    "cmp_array_equal",
-    "cmp_null_keys",
-    "dedup_exact",
-    "dedup_minhash_pairs",
-    "dedup_simhash",
-    "dedup_ngram_jaccard",
-    "dedup_embedding_cosine",
-    "knn_cosine_bruteforce",
-    "knn_lsh",
-    "text_stats",
-    "lang_id",
-    "token_count",
-    "doc_fingerprint",
-    "events_hourly_rollup",
-    "events_sessionize",
-    "cmp_ignore_flags",
-    "stream_hourly_profile",
-    "knn_ivf",
-    "cmp_rel_tol",
-    "cmp_decimal",
-    "word_frequencies",
-    "events_asof_join",
-    # ---- position 51+: the 21 r13-age names that did not fit this
-    # round's 50 slots — they MUST lead the r16 window (their r13
-    # evidence stays the registry's oldest after the r15 sweep) ----
-    "knn_recall",
-    "source_cap",
-    "join_cardinality",
-    "ngram_dup_profile",
-    "ngram_novelty",
-    "fuzzy_key_match",
-    "dedup_incremental",
-    "dataset_checksum",
-    "checksum_diff_by_month",
-    "shard_corpus",
-    "dedup_semantic",
-    "line_dedup",
-    "npmi_collocations",
-    "mad_outliers",
-    "events_attribution",
-    "temperature_mix",
-    "dsir_weights",
-    "quantile_drift",
-    "k_anonymity",
-    "knn_jaccard_graph",
-    "char_entropy",
-]
+def _newest_green_rounds() -> Dict[str, int]:
+    """Newest driver round in which each query was green, read from the
+    ``CORRECTNESS_r<N>.json`` history files in the repository root. Green
+    is ``rows_match`` with no ``err`` and a ``hash_match`` that is not
+    ``False`` (a failed value hash is a red row). Files whose names do not
+    end in ``_r<N>.json`` and files that do not parse are skipped."""
+    newest: Dict[str, int] = {}
+    for path in Path(__file__).resolve().parents[1].glob("CORRECTNESS_r*.json"):
+        m = re.search(r"_r(\d+)\.json$", path.name)
+        if m is None:
+            continue
+        try:
+            rows = json.loads(path.read_text())
+        except (OSError, ValueError):
+            continue
+        if not isinstance(rows, dict):
+            continue
+        rnd = int(m.group(1))
+        for name, row in rows.items():
+            if (
+                isinstance(row, dict)
+                and row.get("rows_match")
+                and not row.get("err")
+                and row.get("hash_match") is not False
+            ):
+                newest[name] = max(newest.get(name, 0), rnd)
+    return newest
+
+
+# The driver's correctness sweep samples the FIRST 50 registry names each
+# round, so the registry is ordered oldest-driver-evidence-first: names
+# never green (round 0) lead, then ascending newest green round; ties keep
+# registry order (a stable sort). With no history files the order is the
+# registry order. ``tools/check_oracles.py --unswept`` covers the rest.
+_NEWEST_GREEN = _newest_green_rounds()
 
 
 def _sweep_order(merged: dict) -> dict:
-    """Return ``merged`` reordered so _SWEEP_FIRST names lead."""
-    out = {k: merged[k] for k in _SWEEP_FIRST if k in merged}
-    out.update({k: v for k, v in merged.items() if k not in out})
-    return out
+    """Return ``merged`` reordered oldest-driver-evidence-first."""
+    return dict(sorted(merged.items(), key=lambda kv: _NEWEST_GREEN.get(kv[0], 0)))
 
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {

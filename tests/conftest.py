@@ -1,4 +1,5 @@
 import os
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import SparkSession
@@ -27,6 +28,28 @@ def spark(tmp_path_factory):
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+def jobs(spark, fn):
+    """The number of Spark jobs ``fn()`` ran, from the status tracker."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None) or [])
+    fn()
+    return len(set(tracker.getJobIdsForGroup(None) or []) - before)
+
+
+@contextmanager
+def shuffle_partitions(spark, n):
+    """Run the block with the session's ``spark.sql.shuffle.partitions`` set
+    to ``n``, restoring the old value after. Build AND collect inside the
+    block: operators read the count when they build the plan, AQE when it
+    runs."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 @pytest.fixture(scope="session")

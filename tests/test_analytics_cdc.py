@@ -13,6 +13,7 @@ from datacompy_spark.operators.analytics import (
 )
 from datacompy_spark.operators.cdc import apply_changes, cdc_summary, snapshot_cdc
 from datacompy_spark.operators.textops import tfidf_top_terms
+from conftest import shuffle_partitions
 
 
 @pytest.fixture(scope="module")
@@ -816,9 +817,11 @@ class TestKsDrift:
         new = spark.createDataFrame(
             [(float(rng.randint(5, 45)),) for _ in range(400)], "x double"
         )
-        r1 = ks_drift(old, new, "x", num_partitions=1).collect()[0]
-        r7 = ks_drift(old, new, "x", num_partitions=7).collect()[0]
-        r64 = ks_drift(old, new, "x", num_partitions=64).collect()[0]
+        def ks_at(n):
+            with shuffle_partitions(spark, n):
+                return ks_drift(old, new, "x").collect()[0]
+
+        r1, r7, r64 = ks_at(1), ks_at(7), ks_at(64)
         assert r1["ks_stat"] == r7["ks_stat"] == r64["ks_stat"] > 0.0
 
 

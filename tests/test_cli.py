@@ -7,6 +7,7 @@ import sys
 
 import pytest
 
+from conftest import jobs
 from datacompy_spark.cli import main
 
 
@@ -40,14 +41,6 @@ def li_files(tmp_path, lineitem):
         "l_tax", F.when(F.col("l_orderkey") % 7 == 0, tax + 0.01).otherwise(tax)
     ).write.parquet(rp)
     return lp, rp, ["l_orderkey", "l_linenumber"]
-
-
-def _jobs(spark, fn):
-    """The number of Spark jobs ``fn()`` ran, from the status tracker."""
-    tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup(None) or [])
-    fn()
-    return len(set(tracker.getJobIdsForGroup(None) or []) - before)
 
 
 class TestExitCodes:
@@ -238,13 +231,13 @@ class TestOutputs:
                 spark, spark.read.parquet(lp), spark.read.parquet(rp), join_columns=keys
             ))
 
-        budget = _jobs(spark, build)
+        budget = jobs(spark, build)
         populated, reported = built[0], built
         build()
         budget += (
-            _jobs(spark, populated._ensure_cached)
-            + _jobs(spark, reported[1].build_report_data)
-            + _jobs(spark, lambda: populated.all_mismatch().write.parquet(str(tmp_path / "ref")))
+            jobs(spark, populated._ensure_cached)
+            + jobs(spark, reported[1].build_report_data)
+            + jobs(spark, lambda: populated.all_mismatch().write.parquet(str(tmp_path / "ref")))
         )
         n_mismatch = populated.all_mismatch().count()
         populated.uncache()
@@ -260,7 +253,7 @@ class TestOutputs:
         mp = str(tmp_path / "mm")
         args = ["compare", "--left", lp, "--right", rp, "--on", ",".join(keys),
                 "--quiet", "--export-mismatches", mp]
-        n = _jobs(spark, lambda: main(args))
+        n = jobs(spark, lambda: main(args))
         assert saw_diff == [True], "the CLI report ran before the diff was populated"
         assert n <= budget, f"CLI ran {n} jobs, budget {budget}"
         assert n_mismatch > 0 and spark.read.parquet(mp).count() == n_mismatch
@@ -272,13 +265,13 @@ class TestOutputs:
         from datacompy_spark import SparkCompare
 
         lp, rp, keys = li_files
-        budget = _jobs(spark, lambda: SparkCompare(
+        budget = jobs(spark, lambda: SparkCompare(
             spark, spark.read.parquet(lp), spark.read.parquet(rp),
             join_columns=keys,
         ).build_report_data())
         args = ["compare", "--left", lp, "--right", rp, "--on", ",".join(keys),
                 "--quiet"]
-        assert [_jobs(spark, lambda: main(args)) for _ in range(2)] == [budget] * 2
+        assert [jobs(spark, lambda: main(args)) for _ in range(2)] == [budget] * 2
 
     def test_compare_leaves_nothing_cached(self, pair, tmp_path, capsys, spark):
         # the session is borrowed and outlives the command: the exported

@@ -4,6 +4,7 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from datacompy_spark import SparkCompare
+from conftest import jobs
 
 
 @pytest.fixture()
@@ -563,11 +564,13 @@ class TestScaleShapes:
         cols = [f"cast(id * {i} % 97 as double) as v{i}" for i in range(n_cols)]
         df1 = spark.range(2000).selectExpr("id", *cols)
         df2 = df1.withColumn("v7", F.col("v7") + 0.5)
-        before = spark.sparkContext.statusTracker().getJobIdsForGroup(None) or []
-        c = SparkCompare(spark, df1, df2, join_columns="id", assume_unique=True)
-        stats = {s["column"]: s for s in c.column_stats}
-        after = spark.sparkContext.statusTracker().getJobIdsForGroup(None) or []
-        assert len(set(after) - set(before)) <= 8, "wide agg split into many actions"
+        stats = {}
+
+        def column_stats():
+            c = SparkCompare(spark, df1, df2, join_columns="id", assume_unique=True)
+            stats.update((s["column"], s) for s in c.column_stats)
+
+        assert jobs(spark, column_stats) <= 8, "wide agg split into many actions"
         assert len(stats) == n_cols + 1
         assert stats["v7"]["unequal_cnt"] == 2000
         assert stats["v7"]["max_diff"] == 0.5

@@ -50,16 +50,8 @@ class _ConnectSurface:
 
 
 class TestConnectFallbacksAlwaysOn:
-    def test_fan_out_explicit_min_parts_without_probe(self, spark):
-        # Connect has no .rdd partition probe; an explicit min_parts must
-        # still be honored (repartition needs no probe)
-        df = spark.range(100).coalesce(1)
-        out = fan_out(_ConnectSurface(df), min_parts=8)
-        # fan_out returned a REAL repartitioned frame we can verify
-        assert out.rdd.getNumPartitions() == 8
-
     def test_fan_out_default_guard_skipped_not_blind_shuffle(self, spark):
-        # without min_parts the probe is impossible on Connect: the frame
+        # the partition-count probe is impossible on Connect: the frame
         # must pass through untouched (no blind shuffle injected)
         df = spark.range(100).coalesce(1)
         proxy = _ConnectSurface(df)

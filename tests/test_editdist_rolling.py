@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from datacompy_spark.functions.text import normalize
 from datacompy_spark.operators.analytics import rolling_drift
 from datacompy_spark.operators.dedup import edit_distance_pairs
+from conftest import shuffle_partitions
 
 
 def _naive(spark, df, tau, prefix_len=64):
@@ -386,6 +387,7 @@ class TestDistributedQuantiles:
         import random
 
         from datacompy_spark.operators.profile import exact_quantiles_distributed
+        from datacompy_spark.plans.partitioning import distributed_prefix_sum
 
         rng = random.Random(13)
         df = spark.createDataFrame(
@@ -393,9 +395,14 @@ class TestDistributedQuantiles:
         )
         a = {r["prob"]: r["quantile"]
              for r in exact_quantiles_distributed(df, "x", [0.25, 0.5]).collect()}
-        b = {r["prob"]: r["quantile"]
-             for r in exact_quantiles_distributed(df, "x", [0.25, 0.5],
-                                                  num_partitions=3).collect()}
+        with shuffle_partitions(spark, 3):
+            b = {r["prob"]: r["quantile"]
+                 for r in exact_quantiles_distributed(df, "x", [0.25, 0.5]).collect()}
+            # the session's count is the range partitioning's count
+            ranged = distributed_prefix_sum(
+                df.withColumn("c", F.lit(1)), order_cols=["x"], sum_cols=["c"]
+            ).ranged
+            assert ranged.rdd.getNumPartitions() == 3
         assert a == b
 
     def test_empty_and_validation(self, spark):

@@ -109,21 +109,15 @@ def test_oracle_sql_covers_every_query(registry):
     assert not missing, f"queries() entries without an oracle twin: {missing}"
 
 
-def test_sweep_prefix_names_are_registered(registry):
-    from datacompy_spark.queries import _SWEEP_FIRST
-
-    unknown = [n for n in _SWEEP_FIRST if n not in registry]
-    assert not unknown, f"_SWEEP_FIRST names not in the registry: {unknown}"
-
-
 def test_sweep_window_is_oldest_evidence_first(registry):
     """The driver sweeps the FIRST 50 registry names each round, so with a
     121-name registry a full evidence rotation takes 3 rounds (contract in
     COVERAGE.md). This pins the rotation invariant mechanically against
     the recorded history: no name OUTSIDE the 50-name window may carry
     strictly older driver evidence than any name inside it (never-swept
-    names count as oldest and must lead). Rebuilding _SWEEP_FIRST by hand
-    each round made this a judge-checked convention; now it's a gate."""
+    names count as oldest and must lead). The registry order is computed
+    from the same history at import, so it holds against every round,
+    the newest included."""
     import glob
     import json
     import os
@@ -154,47 +148,30 @@ def test_sweep_window_is_oldest_evidence_first(registry):
     if not by_round:  # fresh clone without driver artifacts — nothing to pin
         return
 
-    def offenders_with(rounds):
-        newest = {}
-        for rnd in rounds:
-            for name, row in by_round[rnd].items():
-                # green = rows matched, no error, and the value hash did
-                # not FAIL (hash may be absent for the weaker rows-only
-                # checks, but hash_match=False is a red row — r9's
-                # dataset_checksum precedent — and red evidence must not
-                # keep a name out of the window)
-                if (
-                    isinstance(row, dict)
-                    and row.get("rows_match")
-                    and not row.get("err")
-                    and row.get("hash_match") is not False
-                ):
-                    newest[name] = max(newest.get(name, 0), rnd)
-        names = list(registry)
-        window, tail = names[:50], names[50:]
-        window_max = max(newest.get(n, 0) for n in window)
-        return [
-            f"{n} (evidence r{newest.get(n, 0)} < window max r{window_max})"
-            for n in tail
-            if newest.get(n, 0) < window_max
-        ]
-
-    strict = offenders_with(sorted(by_round))
-    if not strict:
-        return
-    # The driver writes CORRECTNESS_r{N} AFTER the round's builder session,
-    # so at the START of round N+1 the window legitimately reflects ages as
-    # of round N−1. Tolerate exactly that one-round lag: the window must be
-    # clean against the history EXCLUDING the newest round file. Two-plus
-    # rounds stale fails both checks.
-    lagged = offenders_with(sorted(by_round)[:-1])
-    assert not lagged, (
-        "sweep window is not oldest-evidence-first even one round back — "
-        f"rebuild _SWEEP_FIRST (datacompy_spark/queries.py): {lagged}"
-    )
-    # strict failed but lagged passed: the window is exactly one round
-    # stale — the documented grace state at round start, before the
-    # builder rotates. Rotating is still the round's first job.
+    newest = {}
+    for rnd, rows in by_round.items():
+        for name, row in rows.items():
+            # green = rows matched, no error, and the value hash did
+            # not FAIL (hash may be absent for the weaker rows-only
+            # checks, but hash_match=False is a red row — r9's
+            # dataset_checksum precedent — and red evidence must not
+            # keep a name out of the window)
+            if (
+                isinstance(row, dict)
+                and row.get("rows_match")
+                and not row.get("err")
+                and row.get("hash_match") is not False
+            ):
+                newest[name] = max(newest.get(name, 0), rnd)
+    names = list(registry)
+    window, tail = names[:50], names[50:]
+    window_max = max(newest.get(n, 0) for n in window)
+    offenders = [
+        f"{n} (evidence r{newest.get(n, 0)} < window max r{window_max})"
+        for n in tail
+        if newest.get(n, 0) < window_max
+    ]
+    assert not offenders, f"sweep window is not oldest-evidence-first: {offenders}"
 
 
 def test_entry_flagship_runs(spark):

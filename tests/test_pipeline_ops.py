@@ -6,6 +6,8 @@ from pyspark.sql import functions as F
 from datacompy_spark.operators import dedup as D
 from datacompy_spark.operators import similarity as S
 from datacompy_spark.operators import textops as TO
+from datacompy_spark.plans.partitioning import shuffle_partition_count
+from conftest import jobs, shuffle_partitions
 
 
 @pytest.fixture()
@@ -708,8 +710,8 @@ class TestPipelineTextOps:
             conf = FakeConf()
             sparkContext = FakeSC()
 
-        assert TO._shuffle_partition_count(FakeSession()) == 8
-        assert TO._shuffle_partition_count(spark) == int(
+        assert shuffle_partition_count(FakeSession()) == 8
+        assert shuffle_partition_count(spark) == int(
             spark.conf.get("spark.sql.shuffle.partitions")
         )
 
@@ -721,10 +723,10 @@ class TestPipelineTextOps:
         rows = [(i, "tok " * ((i % 7) + 1), "hot") for i in range(3000)]
         rows += [(10_000 + i, "tok " * 5, f"cold{i % 3}") for i in range(90)]
         df = spark.createDataFrame(rows, "doc_id bigint, text string, source string")
-        out = TO.pack_sequences(
-            df, "doc_id", "text", "source", token_budget=64, num_partitions=8
-        )
-        got = {r["doc_id"]: r["bin_id"] for r in out.collect()}
+        with shuffle_partitions(spark, 8):
+            out = TO.pack_sequences(df, "doc_id", "text", "source", token_budget=64)
+            got = {r["doc_id"]: r["bin_id"] for r in out.collect()}
+            plan = out._jdf.queryExecution().executedPlan().toString()
 
         # oracle: sequential per-group running sum in plain Python
         want = {}
@@ -740,7 +742,6 @@ class TestPipelineTextOps:
 
         # plan shape: the cumulative window partitions by (grp, pid), so the
         # hot group is NOT a single window partition
-        plan = out._jdf.queryExecution().executedPlan().toString()
         import re
 
         win_specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
@@ -769,11 +770,11 @@ class TestTableProfile:
             [(1, "a", 1.5), (2, "b", None), (2, None, 2.5), (3, "a", 0.5)],
             "id bigint, s string, v double",
         )
-        before = spark.sparkContext.statusTracker().getJobIdsForGroup(None) or []
-        out = {r["col_name"]: r
-               for r in table_profile(df, approx_distinct=False).collect()}
-        after = spark.sparkContext.statusTracker().getJobIdsForGroup(None) or []
-        assert len(set(after) - set(before)) <= 8  # one action, AQE may split
+        rows = []
+        n_jobs = jobs(spark, lambda: rows.extend(
+            table_profile(df, approx_distinct=False).collect()))
+        assert n_jobs <= 8  # one action, AQE may split
+        out = {r["col_name"]: r for r in rows}
         assert out["id"]["n_rows"] == 4 and out["id"]["n_nulls"] == 0
         assert out["id"]["n_distinct"] == 3
         assert out["id"]["min_value"] == "1" and out["id"]["max_value"] == "3"
@@ -819,10 +820,7 @@ class TestTableProfile:
         assert out["v"]["status"] == "common" and out["v"]["type_changed"]
         assert out["extra"]["status"] == "df2_only"
         # metadata-only: no Spark jobs were run
-        before = spark.sparkContext.statusTracker().getJobIdsForGroup(None) or []
-        schema_compare(df1, df2)
-        after = spark.sparkContext.statusTracker().getJobIdsForGroup(None) or []
-        assert set(after) == set(before)
+        assert jobs(spark, lambda: schema_compare(df1, df2)) == 0
 
     def test_column_quantiles_modes(self, spark):
         from datacompy_spark.operators.profile import column_quantiles
@@ -1208,31 +1206,6 @@ class TestIncrementalDedup:
         assert out[24] == ("dup_corpus", 10)  # min matching corpus id
         assert out[25] == ("dup_batch", 21)
         assert len(out) == 6  # one row per batch doc, no corpus rows
-
-    def test_exact_mode_no_broadcast_same_result(self, spark, split_docs):
-        batch, corpus = split_docs
-        a = sorted(
-            map(
-                tuple,
-                D.incremental_dedup(
-                    batch, corpus, "doc_id", "text", method="exact"
-                ).collect(),
-            )
-        )
-        b = sorted(
-            map(
-                tuple,
-                D.incremental_dedup(
-                    batch,
-                    corpus,
-                    "doc_id",
-                    "text",
-                    method="exact",
-                    broadcast_batch=False,
-                ).collect(),
-            )
-        )
-        assert a == b
 
     def test_minhash_mode_against_union_ground_truth(self, spark, documents):
         """Minhash-mode verdicts must agree with the ground truth derived

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from datacompy_spark import SparkCompare
+from conftest import jobs
 
 
 def plan_of(df) -> str:
@@ -198,12 +199,9 @@ class TestCompareTopology:
 
     def test_stats_is_single_aggregate_action(self, spark, li_pair):
         c = SparkCompare(spark, *li_pair, join_columns=KEYS)
-        before = spark.sparkContext.statusTracker().getJobIdsForGroup(None) or []
-        _ = c._stats
-        after = spark.sparkContext.statusTracker().getJobIdsForGroup(None) or []
         # one action → a small bounded number of jobs (AQE may split stages
         # into a few jobs, but far fewer than a per-column action loop)
-        new_jobs = len(set(after) - set(before))
+        new_jobs = jobs(spark, lambda: c._stats)
         # AQE materializes stages as separate jobs (≈6 for one action); the
         # guard is against regressing to a per-column action loop (2N+1 ≥ 15)
         assert new_jobs <= 8, f"stats ran {new_jobs} jobs; expected a single action"
@@ -233,12 +231,13 @@ class TestOnePassReportStats:
         # compare: the statistics read populates the exceptions cache and
         # the mismatch count reads it back — no second pass over the join
         c = SparkCompare(spark, *li_pair, join_columns=KEYS)
-        tracker = spark.sparkContext.statusTracker()
-        before = set(tracker.getJobIdsForGroup(None) or [])
-        c.matches()
-        _ = c.column_stats
-        c.all_mismatch().count()
-        new_jobs = len(set(tracker.getJobIdsForGroup(None) or []) - before)
+
+        def check_flow():
+            c.matches()
+            _ = c.column_stats
+            c.all_mismatch().count()
+
+        new_jobs = jobs(spark, check_flow)
         assert new_jobs <= 8, f"check flow ran {new_jobs} jobs"
         c.uncache()
 
@@ -293,11 +292,10 @@ class TestOnePassReportStats:
             "l_tax", F.when(F.col("l_orderkey") % 7 == 0, tax + 0.01).otherwise(tax)
         )
         c = SparkCompare(spark, df1, df2, join_columns=KEYS)
-        tracker = spark.sparkContext.statusTracker()
         cached_before = cached_ids()
-        before = set(tracker.getJobIdsForGroup(None) or [])
-        data = c.build_report_data(sample_count=10)
-        new_jobs = len(set(tracker.getJobIdsForGroup(None) or []) - before)
+        built = []
+        new_jobs = jobs(spark, lambda: built.append(c.build_report_data(sample_count=10)))
+        (data,) = built
         assert new_jobs <= 4, f"report ran {new_jobs} jobs"
         assert "_stats" in c.__dict__
         assert "_exceptions" not in c.__dict__

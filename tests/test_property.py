@@ -9,6 +9,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from datacompy_spark import columns_equal
+from conftest import shuffle_partitions
 
 floats = st.floats(
     allow_nan=True, allow_infinity=True, width=64, min_value=None, max_value=None
@@ -181,7 +182,8 @@ class TestPackSequencesProperties:
     )
     def test_distributed_prefix_sum_matches_sequential(self, spark, docs, budget, n_parts):
         # the two-phase distributed prefix sum must equal a sequential
-        # per-group running sum for ANY grouping/ordering/partition count
+        # per-group running sum for ANY grouping/ordering/session partition
+        # count
         from datacompy_spark.operators.textops import pack_sequences
 
         seen = {}
@@ -189,13 +191,13 @@ class TestPackSequencesProperties:
             seen[i] = (n, g)  # dedupe ids: window order must be unambiguous
         rows = [(i, "w " * n, g) for i, (n, g) in seen.items()]
         df = spark.createDataFrame(rows, "doc_id bigint, text string, source string")
-        got = {
-            r["doc_id"]: (r["bin_id"], r["n_tokens"])
-            for r in pack_sequences(
-                df, "doc_id", "text", "source",
-                token_budget=budget, num_partitions=n_parts,
-            ).collect()
-        }
+        with shuffle_partitions(spark, n_parts):
+            got = {
+                r["doc_id"]: (r["bin_id"], r["n_tokens"])
+                for r in pack_sequences(
+                    df, "doc_id", "text", "source", token_budget=budget
+                ).collect()
+            }
         want = {}
         running = {}
         for i in sorted(seen):

@@ -78,8 +78,9 @@ def main() -> int:
     args = sys.argv[1:]
     # --unswept: check exactly the registry names the driver's 50-name
     # sweep window will NOT reach this round, so the non-swept half still
-    # gets a local oracle run every round (CI-side gap closure; the driver
-    # sweep alternates halves via queries._SWEEP_FIRST).
+    # gets a local oracle run every round (CI-side gap closure; the
+    # registry is ordered oldest-driver-evidence-first by
+    # queries._sweep_order, so the window rotates with the history).
     unswept = "--unswept" in args
     args = [a for a in args if a != "--unswept"]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
