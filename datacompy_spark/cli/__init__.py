@@ -903,6 +903,7 @@ def run_compare(args) -> int:
     from pyspark.sql import SparkSession
 
     from datacompy_spark.operators.compare import SparkCompare
+    from datacompy_spark.plans.cache import scope
     from datacompy_spark.sources.loaders import load
 
     _validate_args(args)
@@ -958,8 +959,9 @@ def run_compare(args) -> int:
             raise CLIError(str(ex)) from ex
 
         # an export persists the diff in a session that may outlive this
-        # command; the report and the exports are all that read it
-        try:
+        # command; the scope releases it once the report and the exports
+        # have read it
+        with scope():
             if args.export_mismatches or args.export_unique:
                 # a report alone persists nothing; the exports re-read the
                 # diff, so populate it first and let the report read it
@@ -989,8 +991,6 @@ def run_compare(args) -> int:
                     .write.mode("overwrite")
                     .parquet(args.export_unique)
                 )
-        finally:
-            cmp_.uncache()
         try:
             rendered = {
                 "text": lambda: data.render(template_path=args.template),

@@ -148,12 +148,6 @@ def minhash_from_hashes(hashes: Column, num_hashes: int = 16) -> Column:
     )
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
-    """Single-expression convenience form; for hot paths stage
-    :func:`shingle_hashes` into its own projection first (see its docstring)."""
-    return minhash_from_hashes(shingle_hashes(shingles), num_hashes)
-
-
 def pmod(x: Column) -> Column:
     return x % F.lit(_MINHASH_P)
 

@@ -196,10 +196,6 @@ def nfc(text: Column) -> Column:
     return _NFC_ARROW(text)
 
 
-def nfc_sql(text: str) -> str:
-    return f"nfc_normalize({text})"
-
-
 #: explicit ASCII whitespace class — Java regex ``\s`` and RE2 ``\s`` differ
 #: at the edges (``\x0B``), so both engines get the same literal class.
 _WS_CLASS = "[ \\t\\n\\r\\f]+"

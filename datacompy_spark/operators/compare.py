@@ -19,8 +19,10 @@ Architecture is deliberately NOT a port:
   metrics and every sample (each mismatching column's, each side's unique
   rows) comes out of one per-slot top-n window. It persists nothing.
 * Statistics are computed on first access and memoized; a statistics read
-  outside a report persists the diff (release it with ``uncache()``). The
-  derived frames (``intersect_rows``/``df1_unq_rows``/``df2_unq_rows``)
+  outside a report persists the diff. Every persist goes through
+  ``plans.cache.tracked_persist``, so ``scope()`` and ``release_caches()``
+  release it like any operator's; ``uncache()`` releases one compare's.
+  The derived frames (``intersect_rows``/``df1_unq_rows``/``df2_unq_rows``)
   stay lazy DataFrames (never collected unless the caller asks).
 
 Scale design notes (local[32] test, 1000-executor target):
@@ -35,7 +37,7 @@ from __future__ import annotations
 
 import logging
 from functools import cached_property, reduce
-from typing import Any, Dict, List, Mapping, Optional, Sequence, Tuple, TypedDict, Union
+from typing import Any, Callable, Dict, List, Mapping, Optional, Sequence, Tuple, TypedDict, Union
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -49,6 +51,7 @@ from datacompy_spark.functions.comparators import (
     _STRING_TYPES,
     _TEMPORAL_TYPES,
 )
+from datacompy_spark.plans.cache import tracked_persist
 
 LOG = logging.getLogger(__name__)
 
@@ -695,10 +698,7 @@ class SparkCompare:
             )
         outer = outer.withColumns(match_exprs)
         if self.cache_intermediates:
-            outer = outer.persist()
-            self._outer_persisted = True
-        else:
-            self._outer_persisted = False
+            outer = tracked_persist(outer)
         self._outer = outer
 
     def _ensure_cached(self) -> None:
@@ -717,33 +717,47 @@ class SparkCompare:
         frame share one pass). Every outer-join row flows through the
         CollectMetrics node on its way into the exceptions filter, so the
         observed aggregates see every row of the join. Any statistics read
-        therefore persists the diff; :meth:`uncache` releases it.
+        therefore persists the diff, owned by the current
+        ``plans.cache`` owner: :func:`~datacompy_spark.plans.cache.scope`,
+        ``release_caches()`` or :meth:`uncache` releases it.
 
         Both memos are set only after the populate action succeeds; on
         failure the half-populated cache is released and the error
         propagates."""
         if "_exceptions" in self.__dict__:
             return
-        from pyspark import StorageLevel
-        from pyspark.sql import Observation
 
+        def populate(diff: DataFrame) -> DataFrame:
+            exc = tracked_persist(diff)
+            try:
+                exc.count()  # populate the cache; metrics collect in-flight
+            except BaseException:
+                exc.unpersist(blocking=True)
+                raise
+            return exc
+
+        self._exceptions = self._diff_pass(populate)
+        self._drop_unq_row_memos()
+
+    def _diff_pass(self, action: Callable[[DataFrame], Any]) -> Any:
+        """Run ``action`` over the diff of the outer join — rows unique to
+        one side or with at least one mismatching column — and return its
+        result. When the statistics are not known yet, their aggregates
+        ride the same action as ``observe`` metrics and are memoized (with
+        the hot-key advisory) once it succeeds."""
         src, obs = self._outer, None
         if "_stats" not in self.__dict__:
+            from pyspark.sql import Observation
+
             obs = Observation()
             src = src.observe(obs, *self._stat_aggs())
         pred = (F.col(self._n["merge"]) != "both") | self._any_mismatch_pred()
-        exc = src.filter(pred).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            exc.count()  # populate the cache; metrics collect in-flight
-        except BaseException:
-            exc.unpersist(blocking=True)
-            raise
+        out = action(src.filter(pred))
         if obs is not None:
             stats = {k: (0 if v is None else v) for k, v in obs.get.items()}
             self._warn_if_hot_key(stats)
             self.__dict__["_stats"] = stats
-        self._exceptions = exc
-        self._drop_unq_row_memos()
+        return out
 
     def _drop_unq_row_memos(self) -> None:
         """Forget unique-row frames memoized BEFORE the exceptions cache
@@ -753,23 +767,6 @@ class SparkCompare:
         (r14 advice — the stale binding silently re-evaluated the join)."""
         for k in ("df1_unq_rows", "df2_unq_rows"):
             self.__dict__.pop(k, None)
-
-    def cache_result(self) -> "SparkCompare":
-        """Eagerly materialize the comparison for reuse-heavy sessions — the
-        analog of the reference snowflake backend's ``cache_result``
-        (``snowflake.py:438-441,541``). Persists the joined frame and the
-        exceptions cache and runs both now, so every later read — reports,
-        ``sample_mismatch``/``all_mismatch``, derived frames, stats — serves
-        from memory/disk cache with zero re-scans of the inputs. Returns
-        ``self`` for chaining."""
-        from pyspark import StorageLevel
-
-        if not self._outer_persisted:
-            self._outer = self._outer.persist(StorageLevel.MEMORY_AND_DISK)
-            self._outer_persisted = True
-        self._outer.count()
-        self._ensure_cached()
-        return self
 
     def explain(self, mode: str = "formatted") -> str:
         """The physical plan of the core comparison join, as a string — the
@@ -794,12 +791,12 @@ class SparkCompare:
         return buf.getvalue()
 
     def uncache(self) -> None:
-        """Release everything the compare persisted: the diff that the first
-        statistics read or mismatch pull populated, and whatever
-        :meth:`cache_result` (or ``cache_intermediates``) pinned."""
-        if self._outer_persisted:
+        """Release everything this compare persisted: the diff that the first
+        statistics read or mismatch pull populated, and the outer join when
+        ``cache_intermediates`` is set. ``scope()`` and ``release_caches()``
+        release the same frames along with the other operators' caches."""
+        if self.cache_intermediates:
             self._outer.unpersist()
-            self._outer_persisted = False
         exc = self.__dict__.get("_exceptions")
         if exc is not None:
             exc.unpersist()
@@ -898,7 +895,7 @@ class SparkCompare:
 
     def _stat_aggs(self) -> List[Column]:
         """The statistics aggregate expressions, consumed as ``observe``
-        metrics on the exceptions-populate pass (:meth:`_ensure_cached`)."""
+        metrics on the first pass over the diff (:meth:`_diff_pass`)."""
         both = F.col(self._n["merge"]) == "both"
         n1, n2 = self.df1_name, self.df2_name
         aggs = [
@@ -943,8 +940,9 @@ class SparkCompare:
         frame computes row classes, matching-row count, and per-column
         match/null-diff/max-diff — replacing the reference's per-column action
         loop (``spark.py:594-636``, A1+A3+A4 in SURVEY §2.4). They arrive as
-        ``observe`` metrics on the exceptions-populate pass
-        (:meth:`_ensure_cached`) and are memoized for the compare's life."""
+        ``observe`` metrics on the first pass over the diff — a report's
+        sample action or the exceptions populate (:meth:`_diff_pass`) — and
+        are memoized for the compare's life."""
         if "_stats" not in self.__dict__:
             self._ensure_cached()
         return self.__dict__["_stats"]
@@ -984,7 +982,7 @@ class SparkCompare:
         LOG.warning(msg)
         import warnings
 
-        warnings.warn(msg, RuntimeWarning, stacklevel=3)
+        warnings.warn(msg, RuntimeWarning, stacklevel=4)
 
     @property
     def hot_key_rows(self) -> int:
@@ -1202,19 +1200,14 @@ class SparkCompare:
             )
 
         # no unmasked partitions may linger in executor memory
-        if self._outer_persisted:
+        if self.cache_intermediates:
             self._outer.unpersist()
-            self._outer_persisted = False
         exc = self._exceptions
         exc.unpersist()
         # sample_mismatch/all_mismatch/report() all read _exceptions — mask it
         # too or sensitive values leak through those paths (ref
         # ``spark.py:720-791`` reads the masked intersect frame).
-        from pyspark import StorageLevel
-
-        self._exceptions = mask(
-            exc, [self.df1_name, self.df2_name]
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        self._exceptions = tracked_persist(mask(exc, [self.df1_name, self.df2_name]))
         self.__dict__["intersect_rows"] = mask(
             self.intersect_rows, [self.df1_name, self.df2_name]
         )
@@ -1277,35 +1270,26 @@ class SparkCompare:
         if known is not None and (sample_count <= 0 or not slots):
             return {}, {}
 
-        obs = None
-        src_df = self.__dict__.get("_exceptions")
-        if src_df is None:
-            src_df = self._outer
-            if known is None:
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                src_df = src_df.observe(obs, *self._stat_aggs())
-            src_df = src_df.filter((merge != "both") | self._any_mismatch_pred())
         slot, rank = self._n["slot"], self._n["rank"]
         order = [*keys, self._n["ord"]]
         cols = _ordered_unique([*order, *(s for *_, lay in slots for s, _ in lay)])
         tags = [F.when(pred, F.lit(i)) for i, (_, _, pred, _) in enumerate(slots)]
-        top = (
-            src_df.select(*cols, F.explode(F.array_compact(F.array(*tags))).alias(slot))
-            .withColumn(
-                rank, F.row_number().over(Window.partitionBy(slot).orderBy(*order))
+
+        def take(diff: DataFrame) -> List[Any]:
+            top = (
+                diff.select(*cols, F.explode(F.array_compact(F.array(*tags))).alias(slot))
+                .withColumn(
+                    rank, F.row_number().over(Window.partitionBy(slot).orderBy(*order))
+                )
+                # n >= 1 even for sample_count 0: Catalyst folds a rank filter
+                # of 0 into an empty relation, which would drop the observed
+                # statistics along with the rows
+                .filter(F.col(rank) <= max(sample_count, 1))
             )
-            # n >= 1 even for sample_count 0: Catalyst folds a rank filter
-            # of 0 into an empty relation, which would drop the observed
-            # statistics along with the rows
-            .filter(F.col(rank) <= max(sample_count, 1))
-        )
-        frames = _to_pandas_by_slot(top, slot, rank, [lay for *_, lay in slots])
-        if obs is not None:
-            stats = {k: (0 if v is None else v) for k, v in obs.get.items()}
-            self._warn_if_hot_key(stats)
-            self.__dict__["_stats"] = stats
+            return _to_pandas_by_slot(top, slot, rank, [lay for *_, lay in slots])
+
+        exc = self.__dict__.get("_exceptions")
+        frames = take(exc) if exc is not None else self._diff_pass(take)
         mismatch: Dict[str, Any] = {}
         unique: Dict[str, Any] = {}
         if sample_count > 0:

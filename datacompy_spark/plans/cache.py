@@ -3,7 +3,8 @@
 Several operators persist an internal frame that multiple branches of the
 RETURNED lazy plan consume (e.g. the normalized key frame in the
 edit-distance join family feeds the index, the probe, and the exact
-verify), and iterative operators truncate lineage with
+verify; ``SparkCompare``'s diff feeds its statistics reads, mismatch pulls
+and derived frames), and iterative operators truncate lineage with
 ``lineage_barrier``'s localCheckpoint. Both are load-bearing, but the
 returned plan is lazy, so the operator cannot know when its caller is
 done with them.

@@ -379,6 +379,7 @@ def validate_to_sink(
     batch's diff; it is released after the batch's write.
     Returns the started ``StreamingQuery`` — callers own termination."""
     from datacompy_spark.operators.compare import SparkCompare
+    from datacompy_spark.plans.cache import scope
 
     keys = list(join_columns)
 
@@ -397,7 +398,7 @@ def validate_to_sink(
             rel_tol=rel_tol,
             abs_tol=abs_tol,
         )
-        try:
+        with scope():  # releases the batch's persisted diff
             bad = cmp_.all_mismatch().withColumn("__kind", F.lit("mismatch"))
             missing = cmp_.df1_unq_rows.select(*keys).withColumn(
                 "__kind", F.lit("missing_in_ref")
@@ -406,8 +407,6 @@ def validate_to_sink(
                 "batch_id", F.lit(batch_id)
             )
             _write_batch_idempotent(out, mismatch_path)
-        finally:
-            cmp_.uncache()  # release the batch's persisted diff
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

@@ -8,12 +8,13 @@ array-aware checker). These tests make the driver's constraint a permanent
 local gate instead of a rediscovered-per-round gotcha.
 """
 
+import os
 import sys
 
 import pytest
 from pyspark.sql import types as T
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry  # noqa: E402
 

@@ -4,14 +4,15 @@ import ast
 import pathlib
 
 import pytest
+from pyspark.sql import functions as F
 
 from datacompy_spark.operators import dedup as D
 
 PKG = pathlib.Path(__file__).resolve().parents[1] / "datacompy_spark"
 
-#: modules that own their frames some other way: plans/cache.py IS the
-#: owner, and SparkCompare releases what it persists through uncache()
-EXEMPT = {"plans/cache.py", "operators/compare.py"}
+#: plans/cache.py IS the owner: its tracked_persist is the one bare
+#: persist every other module routes through
+EXEMPT = {"plans/cache.py"}
 
 
 def _incremental_minhash(spark, sf_dir):
@@ -34,6 +35,9 @@ def _incremental_minhash(spark, sf_dir):
         "lm_score",
         "graph_pagerank",
         "incremental_dedup_minhash",
+        "cmp_column_stats",
+        "cmp_all_mismatch",
+        "cmp_matches_summary",
     ],
 )
 def test_operator_persists_released_by_release_caches(spark, sf_dir, name):
@@ -46,6 +50,38 @@ def test_operator_persists_released_by_release_caches(spark, sf_dir, name):
     build(spark, sf_dir).collect()
     release_caches()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize(
+    "mask,kw", [(False, {}), (True, {}), (False, {"cache_intermediates": True})],
+    ids=["check", "masked", "cache_intermediates"],
+)
+def test_scope_releases_compare_persists(spark, lineitem, mask, kw):
+    """A ``scope()`` around a SparkCompare check flow leaves nothing cached:
+    the diff, its masked re-persist and the ``cache_intermediates`` outer
+    join are all owned by the scope."""
+    from datacompy_spark import SparkCompare, release_caches, scope
+
+    new = lineitem.withColumn(
+        "l_discount",
+        F.when(F.col("l_orderkey") % 7 == 0, F.col("l_discount") + 0.004)
+        .otherwise(F.col("l_discount")),
+    )
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    release_caches()
+    with scope():
+        c = SparkCompare(
+            spark, lineitem, new, join_columns=["l_orderkey", "l_linenumber"], **kw
+        )
+        assert not c.matches()
+        assert c.column_stats
+        assert c.all_mismatch().count() > 0
+        if mask:
+            c.hide_sensitive_columns(["l_comment"])
+            assert c.all_mismatch().count() > 0
+        assert not cache_manager.isEmpty()
+    assert cache_manager.isEmpty()
 
 
 def _unowned_persists(path: pathlib.Path):

@@ -84,11 +84,15 @@ class TestCompareTopology:
         assert pushed, "expected parquet PushedFilters in plan"
         assert any("l_orderkey" in f and "LessThan" in f for f in pushed), pushed
 
-    def test_cache_result_serves_from_cache(self, spark, li_pair):
-        # after cache_result(), derived frames and mismatch pulls must read
-        # the in-memory cache, not re-scan the parquet inputs
-        c = SparkCompare(spark, *li_pair, join_columns=KEYS, assume_unique=True)
-        c.cache_result()
+    def test_cache_intermediates_serves_from_cache(self, spark, li_pair):
+        # with cache_intermediates, once a statistics read has run, derived
+        # frames and mismatch pulls must read the in-memory cache, not
+        # re-scan the parquet inputs
+        c = SparkCompare(
+            spark, *li_pair, join_columns=KEYS, assume_unique=True,
+            cache_intermediates=True,
+        )
+        c.column_stats
         try:
             for df in (c.intersect_rows, c.sample_mismatch("l_quantity"), c.df1_unq_rows):
                 p = plan_of(df)
