@@ -6,17 +6,27 @@ Semantics parity target: capitalone/datacompy comparator package —
 string→temporal), ``comparator/boolean.py:170-274`` (bool↔numeric typed-literal
 compare), ``comparator/array.py:129-160`` (null-safe array equality).
 
-Everything here builds a single JVM-side ``pyspark.sql.Column`` boolean
-expression — zero UDFs, so the whole match predicate stays inside
+Every built-in comparator writes its match predicate as Spark SQL text: one
+boolean expression with zero UDFs, so the whole predicate stays inside
 whole-stage codegen and is ANSI-mode safe (TRY_CAST, int→double pre-cast).
+The engine applies all of a compare's predicates with one ``selectExpr``:
+the JVM parses each string once, where a tree of ``Column`` calls costs a
+py4j round trip (and later a garbage-collection message) per node. The
+SQL rules: every identifier is backtick-quoted (:func:`quote`), doubles are
+``<repr>D`` literals (a bare ``0.01`` is a DECIMAL in Spark SQL and would
+change the tolerance arithmetic), non-finite doubles and typed literals are
+``CAST`` expressions, string literals are escaped (:func:`sql_string`).
 
-A comparator's ``compare()`` returns a boolean Column when it claims the
-column pair, or ``None`` to pass to the next comparator in the chain.
+A comparator's ``compare()`` returns the boolean predicate when it claims
+the column pair, or ``None`` to pass to the next comparator in the chain.
+The built-ins return SQL text; a custom comparator may return SQL text or
+a boolean ``Column`` (the reference's contract).
 """
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+import math
+from typing import Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -31,10 +41,11 @@ _NUMERIC_TYPES = (
     T.DoubleType,
     T.DecimalType,
 )
-_INTEGRAL_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-_FLOATING_TYPES = (T.FloatType, T.DoubleType)
 _STRING_TYPES = (T.StringType, T.CharType, T.VarcharType)
 _TEMPORAL_TYPES = (T.DateType, T.TimestampType, T.TimestampNTZType)
+
+#: a match predicate: Spark SQL text, or a Column from a custom comparator
+Predicate = Union[str, Column]
 
 
 def _is_numeric(dt: T.DataType) -> bool:
@@ -49,27 +60,55 @@ def _is_temporal(dt: T.DataType) -> bool:
     return isinstance(dt, _TEMPORAL_TYPES)
 
 
+def quote(name: str) -> str:
+    """``name`` as one backtick-quoted Spark SQL identifier: dots, spaces,
+    keywords and backticks (doubled) in it stay part of the name."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_double(x: float) -> str:
+    """``x`` as a Spark SQL DOUBLE literal (``0.01D``; a bare ``0.01`` is a
+    DECIMAL). Non-finite values have no literal form and are cast."""
+    x = float(x)
+    if math.isfinite(x):
+        return f"{x!r}D"
+    text = "NaN" if math.isnan(x) else ("Infinity" if x > 0 else "-Infinity")
+    return f"CAST({sql_string(text)} AS DOUBLE)"
+
+
+def sql_cast(value: str, dt: T.DataType) -> str:
+    """``CAST(value AS dt)``: a literal typed as ``dt``."""
+    return f"CAST({value} AS {dt.simpleString()})"
+
+
 #: every string Spark's TRY cast parses as a double holds an ASCII digit,
 #: or spells inf/infinity/nan
 _MAYBE_DOUBLE = "(?i)[0-9]|inf|nan"
 
 
-def try_double(col: Column, dt: T.DataType) -> Column:
-    """``TRY_CAST(col AS DOUBLE)`` for a column of type ``dt``. A string
+def try_double(expr: str, dt: T.DataType) -> str:
+    """``TRY_CAST(expr AS DOUBLE)`` for SQL ``expr`` of type ``dt``. A string
     cast is attempted only when it can succeed: a failed parse costs a
     thrown exception per row, while the regex gate is a cheap scan, and
     the gated strings would all have cast to NULL anyway."""
+    cast = f"try_cast({expr} AS DOUBLE)"
     if _is_string(dt):
-        return F.when(col.rlike(_MAYBE_DOUBLE), col.try_cast("double"))
-    return col.try_cast("double")
+        return f"CASE WHEN {expr} RLIKE {sql_string(_MAYBE_DOUBLE)} THEN {cast} END"
+    return cast
 
 
 class BaseComparator:
     """Strategy contract (ref ``comparator/base.py:22-50``).
 
     ``compare`` receives the two column names plus the DataFrame they live in
-    (for dtype lookup) and keyword options; returns a boolean ``Column`` or
-    ``None`` ("not my type, ask the next comparator").
+    (for dtype lookup) and keyword options; returns the boolean predicate —
+    Spark SQL text or a ``Column`` — or ``None`` ("not my type, ask the next
+    comparator").
     """
 
     def compare(
@@ -78,12 +117,20 @@ class BaseComparator:
         col1: str,
         col2: str,
         **kwargs,
-    ) -> Optional[Column]:
+    ) -> Optional[Predicate]:
         raise NotImplementedError
 
 
 def _dtype(df: DataFrame, col: str) -> T.DataType:
     return df.schema[col].dataType
+
+
+def _null_aware(c1: str, c2: str, rest: str) -> str:
+    """Both NULL → True, one NULL → False, otherwise ``rest`` (CASE arms)."""
+    return (
+        f"CASE WHEN {c1} IS NULL AND {c2} IS NULL THEN true "
+        f"WHEN {c1} IS NULL OR {c2} IS NULL THEN false {rest} END"
+    )
 
 
 class ArrayComparator(BaseComparator):
@@ -98,7 +145,7 @@ class ArrayComparator(BaseComparator):
         dt1, dt2 = _dtype(df, col1), _dtype(df, col2)
         if not (isinstance(dt1, T.ArrayType) and isinstance(dt2, T.ArrayType)):
             return None
-        return F.col(col1).eqNullSafe(F.col(col2))
+        return f"{quote(col1)} <=> {quote(col2)}"
 
 
 class BooleanComparator(BaseComparator):
@@ -117,21 +164,19 @@ class BooleanComparator(BaseComparator):
         if not (b1 or b2):
             return None
         if b1 and b2:
-            return F.col(col1).eqNullSafe(F.col(col2))
+            return f"{quote(col1)} <=> {quote(col2)}"
         bool_col, num_col = (col1, col2) if b1 else (col2, col1)
         num_dt = dt2 if b1 else dt1
         if not _is_numeric(num_dt):
             # bool/string and bool/other: refuse to claim → chain falls through
             # to constant False, matching the reference's behavior.
             return None
-        one = F.lit(1).cast(num_dt)
-        zero = F.lit(0).cast(num_dt)
-        b, n = F.col(bool_col), F.col(num_col)
-        return (
-            F.when(b.isNull() & n.isNull(), F.lit(True))
-            .when(b.isNull() | n.isNull(), F.lit(False))
-            .when(b, n.eqNullSafe(one))
-            .otherwise(n.eqNullSafe(zero))
+        b, n = quote(bool_col), quote(num_col)
+        return _null_aware(
+            b,
+            n,
+            f"WHEN {b} THEN {n} <=> {sql_cast('1', num_dt)} "
+            f"ELSE {n} <=> {sql_cast('0', num_dt)}",
         )
 
 
@@ -152,24 +197,20 @@ class NumericComparator(BaseComparator):
         dt1, dt2 = _dtype(df, col1), _dtype(df, col2)
         if not (_is_numeric(dt1) and _is_numeric(dt2)):
             return None
-        c1, c2 = F.col(col1), F.col(col2)
-        d1 = c1 if isinstance(dt1, T.DoubleType) else c1.try_cast("double")
-        d2 = c2 if isinstance(dt2, T.DoubleType) else c2.try_cast("double")
-        return (
-            F.when(c1.isNull() & c2.isNull(), F.lit(True))
-            .when(c1.isNull() | c2.isNull(), F.lit(False))
-            .when(F.isnan(d1) & F.isnan(d2), F.lit(True))
-            .when(F.isnan(d1) | F.isnan(d2), F.lit(False))
-            .when(c1.eqNullSafe(c2), F.lit(True))
+        c1, c2 = quote(col1), quote(col2)
+        d1 = c1 if isinstance(dt1, T.DoubleType) else f"try_cast({c1} AS DOUBLE)"
+        d2 = c2 if isinstance(dt2, T.DoubleType) else f"try_cast({c2} AS DOUBLE)"
+        inf = sql_double(float("inf"))
+        return _null_aware(
+            c1,
+            c2,
+            f"WHEN isnan({d1}) AND isnan({d2}) THEN true "
+            f"WHEN isnan({d1}) OR isnan({d2}) THEN false "
+            f"WHEN {c1} <=> {c2} THEN true "
             # non-finite values only match exactly (numpy.isclose semantics;
             # also avoids 0*inf=NaN poisoning the tolerance bound)
-            .when(
-                (F.abs(d1) == F.lit(float("inf"))) | (F.abs(d2) == F.lit(float("inf"))),
-                F.lit(False),
-            )
-            .otherwise(
-                F.abs(d1 - d2) <= F.lit(float(abs_tol)) + F.lit(float(rel_tol)) * F.abs(d2)
-            )
+            f"WHEN abs({d1}) = {inf} OR abs({d2}) = {inf} THEN false "
+            f"ELSE abs({d1} - {d2}) <= {sql_double(abs_tol)} + {sql_double(rel_tol)} * abs({d2})",
         )
 
 
@@ -198,18 +239,17 @@ class StringComparator(BaseComparator):
         t1, t2 = _is_temporal(dt1), _is_temporal(dt2)
         if not ((s1 or t1) and (s2 or t2)):
             return None
-        c1, c2 = F.col(col1), F.col(col2)
-        if t1 and t2:
-            return c1.eqNullSafe(c2)
+        c1, c2 = quote(col1), quote(col2)
         if s1 and t2:
-            return c1.try_cast(dt2).eqNullSafe(c2)
-        if t1 and s2:
-            return c1.eqNullSafe(c2.try_cast(dt1))
-        if ignore_spaces:
-            c1, c2 = F.trim(c1), F.trim(c2)
-        if ignore_case:
-            c1, c2 = F.upper(c1), F.upper(c2)
-        return c1.eqNullSafe(c2)
+            c1 = f"try_cast({c1} AS {dt2.simpleString()})"
+        elif t1 and s2:
+            c2 = f"try_cast({c2} AS {dt1.simpleString()})"
+        elif s1 and s2:
+            if ignore_spaces:
+                c1, c2 = f"trim({c1})", f"trim({c2})"
+            if ignore_case:
+                c1, c2 = f"upper({c1})", f"upper({c2})"
+        return f"{c1} <=> {c2}"
 
 
 class ComplexComparator(BaseComparator):
@@ -222,17 +262,15 @@ class ComplexComparator(BaseComparator):
 
     def compare(self, df, col1, col2, **kwargs):
         dt1, dt2 = _dtype(df, col1), _dtype(df, col2)
-        if isinstance(dt1, T.StructType) and isinstance(dt2, T.StructType):
-            return F.col(col1).eqNullSafe(F.col(col2))
-        if isinstance(dt1, T.BinaryType) and isinstance(dt2, T.BinaryType):
-            return F.col(col1).eqNullSafe(F.col(col2))
+        c1, c2 = quote(col1), quote(col2)
+        for family in (T.StructType, T.BinaryType):
+            if isinstance(dt1, family) and isinstance(dt2, family):
+                return f"{c1} <=> {c2}"
         if isinstance(dt1, T.MapType) and isinstance(dt2, T.MapType):
-            e1 = F.array_sort(F.map_entries(F.col(col1)))
-            e2 = F.array_sort(F.map_entries(F.col(col2)))
-            both_null = F.col(col1).isNull() & F.col(col2).isNull()
-            one_null = F.col(col1).isNull() | F.col(col2).isNull()
-            return F.when(both_null, F.lit(True)).when(one_null, F.lit(False)).otherwise(
-                e1.eqNullSafe(e2)
+            return _null_aware(
+                c1,
+                c2,
+                f"ELSE array_sort(map_entries({c1})) <=> array_sort(map_entries({c2}))",
             )
         return None
 
@@ -248,7 +286,7 @@ DEFAULT_COMPARATORS: tuple[BaseComparator, ...] = (
 )
 
 
-def columns_equal(
+def match_predicate(
     df: DataFrame,
     col1: str,
     col2: str,
@@ -257,8 +295,9 @@ def columns_equal(
     ignore_spaces: bool = False,
     ignore_case: bool = False,
     comparators: Optional[Sequence[BaseComparator]] = None,
-) -> Column:
-    """Dispatch through the comparator chain; first non-None Column wins.
+) -> Predicate:
+    """Dispatch through the comparator chain; the first claim wins, as SQL
+    text or as the Column a custom comparator returned.
 
     Parity: ref ``spark.py:887-990`` — unclaimed pairs (e.g. numeric vs
     string) compare as constant False rather than erroring.
@@ -276,4 +315,21 @@ def columns_equal(
         )
         if result is not None:
             return result
-    return F.lit(False)
+    return "false"
+
+
+def columns_equal(
+    df: DataFrame,
+    col1: str,
+    col2: str,
+    rel_tol: float = 0,
+    abs_tol: float = 0,
+    ignore_spaces: bool = False,
+    ignore_case: bool = False,
+    comparators: Optional[Sequence[BaseComparator]] = None,
+) -> Column:
+    """:func:`match_predicate` as a boolean ``Column``."""
+    pred = match_predicate(
+        df, col1, col2, rel_tol, abs_tol, ignore_spaces, ignore_case, comparators
+    )
+    return F.expr(pred) if isinstance(pred, str) else pred

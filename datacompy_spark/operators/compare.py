@@ -4,17 +4,24 @@ Semantics parity target: capitalone/datacompy ``spark.py`` (SparkSQLCompare).
 Architecture is deliberately NOT a port:
 
 * The null-safe full outer join (ref ``spark.py:450-466``, built as a SQL
-  string over temp views) is a pure DataFrame-API join — Catalyst plans it
-  as a sort-merge join and AQE may convert to broadcast. Duplicate-key
+  string over temp views) is a DataFrame join — Catalyst plans it as a
+  sort-merge join and AQE may convert to broadcast. Duplicate-key
   compares materialize the null-safe key as ``coalesce(k, default)`` and
   ``isnull(k)`` columns that both the pairing window and the join use, so
   each side is shuffled once.
+* Every expression the compare builds — key lowering, ordinal window,
+  renames, join condition, match predicates, statistics aggregates,
+  filters, report sample tags — is Spark SQL text, applied with one
+  ``selectExpr`` (or ``filter``/``F.expr``) per projection. The JVM
+  parses each string once, where a tree of ``Column`` calls would cost a
+  py4j round trip per node. Identifiers are backtick-quoted, so any
+  column name works.
 * ALL statistics — left/right/both row classes, per-column match counts,
   null diffs, max diffs, all-match row count (ref ``spark.py:573-636``, which
   runs 2N+1 separate actions) — fold into ONE set of aggregates observed on
-  one pass over the join: the report's sample action, or the action that
-  populates the exceptions cache. At 100 TB this is the difference between
-  one pass over the data and dozens.
+  one pass over the join: the report's sample action, or the ``noop``
+  write that populates the exceptions cache. At 100 TB this is the
+  difference between one pass over the data and dozens.
 * A report is ONE Spark action: the statistics ride it as ``observe``
   metrics and every sample (each mismatching column's, each side's unique
   rows) comes out of one per-slot top-n window. It persists nothing.
@@ -36,16 +43,20 @@ Scale design notes (local[32] test, 1000-executor target):
 from __future__ import annotations
 
 import logging
-from functools import cached_property, reduce
+import math
+from functools import cached_property
 from typing import Any, Callable, Dict, List, Mapping, Optional, Sequence, Tuple, TypedDict, Union
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datacompy_spark.functions.comparators import (
     BaseComparator,
-    columns_equal,
+    match_predicate,
+    quote,
+    sql_cast,
+    sql_string,
     try_double,
     _NUMERIC_TYPES,
     _STRING_TYPES,
@@ -123,20 +134,19 @@ class ColumnStat(TypedDict):
 Tolerance = Union[int, float, Mapping[str, float]]
 
 
-def _null_key_default(dt: T.DataType) -> Optional[Column]:
-    """A non-null literal of ``dt`` for the lowered null-safe join key
+def _null_key_default(dt: T.DataType) -> Optional[str]:
+    """A non-null SQL literal of ``dt`` for the lowered null-safe join key
     ``coalesce(k, default)``; None for key types without one here, which
-    keep ``eqNullSafe``. Any value of the type works: ``isnull(k)`` rides
-    next to it, so a NULL key never pairs with a real key equal to the
-    default."""
+    keep ``<=>``. Any value of the type works: ``isnull(k)`` rides next to
+    it, so a NULL key never pairs with a real key equal to the default."""
     if isinstance(dt, _NUMERIC_TYPES):
-        return F.lit(0).cast(dt)
+        return sql_cast("0", dt)
     if isinstance(dt, _STRING_TYPES):
-        return F.lit("")
+        return "''"
     if isinstance(dt, T.BooleanType):
-        return F.lit(False)
+        return "false"
     if isinstance(dt, _TEMPORAL_TYPES):
-        return F.lit("1970-01-01").cast(dt)
+        return sql_cast("'1970-01-01'", dt)
     return None
 
 
@@ -158,13 +168,19 @@ def normalize_tolerance(tol: Tolerance, columns: Sequence[str], lower: bool) -> 
     semantics via fallback 0; keys are case-folded when column names are.
     """
     if isinstance(tol, (int, float)):
+        if math.isnan(tol):
+            # NaN fails every <= test: each non-identical value would be a
+            # silent mismatch
+            raise ValueError(f"tolerance for columns {list(columns)} is NaN")
         if tol < 0:
             raise ValueError("tolerance must be non-negative")
         return {c: float(tol) for c in columns}
     if not isinstance(tol, Mapping):
         raise TypeError(f"tolerance must be a number or a dict, got {type(tol)}")
     folded = {(k.lower() if lower else k): float(v) for k, v in tol.items()}
-    for v in folded.values():
+    for k, v in folded.items():
+        if math.isnan(v):
+            raise ValueError(f"tolerance for column {k!r} is NaN")
         if v < 0:
             raise ValueError("tolerance must be non-negative")
     unknown = [k for k in folded if k != "default" and k not in columns]
@@ -493,53 +509,86 @@ class SparkCompare:
 
     # ---------------------------------------------------------------- the plan
 
-    def _key_value(self, col: Column, dt: T.DataType) -> Column:
-        """The join-key value that both the pairing window and the join
-        compare: string keys are trimmed under ``ignore_spaces`` but never
-        case-folded (ref ``spark.py:416-427``). The trim is decided per side,
-        by that side's own dtype — the two frames may declare different
+    def _key_value(self, name: str, dt: T.DataType) -> str:
+        """The join-key value, as SQL text, that both the pairing window and
+        the join compare: string keys are trimmed under ``ignore_spaces`` but
+        never case-folded (ref ``spark.py:416-427``). The trim is decided per
+        side, by that side's own dtype — the two frames may declare different
         dtypes for the same key."""
         if self.ignore_spaces and isinstance(dt, _STRING_TYPES):
-            return F.trim(col)
-        return col
+            return f"trim({quote(name)})"
+        return quote(name)
 
-    def _with_ordinal(self, df: DataFrame, lowered: Sequence[str]) -> DataFrame:
-        """Attach a 0-based per-key ordinal so the k-th duplicate on the left
+    def _side(self, df: DataFrame, tag: str, public: str, lowered: Sequence[str]) -> DataFrame:
+        """One side of the join: every column renamed, plus the presence
+        marker, in one projection. A paired compare adds the pairing ordinal
+        in a window projection below it, and the lowered keys and the
+        ordering id in one more below that.
+
+        Renames are atomic, NOT ``withColumnsRenamed``: that API folds its
+        mapping sequentially, so a frame holding both ``v`` and ``v_df1``
+        double-renames the freshly-suffixed ``v`` and the join dies with
+        AMBIGUOUS_REFERENCE. One projection applies every rename against the
+        ORIGINAL names (matching the reference's pandas-merge suffixing:
+        ``v -> v_df1``, ``v_df1 -> v_df1_df1``). Join keys, the lowered keys
+        and the ordinal get engine-private ``__lhs``/``__rhs`` suffixes;
+        value columns the public ``{col}_{df_name}`` (ref
+        ``spark.py:429-448``).
+
+        The ordinal is 0-based per key, so the k-th duplicate on the left
         pairs with the k-th on the right (ref ``spark.py:386-412,1114-1170``).
-
-        The window partitions by the key values the join compares (trimmed
+        Its window partitions by the key values the join compares (trimmed
         under ``ignore_spaces``), so rows the join treats as one key share
         one ordinal sequence. With ``lowered`` names, each null-safe key is
         first materialized as ``coalesce(k, default)`` and ``isnull(k)``
         columns: the window partitions by those and the join equates them,
-        so the join reuses the window's partitioning and ordering.
-
-        The reference string-casts keys and substitutes a ``'DATACOMPY_NULL'``
+        so the join reuses the window's partitioning and ordering. The
+        reference string-casts keys and substitutes a ``'DATACOMPY_NULL'``
         sentinel for NULLs before grouping (``spark.py:1136-1147``); Spark
         windows already treat NULL as an ordinary partition value, so no
-        sentinel (and no sentinel-collision probe) is needed here.
-        """
-        dtypes = [df.schema[c].dataType for c in self.join_columns]
-        keys = [self._key_value(F.col(c), dt) for c, dt in zip(self.join_columns, dtypes)]
-        if lowered:
-            parts = {}
-            for i, (k, dt) in enumerate(zip(keys, dtypes)):
-                parts[lowered[2 * i]] = F.coalesce(k, _null_key_default(dt))
-                parts[lowered[2 * i + 1]] = k.isNull()
-            df = df.withColumns(parts)
-            keys = [F.col(n) for n in lowered]
-        idx, ordinal = self._n["idx"], self._n["ordinal"]
-        if self._dup_order_by:
-            order = [F.col(c) for c in self._dup_order_by]
-        else:
-            df = df.withColumn(idx, F.monotonically_increasing_id())
-            order = [F.col(idx)]
-        w = Window.partitionBy(*keys).orderBy(*order)
-        df = df.withColumn(ordinal, F.row_number().over(w) - 1)
-        return df.drop(idx)
+        sentinel (and no sentinel-collision probe) is needed here."""
+        cols = list(df.columns)
+        if not self.assume_unique:
+            dtypes = [df.schema[c].dataType for c in self.join_columns]
+            keys = [self._key_value(c, dt) for c, dt in zip(self.join_columns, dtypes)]
+            pre = []
+            if lowered:
+                for i, (k, dt) in enumerate(zip(keys, dtypes)):
+                    pre.append(f"coalesce({k}, {_null_key_default(dt)}) AS {quote(lowered[2 * i])}")
+                    pre.append(f"isnull({k}) AS {quote(lowered[2 * i + 1])}")
+                cols += lowered
+                keys = [quote(n) for n in lowered]
+            if self._dup_order_by:
+                order = [quote(c) for c in self._dup_order_by]
+            else:
+                pre.append(f"monotonically_increasing_id() AS {quote(self._n['idx'])}")
+                order = [quote(self._n["idx"])]
+            if pre:
+                df = df.selectExpr("*", *pre)
+            # the window gets a projection of its own: renames next to it
+            # would be pushed below the Window, a Project the optimizer
+            # cannot fold away. The renames drop the ordering id.
+            window = f"PARTITION BY {', '.join(keys)} ORDER BY {', '.join(order)}"
+            df = df.selectExpr(
+                "*", f"row_number() OVER ({window}) - 1 AS {quote(self._n['ordinal'])}"
+            )
+            cols.append(self._n["ordinal"])
+
+        engine_keys = {*self.join_columns, self._n["ordinal"], *lowered}
+
+        def renamed(c: str) -> str:
+            new = f"{c}__{tag}" if c in engine_keys else f"{c}_{public}"
+            return f"{quote(c)} AS {quote(new)}"
+
+        return df.selectExpr(
+            *map(renamed, cols), f"true AS {quote(self._n['present_' + tag])}"
+        )
 
     def _build(self) -> None:
-        """Assemble the (lazy) comparison plan.
+        """Assemble the (lazy) comparison plan: each side (:meth:`_side`),
+        the join, and two projections after it — the restored keys, merge
+        indicator and ``__dc_ord``, then the match predicates. Every
+        expression is Spark SQL text applied with ``selectExpr``.
 
         Scale design vs the reference (``spark.py:328-412``): the reference
         runs a duplicate-key probe (two counts per side = extra shuffles +
@@ -556,10 +605,9 @@ class SparkCompare:
         dup-safety: one in-partition sort, zero extra shuffles, zero extra
         actions. ``assume_unique=True`` skips the ordinal entirely (caller
         guarantees key uniqueness)."""
-        df1, df2 = self.df1, self.df2
         n1, n2 = self.df1_name, self.df2_name
         ordinal = self._n["ordinal"]
-        present = {"lhs": self._n["present_lhs"], "rhs": self._n["present_rhs"]}
+        pl, pr = quote(self._n["present_lhs"]), quote(self._n["present_rhs"])
 
         # Null-safe equality is the reference semantic (null keys pair
         # with null keys, spark.py:429-448) but its physical form —
@@ -579,7 +627,7 @@ class SparkCompare:
         # the ordinal window, so the window and the join share one key
         # partitioning (one exchange and one sort per side, not two of
         # each). Only when both sides declare the same key dtypes: mixed
-        # dtypes keep eqNullSafe and its implicit coercion.
+        # dtypes keep <=> and its implicit coercion.
         lowered: List[str] = []
         if (
             paired
@@ -591,112 +639,93 @@ class SparkCompare:
             )
         ):
             lowered = self._lowered_key_names(self._n)
-        if paired:
-            df1 = self._with_ordinal(df1, lowered)
-            df2 = self._with_ordinal(df2, lowered)
-        engine_keys = {*self.join_columns, ordinal, *lowered}
+        left = self._side(self.df1, "lhs", n1, lowered)
+        right = self._side(self.df2, "rhs", n2, lowered)
 
-        # Internal rename: join keys get engine-private suffixes, value columns
-        # get the public {col}_{df_name} suffixes (ref ``spark.py:429-448``).
-        def suffixed(df: DataFrame, tag: str, public: str) -> DataFrame:
-            # atomic select-based rename, NOT withColumnsRenamed: that API
-            # folds its mapping sequentially, so a frame holding both `v`
-            # and `v_df1` double-renames the freshly-suffixed `v` and the
-            # join dies with AMBIGUOUS_REFERENCE. One projection applies
-            # every rename against the ORIGINAL names (matching the
-            # reference's pandas-merge suffixing: v -> v_df1,
-            # v_df1 -> v_df1_df1).
-            def new_name(c: str) -> str:
-                if c in engine_keys:
-                    return f"{c}__{tag}"
-                return f"{c}_{public}"
-
-            return df.select(
-                *[df[c].alias(new_name(c)) for c in df.columns]
-            ).withColumn(present[tag], F.lit(True))
-
-        left = suffixed(df1, "lhs", n1)
-        right = suffixed(df2, "rhs", n2)
-
+        # the suffixed names are unique across the sides, so the condition
+        # needs no side-qualified references
         if lowered:
-            conds = [left[f"{n}__lhs"] == right[f"{n}__rhs"] for n in lowered]
+            conds = [f"{quote(n + '__lhs')} = {quote(n + '__rhs')}" for n in lowered]
         else:
-            def key_eq(lc: Column, rc: Column) -> Column:
-                return lc.eqNullSafe(rc) if use_null_safe else lc == rc
-
+            eq = "<=>" if use_null_safe else "="
             conds = [
-                key_eq(
-                    self._key_value(left[f"{c}__lhs"], self.df1.schema[c].dataType),
-                    self._key_value(right[f"{c}__rhs"], self.df2.schema[c].dataType),
-                )
+                f"{self._key_value(c + '__lhs', self.df1.schema[c].dataType)} {eq} "
+                f"{self._key_value(c + '__rhs', self.df2.schema[c].dataType)}"
                 for c in self.join_columns
             ]
-        cond = reduce(lambda a, b: a & b, conds)
         if paired:
-            ol, orr = left[f"{ordinal}__lhs"], right[f"{ordinal}__rhs"]
+            ol, orr = quote(f"{ordinal}__lhs"), quote(f"{ordinal}__rhs")
             if self.dup_join_on_ordinal:
                 # plain equality: Catalyst's ExtractEquiJoinKeys lifts it
                 # into the hash keys — hot keys fan out, extra exchange
-                cond = cond & (ol == orr)
+                conds.append(f"{ol} = {orr}")
             else:
                 # range-pair keeps the ordinal OUT of the hash keys so the
                 # join reuses the window's partitioning (zero extra
                 # exchanges); per-key residual cost is O(dups²)
-                cond = cond & (ol <= orr) & (ol >= orr)
-        outer = left.join(right, on=cond, how="full_outer")
+                conds += [f"{ol} <= {orr}", f"{ol} >= {orr}"]
+        outer = left.join(right, on=F.expr(" AND ".join(conds)), how="full_outer")
 
-        merge = (
-            F.when(F.col(present["rhs"]).isNull(), F.lit("left_only"))
-            .when(F.col(present["lhs"]).isNull(), F.lit("right_only"))
-            .otherwise(F.lit("both"))
-        )
-        restored_keys = [
-            F.when(
-                F.col(present["lhs"]).isNotNull(), F.col(f"{c}__lhs")
-            ).otherwise(F.col(f"{c}__rhs")).alias(c)
-            for c in self.join_columns
+        values = [
+            f"{c}_{public}"
+            for df, public in ((self.df1, n1), (self.df2, n2))
+            for c in df.columns
+            if c not in self.join_columns
         ]
-        internal = {
-            f"{k}__{t}" for k in engine_keys for t in ("lhs", "rhs")
-        } | set(present.values())
-        value_cols = [c for c in outer.columns if c not in internal]
-        extras = []
+        merge = (
+            f"CASE WHEN {pr} IS NULL THEN 'left_only' "
+            f"WHEN {pl} IS NULL THEN 'right_only' ELSE 'both' END"
+        )
         if paired:
             # max pairing ordinal → duplicate detection, for free in the stats agg
-            extras.append(
-                F.greatest(
-                    F.coalesce(F.col(f"{ordinal}__lhs"), F.lit(0)),
-                    F.coalesce(F.col(f"{ordinal}__rhs"), F.lit(0)),
-                ).alias(self._n["ord"])
-            )
+            ord_expr = f"greatest(coalesce({ol}, 0), coalesce({orr}, 0))"
         else:
-            extras.append(F.lit(0).alias(self._n["ord"]))
-        outer = outer.select(
-            *restored_keys,
-            *[F.col(c) for c in value_cols],
-            merge.alias(self._n["merge"]),
-            *extras,
+            ord_expr = "0"
+        outer = outer.selectExpr(
+            *[
+                f"CASE WHEN {pl} IS NOT NULL THEN {quote(c + '__lhs')} "
+                f"ELSE {quote(c + '__rhs')} END AS {quote(c)}"
+                for c in self.join_columns
+            ],
+            *[quote(c) for c in values],
+            f"{merge} AS {quote(self._n['merge'])}",
+            f"{ord_expr} AS {quote(self._n['ord'])}",
         )
 
-        # Per-column match expressions — one boolean Column each, all attached
-        # in a single withColumns batch (ref ``spark.py:549-570``).
-        match_exprs = {}
+        # Per-column match predicates, all attached in one projection (ref
+        # ``spark.py:549-570``). A custom comparator's Column claim is the
+        # only expression attached as a Column.
+        not_both = f"{quote(self._n['merge'])} != 'both'"
+        matches: Dict[str, Union[str, Column]] = {}
         for c in self._compare_columns:
-            match_exprs[f"{c}_match"] = F.when(
-                F.col(self._n["merge"]) != "both", F.lit(None).cast("boolean")
-            ).otherwise(
-                columns_equal(
-                    outer,
-                    f"{c}_{n1}",
-                    f"{c}_{n2}",
-                    rel_tol=self.rel_tol[c],
-                    abs_tol=self.abs_tol[c],
-                    ignore_spaces=self.ignore_spaces,
-                    ignore_case=self.ignore_case,
-                    comparators=self.custom_comparators,
-                )
+            pred = match_predicate(
+                outer,
+                f"{c}_{n1}",
+                f"{c}_{n2}",
+                rel_tol=self.rel_tol[c],
+                abs_tol=self.abs_tol[c],
+                ignore_spaces=self.ignore_spaces,
+                ignore_case=self.ignore_case,
+                comparators=self.custom_comparators,
             )
-        outer = outer.withColumns(match_exprs)
+            if isinstance(pred, str):
+                matches[f"{c}_match"] = (
+                    f"CASE WHEN {not_both} THEN CAST(NULL AS BOOLEAN) ELSE {pred} END"
+                )
+            else:
+                matches[f"{c}_match"] = F.when(
+                    F.expr(not_both), F.lit(None).cast("boolean")
+                ).otherwise(pred)
+        taken = [*self.join_columns, *values, self._n["merge"], self._n["ord"]]
+        if all(isinstance(e, str) for e in matches.values()) and not (
+            {m.lower() for m in matches} & {c.lower() for c in taken}
+        ):
+            outer = outer.selectExpr("*", *[f"{e} AS {quote(m)}" for m, e in matches.items()])
+        elif matches:
+            # withColumns replaces a same-named column, as it always did
+            outer = outer.withColumns(
+                {m: F.expr(e) if isinstance(e, str) else e for m, e in matches.items()}
+            )
         if self.cache_intermediates:
             outer = tracked_persist(outer)
         self._outer = outer
@@ -721,6 +750,10 @@ class SparkCompare:
         ``plans.cache`` owner: :func:`~datacompy_spark.plans.cache.scope`,
         ``release_caches()`` or :meth:`uncache` releases it.
 
+        The populate action is a ``noop`` write: it runs the cache-build
+        stage and nothing else. ``count()`` on the persisted frame would add
+        a count job with its own small exchange under AQE.
+
         Both memos are set only after the populate action succeeds; on
         failure the half-populated cache is released and the error
         propagates."""
@@ -730,7 +763,8 @@ class SparkCompare:
         def populate(diff: DataFrame) -> DataFrame:
             exc = tracked_persist(diff)
             try:
-                exc.count()  # populate the cache; metrics collect in-flight
+                # populate the cache; metrics collect in-flight
+                exc.write.format("noop").mode("overwrite").save()
             except BaseException:
                 exc.unpersist(blocking=True)
                 raise
@@ -751,7 +785,7 @@ class SparkCompare:
 
             obs = Observation()
             src = src.observe(obs, *self._stat_aggs())
-        pred = (F.col(self._n["merge"]) != "both") | self._any_mismatch_pred()
+        pred = f"({quote(self._n['merge'])} != 'both') OR ({self._any_mismatch_pred()})"
         out = action(src.filter(pred))
         if obs is not None:
             stats = {k: (0 if v is None else v) for k, v in obs.get.items()}
@@ -817,8 +851,8 @@ class SparkCompare:
         merge indicator (P3). Prefer this over unioning the three derived
         frames — each derived frame filters the same outer join, so a
         3-way union evaluates the join three times unless it was cached."""
-        return self._outer.select(
-            *self.join_columns, F.col(self._n["merge"]).alias("row_class")
+        return self._outer.selectExpr(
+            *map(quote, self.join_columns), f"{quote(self._n['merge'])} AS row_class"
         )
 
     def row_class_matrix(self) -> DataFrame:
@@ -835,10 +869,10 @@ class SparkCompare:
         derived frame and then pays a fourth join to stitch the rollups
         back together. At 100 TB that is the difference between one
         key-partitioned pass and four."""
-        return self._outer.select(
-            *self.join_columns,
-            F.col(self._n["merge"]).alias("row_class"),
-            *[F.col(f"{c}_match") for c in self._compare_columns],
+        return self._outer.selectExpr(
+            *map(quote, self.join_columns),
+            f"{quote(self._n['merge'])} AS row_class",
+            *[quote(f"{c}_match") for c in self._compare_columns],
         )
 
     @cached_property
@@ -852,7 +886,7 @@ class SparkCompare:
             cols.append(f"{c}_{self.df1_name}")
         for c in self.df2_unq_columns():
             cols.append(f"{c}_{self.df2_name}")
-        return self._outer.filter(F.col(self._n["merge"]) == "both").select(*cols)
+        return self._outer.filter(self._merge_is("both")).selectExpr(*map(quote, cols))
 
     def _unq_rows(self, side: str) -> DataFrame:
         tag, name, src = (
@@ -860,11 +894,10 @@ class SparkCompare:
             if side == "df1"
             else ("right_only", self.df2_name, self.df2)
         )
-        sel = []
-        for c in src.columns:
-            sel.append(
-                F.col(c if c in self.join_columns else f"{c}_{name}").alias(c)
-            )
+        sel = [
+            f"{quote(c if c in self.join_columns else f'{c}_{name}')} AS {quote(c)}"
+            for c in src.columns
+        ]
         # unique rows are by definition exceptions → serve from the small
         # cache WHEN IT ALREADY EXISTS (a statistics read or mismatch pull
         # populated it). A standalone unique-rows
@@ -874,7 +907,7 @@ class SparkCompare:
         # instead lets Catalyst PRUNE all match expressions from the plan
         # (r14; measured via the cmp_unique_rows A/B).
         src_df = self.__dict__.get("_exceptions", self._outer)
-        return src_df.filter(F.col(self._n["merge"]) == tag).select(*sel)
+        return src_df.filter(self._merge_is(tag)).selectExpr(*sel)
 
     @cached_property
     def df1_unq_rows(self) -> DataFrame:
@@ -893,46 +926,50 @@ class SparkCompare:
         ok = _NUMERIC_TYPES + _STRING_TYPES + (T.BooleanType,)
         return isinstance(dt1, ok) and isinstance(dt2, ok)
 
+    def _merge_is(self, tag: str) -> str:
+        """SQL predicate: the merge indicator is ``tag``."""
+        return f"{quote(self._n['merge'])} = {sql_string(tag)}"
+
+    def _all_match_sql(self) -> str:
+        """SQL predicate: every compared column matches (NULL off ``both``)."""
+        match_cols = [quote(f"{c}_match") for c in self._compare_columns]
+        return " AND ".join(match_cols) if match_cols else "true"
+
     def _stat_aggs(self) -> List[Column]:
         """The statistics aggregate expressions, consumed as ``observe``
         metrics on the first pass over the diff (:meth:`_diff_pass`)."""
-        both = F.col(self._n["merge"]) == "both"
+        both = self._merge_is("both")
         n1, n2 = self.df1_name, self.df2_name
+
+        def count_if(pred: str, alias: str) -> str:
+            return f"sum(CASE WHEN {pred} THEN 1 ELSE 0 END) AS {quote(alias)}"
+
         aggs = [
-            F.sum(F.when(F.col(self._n["merge"]) == "left_only", 1).otherwise(0)).alias("__left_only"),
-            F.sum(F.when(F.col(self._n["merge"]) == "right_only", 1).otherwise(0)).alias("__right_only"),
-            F.sum(F.when(both, 1).otherwise(0)).alias("__both"),
-            F.max(F.col(self._n["ord"])).alias("__max_ord"),
+            count_if(self._merge_is("left_only"), "__left_only"),
+            count_if(self._merge_is("right_only"), "__right_only"),
+            count_if(both, "__both"),
+            f"max({quote(self._n['ord'])}) AS `__max_ord`",
+            count_if(f"({both}) AND ({self._all_match_sql()})", "__rows_all_match"),
         ]
-        match_cols = [F.col(f"{c}_match") for c in self._compare_columns]
-        if match_cols:
-            all_match = reduce(lambda a, b: a & b, match_cols)
-        else:
-            all_match = F.lit(True)
-        aggs.append(
-            F.sum(F.when(both & all_match, 1).otherwise(0)).alias("__rows_all_match")
-        )
         for c in self._compare_columns:
-            c1, c2 = F.col(f"{c}_{n1}"), F.col(f"{c}_{n2}")
+            c1, c2 = quote(f"{c}_{n1}"), quote(f"{c}_{n2}")
+            aggs.append(count_if(f"({both}) AND {quote(f'{c}_match')}", f"__match__{c}"))
             aggs.append(
-                F.sum(F.when(both & F.col(f"{c}_match"), 1).otherwise(0)).alias(f"__match__{c}")
-            )
-            aggs.append(
-                F.sum(
-                    F.when(both & (c1.isNull() != c2.isNull()), 1).otherwise(0)
-                ).alias(f"__nulldiff__{c}")
+                count_if(f"({both}) AND (({c1} IS NULL) != ({c2} IS NULL))", f"__nulldiff__{c}")
             )
             if self._maxdiff_capable(c):
                 d1 = try_double(c1, self.df1.schema[c].dataType)
                 d2 = try_double(c2, self.df2.schema[c].dataType)
-                diff = F.abs(d1 - d2)
                 # exclude NaN rows from max_diff (ref ``spark.py:1058-1060``)
-                guarded = F.when(
-                    both & d1.isNotNull() & d2.isNotNull() & ~F.isnan(d1) & ~F.isnan(d2),
-                    diff,
+                guard = (
+                    f"({both}) AND ({d1}) IS NOT NULL AND ({d2}) IS NOT NULL "
+                    f"AND (NOT isnan({d1})) AND (NOT isnan({d2}))"
                 )
-                aggs.append(F.max(guarded).alias(f"__maxdiff__{c}"))
-        return aggs
+                aggs.append(
+                    f"max(CASE WHEN {guard} THEN abs(({d1}) - ({d2})) END) "
+                    f"AS {quote(f'__maxdiff__{c}')}"
+                )
+        return [F.expr(a) for a in aggs]
 
     @property
     def _stats(self) -> Dict[str, Any]:
@@ -1121,11 +1158,11 @@ class SparkCompare:
 
     # -------------------------------------------------------------- mismatches
 
-    def _any_mismatch_pred(self) -> Column:
-        match_cols = [F.col(f"{c}_match") for c in self._compare_columns]
-        if not match_cols:
-            return F.lit(False)
-        return ~reduce(lambda a, b: a & b, match_cols)
+    def _any_mismatch_pred(self) -> str:
+        """SQL predicate: some compared column mismatches."""
+        if not self._compare_columns:
+            return "false"
+        return f"NOT ({self._all_match_sql()})"
 
     def sample_mismatch(
         self, column: str, sample_count: int = 10, for_display: bool = False
@@ -1141,9 +1178,9 @@ class SparkCompare:
         self._ensure_cached()
         out = (
             self._exceptions.filter(
-                (F.col(self._n["merge"]) == "both") & ~F.col(f"{column}_match")
+                f"({self._merge_is('both')}) AND (NOT {quote(f'{column}_match')})"
             )
-            .select(*self.join_columns, f"{column}_{n1}", f"{column}_{n2}")
+            .selectExpr(*map(quote, [*self.join_columns, f"{column}_{n1}", f"{column}_{n2}"]))
             .limit(sample_count)
         )
         if for_display:
@@ -1168,8 +1205,8 @@ class SparkCompare:
             cols += [f"{c}_{n1}", f"{c}_{n2}"]
         self._ensure_cached()
         return self._exceptions.filter(
-            (F.col(self._n["merge"]) == "both") & self._any_mismatch_pred()
-        ).select(*cols)
+            f"({self._merge_is('both')}) AND ({self._any_mismatch_pred()})"
+        ).selectExpr(*map(quote, cols))
 
     # ------------------------------------------------------------ sensitive
 
@@ -1192,9 +1229,9 @@ class SparkCompare:
                 targets.add(c)
                 for sfx in suffixes:
                     targets.add(f"{c}_{sfx}")
-            return df.select(
+            return df.selectExpr(
                 *[
-                    F.lit(MASK_VALUE).alias(c) if c in targets else F.col(c)
+                    f"{sql_string(MASK_VALUE)} AS {quote(c)}" if c in targets else quote(c)
                     for c in df.columns
                 ]
             )
@@ -1250,14 +1287,14 @@ class SparkCompare:
         ``sample_count <= 0`` both dicts are empty."""
         n1, n2 = self.df1_name, self.df2_name
         keys = list(self.join_columns)
-        merge = F.col(self._n["merge"])
         known = self.__dict__.get("_stats")
-        slots: List[Tuple[str, str, Column, SlotLayout]] = []
+        slots: List[Tuple[str, str, str, SlotLayout]] = []
         for c in self._compare_columns:
             if known is None or int(known[f"__match__{c}"]) < int(known["__both"]):
                 layout = [(k, k) for k in keys]
                 layout += [(f"{c}_{n1}", f"{c} ({n1})"), (f"{c}_{n2}", f"{c} ({n2})")]
-                slots.append(("mismatch", c, (merge == "both") & ~F.col(f"{c}_match"), layout))
+                pred = f"({self._merge_is('both')}) AND (NOT {quote(f'{c}_match')})"
+                slots.append(("mismatch", c, pred, layout))
         for side, tag, name, src in (
             ("df1", "left_only", n1, self.df1),
             ("df2", "right_only", n2, self.df2),
@@ -1266,25 +1303,28 @@ class SparkCompare:
                 layout = [
                     (c if c in keys else f"{c}_{name}", c) for c in src.columns[:column_count]
                 ]
-                slots.append(("unique", side, merge == tag, layout))
+                slots.append(("unique", side, self._merge_is(tag), layout))
         if known is not None and (sample_count <= 0 or not slots):
             return {}, {}
 
         slot, rank = self._n["slot"], self._n["rank"]
         order = [*keys, self._n["ord"]]
         cols = _ordered_unique([*order, *(s for *_, lay in slots for s, _ in lay)])
-        tags = [F.when(pred, F.lit(i)) for i, (_, _, pred, _) in enumerate(slots)]
+        tags = ", ".join(
+            f"CASE WHEN {pred} THEN {i} END" for i, (_, _, pred, _) in enumerate(slots)
+        )
+        window = f"PARTITION BY {quote(slot)} ORDER BY {', '.join(map(quote, order))}"
 
         def take(diff: DataFrame) -> List[Any]:
             top = (
-                diff.select(*cols, F.explode(F.array_compact(F.array(*tags))).alias(slot))
-                .withColumn(
-                    rank, F.row_number().over(Window.partitionBy(slot).orderBy(*order))
+                diff.selectExpr(
+                    *map(quote, cols), f"explode(array_compact(array({tags}))) AS {quote(slot)}"
                 )
+                .selectExpr("*", f"row_number() OVER ({window}) AS {quote(rank)}")
                 # n >= 1 even for sample_count 0: Catalyst folds a rank filter
                 # of 0 into an empty relation, which would drop the observed
                 # statistics along with the rows
-                .filter(F.col(rank) <= max(sample_count, 1))
+                .filter(f"{quote(rank)} <= {max(sample_count, 1)}")
             )
             return _to_pandas_by_slot(top, slot, rank, [lay for *_, lay in slots])
 

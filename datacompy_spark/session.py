@@ -11,19 +11,20 @@ settings; ``apply_recommended_conf(builder)`` folds them into a
 Current recommendations and their trade-offs:
 
 ``spark.python.sql.dataFrameDebugging.enabled = false``
-    PySpark 4 wraps EVERY DataFrame/Column API call in a debugging aid
-    that captures the user call site for error enrichment — costing
-    ``getActiveSession`` + ``conf.get`` + a JVM origin set/clear, i.e.
-    3-4 extra py4j round trips per Column operation. This engine builds
-    hundreds-to-thousands of Column expressions per comparison (25+
-    comparator trees over 47 columns on the TPC-H lineitem compare), so
-    the flag is pure driver latency: measured on the headline compare,
-    plan-build 1.55 s -> 0.50 s, stats aggregation 2.74 -> 1.9 s, report
-    assembly 1.31 -> 0.6 s (r14, cProfile: ~1.5 s of a 1.86 s build phase
-    was py4j socket round trips). The cost is core-count- and
-    data-scale-independent, so the recommendation holds from local[1] to
-    a 1000-executor cluster. Trade-off: Spark error messages lose the
-    "call site" enrichment pointing at the user's line of code — keep the
+    PySpark 4 wraps EVERY Column API call in a debugging aid that captures
+    the user call site for error enrichment — costing ``getActiveSession``
+    + ``conf.get`` + a JVM origin set/clear, i.e. 3-4 extra py4j round
+    trips per Column operation. ``SparkCompare`` builds its expressions as
+    Spark SQL text, so the flag barely moves it now: one lineitem compare
+    unit (11 columns, sf0.01, report plus check flow, 4-core VM, median of
+    4 warm units) took 1.79 s with the flag on and 1.63 s off, ~730 py4j
+    round trips either way. While it built Column trees the same unit took
+    2.91 s and ~16,800 round trips on, 2.36 s and ~5,500 off. The other
+    operators (dedup, similarity, text, profile, ...) still build Column
+    trees, so the flag stays recommended: the cost is per Column call,
+    independent of core count and data scale, from local[1] to a
+    1000-executor cluster. Trade-off: Spark error messages lose the "call
+    site" enrichment pointing at the user's line of code — keep the
     default (true) while developing a pipeline, disable it for production
     runs where driver latency matters.
 

@@ -1,5 +1,9 @@
 """End-to-end SparkCompare scenarios — FIXTURES.md F2/F3/F4/F5/F7 shapes."""
 
+import math
+from datetime import date, datetime
+from decimal import Decimal
+
 import pytest
 from pyspark.sql import Row, functions as F
 
@@ -717,3 +721,197 @@ class TestExplainAndCsvOptions:
         rows = sorted(df.collect(), key=lambda r: r["a"])
         assert rows[1]["a"] == "x;y" and rows[1]["b"] is None
         assert rows[0]["a"] == "p" and rows[0]["b"] == 2
+
+
+class TestToleranceValidation:
+    """A NaN tolerance fails every ``<=`` test, so every non-identical
+    value would be a silent mismatch: it is rejected at the API boundary,
+    naming the column. An infinite tolerance stays legal."""
+
+    def test_nan_scalar_tolerance_rejected(self, spark, f2):
+        for kw in ("abs_tol", "rel_tol"):
+            with pytest.raises(ValueError, match=r"columns \['name', 'amount'\] is NaN"):
+                SparkCompare(spark, *f2, join_columns="id", **{kw: float("nan")})
+
+    def test_nan_dict_tolerance_names_the_column(self, spark, f2):
+        with pytest.raises(ValueError, match="'amount' is NaN"):
+            SparkCompare(spark, *f2, join_columns="id", abs_tol={"amount": float("nan")})
+        with pytest.raises(ValueError, match="'default' is NaN"):
+            SparkCompare(
+                spark, *f2, join_columns="id", rel_tol={"default": float("nan"), "amount": 0}
+            )
+
+    def test_infinite_tolerance_still_compares(self, spark):
+        rows1 = [(1, 1.0), (2, 1.0), (3, float("inf")), (4, float("nan")), (5, -5.0)]
+        rows2 = [(1, 1e308), (2, float("inf")), (3, float("inf")), (4, float("nan")), (5, 7.0)]
+        df1 = spark.createDataFrame(rows1, "id int, v double")
+        df2 = spark.createDataFrame(rows2, "id int, v double")
+        for kw in ({"abs_tol": float("inf")}, {"rel_tol": {"v": float("inf")}}):
+            c = SparkCompare(spark, df1, df2, join_columns="id", **kw)
+            got = {r["id"]: r["v_match"] for r in c.intersect_rows.collect()}
+            # non-finite values only match exactly; any finite pair matches
+            assert got == {1: True, 2: False, 3: True, 4: True, 5: True}, kw
+
+
+def _matches_by_key(c, column):
+    return {
+        r[c.join_columns[0]]: r[f"{column}_match"] for r in c.intersect_rows.collect()
+    }
+
+
+class TestSqlNamesAndLiterals:
+    """Identifiers and literals that the compare writes into its plan:
+    keyword and spaced names, mixed case under a case-sensitive resolver,
+    tolerances across the double range, every lowered join-key type (with
+    NULL keys, with and without duplicates) and the string options."""
+
+    @pytest.mark.parametrize("assume_unique", [False, True])
+    @pytest.mark.parametrize(
+        "key, cols", [("select", ["order", "my col"]), ("my key", ["select", "order"])]
+    )
+    def test_keyword_and_spaced_names(self, spark, assume_unique, key, cols):
+        schema = ", ".join(f"`{c}` {t}" for c, t in [(key, "int"), (cols[0], "string"), (cols[1], "double")])
+        df1 = spark.createDataFrame([(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)], schema)
+        df2 = spark.createDataFrame([(1, "a", 1.0), (2, "B", 2.5), (4, "d", 4.0)], schema)
+        c = SparkCompare(spark, df1, df2, join_columns=key, assume_unique=assume_unique)
+        assert not c.matches()
+        assert (c.df1_unq_rows_count, c.df2_unq_rows_count, c.intersect_rows_count) == (1, 1, 2)
+        assert c.count_matching_rows() == 1
+        assert c.columns_with_mismatches == cols
+        assert _matches_by_key(c, cols[0]) == {1: True, 2: False}
+        assert _matches_by_key(c, cols[1]) == {1: True, 2: False}
+        assert c.all_mismatch().count() == 1
+        assert c.sample_mismatch(cols[1]).collect()[0][f"{cols[1]}_df2"] == 2.5
+        assert [r[key] for r in c.df1_unq_rows.collect()] == [3]
+        assert [r[cols[0]] for r in c.df2_unq_rows.collect()] == ["d"]
+        assert c.row_class_matrix().filter("row_class = 'both'").count() == 2
+        rep = c.report(sample_count=5)
+        assert cols[1] in rep and "2.5" in rep
+        c.uncache()
+
+    def test_mixed_case_names_case_sensitive(self, spark):
+        df1 = spark.createDataFrame([(1, 10, 20), (2, 11, 21)], "Id int, Val int, val int")
+        df2 = spark.createDataFrame([(1, 10, 99), (2, 12, 21)], "Id int, Val int, val int")
+        spark.conf.set("spark.sql.caseSensitive", "true")
+        try:
+            c = SparkCompare(spark, df1, df2, join_columns="Id", cast_column_names_lower=False)
+            assert c.intersect_rows_count == 2 and c.count_matching_rows() == 0
+            assert _matches_by_key(c, "Val") == {1: True, 2: False}
+            assert _matches_by_key(c, "val") == {1: False, 2: True}
+            unequal = {s["column"]: s["unequal_cnt"] for s in c.column_stats}
+            assert unequal == {"Id": 0, "Val": 1, "val": 1}
+            assert c.all_mismatch().count() == 2
+            c.uncache()
+        finally:
+            spark.conf.set("spark.sql.caseSensitive", "false")
+
+    @pytest.mark.parametrize(
+        "tol, pairs",
+        [
+            # (df1 value, df2 value, expected match)
+            (1e-300, [(0.0, 1e-301, True), (0.0, 1e-299, False), (1.0, 1.0, True)]),
+            # 1.0 vs 1.1 differ by 0.10000000000000009 in binary64: a
+            # DECIMAL 0.1 bound would compare the same way only by luck
+            (0.1, [(1.0, 1.05, True), (1.0, 1.1, False), (1.0, 1.2, False)]),
+            (1e20, [(1.0, 1e19, True), (0.0, 2e20, False), (-1e20, 0.0, True)]),
+            (float("inf"), [(1.0, 1e308, True), (1.0, float("inf"), False), (0.0, -1e300, True)]),
+        ],
+    )
+    def test_tolerance_literals(self, spark, tol, pairs):
+        rows1 = [(i, a) for i, (a, _, _) in enumerate(pairs)]
+        rows2 = [(i, b) for i, (_, b, _) in enumerate(pairs)]
+        df1 = spark.createDataFrame(rows1, "id int, v double")
+        df2 = spark.createDataFrame(rows2, "id int, v double")
+        want = {i: m for i, (_, _, m) in enumerate(pairs)}
+        c = SparkCompare(spark, df1, df2, join_columns="id", abs_tol=tol)
+        assert _matches_by_key(c, "v") == want
+        assert c.count_matching_rows() == sum(want.values())
+        # the same bound reached through rel_tol * |df2 value|
+        c = SparkCompare(spark, df1, df2, join_columns="id", rel_tol={"v": tol})
+        finite = {i: math.isfinite(a) and math.isfinite(b) for i, (a, b, _) in enumerate(pairs)}
+        assert _matches_by_key(c, "v") == {
+            i: a == b or (finite[i] and abs(a - b) <= 0.0 + tol * abs(b))
+            for i, (a, b, _) in enumerate(pairs)
+        }
+
+    @pytest.mark.parametrize("dups", [False, True])
+    @pytest.mark.parametrize(
+        "dtype, k1, k0, k2",
+        [
+            ("decimal(10,2)", Decimal("1.50"), Decimal("0.00"), Decimal("7.25")),
+            ("date", date(2024, 1, 2), date(1970, 1, 1), date(1999, 12, 31)),
+            ("timestamp_ntz", datetime(2024, 1, 2, 3, 4, 5), datetime(1970, 1, 1), datetime(1999, 12, 31, 23, 59)),
+            ("string", "a", "", "z z"),
+        ],
+    )
+    def test_nullable_join_keys(self, spark, dtype, k1, k0, k2, dups):
+        # k0 is the type's lowering default: a NULL key pairs only with a
+        # NULL key, never with the default value
+        rows1 = [(k1, 1, "x"), (None, 2, "n"), (k0, 3, "d"), (k2, 4, "only1")]
+        rows2 = [(k1, 1, "x"), (None, 2, "N"), (k0, 3, "d")]
+        if dups:
+            rows1 += [(k1, 5, "x2"), (None, 6, "n2")]
+            rows2 += [(k1, 5, "x2"), (None, 6, "n2"), (None, 7, "only2")]
+        schema = f"k {dtype}, o int, v string"
+        df1 = spark.createDataFrame(rows1, schema)
+        df2 = spark.createDataFrame(rows2, schema)
+        c = SparkCompare(spark, df1, df2, join_columns="k", dup_order_by=["o"])
+        n_both = 5 if dups else 3
+        assert c.intersect_rows_count == n_both
+        assert (c.df1_unq_rows_count, c.df2_unq_rows_count) == (1, 1 if dups else 0)
+        assert c.count_matching_rows() == n_both - 1  # the NULL-key pair "n" vs "N"
+        assert c.has_duplicates == dups
+        bad = c.all_mismatch().collect()
+        assert [(r["k"], r["v_df1"], r["v_df2"]) for r in bad] == [(None, "n", "N")]
+        c.uncache()
+
+    @pytest.mark.parametrize(
+        "opts, want",
+        [
+            ({}, {1: True, 2: False, 3: False, 4: False}),
+            ({"ignore_spaces": True}, {1: True, 2: True, 3: False, 4: False}),
+            ({"ignore_case": True}, {1: True, 2: False, 3: True, 4: False}),
+            ({"ignore_spaces": True, "ignore_case": True}, {1: True, 2: True, 3: True, 4: True}),
+        ],
+    )
+    def test_string_options(self, spark, opts, want):
+        df1 = spark.createDataFrame(
+            [(1, "a"), (2, " a "), (3, "Ab"), (4, " aB")], "id int, s string"
+        )
+        df2 = spark.createDataFrame(
+            [(1, "a"), (2, "a"), (3, "aB"), (4, "Ab  ")], "id int, s string"
+        )
+        c = SparkCompare(spark, df1, df2, join_columns="id", **opts)
+        assert _matches_by_key(c, "s") == want
+        assert c.count_matching_rows() == sum(want.values())
+
+    def test_padded_string_keys_under_ignore_spaces(self, spark):
+        df1 = spark.createDataFrame([(" k1", 1), ("k2 ", 2), (None, 3)], "k string, v int")
+        df2 = spark.createDataFrame([("k1", 1), ("k2", 2), (None, 3)], "k string, v int")
+        assert SparkCompare(spark, df1, df2, join_columns="k").intersect_rows_count == 1
+        c = SparkCompare(spark, df1, df2, join_columns="k", ignore_spaces=True)
+        assert c.intersect_rows_count == 3 and c.matches()
+
+
+class TestQuotedIdentifiers:
+    """Names with a dot or a backtick are single identifiers in the
+    compare's SQL text: before it was built from SQL text, resolving them
+    raised UNRESOLVED_COLUMN / INVALID_ATTRIBUTE_NAME_SYNTAX."""
+
+    @pytest.mark.parametrize("assume_unique", [False, True])
+    @pytest.mark.parametrize("key, col", [("a.b", "x`y"), ("x`y", "a.b"), ("k", "a.b`c")])
+    def test_dot_and_backtick_names(self, spark, assume_unique, key, col):
+        q = lambda n: "`" + n.replace("`", "``") + "`"  # noqa: E731
+        schema = f"{q(key)} int, {q(col)} double"
+        df1 = spark.createDataFrame([(1, 1.0), (2, 2.0), (None, 3.0)], schema)
+        df2 = spark.createDataFrame([(1, 1.0), (2, 2.5), (None, 3.0), (4, 4.0)], schema)
+        c = SparkCompare(spark, df1, df2, join_columns=key, assume_unique=assume_unique)
+        assert c.intersect_rows_count == 3 and c.df2_unq_rows_count == 1
+        assert c.count_matching_rows() == 2
+        assert c.columns_with_mismatches == [col]
+        bad = c.all_mismatch().collect()
+        assert [(r[key], r[f"{col}_df1"], r[f"{col}_df2"]) for r in bad] == [(2, 2.0, 2.5)]
+        assert c.sample_mismatch(col).count() == 1
+        assert [r[col] for r in c.df2_unq_rows.collect()] == [4.0]
+        assert col in c.report(sample_count=3)
+        c.uncache()

@@ -319,6 +319,69 @@ class TestOnePassReportStats:
         assert "InMemoryTableScan" not in plan_of(c.df1_unq_rows)
 
 
+class TestDriverChatter:
+    """Building a compare and its statistics aggregates is driver work paid
+    per py4j round trip. Every expression is Spark SQL text, so the counts
+    stay far below what Column trees cost. Counted on the gateway client's
+    ``send_command``, wrapped as ``perfbench.trace.Py4jCounter`` wraps it,
+    on an 11-column lineitem-shaped pair. Only this thread's sends count:
+    py4j's finalizer thread sends the garbage-collection messages of
+    proxies that died earlier, whenever it gets to them."""
+
+    COLS = [
+        "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity",
+        "l_extendedprice", "l_discount", "l_tax", "l_returnflag",
+        "l_linestatus", "l_shipdate",
+    ]
+
+    @staticmethod
+    def round_trips(spark, fn):
+        import threading
+
+        client = spark.sparkContext._gateway._gateway_client
+        send, me, calls = client.send_command, threading.get_ident(), [0]
+
+        def counted(*args, **kwargs):
+            if threading.get_ident() == me:
+                calls[0] += 1
+            return send(*args, **kwargs)
+
+        client.send_command = counted
+        try:
+            out = fn()
+        finally:
+            del client.send_command
+        return calls[0], out
+
+    def test_compare_construction_round_trips(self, spark, li_pair):
+        # the parent counts are the same calls built from Column trees, in
+        # this session (PySpark's default dataFrameDebugging); the SQL-text
+        # counts are 114, 162 and 130
+        df1, df2 = (df.select(*self.COLS) for df in li_pair)
+        df1.schema, df2.schema  # the inputs' own schema fetch is not the compare's
+        tol = {"l_extendedprice": 0.01, "default": 0.0}
+        unique, _ = self.round_trips(
+            spark,
+            lambda: SparkCompare(spark, df1, df2, join_columns=KEYS, abs_tol=tol, assume_unique=True),
+        )
+        assert unique <= 300, unique  # Column trees: 2,842
+        paired, c = self.round_trips(
+            spark,
+            lambda: SparkCompare(
+                spark, df1, df2, join_columns=KEYS[:2], abs_tol=tol, dup_order_by=KEYS[2:]
+            ),
+        )
+        assert paired <= 400, paired  # Column trees: 4,320
+
+        def observed():
+            from pyspark.sql import Observation
+
+            return c._outer.observe(Observation(), *c._stat_aggs())
+
+        aggs, _ = self.round_trips(spark, observed)
+        assert aggs <= 300, aggs  # Column trees: 3,078
+
+
 class TestReportSampleParity:
     """Every report sample equals its slot's own query, converted by its own
     ``toPandas()``: the first ``n`` rows by (join keys, pairing ordinal).

@@ -929,7 +929,7 @@ class TestGatedDoubleParse:
             list(enumerate(texts + self._edge)), "i int, s string"
         )
         rows = df.select(
-            try_double(F.col("s"), T.StringType()).alias("gated"),
+            F.expr(try_double("s", T.StringType())).alias("gated"),
             F.col("s").try_cast("double").alias("plain"),
         ).collect()
         for r in rows:
