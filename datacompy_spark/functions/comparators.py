@@ -9,9 +9,10 @@ compare), ``comparator/array.py:129-160`` (null-safe array equality).
 Every built-in comparator writes its match predicate as Spark SQL text: one
 boolean expression with zero UDFs, so the whole predicate stays inside
 whole-stage codegen and is ANSI-mode safe (TRY_CAST, int→double pre-cast).
-The engine applies all of a compare's predicates with one ``selectExpr``:
-the JVM parses each string once, where a tree of ``Column`` calls costs a
-py4j round trip (and later a garbage-collection message) per node. The
+The engine applies all of a compare's predicates in one ``withColumns``
+projection of ``F.expr`` columns: the JVM parses each string once, where a
+tree of ``Column`` calls costs a py4j round trip (and later a
+garbage-collection message) per node. The
 SQL rules: every identifier is backtick-quoted (:func:`quote`), doubles are
 ``<repr>D`` literals (a bare ``0.01`` is a DECIMAL in Spark SQL and would
 change the tolerance arithmetic), non-finite doubles and typed literals are

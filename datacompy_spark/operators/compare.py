@@ -12,7 +12,7 @@ Architecture is deliberately NOT a port:
 * Every expression the compare builds — key lowering, ordinal window,
   renames, join condition, match predicates, statistics aggregates,
   filters, report sample tags — is Spark SQL text, applied with one
-  ``selectExpr`` (or ``filter``/``F.expr``) per projection. The JVM
+  ``selectExpr``, ``withColumns`` or ``filter`` per projection. The JVM
   parses each string once, where a tree of ``Column`` calls would cost a
   py4j round trip per node. Identifiers are backtick-quoted, so any
   column name works.
@@ -588,7 +588,8 @@ class SparkCompare:
         """Assemble the (lazy) comparison plan: each side (:meth:`_side`),
         the join, and two projections after it — the restored keys, merge
         indicator and ``__dc_ord``, then the match predicates. Every
-        expression is Spark SQL text applied with ``selectExpr``.
+        expression is Spark SQL text (a custom comparator may return a
+        Column), applied with ``selectExpr`` or ``withColumns``.
 
         Scale design vs the reference (``spark.py:328-412``): the reference
         runs a duplicate-key probe (two counts per side = extra shuffles +
@@ -716,16 +717,10 @@ class SparkCompare:
                 matches[f"{c}_match"] = F.when(
                     F.expr(not_both), F.lit(None).cast("boolean")
                 ).otherwise(pred)
-        taken = [*self.join_columns, *values, self._n["merge"], self._n["ord"]]
-        if all(isinstance(e, str) for e in matches.values()) and not (
-            {m.lower() for m in matches} & {c.lower() for c in taken}
-        ):
-            outer = outer.selectExpr("*", *[f"{e} AS {quote(m)}" for m, e in matches.items()])
-        elif matches:
-            # withColumns replaces a same-named column, as it always did
-            outer = outer.withColumns(
-                {m: F.expr(e) if isinstance(e, str) else e for m, e in matches.items()}
-            )
+        # one projection; withColumns replaces a column of the same name
+        outer = outer.withColumns(
+            {m: F.expr(e) if isinstance(e, str) else e for m, e in matches.items()}
+        )
         if self.cache_intermediates:
             outer = tracked_persist(outer)
         self._outer = outer

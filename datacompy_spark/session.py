@@ -17,7 +17,7 @@ Current recommendations and their trade-offs:
     trips per Column operation. ``SparkCompare`` builds its expressions as
     Spark SQL text, so the flag barely moves it now: one lineitem compare
     unit (11 columns, sf0.01, report plus check flow, 4-core VM, median of
-    4 warm units) took 1.79 s with the flag on and 1.63 s off, ~730 py4j
+    4 warm units) took 1.78 s with the flag on and 1.60 s off, 701 py4j
     round trips either way. While it built Column trees the same unit took
     2.91 s and ~16,800 round trips on, 2.36 s and ~5,500 off. The other
     operators (dedup, similarity, text, profile, ...) still build Column

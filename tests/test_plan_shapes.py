@@ -356,7 +356,7 @@ class TestDriverChatter:
     def test_compare_construction_round_trips(self, spark, li_pair):
         # the parent counts are the same calls built from Column trees, in
         # this session (PySpark's default dataFrameDebugging); the SQL-text
-        # counts are 114, 162 and 130
+        # counts are 145, 201 and 130
         df1, df2 = (df.select(*self.COLS) for df in li_pair)
         df1.schema, df2.schema  # the inputs' own schema fetch is not the compare's
         tol = {"l_extendedprice": 0.01, "default": 0.0}
