@@ -19,6 +19,7 @@ the driver.
 
 from __future__ import annotations
 
+import hashlib
 from functools import reduce
 
 from pyspark.sql import DataFrame
@@ -406,59 +407,49 @@ def simhash_near_dups(
     return cross.unionAll(within)
 
 
+def _gram_hashes(s: str, n: int) -> list:
+    """Sorted distinct 60-bit hashes of the character ``n``-grams of ``s``
+    (the whole string is one gram when shorter than ``n``, the empty string
+    included). ``md5(g)[:15]`` read as an int is bit-identical to Spark and
+    DuckDB ``md5``; grams are deduplicated before hashing, as
+    ``array_distinct``/``list_distinct`` do in the oracles."""
+    if len(s) >= n:
+        grams = dict.fromkeys(s[i : i + n] for i in range(len(s) - n + 1))
+    else:
+        grams = (s,)
+    return sorted(
+        int(hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16) for g in grams
+    )
+
+
 def _ngram_base(
     df: DataFrame, id_col: str, text_col: str, block_col: str, n: int
 ) -> DataFrame:
-    """(doc_id, block, grams): each distinct char n-gram hashed to a 60-bit
-    int once per document. Pairwise intersections later run over int arrays
-    (no per-pair string hashing); the ordering inside ``grams`` is
-    irrelevant here (``array_intersect`` is order-insensitive) — the prefix
-    path re-ranks separately.
+    """(doc_id, block, grams): the PPJoin route's gram table, each document's
+    :func:`_gram_hashes` as a sorted int array. Pairwise intersections then
+    run over int arrays (no per-pair string hashing); the prefix path
+    re-ranks the arrays separately.
 
-    The gram pass is the operator's hot loop (one substring per character
-    position + one md5 per distinct gram): as Column expressions both steps
-    are interpreted lambda HOFs (no codegen), which profiling showed
-    dominating the whole operator ~5:1 over the pair verify. It runs here as
-    an Arrow-batched ``mapInPandas`` producing bit-identical hashes
-    (``hashlib.md5`` == Spark/DuckDB ``md5``; first-occurrence dedup order
-    == ``array_distinct``/``list_distinct``). normalize() stays JVM-side so
-    its regex semantics can't drift from the oracle's."""
-    import hashlib
-
+    The gram pass runs as an Arrow-batched ``mapInPandas``: as Column
+    expressions the substring and md5 steps are interpreted lambda HOFs (no
+    codegen), which profiling showed dominating the operator ~5:1 over the
+    pair verify. normalize() stays JVM-side so its regex semantics can't
+    drift from the oracle's. ``text_col`` must hold no NULLs. The map keeps
+    ``df``'s partitioning: a caller with a single-partition input fans it
+    out first."""
     import pandas as pd
 
-    from datacompy_spark.plans.partitioning import fan_out
-
-    staged = fan_out(
-        df.select(
-            F.col(id_col).alias("doc_id"),
-            F.col(block_col).alias("block"),
-            normalize(F.col(text_col)).alias("norm"),
-        )
+    staged = df.select(
+        F.col(id_col).alias("doc_id"),
+        F.col(block_col).alias("block"),
+        normalize(F.col(text_col)).alias("norm"),
     )
     id_type = staged.schema["doc_id"].dataType.simpleString()
     block_type = staged.schema["block"].dataType.simpleString()
 
     def gram_batches(batches):
         for pdf in batches:
-            grams = []
-            for s in pdf["norm"]:
-                if s is None:
-                    grams.append(None)
-                    continue
-                if len(s) >= n:
-                    gs = dict.fromkeys(s[i : i + n] for i in range(len(s) - n + 1))
-                else:
-                    gs = (s,)
-                # sorted ascending: the pair verify runs a merge/searchsorted
-                # intersection over pre-sorted arrays (order is irrelevant to
-                # Jaccard and to the oracle, which only uses lengths)
-                grams.append(
-                    sorted(
-                        int(hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16)
-                        for g in gs
-                    )
-                )
+            grams = [_gram_hashes(s, n) for s in pdf["norm"]]
             yield pd.DataFrame(
                 {"doc_id": pdf["doc_id"], "block": pdf["block"], "grams": grams}
             )
@@ -565,6 +556,66 @@ def _intersect_size(a, b):
     return _SORTED_INTERSECT(a, b)
 
 
+#: incidence-matrix column chunk of the per-block scorer: bounds its
+#: working set to ``block × chunk`` float32 cells (16 MB at 1,000 documents)
+_GRAM_CHUNK = 4096
+
+
+def _block_jaccard_pairs(pdf, n: int, threshold: float):
+    """Every ``id_a < id_b`` pair of one block (``doc_id``, ``norm``; no
+    NULLs) with character-``n``-gram Jaccard ≥ ``threshold``, as
+    ``(id_a, id_b, jaccard)``.
+
+    Exact intersection sizes for all pairs at once: grams held by at least
+    two of the block's documents get dense ids, and ``M @ M.T`` of the 0/1
+    document × gram incidence matrix is summed over column chunks of
+    ``_GRAM_CHUNK`` grams. The counts are integers far below 2**24, so
+    float32 is exact. Rows are sorted by id first: a pair (i < j) then
+    orders its ids, and rows that repeat an id never pair with each other
+    (each of them still pairs with every other id). The length filter and
+    the score are the PPJoin route's in float64:
+    ``|b|·t ≤ |a|``, ``|a|·t ≤ |b|``, ``inter / (|a| + |b| − inter) ≥ t``."""
+    import numpy as np
+    import pandas as pd
+
+    pdf = pdf.sort_values("doc_id", kind="stable")
+    ids = pdf["doc_id"].to_numpy()
+    grams = [_gram_hashes(s, n) for s in pdf["norm"]]
+    k = len(grams)
+    sizes = np.fromiter(map(len, grams), dtype=np.int64, count=k)
+    owner = np.repeat(np.arange(k), sizes)
+    flat = np.fromiter(
+        (g for gs in grams for g in gs), dtype=np.int64, count=int(sizes.sum())
+    )
+    _, gram_of, holders = np.unique(flat, return_inverse=True, return_counts=True)
+    shared = holders[gram_of] >= 2
+    gid = (np.cumsum(holders >= 2) - 1)[gram_of[shared]]
+    order = np.argsort(gid, kind="stable")
+    gid, owner = gid[order], owner[shared][order]
+    n_shared = int(np.count_nonzero(holders >= 2))
+    inter = np.zeros((k, k), dtype=np.float32)
+    for lo in range(0, n_shared, _GRAM_CHUNK):
+        a, b = np.searchsorted(gid, [lo, lo + _GRAM_CHUNK])
+        m = np.zeros((k, min(_GRAM_CHUNK, n_shared - lo)), dtype=np.float32)
+        m[owner[a:b], gid[a:b] - lo] = 1.0
+        inter += m @ m.T
+
+    i, j = np.triu_indices(k, 1)
+    rank = np.concatenate(([0], np.cumsum(ids[1:] != ids[:-1])))
+    n_inter = inter[i, j].astype(np.int64)
+    sa, sb = sizes[i], sizes[j]
+    jaccard = n_inter / (sa + sb - n_inter)
+    keep = (
+        (rank[i] < rank[j])
+        & (sb * threshold <= sa)
+        & (sa * threshold <= sb)
+        & (jaccard >= threshold)
+    )
+    return pd.DataFrame(
+        {"id_a": ids[i[keep]], "id_b": ids[j[keep]], "jaccard": jaccard[keep]}
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -576,12 +627,16 @@ def ngram_jaccard_pairs(
     pair_pred=None,
 ) -> DataFrame:
     """Exact character-n-gram Jaccard pairs (≥ ``threshold``) within a
-    blocking key, with ADAPTIVE block-size routing:
+    blocking key, output ``(id_a, id_b, jaccard)`` with ``id_a < id_b``,
+    with ADAPTIVE block-size routing:
 
-    * blocks with ≤ ``direct_block_cap`` documents score all pairs directly
-      in the self-join — when qualifying pairs are dense (shared-vocabulary
-      corpora run ~50% of same-block pairs over a 0.5 threshold), no
-      candidate filter can beat this: output itself is the bound;
+    * blocks with ≤ ``direct_block_cap`` documents are scored whole, one
+      block per Python call (``groupBy(block).applyInPandas``, see
+      :func:`_block_jaccard_pairs`): the blocking key is the global
+      partitioner and each block is a local all-pairs index. When
+      qualifying pairs are dense (shared-vocabulary corpora run ~50% of
+      same-block pairs over a 0.5 threshold), no candidate filter can beat
+      this: output itself is the bound;
     * oversized blocks — the population that grows linearly with the corpus
       under a fixed-cardinality blocking key, i.e. the 100 TB hazard — go
       through PPJoin-style prefix filtering (Chaudhuri et al. SSJoin / Xiao
@@ -590,77 +645,74 @@ def ngram_jaccard_pairs(
       gram inside each side's first ``|x| − ⌈t·|x|⌉ + 1`` grams, so
       candidates come from an inverted-index equi-join on (block,
       prefix-gram) whose work scales with posting-list sizes, plus the
-      ``t·|a| ≤ |b| ≤ |a|/t`` length filter.
+      ``t·|a| ≤ |b| ≤ |a|/t`` length filter, then an exact set-intersection
+      verify.
 
-    Both routes end in the same exact set-intersection verify, so output is
-    identical to a naive all-pairs scan either way; a block is never scored
-    by both routes.
+    Both routes hash grams with :func:`_gram_hashes` and compute exact
+    intersections, so output is identical to a naive all-pairs scan either
+    way; a block is never scored by both routes. A NULL id, block or text
+    never pairs.
 
     ``pair_pred`` (optional): ``f(id_a: Column, id_b: Column) -> Column``
-    boolean predicate pushed into BOTH routes' candidate generation — the
-    direct self-join condition and the prefix inverted-index join — so
-    pairs a caller will discard anyway (e.g. same-side pairs in
-    :func:`fuzzy_key_match`'s pooled cross-table corpus) are dropped on a
-    cheap codegen compare before any set intersection is paid. Must be a
-    pure function of the two id values; it narrows the OUTPUT pair set,
-    never the per-document gram stats."""
-    # without the persist the gram hashing re-runs per joined pair; the
-    # returned plan stays lazy, so release_caches() owns the release
-    base = tracked_persist(_ngram_base(df, id_col, text_col, block_col, n))
-    sizes = base.groupBy("block").agg(F.count(F.lit(1)).alias("__bn"))
-    # driver-side routing probe — one tiny action over the cached base (the
-    # AQE philosophy: pick the physical strategy from runtime statistics).
-    # When nothing is oversized, the whole prefix machinery vanishes from
-    # the plan and the operator is exactly the minimal all-pairs self-join.
-    # This probe is ALSO the eager materialization of `base`: its aggregate
-    # computes every input partition (limit(1) can only short-circuit the
-    # post-shuffle stage), so the cache is fully populated before the
-    # self-joins — a separate base.count() pass (r13 form) paid one extra
-    # full action per call for nothing (guide §1.2: don't compute things
-    # you throw away).
-    any_big = (
-        sizes.filter(F.col("__bn") > direct_block_cap).limit(1).count() > 0
+    boolean predicate on the output pairs. The PPJoin route pushes it into
+    its candidate join, so excluded pairs never reach the verify; the
+    direct route applies it as a filter on its scored pairs. Must be a pure
+    function of the two id values; it narrows the OUTPUT pair set, never
+    the per-document gram stats."""
+    docs = df.filter(
+        F.col(id_col).isNotNull()
+        & F.col(block_col).isNotNull()
+        & F.col(text_col).isNotNull()
     )
-    if any_big:
+    sizes = docs.groupBy(block_col).agg(F.count(F.lit(1)).alias("__bn"))
+    # driver-side routing probe — one tiny action over the input's block
+    # sizes (the AQE philosophy: pick the physical strategy from runtime
+    # statistics). A route with no block to score vanishes from the plan.
+    largest, smallest = sizes.agg(F.max("__bn"), F.min("__bn")).first()
+    any_big = largest is not None and largest > direct_block_cap
+    routes = []
+    if smallest is None or smallest <= direct_block_cap:
         # one row per block key (bounded cardinality by construction)
-        tagged = base.join(F.broadcast(sizes), "block")
-        small = tagged.filter(F.col("__bn") <= direct_block_cap).drop("__bn")
-        big = tagged.filter(F.col("__bn") > direct_block_cap).drop("__bn")
-    else:
-        small, big = base, None
-
-    # direct route: score within the self-join, grams carried. The PPJoin
-    # length filter (J ≥ t ⇒ t·|a| ≤ |b| ≤ |a|/t) applies here just as on
-    # the prefix route: evaluating it in the join condition lets codegen
-    # drop a pair on two int compares before paying the O(|grams|) set
-    # intersection. Sizes are projected once per row, not per pair.
-    sized = small.withColumn("__sz", F.size(F.col("grams")))
-    a, b = sized.alias("a"), sized.alias("b")
-    direct_cond = (
-        (F.col("a.block") == F.col("b.block"))
-        & (F.col("a.doc_id") < F.col("b.doc_id"))
-        & (F.col("b.__sz") * F.lit(threshold) <= F.col("a.__sz"))
-        & (F.col("a.__sz") * F.lit(threshold) <= F.col("b.__sz"))
-    )
-    if pair_pred is not None:
-        direct_cond = direct_cond & pair_pred(
-            F.col("a.doc_id"), F.col("b.doc_id")
+        small = (
+            docs.join(F.broadcast(sizes), block_col).filter(
+                F.col("__bn") <= direct_block_cap
+            )
+            if any_big
+            else docs
+        ).select(
+            F.col(id_col).alias("doc_id"),
+            F.col(block_col).alias("block"),
+            normalize(F.col(text_col)).alias("norm"),
         )
-    direct = a.join(b, direct_cond).select(
-        F.col("a.doc_id").alias("id_a"),
-        F.col("b.doc_id").alias("id_b"),
-        _intersect_size(F.col("a.grams"), F.col("b.grams")).alias("n_inter"),
-        (F.col("a.__sz") + F.col("b.__sz")).alias("n_total"),
-    )
+        id_type = small.schema["doc_id"].dataType.simpleString()
 
-    scored = direct
-    if big is not None:
-        # prefix-filter route for oversized blocks
-        ranked = _rank_grams_by_frequency(big)
+        def score_block(pdf):
+            return _block_jaccard_pairs(pdf, n, threshold)
+
+        direct = small.groupBy("block").applyInPandas(
+            score_block, schema=f"id_a {id_type}, id_b {id_type}, jaccard double"
+        )
+        if pair_pred is not None:
+            direct = direct.filter(pair_pred(F.col("id_a"), F.col("id_b")))
+        routes.append(direct)
+
+    if any_big:
+        from datacompy_spark.plans.partitioning import fan_out
+
+        # the PPJoin route's gram hashing is a per-row Python map, so its
+        # rows fan out first (the direct route shuffles on the block anyway)
+        big = fan_out(docs).join(F.broadcast(sizes), block_col).filter(
+            F.col("__bn") > direct_block_cap
+        )
+        # the gram base is read three times (frequency ranking, both sides
+        # of the verify join): persisted, so the hashing runs once; the
+        # returned plan stays lazy, so release_caches() owns the release
+        base = tracked_persist(_ngram_base(big, id_col, text_col, block_col, n))
+        ranked = _rank_grams_by_frequency(base)
         cand = _prefix_filter_candidates(ranked, threshold, pair_pred=pair_pred)
-        ga = big.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("g_a"))
-        gb = big.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("g_b"))
-        filtered = (
+        ga = base.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("g_a"))
+        gb = base.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("g_b"))
+        verified = (
             cand.join(ga, "id_a")
             .join(gb, "id_b")
             .select(
@@ -670,25 +722,24 @@ def ngram_jaccard_pairs(
                 (F.size(F.col("g_a")) + F.size(F.col("g_b"))).alias("n_total"),
             )
         )
-        scored = direct.unionAll(filtered)
-
-    return (
-        # lineage barrier: without it Catalyst pushes the jaccard filter
-        # below this projection, and the intersect pandas UDF plans twice per
-        # route (one ArrowEvalPython under the Filter, one above it for the
-        # projection): a second Python-worker pass over every candidate pair.
-        # Deleting it needs the threshold applied inside the scorer itself.
-        lineage_barrier(scored, eager=False)
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("n_inter").cast("double")
-                / (F.col("n_total") - F.col("n_inter")).cast("double")
-            ).alias("jaccard"),
+        routes.append(
+            # lineage barrier: without it Catalyst pushes the jaccard filter
+            # below this projection, and the intersect pandas UDF plans
+            # twice (one ArrowEvalPython under the Filter, one above it for
+            # the projection): a second Python-worker pass over every
+            # candidate pair.
+            lineage_barrier(verified, eager=False)
+            .select(
+                "id_a",
+                "id_b",
+                (
+                    F.col("n_inter").cast("double")
+                    / (F.col("n_total") - F.col("n_inter")).cast("double")
+                ).alias("jaccard"),
+            )
+            .filter(F.col("jaccard") >= F.lit(threshold))
         )
-        .filter(F.col("jaccard") >= F.lit(threshold))
-    )
+    return reduce(DataFrame.unionAll, routes)
 
 
 def fuzzy_key_match(
@@ -717,7 +768,9 @@ def fuzzy_key_match(
     :func:`ngram_jaccard_pairs` whole (adaptive direct / PPJoin-prefix
     routing): keys are tagged ``0:``/``1:`` by side and pooled into one
     corpus; ``'0' < '1'`` makes every cross-side pair land with the left
-    key in ``id_a``, and same-side pairs are filtered out. Identical keys
+    key in ``id_a``, and same-side pairs are filtered out (pushed into the
+    PPJoin route's candidate join; the direct route scores a block's
+    same-side pairs too and drops them after). Identical keys
     on both sides match at Jaccard 1.0 (normalization differences — case,
     punctuation — also land at 1.0 by construction).
 
@@ -750,11 +803,11 @@ def fuzzy_key_match(
         )
         .withColumn("__blk", F.lit(0))
     )
-    # cross-side constraint pushed INTO candidate generation: same-side
-    # pairs (0:-0:, 1:-1:) — up to ~half the pooled self-join — die on two
-    # substring compares inside the join condition instead of after the
-    # O(|grams|) intersection. The post-filter below stays as a no-op
-    # safety net so the output contract never depends on the pushdown.
+    # cross-side constraint: the PPJoin route pushes it into its candidate
+    # join, so same-side pairs (0:-0:, 1:-1:) die on two substring compares
+    # before the O(|grams|) verify; the direct route filters its scored
+    # pairs with it. The post-filter below stays as a no-op safety net so
+    # the output contract never depends on the pushdown.
     cross_side = lambda ia, ib: (  # noqa: E731
         (F.substring(ia, 1, 2) == "0:") & (F.substring(ib, 1, 2) == "1:")
     )
@@ -2355,8 +2408,9 @@ def knn_jaccard_graph(
 
     Reuses :func:`ngram_jaccard_pairs` wholesale (adaptive direct /
     PPJoin-prefix routing per block, so the pair stage never goes
-    all-pairs on an oversized block); the symmetric closure is a
-    column-swap union (pairs are emitted once with ``id_a < id_b``), and
+    all-pairs on an oversized block); the symmetric closure emits each
+    pair in both directions from one read of the pairs (they are emitted
+    once with ``id_a < id_b``), and
     the top-k is one hash-shuffle window with Spark's WindowGroupLimit
     pushing the rank filter into the sort — O(k) memory per task however
     hot a document's candidate list is. Documents with fewer than ``k``
@@ -2380,11 +2434,18 @@ def knn_jaccard_graph(
         threshold=threshold,
         direct_block_cap=direct_block_cap,
     )
+    # both directions from one read of the pairs: a two-branch union would
+    # plan the pair scorer once per branch
     sym = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst"), "jaccard"
-    ).unionByName(
-        pairs.select(
-            F.col("id_b").alias("src"), F.col("id_a").alias("dst"), "jaccard"
+        F.inline(
+            F.array(
+                F.struct(
+                    F.col("id_a").alias("src"), F.col("id_b").alias("dst"), "jaccard"
+                ),
+                F.struct(
+                    F.col("id_b").alias("src"), F.col("id_a").alias("dst"), "jaccard"
+                ),
+            )
         )
     )
     return top_k_per_group(

@@ -91,6 +91,88 @@ class TestNgramJaccard:
         direct, prefix = run(10**9), run(1)
         assert direct == prefix and len(direct) > 0
 
+    def test_null_duplicate_and_short_text_edges(self, spark):
+        # duplicated ids pair with others once per row but never with
+        # themselves; a NULL id, block or text never pairs; text that
+        # normalizes to empty ("!!", "..") or is shorter than n is one gram
+        rows = [
+            (1, "the quick brown fox", "b"),
+            (1, "the quick brown fox", "b"),
+            (2, "the quick brown fox!", "b"),
+            (3, "the quick brown fox", None),
+            (4, "the quick brown fox", None),
+            (None, "the quick brown fox", "b"),
+            (5, None, "b"),
+            (6, None, "b"),
+            (7, "!!", "b"),
+            (8, "..", "b"),
+            (9, "ab", "b"),
+            (10, "ab", "b"),
+        ]
+        df = spark.createDataFrame(rows, "doc_id bigint, text string, block string")
+        got = sorted(
+            tuple(r)
+            for r in D.ngram_jaccard_pairs(df, "doc_id", "text", "block").collect()
+        )
+        assert got == [(1, 2, 1.0), (1, 2, 1.0), (7, 8, 1.0), (9, 10, 1.0)]
+
+    def test_string_ids_both_routes_and_pair_pred_match_naive_scan(self, spark):
+        # block "x" holds exactly the cap (direct route), block "y" one more
+        # (PPJoin route), so one call runs both. Ids mix code points whose
+        # UTF-16 order differs from their code-point (UTF-8 byte) order.
+        import re
+
+        cap, t = 12, 0.6
+        vocab = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
+        marks = ["Z", "a", "é", "ｚ", "𝔘", "中"]
+        rows = []
+        for blk, count in (("x", cap), ("y", cap + 1)):
+            for i in range(count):
+                words = [vocab[(i // 2 * 3 + j * 7) % len(vocab)] for j in range(6)]
+                if i % 2:
+                    words[i % 6] = vocab[(i + 5) % len(vocab)]
+                doc_id = f"{i % 2}:{marks[i % len(marks)]}{blk}{i}"
+                rows.append((doc_id, " ".join(words), blk))
+        df = spark.createDataFrame(rows, "doc_id string, text string, block string")
+
+        def grams(s):
+            s = re.sub(" +", " ", re.sub("[^a-z0-9 ]", " ", s.lower())).strip()
+            return frozenset([s] if len(s) < 3 else (s[i : i + 3] for i in range(len(s) - 2)))
+
+        def naive(pred):
+            want = []
+            for ia, ta, ba in rows:
+                for ib, tb, bb in rows:
+                    if ba != bb or not ia < ib or not pred(ia, ib):
+                        continue
+                    ga, gb = grams(ta), grams(tb)
+                    sa, sb, inter = len(ga), len(gb), len(ga & gb)
+                    j = inter / (sa + sb - inter)
+                    if sb * t <= sa and sa * t <= sb and j >= t:
+                        want.append((ia, ib, j))
+            return sorted(want)
+
+        def run(pair_pred=None):
+            return sorted(
+                tuple(r)
+                for r in D.ngram_jaccard_pairs(
+                    df, "doc_id", "text", "block", threshold=t,
+                    direct_block_cap=cap, pair_pred=pair_pred,
+                ).collect()
+            )
+
+        block_of = {doc_id: blk for doc_id, _, blk in rows}
+        want = naive(lambda a, b: True)
+        assert {block_of[a] for a, _, _ in want} == {"x", "y"}
+        assert run() == want
+        # fuzzy_key_match's cross-side rule
+        cross = lambda ia, ib: (  # noqa: E731
+            (F.substring(ia, 1, 2) == "0:") & (F.substring(ib, 1, 2) == "1:")
+        )
+        want_cross = naive(lambda a, b: a[:2] == "0:" and b[:2] == "1:")
+        assert want_cross and len(want_cross) < len(want)
+        assert run(cross) == want_cross
+
     def test_gram_base_released_by_release_caches(self, spark, sf_dir):
         # the gram base persist has an owner: release_caches() frees it
         from datacompy_spark import release_caches

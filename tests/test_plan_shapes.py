@@ -630,25 +630,29 @@ class TestDedupScaleShapes:
     def test_ngram_barrier_keeps_one_intersect_pass_per_route(
         self, spark, monkeypatch
     ):
-        # without the barrier Catalyst pushes the jaccard threshold filter
-        # below the scoring projection, and the intersect pandas UDF then
-        # plans twice per route: one ArrowEvalPython under the Filter, one
-        # above it for the projection — a second Python-worker pass over
-        # every candidate pair
+        # the direct route scores each block in ONE grouped-map Python call
+        # (one FlatMapGroupsInPandas, no intersect UDF, no barrier). The
+        # PPJoin route keeps its barrier: without it Catalyst pushes the
+        # jaccard threshold filter below the scoring projection, and the
+        # intersect pandas UDF then plans twice — one ArrowEvalPython under
+        # the Filter, one above it for the projection — a second
+        # Python-worker pass over every candidate pair
         from datacompy_spark import scope
         from datacompy_spark.operators import dedup as D
         from datacompy_spark.plans import barrier as B
 
+        # blocks of 30 and 10 documents
         rows = [
-            (i, f"the quick brown fox {i % 5} jumps over {i % 3}", i % 2)
+            (i, f"the quick brown fox {i % 5} jumps over {i % 3}", int(i >= 30))
             for i in range(40)
         ]
         df = spark.createDataFrame(rows, "doc_id bigint, text string, blk int")
 
+        def count(qe, node):
+            return qe.optimizedPlan().toString().count(node)
+
         def n_intersect(qe):
-            return qe.optimizedPlan().toString().count(
-                "ArrowEvalPython [_sorted_intersect_batch"
-            )
+            return count(qe, "ArrowEvalPython [_sorted_intersect_batch")
 
         def pairs(cap):
             return D.ngram_jaccard_pairs(
@@ -656,18 +660,43 @@ class TestDedupScaleShapes:
             )
 
         with scope():
-            # cap 1000: direct route only; cap 10: both routes, unioned
-            for cap, routes in ((1000, 1), (10, 2)):
-                monkeypatch.setattr(B, "PLAN_AUDIT_SINK", [])
-                out = pairs(cap)
-                (fenced,) = B.PLAN_AUDIT_SINK
-                monkeypatch.setattr(B, "PLAN_AUDIT_SINK", None)
-                assert n_intersect(fenced) == routes, cap
-                assert n_intersect(out._jdf.queryExecution()) == 0, cap
-                monkeypatch.setattr(D, "lineage_barrier", lambda d, *a, **k: d)
-                unfenced = pairs(cap)
-                monkeypatch.undo()
-                assert n_intersect(unfenced._jdf.queryExecution()) == 2 * routes, cap
+            monkeypatch.setattr(B, "PLAN_AUDIT_SINK", [])
+            direct = pairs(1000)  # every block under the cap: direct only
+            assert B.PLAN_AUDIT_SINK == [], "direct route planted a barrier"
+            qe = direct._jdf.queryExecution()
+            assert count(qe, "FlatMapGroupsInPandas") == 1
+            assert n_intersect(qe) == 0
+            # cap 10: both routes, unioned; the PPJoin one behind its barrier
+            # (a route with no block to score is not planned at all)
+            out = pairs(10)
+            (fenced,) = B.PLAN_AUDIT_SINK
+            monkeypatch.setattr(B, "PLAN_AUDIT_SINK", None)
+            assert n_intersect(fenced) == 1
+            assert n_intersect(out._jdf.queryExecution()) == 0
+            assert count(out._jdf.queryExecution(), "FlatMapGroupsInPandas") == 1
+            monkeypatch.setattr(D, "lineage_barrier", lambda d, *a, **k: d)
+            unfenced = pairs(10)
+            monkeypatch.undo()
+            assert n_intersect(unfenced._jdf.queryExecution()) == 2
+
+    def test_ngram_direct_route_jobs(self, spark, sf_dir):
+        # dedup_ngram_jaccard (every block under the cap): the build runs
+        # the routing probe and nothing else eager — no gram-base populate,
+        # no barrier — and the action is the grouped-map pass
+        from datacompy_spark import scope
+        from datacompy_spark.queries import QUERIES
+
+        built = {}
+        with scope():
+            build = jobs(
+                spark,
+                lambda: built.setdefault(
+                    "df", QUERIES["dedup_ngram_jaccard"](spark, sf_dir)
+                ),
+            )
+            action = jobs(spark, lambda: built["df"].collect())
+        assert build <= 4, f"build ran {build} jobs"
+        assert action <= 2, f"action ran {action} jobs"
 
     def test_ngram_candidates_pruned_within_block(self, spark):
         # 120 documents share ONE block but have pairwise-disjoint gram sets:

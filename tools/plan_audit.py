@@ -8,9 +8,11 @@ or an Exchange count that grew since the last audit, is a regression even
 while results stay correct.
 
 Usage: python tools/plan_audit.py [sf_dir] [--write]
-  --write regenerates PLANS.md from the audit table.
+  --write regenerates PLANS.md from the audit table, and plans/shapes.json
+  with the shape string behind each fingerprint.
   Without --write the run is a GATE: it fails (exit 1) if any query's
-  plan-shape fingerprint differs from the committed PLANS.md — an
+  plan-shape fingerprint differs from the committed PLANS.md, printing the
+  committed and the fresh shape string of each such query — an
   intentional plan change must be recorded by regenerating with --write
   and committing the diff (r12 verdict item 7).
 
@@ -22,6 +24,7 @@ built — the audit therefore runs at the smallest scale by default.
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
@@ -255,16 +258,34 @@ def _shape(node, seen_caches) -> str:
     return f"{label}({','.join(parts)})" if parts else label
 
 
+def _shapes(fragments) -> str:
+    """The operator-tree shapes of the final plan plus every pre-barrier
+    fragment, in order, joined by ``||``."""
+    seen_caches: set = set()
+    return "||".join(_shape(qe.executedPlan(), seen_caches) for qe in fragments)
+
+
+def _digest(shapes: str) -> str:
+    """10-hex-char digest of a :func:`_shapes` string."""
+    import hashlib
+
+    return hashlib.sha1(shapes.encode()).hexdigest()[:10]
+
+
 def _fingerprint(fragments) -> str:
     """10-hex-char digest of the operator-tree shapes of the final plan
     plus every pre-barrier fragment, in order."""
-    import hashlib
+    return _digest(_shapes(fragments))
 
-    seen_caches: set = set()
-    joined = "||".join(
-        _shape(qe.executedPlan(), seen_caches) for qe in fragments
-    )
-    return hashlib.sha1(joined.encode()).hexdigest()[:10]
+
+def read_shapes(path: str) -> dict:
+    """``{query: shape string}`` from ``plans/shapes.json``, written with
+    PLANS.md by ``--write``; empty if it is missing."""
+    try:
+        with open(path) as fh:
+            return json.load(fh)
+    except OSError:
+        return {}
 
 
 def read_fingerprints(path: str) -> dict:
@@ -310,7 +331,8 @@ def audit(spark, sf_dir: str):
             for k, v in _counts(fragment_qe, seen_caches).items():
                 total[k] += v
         row.update(total)
-        row["fingerprint"] = _fingerprint([qe, *sink])
+        row["shapes"] = _shapes([qe, *sink])
+        row["fingerprint"] = _digest(row["shapes"])
         rows.append(row)
         spark.catalog.clearCache()
     return rows
@@ -403,6 +425,7 @@ def main() -> int:
     # fails — "zero hot-path code changed, plans identical" becomes a
     # mechanical check instead of a judge reading the diff. An intentional
     # plan change is accepted by regenerating with --write and committing.
+    shapes_path = os.path.join(os.path.dirname(path), "plans", "shapes.json")
     committed = read_fingerprints(path)
     fresh = {
         r["query"]: r["fingerprint"] for r in rows if not r.get("error")
@@ -417,6 +440,11 @@ def main() -> int:
         drift = changed + added + removed
         if changed:
             print("FINGERPRINT CHANGES vs PLANS.md:", changed)
+            old_shapes = read_shapes(shapes_path)
+            new_shapes = {r["query"]: r["shapes"] for r in rows if not r.get("error")}
+            for q in changed:
+                print(f"{q} committed: {old_shapes.get(q, '(not recorded)')}")
+                print(f"{q} fresh:     {new_shapes[q]}")
         if added:
             print("NEW QUERIES not in PLANS.md:", added)
         if removed:
@@ -426,7 +454,15 @@ def main() -> int:
     if write:
         with open(path, "w") as fh:
             fh.write(text)
-        print(f"wrote {path}")
+        with open(shapes_path, "w") as fh:
+            json.dump(
+                {r["query"]: r["shapes"] for r in rows if not r.get("error")},
+                fh,
+                indent=0,
+                sort_keys=True,
+            )
+            fh.write("\n")
+        print(f"wrote {path} and {shapes_path}")
     if bad:
         print("UNEXPECTED nested-loop joins:", [r["query"] for r in bad])
     if errs:
